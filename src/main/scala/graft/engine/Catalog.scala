@@ -339,6 +339,7 @@ object Catalog {
         opts.get("delim").orElse(opts.get("sep"))
           .fold(base)(d => base.option("sep", d))
           .csv(paths: _*)
+      case "orc" => based(spark.read).orc(paths: _*)
       case "json" if paths.forall(_.toLowerCase.endsWith(".json")) =>
         based(spark.read.option("multiLine", "true")).json(paths: _*)
       case _ => based(spark.read).json(paths: _*)
@@ -432,7 +433,13 @@ object Catalog {
         val kw = prev.text.toLowerCase
         val tableFrom = !prev.quoted && (kw == "from" || kw == "join") &&
           !parenFn.headOption.exists(OperandFromFns.contains)
-        if (tableFrom) {
+        // a quoted GLOB ('dir/*.parquet') is DuckDB's shorthand for the
+        // table function over the pattern: the same set view, format by
+        // extension, so both spellings share one registration
+        if (tableFrom && isGlobPath(t.text)) {
+          val fmt = t.text.toLowerCase.split('.').last
+          edits += ((t, Sql.sqlIdentifier(claimSetView(spark, fmt, Seq(t.text)))))
+        } else if (tableFrom) {
           val path = t.text
           val view = claimViewName(spark, path)
           val registered = spark.catalog.tableExists(view)

@@ -788,16 +788,17 @@ private[engine] trait EngineDml {
         // RETURNING *` would otherwise return post-insert rows.
         val landed = {
           val bound = boundInsertSource(spark, table, body)
-          val literalOnly = bound.queryExecution.analyzed
-            .collectLeaves().forall {
-              case _: org.apache.spark.sql.catalyst.plans.logical
-                .LocalRelation => true
-              case _: org.apache.spark.sql.catalyst.plans.logical
-                .OneRowRelation => true
-              case _: org.apache.spark.sql.catalyst.plans.logical
-                .Range => true
-              case _ => false
-            }
+          // leaves of subquery plans count too: a scalar subquery over
+          // the target would otherwise be re-read after the insert
+          val literalOnly = !planExists(bound.queryExecution.analyzed) {
+            case _: org.apache.spark.sql.catalyst.plans.logical
+              .LocalRelation => false
+            case _: org.apache.spark.sql.catalyst.plans.logical
+              .OneRowRelation => false
+            case _: org.apache.spark.sql.catalyst.plans.logical
+              .Range => false
+            case leaf => leaf.children.isEmpty
+          }
           if (literalOnly) stableSnapshot(bound)
           else bound.localCheckpoint(true)
         }
@@ -1289,6 +1290,17 @@ private[engine] trait EngineDml {
     else Some(BatchSpan(nonEmpty = true, r.getLong(2), r.getLong(3)))
   }
 
+  /** True when `p` holds for a node of `plan` OR of any subquery plan
+    * under it, nested ones included. `TreeNode.exists` walks children
+    * only, so a classifier built on it misses a LIMIT or a table read
+    * inside `(SELECT ...)`; every source classifier here goes through
+    * this walker instead. */
+  private[engine] def planExists(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Boolean)
+      : Boolean =
+    (plan +: plan.subqueriesAll).exists(_.exists(p))
+
   /** Snapshot a source only when it actually needs it: a
     * non-deterministic or current-time expression would make the
     * checked rows differ from the landed ones (each action re-plans,
@@ -1311,14 +1323,15 @@ private[engine] trait EngineDml {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
       AggregateExpression, AnyValue, Collect, First, Last, MaxMinBy, Mode}
     import org.apache.spark.sql.catalyst.plans.{logical => l}
-    val unstable = df.queryExecution.analyzed.exists(p =>
+    val plan = df.queryExecution.analyzed
+    val unstable = planExists(plan)(p =>
       p.expressions.exists(e => e.exists {
         case x if !x.deterministic => true
         case _: CurrentTimestamp | _: CurrentDate | _: Now |
             _: LocalTimestamp => true
         case _ => false
       }))
-    val orderUnstable = df.queryExecution.analyzed.exists {
+    val orderUnstable = planExists(plan) {
       case _: l.GlobalLimit | _: l.LocalLimit | _: l.Offset | _: l.Tail |
           _: l.Sample | _: l.Deduplicate | _: l.Window => true
       case a: l.Aggregate => a.aggregateExpressions.exists(_.exists {

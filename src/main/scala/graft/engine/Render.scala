@@ -4,6 +4,7 @@ import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.FirstPage
 
 /** Result presentation — A13 (display limiter), A14 (cell formatter),
   * A19 (metadata line); reference `/root/reference/src/arrow.ts:3-45`,
@@ -143,13 +144,19 @@ object Render {
   }
 
   /** A13: at most `limit` rendered rows + the true total (`src/arrow.ts:
-    * 28-45`, `src/App.tsx:435-439`). One extra count job — same contract as
-    * the reference, which materializes the full Arrow table but shows 200. */
+    * 28-45`, `src/App.tsx:435-439`) — the reference materializes the full
+    * Arrow table once and shows 200. Here too the statement runs ONCE
+    * (`FirstPage`): every task returns its row count and at most `limit`
+    * rows, and the driver sums the counts and keeps the first `limit`
+    * rows in partition order. A select list at the plan's root is
+    * evaluated on the driver for the page rows only, as `count()` never
+    * evaluated it. A result whose plan ends in a global sort runs the
+    * sort's input instead: each task keeps its count plus its top-`limit`
+    * rows, and the driver merges those lists — no range-partition
+    * sampling job and no range shuffle for a page of 200. */
   def tableToRows(df: DataFrame, limit: Int = DisplayLimit): DisplayTable = {
-    val total = df.count()
-    val rows = df.limit(limit).collect().toSeq
-      .map(r => r.toSeq.map(formatCell))
-    DisplayTable(df.columns.toSeq, rows, total)
+    val (total, page) = FirstPage(df, limit)
+    DisplayTable(df.columns.toSeq, page.map(r => r.toSeq.map(formatCell)), total)
   }
 
   /** A19: the result metadata line (`src/App.tsx:436-439`). */

@@ -704,6 +704,20 @@ object Dedup {
 
   // --- MinHash candidate-generation quality (measured, like p_sim_recall) --
 
+  /** The three counts over a recall query's membership flags (t, c):
+    * |truth| = Σt, |cand| = Σc, hits = Σ t·c. An empty corpus has no
+    * flag rows, and a sum over no rows is NULL, so each count falls back
+    * to 0 — the oracle's COUNT(*). */
+  private val recallCounts = Seq(
+    coalesce(sum(col("t")), lit(0L)).as("n_truth"),
+    coalesce(sum(col("c")), lit(0L)).as("n_cand"),
+    coalesce(sum(col("t") * col("c")), lit(0L)).as("n_hits"))
+
+  /** n_hits as a share of count column `of`; NULL when that count is 0
+    * (an empty corpus has no share, and ANSI mode refuses 0 / 0). */
+  private def hitShare(of: String) =
+    col("n_hits").cast("double") / nullif(col(of), lit(0L)).cast("double")
+
   /** Recall AND precision of MinHash-LSH candidate generation, measured
     * against exact trigram-Jaccard ground truth — the dedup twin of the
     * ANN family's `p_sim_recall` discipline: a banding configuration is a
@@ -748,13 +762,9 @@ object Dedup {
         .select(col("d1"), col("d2"), lit(0L).as("t"), lit(1L).as("c")))
       .groupBy(col("d1"), col("d2"))
       .agg(max(col("t")).as("t"), max(col("c")).as("c"))
-    flags.agg(sum(col("t")).as("n_truth"), sum(col("c")).as("n_cand"),
-        sum(col("t") * col("c")).as("n_hits"))
+    flags.agg(recallCounts.head, recallCounts.tail: _*)
       .select(col("n_truth"), col("n_cand"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double"))
-          .as("recall"),
-        (col("n_hits").cast("double") / col("n_cand").cast("double"))
-          .as("precision"))
+        hitShare("n_truth").as("recall"), hitShare("n_cand").as("precision"))
   }
 
   val minhashRecallSql: String =
@@ -822,11 +832,9 @@ object Dedup {
         .select(col("qid"), col("doc_id"), lit(0L).as("t"), lit(1L).as("c")))
       .groupBy(col("qid"), col("doc_id"))
       .agg(max(col("t")).as("t"), max(col("c")).as("c"))
-    flags.agg(sum(col("t")).as("n_truth"), sum(col("c")).as("n_cand"),
-        sum(col("t") * col("c")).as("n_hits"))
+    flags.agg(recallCounts.head, recallCounts.tail: _*)
       .select(col("n_truth"), col("n_cand"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double"))
-          .as("recall"))
+        hitShare("n_truth").as("recall"))
   }
 
   val simhashRecallSql: String =

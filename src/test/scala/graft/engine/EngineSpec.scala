@@ -53,6 +53,26 @@ class EngineSpec extends AnyFunSuite {
     assert(df2.collect()(0).getInt(0) == 250000)
   }
 
+  test("B3: a bare quoted glob reads like read_parquet over the pattern") {
+    val dir = java.nio.file.Files.createTempDirectory("engine_spec_glob")
+    import spark.implicits._
+    (1 to 3).foreach { i =>
+      Seq.tabulate(i)(j => (i * 10L + j, s"p$i")).toDF("id", "part")
+        .coalesce(1).write.parquet(s"$dir/part$i.parquet")
+    }
+    // DuckDB's daily idiom: FROM '<dir>/*.parquet' with no table function
+    val bare = Engine.sql(spark, s"SELECT COUNT(*) AS n FROM '$dir/*.parquet'")
+    val fn = Engine.sql(spark,
+      s"SELECT COUNT(*) AS n FROM read_parquet('$dir/*.parquet')")
+    assert(bare.collect()(0).getLong(0) == 6L)
+    assert(bare.collect()(0).getLong(0) == fn.collect()(0).getLong(0))
+    // and as a join operand, next to the table-function form
+    val joined = Engine.sql(spark,
+      s"""SELECT COUNT(*) FROM '$dir/*.parquet' a
+         |JOIN read_parquet('$dir/*.parquet') b ON a.id = b.id""".stripMargin)
+    assert(joined.collect()(0).getLong(0) == 6L)
+  }
+
   test("B3: FROM inside TRIM/EXTRACT is an operand, not a table position") {
     val dir = java.nio.file.Files.createTempDirectory("engine_spec_trim")
     val f = dir.resolve("ops.csv")
@@ -1631,6 +1651,14 @@ class EngineSpec extends AnyFunSuite {
       assert(sub.length == 1 && sub(0).getLong(0) == 77L &&
         sub(0).isNullAt(1))
       assert(spark.table(t).filter("k = 77").collect()(0).isNullAt(1))
+      // a scalar subquery over the TARGET is not a literal-only source:
+      // RETURNING reports the key that landed, not one re-read after it
+      val landed = Engine.sql(spark,
+        s"INSERT INTO $t SELECT (SELECT max(k) + 1 FROM $t), 0.5 RETURNING *")
+        .collect()
+      assert(landed.length == 1 && landed(0).getLong(0) == 78L)
+      assert(spark.table(t).filter("k = 78").count() == 1L)
+      assert(spark.table(t).filter("k = 79").count() == 0L)
       // join-DML and ON CONFLICT forms refuse loudly
       assertThrows[IllegalArgumentException](Engine.sql(spark,
         s"INSERT INTO $t VALUES (1, 1) ON CONFLICT (k) DO NOTHING" +

@@ -85,5 +85,14 @@ class PkFusedCheckSpec extends AnyFunSuite {
     assert(pinned(base.dropDuplicates("v")))
     assert(pinned(base.groupBy("v")
       .agg(org.apache.spark.sql.functions.first("k").as("k"))))
+    // the same shapes inside a subquery: a LIMIT without total order in
+    // a scalar subquery may pick a different row on each evaluation
+    base.createOrReplaceTempView("pk_fused_u")
+    assert(pinned(spark.sql("SELECT (SELECT k FROM pk_fused_u LIMIT 1) AS k")))
+    assert(pinned(spark.sql(
+      "SELECT k FROM pk_fused_u WHERE k IN (SELECT k FROM pk_fused_u LIMIT 2)")))
+    val stableSub = spark.sql(
+      "SELECT (SELECT max(k) FROM pk_fused_u) AS k")
+    assert(Engine.stableSnapshot(stableSub) eq stableSub)
   }
 }

@@ -1,7 +1,11 @@
 package graft.engine
 
 import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A14 cell formatter against the type table in SURVEY §1.2
@@ -69,5 +73,139 @@ class RenderSpec extends AnyFunSuite {
     assert(page.rows.head == Seq("0"))
     assert(Render.infoLine(page) ==
       "Linhas: 500 (mostrando 200) · Colunas: 1")
+  }
+
+  private lazy val spark = graft.TestSpark.spark
+
+  /** The single-pass page must agree with the two-job contract it
+    * replaced: `count()` for the total, `limit(n).collect()` for rows. */
+  private def agrees(df: DataFrame, n: Int = 200): Render.DisplayTable = {
+    val page = Render.tableToRows(df, n)
+    assert(page.columns == df.columns.toSeq)
+    assert(page.totalRows == df.count())
+    assert(page.rows ==
+      df.limit(n).collect().toSeq.map(_.toSeq.map(Render.formatCell)))
+    page
+  }
+
+  test("A13 single pass: an empty result") {
+    val page = agrees(spark.range(0, 100, 1, 8).toDF("id").filter("id < 0"))
+    assert(page.totalRows == 0 && page.rows.isEmpty)
+    assert(agrees(spark.range(0).toDF("id").orderBy("id")).totalRows == 0)
+    // a zero-row page still counts every row
+    assert(Render.tableToRows(spark.range(0, 30, 1, 3).toDF("id").orderBy("id"), 0)
+      .totalRows == 30)
+  }
+
+  test("A13 single pass: a one-partition result") {
+    val page = agrees(spark.range(0, 50, 1, 1).selectExpr("id", "id * 3 AS t"))
+    assert(page.totalRows == 50 && page.shown == 50)
+  }
+
+  test("A13 single pass: more than limit unordered rows over 8 partitions") {
+    val df = spark.range(0, 1000, 1, 8).selectExpr("id", "id % 7 AS m")
+    assert(df.rdd.getNumPartitions == 8)
+    val page = agrees(df)
+    assert(page.totalRows == 1000 && page.shown == 200)
+  }
+
+  test("A13 single pass: the select list runs on the page rows only") {
+    // as under count() + limit(n), a row past the page never evaluates
+    // the projection, so its error does not surface
+    val df = spark.range(0, 1000, 1, 8).selectExpr("id",
+      "CASE WHEN id = 900 THEN raise_error('past the page') ELSE id * 2 END AS v")
+    assert(df.queryExecution.optimizedPlan.isInstanceOf[Project])
+    val page = agrees(df)
+    assert(page.totalRows == 1000 && page.rows(3) == Seq("3", "6"))
+  }
+
+  test("A13 single pass: a fully ordered result over 8 partitions") {
+    val df = spark.range(0, 1000, 1, 8).selectExpr("id", "1000 - id AS r")
+      .orderBy("r")
+    assert(df.queryExecution.optimizedPlan.isInstanceOf[Sort])
+    val page = agrees(df)
+    assert(page.totalRows == 1000 && page.rows.head == Seq("999", "1"))
+    agrees(df, 7)
+  }
+
+  test("A13 single pass: ORDER BY a column that is not projected") {
+    spark.range(0, 1000, 1, 8).toDF("id").createOrReplaceTempView("render_r")
+    val df = spark.sql(
+      "SELECT concat('r', id) AS s FROM render_r ORDER BY id % 10, id DESC")
+    assert(df.queryExecution.optimizedPlan match {
+      case Project(_, _: Sort) => true
+      case _ => false
+    })
+    val page = agrees(df)
+    assert(page.rows.take(2) == Seq(Seq("r990"), Seq("r980")))
+  }
+
+  test("A13 single pass: ORDER BY ... DESC NULLS LAST") {
+    val df = spark.sql(
+      """SELECT id, CASE WHEN id % 5 = 0 THEN NULL ELSE id END AS v
+        |FROM range(0, 600, 1, 8) ORDER BY v DESC NULLS LAST, id""".stripMargin)
+    val page = agrees(df)
+    assert(page.rows.head == Seq("599", "599"))
+    // nulls sort after the non-null values: 480 of 600 rows are non-null
+    val all = agrees(df, 600)
+    assert(all.rows.drop(480).forall(_(1) == ""))
+  }
+
+  test("A13 single pass: ORDER BY ... LIMIT") {
+    val df = spark.sql(
+      "SELECT id FROM range(0, 1000, 1, 8) ORDER BY id DESC LIMIT 50")
+    assert(agrees(df).totalRows == 50)
+    assert(agrees(df, 20).rows.map(_.head) == (999 to 980 by -1).map(_.toString))
+  }
+
+  test("A13 single pass: temporal and nested cells") {
+    val df = spark.sql(
+      """SELECT id,
+        |  timestamp'2024-01-02 03:04:05.678' + make_interval(0, 0, 0, id) AS ts,
+        |  date_add(date'2024-02-28', CAST(id AS INT)) AS d,
+        |  array(id, id + 1) AS arr,
+        |  map('k', id) AS m,
+        |  named_struct('a', id, 'b', CAST(id AS STRING)) AS st
+        |FROM range(0, 300, 1, 8) ORDER BY id""".stripMargin)
+    val page = agrees(df)
+    assert(page.rows(1) == Seq("1", "2024-01-03T03:04:05.678Z",
+      "2024-02-29T00:00:00.000Z", "[1,2]", "{\"k\":1}", "{\"a\":1,\"b\":\"1\"}"))
+    agrees(df.drop("id"))
+  }
+
+  test("A13 single pass: a DDL statement's result frame") {
+    val ddl = spark.sql(
+      "CREATE OR REPLACE TEMPORARY VIEW render_ddl AS SELECT 1 AS x")
+    assert(agrees(ddl).totalRows == 0)
+    assert(agrees(spark.sql("DESCRIBE render_ddl")).totalRows == 1)
+  }
+
+  test("A13 single pass: a grouped, ordered statement fires at most 2 jobs") {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    @volatile var marked = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == "render-marker")) marked = true
+        else jobs.incrementAndGet()
+    }
+    val df = spark.sql(
+      """SELECT id % 37 AS k, count(*) AS c FROM range(0, 5000, 1, 8)
+        |GROUP BY id % 37 ORDER BY k""".stripMargin)
+    sc.addSparkListener(listener)
+    try {
+      val page = Render.tableToRows(df)
+      assert(page.totalRows == 37 && page.rows.head == Seq("0", "136"))
+      // the bus delivers in order: once the marker job is seen, every
+      // job tableToRows started has been counted
+      sc.setJobGroup("render-marker", "flush")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marked)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 2, s"tableToRows fired ${jobs.get} jobs")
   }
 }

@@ -299,4 +299,17 @@ class RecallSpec extends AnyFunSuite {
     assert(rows("tuned") >= rows("multiprobe") &&
       rows("tuned") >= rows("or_tables"), rows.toString)
   }
+
+  test("minhash and simhash recall count 0, not NULL, on an empty corpus") {
+    val empty = java.nio.file.Files.createTempDirectory("recall_empty")
+    spark.read.parquet(s"$dir/documents.parquet").limit(0)
+      .write.parquet(s"$empty/documents.parquet")
+    val mh = Dedup.minhashRecall(spark, empty.toString).collect()
+    val sh = Dedup.simhashRecall(spark, empty.toString).collect()
+    Seq(mh, sh).foreach { rows =>
+      assert(rows.length == 1)
+      assert((0 to 2).map(rows(0).getLong) == Seq(0L, 0L, 0L), rows(0))
+      assert(rows(0).isNullAt(3), "no truth pairs: recall has no value")
+    }
+  }
 }
