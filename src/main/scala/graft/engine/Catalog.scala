@@ -215,43 +215,27 @@ object Catalog {
     * literals (span includes the quotes, `text` excludes them). */
   private final case class Tok(start: Int, end: Int, text: String, quoted: Boolean)
 
-  /** Quote/comment-aware token scan (same state machine discipline as the
-    * A12 lexer): words, `'...'` literals (with `''` escapes), and single
-    * symbols, with comments and `"..."` identifiers opaque. */
-  private def lexTokens(sql: String): Vector[Tok] = {
+  /** The statement's tokens over the router's lexer (`EngineLex.codeMask`):
+    * words, `'...'` literals (text unescaped), quoted identifiers (opaque,
+    * quotes kept) and single symbols; comments drop. */
+  private def tokens(lx: Lexed): Vector[Tok] = {
+    val sql = lx.s
     val out = Vector.newBuilder[Tok]
     var i = 0
     val n = sql.length
     while (i < n) {
       val ch = sql.charAt(i)
-      def next = if (i + 1 < n) sql.charAt(i + 1) else '\u0000'
-      if (ch == '-' && next == '-') { // line comment
-        while (i < n && sql.charAt(i) != '\n') i += 1
-      } else if (ch == '/' && next == '*') { // block comment
-        i += 2
-        while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-        i = math.min(n, i + 2)
-      } else if (ch == '\'') { // string literal, '' escapes
-        val s = i; i += 1
-        val b = new StringBuilder
-        var open = true
-        while (i < n && open) {
-          if (sql.charAt(i) == '\'' && i + 1 < n && sql.charAt(i + 1) == '\'') {
-            b.append('\''); i += 2
-          } else if (sql.charAt(i) == '\'') { open = false; i += 1 }
-          else { b.append(sql.charAt(i)); i += 1 }
+      if (!lx.code(i)) {
+        val end = lx.regionEnd(i)
+        lx.shield(i) match {
+          case '\'' =>
+            val close = if (end == n && lx.unclosed) n else end - 1
+            out += Tok(i, end, sql.substring(i + 1, close).replace("''", "'"),
+              quoted = true)
+          case '"' | '`' => out += Tok(i, end, sql.substring(i, end), quoted = false)
+          case _ => () // comment
         }
-        out += Tok(s, i, b.result(), quoted = true)
-      } else if (ch == '"' || ch == '`') { // quoted identifier — opaque,
-        // with doubled-quote escapes like the A12 lexer (Sql.segments)
-        val q = ch; val s = i; i += 1
-        var open = true
-        while (i < n && open) {
-          if (sql.charAt(i) == q && i + 1 < n && sql.charAt(i + 1) == q) i += 2
-          else if (sql.charAt(i) == q) { open = false; i += 1 }
-          else i += 1
-        }
-        out += Tok(s, i, sql.substring(s, i), quoted = false)
+        i = end
       } else if (ch.isLetterOrDigit || ch == '_' || ch == '.') {
         val s = i
         while (i < n && (sql.charAt(i).isLetterOrDigit ||
@@ -413,8 +397,13 @@ object Catalog {
   }
 
   def rewritePathTables(
-      spark: SparkSession, statement: String): (String, Seq[String]) = {
-    val toks = lexTokens(statement)
+      spark: SparkSession, statement: String): (String, Seq[String]) =
+    rewritePathTables(spark, EngineLex.codeMask(statement))
+
+  private[engine] def rewritePathTables(
+      spark: SparkSession, lx: Lexed): (String, Seq[String]) = {
+    val statement = lx.s
+    val toks = tokens(lx)
     val missing = Seq.newBuilder[String]
     val edits = Seq.newBuilder[(Tok, String)]
     val parenFn = scala.collection.mutable.Stack.empty[String]

@@ -2,6 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import EngineLex.{codeMask, finds}
+
 /** The engine's SQL execution surface — the Spark analog of the reference's
   * single delegation point (`/root/reference/src/duckdb.ts:46-59`: `query`,
   * `exec`, `send` wrapping one DuckDB connection). Spark's `spark.sql` plays
@@ -485,56 +487,73 @@ object Engine
     routed
   }
 
-  /** The full dialect-rewrite pipeline over ONE query's text — what the
-    * router's default branch applies to a top-level statement, reusable
-    * for a DDL statement's AS-body: FROM-first and DISTINCT ON re-spell
-    * first (their output is a SELECT, so the rest applies to it), then
-    * the star/sample/ASOF/QUALIFY shims, then the path-table and
-    * table-function rewrites. Text in, text out — routes that produce a
+  private val readCall = finds("read_")
+
+  /** The dialect shim table: the full rewrite pipeline over ONE query's
+    * text, in order. The order is data that `ShimTableSpec` asserts:
+    *   - FROM-first, DISTINCT ON and UNION BY NAME re-spell the
+    *     statement into a new shape and re-enter the table;
+    *   - subquery bodies run before every outer shim — their rewritten
+    *     form is what the outer shims and the REPLACE/COLUMNS schema
+    *     probes must see. Each body re-enters the whole table
+    *     (`rewriteSubqueryBodies`), so a body at depth d is scanned d+1
+    *     times by the shims below that read every depth; they are
+    *     idempotent, and a body must be fully rewritten before its
+    *     statement-level shims (QUALIFY, ASOF) wrap it;
+    *   - nulls-order runs after agg-order-by: inline aggregate ORDER BYs
+    *     are consumed into WITHIN GROUP / min_by first, and the
+    *     null-order default then applies to every remaining (and
+    *     generated WITHIN GROUP) sort key;
+    *   - star-exclude runs before star-replace and columns, which read
+    *     the EXCEPT spelling;
+    *   - the literal constructors run after path tables, so a
+    *     `read_parquet([…])` list is consumed as paths first; array-kw,
+    *     map-literal and list-comprehension run before the generic
+    *     literal pass, which would consume their brackets/braces. */
+  private[engine] val shims: Vector[Shim] = Vector(
+    TextShim("from-first", s => fromFirstRe.matches(s), reenter = true)(
+      _.s match { case fromFirstRe(rest) => fromFirstToSelect(rest) }),
+    TextShim("distinct-on", s => donRe.matches(s), reenter = true)(
+      _.s match { case donRe(rest) => distinctOnToWindow(rest) }),
+    Shim("union-by-name",
+      finds("\\bBY\\s+NAME\\b", "^(SELECT|FROM|VALUES|WITH)\\b"),
+      reenter = true)((spark, lx) => rewriteUnionByName(spark, lx.s)),
+    Shim("subquery-bodies", _.contains("("))(rewriteSubqueryBodies),
+    rewriteTildeMatch, rewriteAtTimeZone, rewriteIgnoreNulls,
+    rewriteTrailingCommas, rewriteLambdaSyntax, rewriteAggOrderBy,
+    checkPositionalJoin, checkCaretPow, rewriteIntDiv, rewriteDowField,
+    rewriteDuckCastTypes, rewriteMaterializedCte, rewriteOrderByNulls,
+    rewriteStarExclude, rewriteSimilarTo, rewriteGlob, rewriteDateDiff,
+    Shim("columns", finds("^(SELECT|WITH)\\b", "\\bCOLUMNS\\s*\\("))(
+      (spark, lx) => rewriteColumnsFn(spark, lx.s)),
+    Shim("star-replace", finds("^(SELECT|WITH)\\b", "\\*.*\\bREPLACE\\s*\\("))(
+      (spark, lx) => rewriteStarReplace(spark, lx.s)),
+    rewriteUsingSample, rewriteAsofJoin, rewriteQualify,
+    // a table path needs a quote or a read_* call
+    Shim("path-tables", s => s.contains("'") || readCall(s))(
+      (spark, lx) => Catalog.rewritePathTables(spark, lx)._1),
+    rewriteArrayKw, rewriteListSlice, rewriteMapLiteral,
+    rewriteListComprehension, rewriteDuckdbLiterals, rewriteStructPack)
+
+  /** Run the shim table over one query's text — what the router's
+    * default branch applies to a top-level statement, reusable for a
+    * DDL statement's AS-body. Text in, text out — routes that produce a
     * DataFrame directly (SUMMARIZE, PIVOT statements, DML) stay
-    * top-level-only. */
+    * top-level-only. The text is lexed once, and again only after a
+    * shim has changed it. */
   private[engine] def rewriteQueryText(spark: SparkSession, q0: String): String = {
-    val t = q0.trim.stripSuffix(";").trim
-    t match {
-      case fromFirstRe(rest) => rewriteQueryText(spark, fromFirstToSelect(rest))
-      case donRe(rest) => rewriteQueryText(spark, distinctOnToWindow(rest))
-      case other =>
-        rewriteUnionByName(spark, other) match {
-          case Some(t) =>
-            // DuckDB's UNION [ALL] BY NAME re-spelled as aligned
-            // positional branches; the rewritten text (no BY NAME left)
-            // re-enters the full pipeline so every other shim applies
-            rewriteQueryText(spark, t)
-          case None =>
-            // subquery bodies first (their rewritten form is what the
-            // outer shims and the REPLACE/COLUMNS schema probes must
-            // see), then the outer statement's shims, then path tables
-            // + table functions, and the literal constructors LAST so a
-            // read_parquet([…]) list is consumed as paths first
-            val sub = rewriteSubqueryBodies(spark, other)
-            // the depth-global passes (trailing commas, lambda syntax,
-            // aggregate ORDER BY) run once over the whole text — their
-            // triggers carry absolute paren depth, so subquery bodies
-            // are covered without re-entry (each is idempotent)
-            // rewriteOrderByNulls runs AFTER rewriteAggOrderBy: inline
-            // aggregate ORDER BYs are consumed into WITHIN GROUP /
-            // min_by first, and the null-order default then applies to
-            // every remaining (and generated WITHIN GROUP) sort key
-            val pre = rewriteOrderByNulls(rewriteMaterializedCte(
-              rewriteDuckCastTypes(rewriteDowField(rewriteIntDiv(
-                checkCaretPow(checkPositionalJoin(rewriteAggOrderBy(
-                  rewriteLambdaSyntax(rewriteTrailingCommas(
-                    rewriteIgnoreNulls(rewriteAtTimeZone(
-                      rewriteTildeMatch(sub)))))))))))))
-            val shimmed = rewriteQualify(rewriteAsofJoin(rewriteUsingSample(
-              rewriteStarReplace(spark, rewriteColumnsFn(spark,
-                rewriteDateDiff(rewriteGlob(
-                  rewriteSimilarTo(rewriteStarExclude(pre)))))))))
-            rewriteStructPack(rewriteDuckdbLiterals(rewriteListComprehension(
-              rewriteMapLiteral(rewriteListSlice(rewriteArrayKw(
-                Catalog.rewritePathTables(spark, shimmed)._1))))))
-        }
-    }
+    @annotation.tailrec
+    def run(s: String, lexed: Option[Lexed], i: Int): String =
+      if (i == shims.length) s
+      else if (!shims(i).trigger(s)) run(s, lexed, i + 1)
+      else {
+        val lx = lexed.getOrElse(codeMask(s))
+        val out = shims(i).rewrite(spark, lx)
+        if (out == s) run(s, Some(lx), i + 1)
+        else if (shims(i).reenter) rewriteQueryText(spark, out)
+        else run(out, None, i + 1)
+      }
+    run(q0.trim.stripSuffix(";").trim, None, 0)
   }
 
   /** Split a plain column-list `CREATE TABLE name (cols…) suffix` into
@@ -548,13 +567,8 @@ object Engine
     s match {
       case headRe(prefix) =>
         val open = prefix.length
-        val (codeAt, depth) = codeMask(s)
-        val d = depth(open) + 1
-        var close = open + 1
-        while (close < s.length &&
-          !(codeAt(close) && s.charAt(close) == ')' && depth(close) == d))
-          close += 1
-        if (close >= s.length) None
+        val close = codeMask(s).closeOf(open)
+        if (close < 0) None
         else Some((prefix, splitTopLevel(
           s.substring(open + 1, close), ',').map(_.trim).filter(_.nonEmpty),
           s.substring(close + 1)))

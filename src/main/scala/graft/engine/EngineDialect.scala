@@ -2,11 +2,14 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** The pure-text dialect shims of the statement router (A6): DuckDB
-  * spellings Spark's parser lacks, rewritten string→string on the
-  * `codeMask` state machine before `spark.sql` sees the statement.
-  * Mixed into [[Engine]]; split out by file only — every member is
-  * `Engine.<member>` to the package and the specs. */
+import EngineLex.{codeMask, finds}
+
+/** The dialect shims of the statement router (A6): DuckDB spellings
+  * Spark's parser lacks, rewritten over the `codeMask` lexing of the
+  * statement before `spark.sql` sees it. Each shim's place in the
+  * pipeline is its place in `Engine.shims`. Mixed into [[Engine]];
+  * split out by file only — every member is `Engine.<member>` to the
+  * package and the specs. */
 private[engine] trait EngineDialect {
   this: Engine.type =>
 
@@ -26,13 +29,14 @@ private[engine] trait EngineDialect {
     * value mismatch; `ORDER BY rand() LIMIT n` is the faithful
     * spelling, suggested in the refusal). PERCENT-only passthrough is
     * the documented contract. */
-  private[engine] def rewriteUsingSample(s: String): String = {
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteUsingSample: TextShim = TextShim("using-sample",
+      finds("SAMPLE")) { lx =>
+    val s = lx.s
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
       val ch = s.charAt(i)
-      if (codeAt(i) && s.regionMatches(true, i, "USING", 0, 5) &&
+      if (lx.code(i) && s.regionMatches(true, i, "USING", 0, 5) &&
           (i == 0 || s.charAt(i - 1).isWhitespace)) {
         var j = i + 5
         while (j < s.length && s.charAt(j).isWhitespace) j += 1
@@ -85,13 +89,14 @@ private[engine] trait EngineDialect {
     * `* REPLACE (…)` routes separately (`rewriteStarReplace` below —
     * schema-aware, statement-level); this shim runs first so a combined
     * `* EXCLUDE (…) REPLACE (…)` reaches it in EXCEPT spelling. */
-  private[engine] def rewriteStarExclude(s: String): String = {
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteStarExclude: TextShim = TextShim("star-exclude",
+      finds("EXCLUDE")) { lx =>
+    val s = lx.s
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
       val ch = s.charAt(i)
-      if (codeAt(i) && ch == '*') {
+      if (lx.code(i) && ch == '*') {
         sb.append(ch)
         var j = i + 1
         while (j < s.length && s.charAt(j).isWhitespace) j += 1
@@ -137,8 +142,11 @@ private[engine] trait EngineDialect {
     * rows on (keys, ts) leave one arbitrary winner — DuckDB's pick is
     * likewise unspecified. Statement-level, first ASOF only (a second
     * fails loudly in Spark's parser). */
-  private[engine] def rewriteAsofJoin(s: String): String = {
-    if (!s.matches("(?is)^(SELECT|WITH)\\b.*")) return s
+  private[engine] val rewriteAsofJoin: TextShim = TextShim("asof-join",
+    finds("^(SELECT|WITH)\\b", "ASOF"))(asofJoin)
+
+  private def asofJoin(lx: Lexed): String = {
+    val s = lx.s
     // find the first top-level ASOF actually followed by [LEFT] JOIN —
     // a column or alias legally NAMED asof (`SELECT ts AS asof …`) is
     // not a join and must leave the statement untouched
@@ -167,18 +175,9 @@ private[engine] trait EngineDialect {
     // right relation: identifier or balanced parenthesized subquery
     val bStart = p
     if (p < s.length && s.charAt(p) == '(') {
-      var depth = 0
-      var inStr = false
-      var done = false
-      while (p < s.length && !done) {
-        val ch = s.charAt(p)
-        if (inStr) { if (ch == '\'') inStr = false }
-        else if (ch == '\'') inStr = true
-        else if (ch == '(') depth += 1
-        else if (ch == ')') { depth -= 1; if (depth == 0) done = true }
-        p += 1
-      }
-      require(done, "unbalanced parens in ASOF JOIN right relation")
+      val close = lx.closeOf(p)
+      require(close >= 0, "unbalanced parens in ASOF JOIN right relation")
+      p = close + 1
     } else {
       while (p < s.length && (s.charAt(p).isLetterOrDigit ||
         s.charAt(p) == '_' || s.charAt(p) == '.')) p += 1
@@ -224,26 +223,14 @@ private[engine] trait EngineDialect {
       }
     }
     def findOp(c: String): (String, Int) = {
-      var depth = 0
-      var inStr = false
-      var i = 0
-      while (i < c.length) {
-        val ch = c.charAt(i)
-        if (inStr) { if (ch == '\'') inStr = false }
-        else ch match {
-          case '\'' => inStr = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case '<' | '>' if depth == 0 =>
-            return if (i + 1 < c.length && c.charAt(i + 1) == '=')
-              (c.charAt(i) + "=", i) else (c.charAt(i).toString, i)
-          case '=' if depth == 0 => return ("=", i)
-          case _ => ()
-        }
-        i += 1
-      }
-      throw new IllegalArgumentException(
-        s"ASOF ON conjunct has no comparison: $c")
+      val lc = codeMask(c)
+      val i = (0 until c.length).find(i => lc.code(i) && lc.depth(i) == 0 &&
+        "<>=".indexOf(c.charAt(i)) >= 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"ASOF ON conjunct has no comparison: $c"))
+      if (c.charAt(i) != '=' && i + 1 < c.length && c.charAt(i + 1) == '=')
+        (c.charAt(i) + "=", i)
+      else (c.charAt(i).toString, i)
     }
     val bKeys = Seq.newBuilder[String]
     var ineq: Option[(String, String, String)] = None // (bTs, aTsText, dirOp)
@@ -403,8 +390,6 @@ private[engine] trait EngineDialect {
 
   private[engine] def rewriteStarReplace(
       spark: SparkSession, s: String): String = {
-    if (!s.matches("(?is)^(SELECT|WITH)\\b.*")) return s
-    if (!"(?is)^.*\\*.*\\bREPLACE\\s*\\(.*$".r.matches(s)) return s
     val (si, fi, distinctKw, items) =
       selectListParts(s).getOrElse(return s)
     val idx = items.indexWhere(it => it.startsWith("*") &&
@@ -412,6 +397,7 @@ private[engine] trait EngineDialect {
     if (idx < 0) return s
     val item = items(idx)
     // parse the item: '*' [EXCEPT (cols)] REPLACE (assignments)
+    val itemLx = codeMask(item)
     var p = 1
     def skipWs(): Unit =
       while (p < item.length && item.charAt(p).isWhitespace) p += 1
@@ -419,18 +405,8 @@ private[engine] trait EngineDialect {
       require(p < item.length && item.charAt(p) == '(',
         s"malformed star modifier: $item")
       val start = p
-      var depth = 0
-      var inStr = false
-      var done = false
-      while (p < item.length && !done) {
-        val ch = item.charAt(p)
-        if (inStr) { if (ch == '\'') inStr = false }
-        else if (ch == '\'') inStr = true
-        else if (ch == '(') depth += 1
-        else if (ch == ')') { depth -= 1; if (depth == 0) done = true }
-        p += 1
-      }
-      require(done, s"unbalanced parens in star modifier: $item")
+      p = itemLx.closeOf(start) + 1
+      require(p > 0, s"unbalanced parens in star modifier: $item")
       item.substring(start + 1, p - 1)
     }
     skipWs()
@@ -483,42 +459,30 @@ private[engine] trait EngineDialect {
     * Postgres surface). SIMILAR TO matches the ENTIRE string, RLIKE
     * searches, so the pattern anchors inside a non-capturing group.
     * Only the literal-pattern form routes (the anchoring happens in
-    * text); a computed pattern stays for Spark's parser to refuse
-    * loudly. Comment/quote-aware via the shared scanner. */
-  private[engine] def rewriteSimilarTo(s: String): String = {
-    if (!"(?is)^.*\\bSIMILAR\\s+TO\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+    * text); a computed pattern, or a literal that never closes, stays
+    * for Spark's parser to refuse loudly. */
+  private[engine] val rewriteSimilarTo: TextShim = TextShim("similar-to",
+      finds("\\bSIMILAR\\s+TO\\b")) { lx =>
+    val s = lx.s
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
-      val matched =
-        codeAt(i) && s.regionMatches(true, i, "SIMILAR", 0, 7) &&
-          (i == 0 || s.charAt(i - 1).isWhitespace) && {
-            var j = i + 7
-            val boundary = j >= s.length || s.charAt(j).isWhitespace
-            while (j < s.length && s.charAt(j).isWhitespace) j += 1
-            boundary && s.regionMatches(true, j, "TO", 0, 2) && {
-              var k = j + 2
-              while (k < s.length && s.charAt(k).isWhitespace) k += 1
-              if (k < s.length && s.charAt(k) == '\'') {
-                // consume the literal (with '' escapes)
-                val litStart = k
-                k += 1
-                var open = true
-                while (k < s.length && open) {
-                  if (s.charAt(k) == '\'' &&
-                    k + 1 < s.length && s.charAt(k + 1) == '\'') k += 2
-                  else if (s.charAt(k) == '\'') { open = false; k += 1 }
-                  else k += 1
-                }
-                val body = s.substring(litStart + 1, k - 1)
-                sb.append("RLIKE '^(?:").append(body).append(")$'")
-                i = k
-                true
-              } else false
-            }
-          }
-      if (!matched) { sb.append(s.charAt(i)); i += 1 }
+      val pattern =
+        if (lx.code(i) && s.regionMatches(true, i, "SIMILAR", 0, 7) &&
+            (i == 0 || s.charAt(i - 1).isWhitespace)) {
+          var j = i + 7
+          val boundary = j >= s.length || s.charAt(j).isWhitespace
+          while (j < s.length && s.charAt(j).isWhitespace) j += 1
+          if (boundary && s.regionMatches(true, j, "TO", 0, 2))
+            lx.literalAfter(j + 2)
+          else None
+        } else None
+      pattern match {
+        case Some((body, end)) =>
+          sb.append("RLIKE '^(?:").append(body).append(")$'")
+          i = end
+        case None => sb.append(s.charAt(i)); i += 1
+      }
     }
     sb.toString
   }
@@ -537,9 +501,7 @@ private[engine] trait EngineDialect {
     * precedence). The trailing ORDER BY/LIMIT of the last branch
     * applies to the whole union, as in plain SQL. */
   private[engine] def rewriteUnionByName(
-      spark: SparkSession, s: String): Option[String] = {
-    if (!"(?is)^.*\\bBY\\s+NAME\\b.*$".r.matches(s)) return None
-    if (!s.trim.matches("(?is)^(SELECT|FROM|VALUES|WITH)\\b.*")) return None
+      spark: SparkSession, s: String): String = {
     // top-level UNION tokens whose following tokens read
     // [ALL|DISTINCT] BY NAME — collect (start, endExclusive, isAll)
     case class Hit(start: Int, end: Int, all: Boolean)
@@ -559,7 +521,7 @@ private[engine] trait EngineDialect {
       if (!all) take("DISTINCT") // explicit DISTINCT reads as not-ALL
       if (take("BY") && take("NAME")) Some(Hit(i, j, all)) else None
     }
-    if (hits.isEmpty) return None
+    if (hits.isEmpty) return s
     require(hits.map(_.all).distinct.length == 1,
       "UNION BY NAME chains mixing ALL and DISTINCT are not routed —" +
         " parenthesize the sub-unions")
@@ -604,7 +566,7 @@ private[engine] trait EngineDialect {
         }.mkString(", ")
         s"SELECT $items FROM (\n$b\n) __graft_ubn$idx"
     }.mkString(op)
-    Some(rewritten + tail)
+    rewritten + tail
   }
 
   /** `date_diff('part', …)` / `datediff('part', …)` →
@@ -618,15 +580,15 @@ private[engine] trait EngineDialect {
     * 2-arg `datediff(end, start)` pass through untouched, so no Spark
     * spelling changes meaning. Comment/quote-aware via the shared
     * scanner. */
-  private[engine] def rewriteDateDiff(s: String): String = {
-    if (!"(?is)^.*\\bDATE_?DIFF\\s*\\(.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteDateDiff: TextShim = TextShim("date-diff",
+      finds("\\bDATE_?DIFF\\s*\\(")) { lx =>
+    val s = lx.s
     val out = new StringBuilder
     var i = 0
     while (i < s.length) {
       val nameLen =
-        if (codeAt(i) && s.regionMatches(true, i, "DATE_DIFF", 0, 9)) 9
-        else if (codeAt(i) && s.regionMatches(true, i, "DATEDIFF", 0, 8)) 8
+        if (lx.code(i) && s.regionMatches(true, i, "DATE_DIFF", 0, 9)) 9
+        else if (lx.code(i) && s.regionMatches(true, i, "DATEDIFF", 0, 8)) 8
         else 0
       val isCall = nameLen > 0 &&
         (i == 0 || (!s.charAt(i - 1).isLetterOrDigit &&
@@ -679,38 +641,26 @@ private[engine] trait EngineDialect {
   /** `expr [NOT] GLOB 'pattern'` → `expr [NOT] RLIKE '^(?:regex)$'` —
     * DuckDB's (SQLite-lineage) glob predicate: case-sensitive
     * whole-string match. Literal patterns only (the translation is
-    * textual); a computed pattern stays for Spark's parser to refuse
-    * loudly. Same scanner discipline as SIMILAR TO. */
-  private[engine] def rewriteGlob(s: String): String = {
-    if (!"(?is)^.*\\bGLOB\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+    * textual); a computed pattern, or a literal that never closes,
+    * stays for Spark's parser to refuse loudly. */
+  private[engine] val rewriteGlob: TextShim = TextShim("glob",
+      finds("\\bGLOB\\b")) { lx =>
+    val s = lx.s
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
-      val matched =
-        codeAt(i) && s.regionMatches(true, i, "GLOB", 0, 4) &&
-          (i == 0 || s.charAt(i - 1).isWhitespace) && {
-            var k = i + 4
-            val boundary = k >= s.length || s.charAt(k).isWhitespace
-            while (k < s.length && s.charAt(k).isWhitespace) k += 1
-            boundary && k < s.length && s.charAt(k) == '\'' && {
-              val litStart = k
-              k += 1
-              var open = true
-              while (k < s.length && open) {
-                if (s.charAt(k) == '\'' &&
-                  k + 1 < s.length && s.charAt(k + 1) == '\'') k += 2
-                else if (s.charAt(k) == '\'') { open = false; k += 1 }
-                else k += 1
-              }
-              val body = s.substring(litStart + 1, k - 1)
-              sb.append("RLIKE '^(?:").append(globToRegex(body))
-                .append(")$'")
-              i = k
-              true
-            }
-          }
-      if (!matched) { sb.append(s.charAt(i)); i += 1 }
+      val pattern =
+        if (lx.code(i) && s.regionMatches(true, i, "GLOB", 0, 4) &&
+            (i == 0 || s.charAt(i - 1).isWhitespace) &&
+            (i + 4 >= s.length || s.charAt(i + 4).isWhitespace))
+          lx.literalAfter(i + 4)
+        else None
+      pattern match {
+        case Some((body, end)) =>
+          sb.append("RLIKE '^(?:").append(globToRegex(body)).append(")$'")
+          i = end
+        case None => sb.append(s.charAt(i)); i += 1
+      }
     }
     sb.toString
   }
@@ -723,13 +673,13 @@ private[engine] trait EngineDialect {
     * innermost-first via recursion on the argument text. A non-`:=`
     * argument refuses — silently positional-packing would mis-name
     * every field. */
-  private[engine] def rewriteStructPack(s: String): String = {
-    if (!"(?is)^.*\\bSTRUCT_PACK\\s*\\(.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteStructPack: TextShim = TextShim("struct-pack",
+      finds("\\bSTRUCT_PACK\\s*\\(")) { lx =>
+    val s = lx.s
     val out = new StringBuilder
     var i = 0
     while (i < s.length) {
-      val isCall = codeAt(i) &&
+      val isCall = lx.code(i) &&
         s.regionMatches(true, i, "STRUCT_PACK", 0, 11) &&
         (i == 0 || !s.charAt(i - 1).isLetterOrDigit &&
           s.charAt(i - 1) != '_') && {
@@ -738,18 +688,8 @@ private[engine] trait EngineDialect {
           j < s.length && s.charAt(j) == '('
         }
       if (isCall) {
-        var j = s.indexOf('(', i + 11)
-        // balanced span of the argument list (quote-aware via codeMask)
-        var depth = 0
-        var end = -1
-        var k = j
-        while (k < s.length && end < 0) {
-          if (codeAt(k) && s.charAt(k) == '(') depth += 1
-          else if (codeAt(k) && s.charAt(k) == ')') {
-            depth -= 1; if (depth == 0) end = k
-          }
-          k += 1
-        }
+        val j = s.indexOf('(', i + 11)
+        val end = lx.closeOf(j)
         require(end > 0, "unbalanced parens in struct_pack(...)")
         val args = rewriteStructPack(s.substring(j + 1, end)) // nested
         val pairs = splitTopLevel(args, ',').map { a =>
@@ -767,6 +707,14 @@ private[engine] trait EngineDialect {
     out.toString
   }
 
+  /** Whether the `[` at `i` opens a subscript, not a list literal — the
+    * adjacency rule described at `rewriteDuckdbLiterals`. */
+  private def isSubscript(s: String, i: Int): Boolean = {
+    val prev = if (i > 0) s.charAt(i - 1) else ' '
+    prev.isLetterOrDigit || prev == '_' ||
+      prev == ')' || prev == ']' || prev == '`' || prev == '\''
+  }
+
   /** DuckDB's collection LITERAL syntax → Spark's constructor functions:
     * `[e1, e2, …]` → `array(e1, e2, …)` and `{'k': v, …}` →
     * `named_struct('k', v, …)`. A `[` that IMMEDIATELY follows an
@@ -781,9 +729,9 @@ private[engine] trait EngineDialect {
     * Pure text rewrite, idempotent (the output contains no `[`/`{` in
     * literal position), applied AFTER the table-function route so a
     * `read_parquet([…])` list is consumed as paths, not expressions. */
-  private[engine] def rewriteDuckdbLiterals(s: String): String = {
-    if (!s.exists(c => c == '[' || c == '{')) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteDuckdbLiterals: TextShim = TextShim("literals",
+      s => s.exists(c => c == '[' || c == '{')) { lx =>
+    val s = lx.s
     val sb = new StringBuilder
     // stack of open constructs: 'L' converted list, 'S' struct,
     // 'X' subscript bracket (untouched), 'P' paren
@@ -791,17 +739,14 @@ private[engine] trait EngineDialect {
     var i = 0
     while (i < s.length) {
       val ch = s.charAt(i)
-      if (!codeAt(i)) { sb.append(ch); i += 1 }
+      if (!lx.code(i)) { sb.append(ch); i += 1 }
       else ch match {
         case '(' => stack.push('P'); sb.append(ch); i += 1
         case ')' =>
           if (stack.headOption.contains('P')) stack.pop()
           sb.append(ch); i += 1
         case '[' =>
-          val prev = if (i > 0) s.charAt(i - 1) else ' '
-          val isSubscript = prev.isLetterOrDigit || prev == '_' ||
-            prev == ')' || prev == ']' || prev == '`' || prev == '\''
-          if (isSubscript) { stack.push('X'); sb.append(ch) }
+          if (isSubscript(s, i)) { stack.push('X'); sb.append(ch) }
           else { stack.push('L'); sb.append("array(") }
           i += 1
         case ']' =>
@@ -832,17 +777,14 @@ private[engine] trait EngineDialect {
     * arguments, column lists) are descended for nested groups but
     * otherwise untouched. */
   private[engine] def rewriteSubqueryBodies(
-      spark: SparkSession, s: String): String = {
-    if (!s.exists(_ == '(')) return s
-    val (codeAt, depth) = codeMask(s)
+      spark: SparkSession, lx: Lexed): String = {
+    val s = lx.s
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
-      if (codeAt(i) && s.charAt(i) == '(' && depth(i) == 0) {
-        var j = i + 1
-        while (j < s.length &&
-          !(codeAt(j) && s.charAt(j) == ')' && depth(j) == 1)) j += 1
-        if (j >= s.length) { // unbalanced — leave for Spark's parser
+      if (lx.code(i) && s.charAt(i) == '(' && lx.depth(i) == 0) {
+        val j = lx.closeOf(i)
+        if (j < 0) { // unbalanced — leave for Spark's parser
           sb.append(s.substring(i)); i = s.length
         } else {
           val content = s.substring(i + 1, j)
@@ -857,7 +799,9 @@ private[engine] trait EngineDialect {
               rewriteQueryText(spark, unpivotStatementSql(rest))
             case q if q.matches("(?is)^(SELECT|WITH|VALUES|FROM)\\b.*") =>
               rewriteQueryText(spark, content)
-            case _ => rewriteSubqueryBodies(spark, content)
+            case _ if content.contains('(') =>
+              rewriteSubqueryBodies(spark, codeMask(content))
+            case _ => content
           }
           sb.append('(').append(inner).append(')')
           i = j + 1
@@ -880,8 +824,6 @@ private[engine] trait EngineDialect {
     * only (the lambda/EXCLUDE variants of COLUMNS are not routed). */
   private[engine] def rewriteColumnsFn(
       spark: SparkSession, s: String): String = {
-    if (!s.matches("(?is)^(SELECT|WITH)\\b.*")) return s
-    if (!"(?is)^.*\\bCOLUMNS\\s*\\(.*$".r.matches(s)) return s
     val (si, fi, distinctKw, items) =
       selectListParts(s).getOrElse(return s)
     val colRe = "(?is)^(.*?)\\bCOLUMNS\\s*\\(\\s*'([^']*)'\\s*\\)(.*)$".r
@@ -941,12 +883,13 @@ private[engine] trait EngineDialect {
     * DISTINCT keyword would corrupt it). A set-op head fails loudly at
     * analysis (the helper column unbalances the branches) — never
     * silently mis-filters. */
-  private[engine] def rewriteQualify(s: String): String =
+  private[engine] val rewriteQualify: TextShim = TextShim("qualify",
     // query statements only: a QUALIFY inside CREATE VIEW … AS SELECT
     // would wrap the DDL in a SELECT — leave non-queries to Spark's
     // parser (its error names the unexpected clause)
-    if (!s.matches("(?is)^(SELECT|WITH)\\b.*")) s
-    else firstTopLevelKeyword(s, Seq("QUALIFY")) match {
+    finds("^(SELECT|WITH)\\b", "QUALIFY")) { lx =>
+    val s = lx.s
+    firstTopLevelKeyword(s, Seq("QUALIFY")) match {
       case None => s
       case Some(qi) =>
         val head = s.substring(0, qi).trim
@@ -982,6 +925,7 @@ private[engine] trait EngineDialect {
            |$innerText
            |) __graft_qual WHERE __graft_q $trailing""".stripMargin
     }
+  }
 
   /** Dollar-quoted strings — `$$…$$` / `$tag$…$tag$` (DuckDB/Postgres) →
     * standard single-quoted literals with `'` doubled. This runs FIRST,
@@ -993,53 +937,29 @@ private[engine] trait EngineDialect {
     * — `$1` (digit after `$`) and `$name` (no closing `$`) never match.
     * The closer is the identical tag; `$$` inside a `$tag$` body stays
     * literal. NOTE the A12 script splitter deliberately does NOT learn
-    * dollar quotes — it is a 1:1 port of the reference's lexer
-    * (App.tsx:69-135), which would split a `;` inside `$$…$$` the same
-    * way; per-statement conversion here matches what the reference
-    * surface can actually carry. */
+    * dollar quotes — like the reference's lexer (App.tsx:69-135), it
+    * would split a `;` inside `$$…$$`; per-statement conversion here
+    * matches what the reference surface can actually carry. */
   private[engine] def rewriteDollarQuotes(s: String): String = {
     if (!s.contains("$")) return s
     val openerRe = "^\\$([A-Za-z_]\\w*)?\\$".r
-    val sb = new StringBuilder
-    var inS, inD, inB, inLine, inBlock = false
-    var i = 0
-    val n = s.length
-    def nx(j: Int): Char = if (j < n) s.charAt(j) else '\u0000'
-    while (i < n) {
-      val ch = s.charAt(i)
-      if (inLine) { if (ch == '\n') inLine = false; sb.append(ch); i += 1 }
-      else if (inBlock) {
-        if (ch == '*' && nx(i + 1) == '/') { inBlock = false; sb.append("*/"); i += 2 }
-        else { sb.append(ch); i += 1 }
-      } else if (inS) {
-        if (ch == '\'' && nx(i + 1) == '\'') { sb.append("''"); i += 2 }
-        else { if (ch == '\'') inS = false; sb.append(ch); i += 1 }
-      } else if (inD) {
-        if (ch == '"' && nx(i + 1) == '"') { sb.append("\"\""); i += 2 }
-        else { if (ch == '"') inD = false; sb.append(ch); i += 1 }
-      } else if (inB) {
-        if (ch == '`' && nx(i + 1) == '`') { sb.append("``"); i += 2 }
-        else { if (ch == '`') inB = false; sb.append(ch); i += 1 }
-      } else if (ch == '-' && nx(i + 1) == '-') { inLine = true; sb.append(ch); i += 1 }
-      else if (ch == '/' && nx(i + 1) == '*') { inBlock = true; sb.append("/*"); i += 2 }
-      else if (ch == '\'') { inS = true; sb.append(ch); i += 1 }
-      else if (ch == '"') { inD = true; sb.append(ch); i += 1 }
-      else if (ch == '`') { inB = true; sb.append(ch); i += 1 }
-      else if (ch == '$') {
-        openerRe.findFirstMatchIn(s.substring(i)) match {
-          case Some(m) =>
-            val tag = m.matched
-            val bodyStart = i + tag.length
-            val close = s.indexOf(tag, bodyStart)
-            require(close >= 0,
-              s"unterminated dollar-quoted string opened with $tag")
-            sb.append(Sql.sqlStringLiteral(s.substring(bodyStart, close)))
-            i = close + tag.length
-          case None => sb.append(ch); i += 1
-        }
-      } else { sb.append(ch); i += 1 }
+    // the lexing up to the FIRST code-position opener is exact (nothing
+    // before it is dollar-quoted); the text after its closer re-lexes
+    val lx = codeMask(s)
+    (0 until s.length).iterator
+      .filter(i => lx.code(i) && s.charAt(i) == '$')
+      .flatMap(i => openerRe.findFirstIn(s.substring(i)).map(i -> _))
+      .nextOption() match {
+      case None => s
+      case Some((i, tag)) =>
+        val bodyStart = i + tag.length
+        val close = s.indexOf(tag, bodyStart)
+        require(close >= 0,
+          s"unterminated dollar-quoted string opened with $tag")
+        s.substring(0, i) +
+          Sql.sqlStringLiteral(s.substring(bodyStart, close)) +
+          rewriteDollarQuotes(s.substring(close + tag.length))
     }
-    sb.toString
   }
 
   /** Trailing commas (DuckDB tolerates them in select lists, GROUP BY,
@@ -1048,24 +968,16 @@ private[engine] trait EngineDialect {
     * rejects and no valid Spark statement contains, so dropping it is
     * semantics-free at every nesting depth. Comments between the comma
     * and the boundary are preserved. */
-  private[engine] def rewriteTrailingCommas(s: String): String = {
-    if (!s.contains(",")) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteTrailingCommas: TextShim = TextShim(
+      "trailing-commas", _.contains(",")) { lx =>
+    val s = lx.s
+    def comment(j: Int) = lx.shield(j) == '-' || lx.shield(j) == '/'
     val drop = new Array[Boolean](s.length)
     var i = 0
     while (i < s.length) {
-      if (codeAt(i) && s.charAt(i) == ',') {
+      if (lx.code(i) && s.charAt(i) == ',') {
         var j = i + 1
-        var moved = true
-        while (moved) {
-          moved = false
-          while (j < s.length && s.charAt(j).isWhitespace) { j += 1; moved = true }
-          if (j + 1 < s.length && s.charAt(j) == '-' && s.charAt(j + 1) == '-') {
-            val e = s.indexOf('\n', j); j = if (e < 0) s.length else e + 1; moved = true
-          } else if (j + 1 < s.length && s.charAt(j) == '/' && s.charAt(j + 1) == '*') {
-            val e = s.indexOf("*/", j + 2); j = if (e < 0) s.length else e + 2; moved = true
-          }
-        }
+        while (j < s.length && (comment(j) || s.charAt(j).isWhitespace)) j += 1
         val trailing = j >= s.length || s.charAt(j) == ')' ||
           s.charAt(j) == ']' || s.charAt(j) == '}' ||
           (s.regionMatches(true, j, "FROM", 0, 4) &&
@@ -1088,13 +1000,13 @@ private[engine] trait EngineDialect {
     * — DuckDB ≥ 1.3's preferred spelling) → the arrow form both engines'
     * higher-order functions take (`x -> expr`, `(a, b) -> expr`). The
     * single following `:` converts; `::` casts never match. */
-  private[engine] def rewriteLambdaSyntax(s: String): String = {
-    if (!"(?is)^.*\\bLAMBDA\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteLambdaSyntax: TextShim = TextShim(
+      "lambda-syntax", finds("\\bLAMBDA\\b")) { lx =>
+    val s = lx.s
     val re = "(?is)\\blambda\\s+([A-Za-z_]\\w*(?:\\s*,\\s*[A-Za-z_]\\w*)*)\\s*:(?!:)".r
     val sb = new StringBuilder
     var last = 0
-    for (m <- re.findAllMatchIn(s) if codeAt(m.start)) {
+    for (m <- re.findAllMatchIn(s) if lx.code(m.start)) {
       sb.append(s.substring(last, m.start))
       val params = m.group(1).split(",").map(_.trim)
       sb.append(
@@ -1143,12 +1055,14 @@ private[engine] trait EngineDialect {
     * Enclosing-call detection is paren-depth-based, so subquery and
     * window ORDER BYs (enclosing paren has no aggregate name before it
     * — `OVER (`, `FROM (`, `IN (`) never match, at any nesting. */
-  private[engine] def rewriteAggOrderBy(s: String): String = {
-    if (!"(?is)^.*\\bORDER\\s+BY\\b.*$".r.matches(s)) return s
-    val (codeAt, depth) = codeMask(s)
+  private[engine] val rewriteAggOrderBy: TextShim = TextShim("agg-order-by",
+    finds("\\bORDER\\s+BY\\b"))(aggOrderBy)
+
+  private def aggOrderBy(lx: Lexed): String = {
+    val s = lx.s
     var i = 0
     while (i < s.length) {
-      val isOrder = codeAt(i) && depth(i) >= 1 &&
+      val isOrder = lx.code(i) && lx.depth(i) >= 1 &&
         s.regionMatches(true, i, "ORDER", 0, 5) &&
         (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) && {
           var k = i + 5
@@ -1160,9 +1074,10 @@ private[engine] trait EngineDialect {
           }
         }
       if (isOrder) {
-        val d = depth(i)
+        val d = lx.depth(i)
         var o = i - 1
-        while (o >= 0 && !(codeAt(o) && s.charAt(o) == '(' && depth(o) == d - 1))
+        while (o >= 0 &&
+          !(lx.code(o) && s.charAt(o) == '(' && lx.depth(o) == d - 1))
           o -= 1
         var p = o - 1
         while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
@@ -1172,10 +1087,8 @@ private[engine] trait EngineDialect {
         val fn = s.substring(p + 1, nameEnd).toLowerCase
         if (fn.nonEmpty &&
             (aggOrderInsensitive(fn) || aggOrderRewritable(fn))) {
-          var c = i
-          while (c < s.length &&
-            !(codeAt(c) && s.charAt(c) == ')' && depth(c) == d)) c += 1
-          require(c < s.length, s"unbalanced parens in $fn(...)")
+          val c = lx.closeOf(o)
+          require(c >= 0, s"unbalanced parens in $fn(...)")
           val byIdx = s.toLowerCase.indexOf("by", i + 5)
           val argsText = s.substring(o + 1, i).trim
           val keysText = s.substring(byIdx + 2, c).trim
@@ -1292,16 +1205,16 @@ private[engine] trait EngineDialect {
     * Spark parse error bare). Aliases legally named text/varchar
     * elsewhere never match: only these two grammar positions are
     * types. */
-  private[engine] def rewriteDuckCastTypes(s: String): String = {
-    if (!s.contains("::") && !"(?is)^.*\\bCAST\\s*\\(.*$".r.matches(s))
-      return s
-    val (codeAt, depth) = codeMask(s)
+  private val castCall = finds("\\bCAST\\s*\\(")
+  private[engine] val rewriteDuckCastTypes: TextShim = TextShim("cast-types",
+      s => s.contains("::") || castCall(s)) { lx =>
+    val s = lx.s
     // pass 1: `:: TYPE [()] [[]...]`
     val colonRe =
       "::\\s*([A-Za-z_]\\w*)(\\s*\\([^)]*\\))?((?:\\s*\\[\\s*\\])*)".r
     val sb = new StringBuilder
     var last = 0
-    for (m <- colonRe.findAllMatchIn(s) if codeAt(m.start)) {
+    for (m <- colonRe.findAllMatchIn(s) if lx.code(m.start)) {
       val whole = m.matched.substring(2)
       val mapped = mapTypeText(whole)
       if (mapped != whole.trim) {
@@ -1313,25 +1226,21 @@ private[engine] trait EngineDialect {
     val s1 = sb.toString
     // pass 2: CAST(expr AS TYPE) / TRY_CAST — the LAST top-level AS
     // inside the call's parens delimits the type
-    val (code1, depth1) = codeMask(s1)
+    val lx1 = if (s1 == s) lx else codeMask(s1)
     val castRe = "(?i)\\b(?:TRY_)?CAST\\s*\\(".r
-    castRe.findAllMatchIn(s1).find(m => code1(m.start)) match {
+    castRe.findAllMatchIn(s1).find(m => lx1.code(m.start)) match {
       case None => s1
       case Some(m) =>
         val open = s1.indexOf('(', m.start)
-        val d = depth1(open) + 1
-        var close = open + 1
-        while (close < s1.length &&
-          !(code1(close) && s1.charAt(close) == ')' && depth1(close) == d))
-          close += 1
-        if (close >= s1.length) s1 // unbalanced mid-edit text — leave it
+        val close = lx1.closeOf(open)
+        if (close < 0) s1 // unbalanced mid-edit text — leave it
         else {
           val content = s1.substring(open + 1, close)
           // last top-level AS within the call
           val asRe = "(?i)\\bAS\\b".r
-          val (cc, cd) = codeMask(content)
+          val lc = codeMask(content)
           val asIdx = asRe.findAllMatchIn(content)
-            .filter(x => cc(x.start) && cd(x.start) == 0)
+            .filter(x => lc.code(x.start) && lc.depth(x.start) == 0)
             .map(_.start).toSeq.lastOption
           val newContent = asIdx match {
             case Some(i0) =>
@@ -1352,13 +1261,13 @@ private[engine] trait EngineDialect {
     * MATERIALIZED (…)` → `AS (…)`. A pure planner hint: Spark decides
     * CTE reuse itself (and the engine's explicit materialization tool
     * is CREATE TEMP TABLE). */
-  private[engine] def rewriteMaterializedCte(s: String): String = {
-    if (!"(?is)^.*\\bMATERIALIZED\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteMaterializedCte: TextShim = TextShim(
+      "materialized-cte", finds("\\bMATERIALIZED\\b")) { lx =>
+    val s = lx.s
     val re = "(?is)\\bAS\\s+(?:NOT\\s+)?MATERIALIZED\\s*\\(".r
     val sb = new StringBuilder
     var last = 0
-    for (m <- re.findAllMatchIn(s) if codeAt(m.start)) {
+    for (m <- re.findAllMatchIn(s) if lx.code(m.start)) {
       sb.append(s.substring(last, m.start)).append("AS (")
       last = m.end
     }
@@ -1370,13 +1279,13 @@ private[engine] trait EngineDialect {
     * accepts: drop the keyword so the bracket takes the collection-
     * literal route (DuckDB's own grammar reads ARRAY[ as a constructor
     * even where `array` could name a column — same choice here). */
-  private[engine] def rewriteArrayKw(s: String): String = {
-    if (!"(?is)^.*\\bARRAY\\s*\\[.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteArrayKw: TextShim = TextShim("array-kw",
+      finds("\\bARRAY\\s*\\[")) { lx =>
+    val s = lx.s
     val re = "(?is)\\bARRAY\\s*\\[".r
     val sb = new StringBuilder
     var last = 0
-    for (m <- re.findAllMatchIn(s) if codeAt(m.start)) {
+    for (m <- re.findAllMatchIn(s) if lx.code(m.start)) {
       sb.append(s.substring(last, m.start)).append(" [")
       last = m.end
     }
@@ -1389,14 +1298,14 @@ private[engine] trait EngineDialect {
     * the operators are the same operation in different spellings. `//`
     * is never SQL comment syntax, and comment/string occurrences are
     * shielded by codeMask. */
-  private[engine] def rewriteIntDiv(s: String): String = {
-    if (!s.contains("//")) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteIntDiv: TextShim = TextShim("int-div",
+      _.contains("//")) { lx =>
+    val s = lx.s
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
-      if (codeAt(i) && s.charAt(i) == '/' &&
-          i + 1 < s.length && codeAt(i + 1) && s.charAt(i + 1) == '/') {
+      if (lx.code(i) && s.charAt(i) == '/' &&
+          i + 1 < s.length && lx.code(i + 1) && s.charAt(i + 1) == '/') {
         sb.append(" DIV "); i += 2
       } else { sb.append(s.charAt(i)); i += 1 }
     }
@@ -1411,14 +1320,14 @@ private[engine] trait EngineDialect {
     * migrating script meant exponentiation would be silent wrongness
     * (the regexp-flags precedent). Spark-native bitwise xor remains
     * expressible as (a | b) & ~(a & b), named in the refusal. */
-  private[engine] def checkCaretPow(s: String): String = {
-    if (!s.contains("^") && !s.contains("**")) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val checkCaretPow: TextShim = TextShim("caret-pow",
+      s => s.contains("^") || s.contains("**")) { lx =>
+    val s = lx.s
     var i = 0
     while (i < s.length) {
-      if (codeAt(i)) {
+      if (lx.code(i)) {
         if (s.charAt(i) == '*' && i + 1 < s.length &&
-            codeAt(i + 1) && s.charAt(i + 1) == '*')
+            lx.code(i + 1) && s.charAt(i + 1) == '*')
           throw new IllegalArgumentException(
             "** (DuckDB exponentiation) has no Spark operator —" +
               " write power(a, b)")
@@ -1448,14 +1357,16 @@ private[engine] trait EngineDialect {
     * default null order is the same setting in DuckDB). `ORDER BY ALL`
     * keeps Spark's expansion untouched. Keys already explicit are
     * untouched, so the pass is idempotent. */
-  private[engine] def rewriteOrderByNulls(s: String): String = {
-    if (!"(?is)^.*\\bORDER\\s+BY\\b.*$".r.matches(s)) return s
-    val (codeAt, depth) = codeMask(s)
+  private[engine] val rewriteOrderByNulls: TextShim = TextShim("nulls-order",
+    finds("\\bORDER\\s+BY\\b"))(orderByNulls)
+
+  private def orderByNulls(lx: Lexed): String = {
+    val s = lx.s
     val terminators = Seq("LIMIT", "OFFSET", "FETCH", "ROWS", "RANGE",
       "GROUPS", "WINDOW", "UNION", "INTERSECT", "EXCEPT")
     var i = 0
     while (i < s.length) {
-      val isOrder = codeAt(i) &&
+      val isOrder = lx.code(i) &&
         s.regionMatches(true, i, "ORDER", 0, 5) &&
         (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) && {
           var k = i + 5
@@ -1467,7 +1378,7 @@ private[engine] trait EngineDialect {
           }
         }
       if (isOrder) {
-        val d = depth(i)
+        val d = lx.depth(i)
         val byIdx = s.toLowerCase.indexOf("by", i + 5)
         val keysStart = byIdx + 2
         // clause end: a ')' closing our depth, a same-depth terminator
@@ -1475,10 +1386,10 @@ private[engine] trait EngineDialect {
         var e = keysStart
         var end = -1
         while (end < 0 && e < s.length) {
-          if (codeAt(e)) {
+          if (lx.code(e)) {
             val c = s.charAt(e)
-            if (c == ')' && depth(e) == d) end = e
-            else if (depth(e) == d &&
+            if (c == ')' && lx.depth(e) == d) end = e
+            else if (lx.depth(e) == d &&
               (e == 0 || !(s.charAt(e - 1).isLetterOrDigit ||
                 s.charAt(e - 1) == '_')) &&
               terminators.exists(t =>
@@ -1507,7 +1418,7 @@ private[engine] trait EngineDialect {
           val chars = p.toCharArray
           var j = 0
           while (j < chars.length) {
-            if (!codeAt(base + j)) chars(j) = ' '
+            if (!lx.code(base + j)) chars(j) = ' '
             j += 1
           }
           (p, new String(chars), base)
@@ -1525,7 +1436,7 @@ private[engine] trait EngineDialect {
               // trailing comments/whitespace stay after the clause
               var last = p.length - 1
               while (last >= 0 &&
-                (!codeAt(base + last) || p.charAt(last).isWhitespace))
+                (!lx.code(base + last) || p.charAt(last).isWhitespace))
                 last -= 1
               p.substring(0, last + 1) + " NULLS LAST" +
                 p.substring(last + 1)
@@ -1549,9 +1460,9 @@ private[engine] trait EngineDialect {
     * partial-match RLIKE would silently differ. A `~` whose right-hand
     * side is not a string literal, or whose left neighbor is not an
     * operand end, stays untouched (Spark's prefix bitwise NOT). */
-  private[engine] def rewriteTildeMatch(s: String): String = {
-    if (!s.contains("~")) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteTildeMatch: TextShim = TextShim("tilde-match",
+      _.contains("~")) { lx =>
+    val s = lx.s
     val sb = new StringBuilder
     var i = 0
     def operandEndBefore(p0: Int): Boolean = {
@@ -1561,32 +1472,15 @@ private[engine] trait EngineDialect {
         s.charAt(p) == '\'' || s.charAt(p) == '`' ||
         s.charAt(p) == ')' || s.charAt(p) == ']')
     }
-    def literalAfter(p0: Int): Option[(String, Int)] = {
-      var p = p0
-      while (p < s.length && s.charAt(p).isWhitespace) p += 1
-      if (p >= s.length || s.charAt(p) != '\'') None
-      else {
-        val start = p
-        p += 1
-        var open = true
-        while (p < s.length && open) {
-          if (s.charAt(p) == '\'' && p + 1 < s.length &&
-            s.charAt(p + 1) == '\'') p += 2
-          else if (s.charAt(p) == '\'') { open = false; p += 1 }
-          else p += 1
-        }
-        if (open) None else Some((s.substring(start + 1, p - 1), p))
-      }
-    }
     while (i < s.length) {
       val ch = s.charAt(i)
-      if (codeAt(i) && (ch == '~' || (ch == '!' && i + 1 < s.length &&
-          codeAt(i + 1) && s.charAt(i + 1) == '~'))) {
+      if (lx.code(i) && (ch == '~' || (ch == '!' && i + 1 < s.length &&
+          lx.code(i + 1) && s.charAt(i + 1) == '~'))) {
         val neg = ch == '!'
         val tildes = {
           var k = if (neg) i + 1 else i
           var n = 0
-          while (k < s.length && codeAt(k) && s.charAt(k) == '~') {
+          while (k < s.length && lx.code(k) && s.charAt(k) == '~') {
             n += 1; k += 1
           }
           n
@@ -1597,13 +1491,16 @@ private[engine] trait EngineDialect {
           sb.append(if (neg) " NOT LIKE " else " LIKE ")
           i = opEnd
         } else if (tildes == 1 && operandEndBefore(i)) {
-          literalAfter(opEnd) match {
+          lx.literalAfter(opEnd) match {
             case Some((pat, after)) =>
               sb.append(if (neg) " NOT RLIKE " else " RLIKE ")
                 .append("'^(?:").append(pat).append(")$'")
               i = after
             case None =>
-              if (neg) throw new IllegalArgumentException(
+              // a pattern literal that never closes stays for Spark's
+              // parser to reject, like any unterminated literal
+              val unterminated = s.substring(opEnd).trim.startsWith("'")
+              if (neg && !unterminated) throw new IllegalArgumentException(
                 "!~ with a computed pattern is not routed — write NOT" +
                   " regexp_like(s, concat('^(?:', p, ')$'))")
               else { sb.append(ch); i += 1 } // prefix bitwise NOT
@@ -1619,11 +1516,11 @@ private[engine] trait EngineDialect {
     * promise (a parallel scan's order varies run to run) — silently
     * zipping would pair arbitrary rows. The refusal names the explicit
     * spelling that is order-sound. */
-  private[engine] def checkPositionalJoin(s: String): String = {
-    if (!"(?is)^.*\\bPOSITIONAL\\s+JOIN\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val checkPositionalJoin: TextShim = TextShim(
+      "positional-join", finds("\\bPOSITIONAL\\s+JOIN\\b")) { lx =>
+    val s = lx.s
     if ("(?is)\\bPOSITIONAL\\s+JOIN\\b".r.findAllMatchIn(s)
-        .exists(m => codeAt(m.start)))
+        .exists(m => lx.code(m.start)))
       throw new IllegalArgumentException(
         "POSITIONAL JOIN is not routed: row order is not a distributed" +
           " invariant — number each side explicitly with row_number()" +
@@ -1638,32 +1535,22 @@ private[engine] trait EngineDialect {
     * `(EXTRACT(dayofweek FROM x) - 1)`, `EXTRACT(isodow FROM x)` →
     * `EXTRACT(dayofweek_iso FROM x)`, and the same two fields through
     * `date_part('…', x)` / `datepart`. */
-  private[engine] def rewriteDowField(s: String): String = {
-    if (!"(?is)^.*\\b(?:DOW|ISODOW)\\b.*$".r.matches(s)) return s
-    val (codeAt, depth) = codeMask(s)
+  private[engine] val rewriteDowField: TextShim = TextShim("dow-field",
+      finds("\\b(?:DOW|ISODOW)\\b")) { lx =>
+    val s = lx.s
     val extractRe =
       "(?is)\\bEXTRACT\\s*\\(\\s*(DOW|ISODOW)\\s+FROM\\b".r
     val datePartRe =
       "(?is)\\b(?:DATE_PART|DATEPART)\\s*\\(\\s*'(dow|isodow)'\\s*,".r
-    def closeOf(openIdx: Int): Int = {
-      // depth() records the PRE-char depth: the matching ')' of a '('
-      // at depth d carries depth d+1
-      val d = depth(openIdx) + 1
-      var c = openIdx + 1
-      while (c < s.length &&
-        !(codeAt(c) && s.charAt(c) == ')' && depth(c) == d)) c += 1
-      require(c < s.length, "unbalanced parens in extract/date_part")
-      c
-    }
-    val hit = extractRe.findAllMatchIn(s).find(m => codeAt(m.start))
+    val hit = extractRe.findAllMatchIn(s).find(m => lx.code(m.start))
       .map(m => (m, m.group(1).toLowerCase, "extract"))
-      .orElse(datePartRe.findAllMatchIn(s).find(m => codeAt(m.start))
+      .orElse(datePartRe.findAllMatchIn(s).find(m => lx.code(m.start))
         .map(m => (m, m.group(1).toLowerCase, "date_part")))
     hit match {
       case None => s
       case Some((m, field, kind)) =>
-        val open = s.indexOf('(', m.start)
-        val close = closeOf(open)
+        val close = lx.closeOf(s.indexOf('(', m.start))
+        require(close >= 0, "unbalanced parens in extract/date_part")
         val call = s.substring(m.start, close + 1)
         // replaceFirst targets the FIELD token — it precedes any column
         // legally named dow/isodow inside the FROM-expression
@@ -1696,30 +1583,20 @@ private[engine] trait EngineDialect {
     * (no top-level `:`) stay native-Spark per the documented base
     * divergence. NOTE `base` may appear twice in the open-ended form —
     * Catalyst's subexpression elimination dedupes the evaluation. */
-  private[engine] def rewriteListSlice(s: String): String = {
-    if (!s.contains("[") || !s.contains(":")) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteListSlice: TextShim = TextShim("list-slice",
+    s => s.contains("[") && s.contains(":"))(listSlice)
+
+  private def listSlice(lx: Lexed): String = {
+    val s = lx.s
     var i = 0
     while (i < s.length) {
-      if (codeAt(i) && s.charAt(i) == '[') {
-        val prev = if (i > 0) s.charAt(i - 1) else ' '
-        val isSubscript = prev.isLetterOrDigit || prev == '_' ||
-          prev == ')' || prev == ']' || prev == '`' || prev == '\''
-        if (isSubscript) {
-          // matching ']' via bracket depth at code positions
-          var bd = 0; var j = i; var end = -1
-          while (j < s.length && end < 0) {
-            if (codeAt(j)) {
-              val c = s.charAt(j)
-              if (c == '[') bd += 1
-              else if (c == ']') { bd -= 1; if (bd == 0) end = j }
-            }
-            j += 1
-          }
+      if (lx.code(i) && s.charAt(i) == '[') {
+        if (isSubscript(s, i)) {
+          val end = lx.balance(i, '[', ']')
           if (end > 0) {
             val content = s.substring(i + 1, end)
             sliceParts(content).foreach { case (loT, hiT) =>
-              val baseStart = exprStartLeft(s, codeAt, i)
+              val baseStart = exprStartLeft(lx, i)
               val base = s.substring(baseStart, i)
               require(base.nonEmpty, s"cannot locate the slice base in: $s")
               def nonNeg(t: String, which: String): String = {
@@ -1755,18 +1632,18 @@ private[engine] trait EngineDialect {
     * refuse. */
   private[engine] def sliceParts(
       content: String): Option[(Option[String], Option[String])] = {
-    val (codeAt, _) = codeMask(content)
+    val lc = codeMask(content)
     var pd = 0; var bd = 0
     val colons = scala.collection.mutable.Buffer.empty[Int]
     var i = 0
     while (i < content.length) {
-      if (codeAt(i)) {
+      if (lc.code(i)) {
         val c = content.charAt(i)
         if (c == '(') pd += 1 else if (c == ')') pd -= 1
         else if (c == '[') bd += 1 else if (c == ']') bd -= 1
         else if (c == ':' && pd == 0 && bd == 0) {
           if (i + 1 < content.length && content.charAt(i + 1) == ':' &&
-              codeAt(i + 1)) i += 1 // '::' cast — skip the pair
+              lc.code(i + 1)) i += 1 // '::' cast — skip the pair
           else colons += i
         }
       }
@@ -1788,33 +1665,33 @@ private[engine] trait EngineDialect {
     * subscript/slice base: walks left over identifier chains (`a.b.c`),
     * balanced call/subscript groups (`f(…)`, `m['k']`), quoted
     * identifiers, and one string literal. */
-  private[engine] def exprStartLeft(
-      s: String, codeAt: Array[Boolean], end: Int): Int = {
+  private[engine] def exprStartLeft(lx: Lexed, end: Int): Int = {
+    val s = lx.s
     var j = end
     var done = false
     while (!done && j > 0) {
       val c = s.charAt(j - 1)
-      if (c == ')' || c == ']') {
+      if (!lx.code(j - 1)) {
+        // a backtick identifier continues the walk; a string-literal
+        // base ('abc'[…]) ends it; anything else ends it, excluded
+        val q = lx.shield(j - 1)
+        if (q == '`' || q == '\'') {
+          var k = j - 1
+          while (k > 0 && lx.shield(k - 1) == q) k -= 1
+          j = k
+          done = q == '\''
+        } else done = true
+      } else if (c == ')' || c == ']') {
         val open = if (c == ')') '(' else '['
         var bal = 0; var k = j - 1; var found = -1
         while (k >= 0 && found < 0) {
-          if (codeAt(k)) {
+          if (lx.code(k)) {
             if (s.charAt(k) == c) bal += 1
             else if (s.charAt(k) == open) { bal -= 1; if (bal == 0) found = k }
           }
           k -= 1
         }
         if (found < 0) done = true else j = found
-      } else if (c == '`') {
-        var k = j - 2
-        while (k >= 0 && s.charAt(k) != '`') k -= 1
-        if (k < 0) done = true else j = k
-      } else if (c == '\'') {
-        // a string-literal base ('abc'[…]); backward scan to its opener
-        var k = j - 2
-        while (k >= 0 && !(s.charAt(k) == '\'' &&
-          (k == 0 || s.charAt(k - 1) != '\''))) k -= 1
-        if (k < 0) done = true else { j = k; done = true }
       } else if (c.isLetterOrDigit || c == '_') {
         var k = j - 1
         while (k > 0 && (s.charAt(k - 1).isLetterOrDigit ||
@@ -1833,34 +1710,26 @@ private[engine] trait EngineDialect {
     * are documented-divergent (DuckDB map[k] yields a LIST, Spark the
     * value) — portable access goes through map_keys/map_values or
     * element_at, as noted in SURVEY §7. */
-  private[engine] def rewriteMapLiteral(s: String): String = {
-    if (!"(?is)^.*\\bMAP\\s*\\{.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteMapLiteral: TextShim = TextShim("map-literal",
+      finds("\\bMAP\\s*\\{")) { lx =>
+    val s = lx.s
     val re = "(?is)\\bMAP\\s*\\{".r
-    re.findAllMatchIn(s).find(m => codeAt(m.start)) match {
+    re.findAllMatchIn(s).find(m => lx.code(m.start)) match {
       case None => s
       case Some(m) =>
         val openBrace = m.end - 1
-        var bd = 0; var j = openBrace; var close = -1
-        while (j < s.length && close < 0) {
-          if (codeAt(j)) {
-            val c = s.charAt(j)
-            if (c == '{') bd += 1
-            else if (c == '}') { bd -= 1; if (bd == 0) close = j }
-          }
-          j += 1
-        }
+        val close = lx.balance(openBrace, '{', '}')
         require(close > 0, "unbalanced braces in MAP {…}")
         val content = s.substring(openBrace + 1, close).trim
         // split entries at commas that are top-level w.r.t. parens AND
         // brackets/braces (list values carry commas; splitTopLevel only
         // tracks parens)
         def splitEntries(t: String): Seq[String] = {
-          val (pc, _) = codeMask(t)
+          val lt = codeMask(t)
           val out = scala.collection.mutable.Buffer.empty[String]
           var pd = 0; var bd = 0; var last = 0; var x = 0
           while (x < t.length) {
-            if (pc(x)) {
+            if (lt.code(x)) {
               val c = t.charAt(x)
               if (c == '(') pd += 1 else if (c == ')') pd -= 1
               else if (c == '[' || c == '{') bd += 1
@@ -1877,10 +1746,10 @@ private[engine] trait EngineDialect {
         val args =
           if (content.isEmpty) ""
           else splitEntries(content).map { pair =>
-            val (pc, _) = codeMask(pair)
+            val lp = codeMask(pair)
             var k = -1; var x = 0
             while (k < 0 && x < pair.length) {
-              if (pc(x) && pair.charAt(x) == ':' &&
+              if (lp.code(x) && pair.charAt(x) == ':' &&
                   !(x + 1 < pair.length && pair.charAt(x + 1) == ':') &&
                   !(x > 0 && pair.charAt(x - 1) == ':')) k = x
               x += 1
@@ -1899,25 +1768,17 @@ private[engine] trait EngineDialect {
     * the brackets as an array constructor); the subscript adjacency
     * rule is shared with it. Nested comprehensions rewrite via
     * recursion on the pieces. */
-  private[engine] def rewriteListComprehension(s: String): String = {
-    if (!s.contains("[") || !"(?is)^.*\\bFOR\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private val forWord = finds("\\bFOR\\b")
+  private[engine] val rewriteListComprehension: TextShim = TextShim(
+    "list-comprehension", s => s.contains("[") && forWord(s))(listComprehension)
+
+  private def listComprehension(lx: Lexed): String = {
+    val s = lx.s
     var i = 0
     while (i < s.length) {
-      if (codeAt(i) && s.charAt(i) == '[') {
-        val prev = if (i > 0) s.charAt(i - 1) else ' '
-        val isSubscript = prev.isLetterOrDigit || prev == '_' ||
-          prev == ')' || prev == ']' || prev == '`' || prev == '\''
-        if (!isSubscript) {
-          var bd = 0; var j = i; var end = -1
-          while (j < s.length && end < 0) {
-            if (codeAt(j)) {
-              val c = s.charAt(j)
-              if (c == '[') bd += 1
-              else if (c == ']') { bd -= 1; if (bd == 0) end = j }
-            }
-            j += 1
-          }
+      if (lx.code(i) && s.charAt(i) == '[') {
+        if (!isSubscript(s, i)) {
+          val end = lx.balance(i, '[', ']')
           if (end > 0) comprehensionParts(s.substring(i + 1, end)).foreach {
             case (exprT, v, listT, condT) =>
               val list = rewriteListComprehension(listT)
@@ -1944,12 +1805,12 @@ private[engine] trait EngineDialect {
     * brackets); None for a plain list literal. */
   private[engine] def comprehensionParts(
       content: String): Option[(String, String, String, Option[String])] = {
-    val (codeAt, _) = codeMask(content)
+    val lc = codeMask(content)
     def topKw(kw: String, from: Int): Int = {
       var pd = 0; var bd = 0
       var i = from
       while (i < content.length) {
-        if (codeAt(i)) {
+        if (lc.code(i)) {
           val c = content.charAt(i)
           if (c == '(') pd += 1 else if (c == ')') pd -= 1
           else if (c == '[') bd += 1 else if (c == ']') bd -= 1

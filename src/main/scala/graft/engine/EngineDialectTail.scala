@@ -1,8 +1,10 @@
 package graft.engine
 
+import EngineLex.finds
+
 /** Round-19 tail of the pure-text dialect shims (A6) — split from
-  * [[EngineDialect]] by file only, same discipline: string→string on
-  * the `codeMask` state machine, EngineProps identity-gated. */
+  * [[EngineDialect]] by file only, same discipline: text shims over the
+  * `codeMask` lexing, EngineProps identity-gated. */
 private[engine] trait EngineDialectTail {
   this: Engine.type =>
 
@@ -20,25 +22,24 @@ private[engine] trait EngineDialectTail {
     * classified and refuses loudly); Spark and DuckDB read the same
     * IANA zone rules, so the converted instants agree. Left operand
     * extent via exprStartLeft (the list-slice walker). */
-  private[engine] def rewriteAtTimeZone(s: String): String = {
-    if (!"(?is)^.*\\bAT\\s+TIME\\s+ZONE\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteAtTimeZone: TextShim = TextShim("at-time-zone",
+    finds("\\bAT\\s+TIME\\s+ZONE\\b"))(atTimeZone)
+
+  private def atTimeZone(lx: Lexed): String = {
+    val s = lx.s
     val re = "(?is)\\bAT\\s+TIME\\s+ZONE\\b\\s*".r
     re.findAllMatchIn(s).foreach { m =>
-      if (codeAt(m.start)) {
+      if (lx.code(m.start)) {
         require(m.end < s.length && s.charAt(m.end) == '\'',
           "AT TIME ZONE needs a literal zone name ('America/New_York'):" +
             " a computed zone cannot be routed")
-        var q = m.end + 1
-        while (q < s.length && !(s.charAt(q) == '\'' &&
-          (q + 1 >= s.length || s.charAt(q + 1) != '\''))) {
-          q += (if (s.charAt(q) == '\'') 2 else 1)
-        }
-        require(q < s.length, "unterminated zone literal after AT TIME ZONE")
-        val tz = s.substring(m.end, q + 1)
+        val zone = lx.literalAfter(m.end)
+        require(zone.isDefined, "unterminated zone literal after AT TIME ZONE")
+        val tzEnd = zone.get._2
+        val tz = s.substring(m.end, tzEnd)
         var e = m.start
         while (e > 0 && s.charAt(e - 1).isWhitespace) e -= 1
-        var baseStart = exprStartLeft(s, codeAt, e)
+        var baseStart = exprStartLeft(lx, e)
         // a typed literal (TIMESTAMP '…' / DATE '…') is ONE operand:
         // the string-literal walker stops at the quote, so pull the
         // type keyword in too or it would orphan before the call wrap
@@ -60,7 +61,7 @@ private[engine] trait EngineDialectTail {
           else "to_utc_timestamp"
         return rewriteAtTimeZone(
           s.substring(0, baseStart) + s"$fn($base, $tz)" +
-            s.substring(q + 1))
+            s.substring(tzEnd))
       }
     }
     s
@@ -74,15 +75,17 @@ private[engine] trait EngineDialectTail {
     * to just after it — a pure local swap, so nesting and every other
     * argument shape pass through; a modifier NOT at argument-list tail
     * is not DuckDB grammar and stays for Spark's parser to refuse. */
-  private[engine] def rewriteIgnoreNulls(s: String): String = {
-    if (!"(?is)^.*\\b(IGNORE|RESPECT)\\s+NULLS\\b.*$".r.matches(s)) return s
-    val (codeAt, _) = codeMask(s)
+  private[engine] val rewriteIgnoreNulls: TextShim = TextShim("ignore-nulls",
+    finds("\\b(IGNORE|RESPECT)\\s+NULLS\\b"))(ignoreNulls)
+
+  private def ignoreNulls(lx: Lexed): String = {
+    val s = lx.s
     val re = "(?is)\\b(IGNORE|RESPECT)\\s+NULLS\\b".r
     re.findAllMatchIn(s).foreach { m =>
-      if (codeAt(m.start)) {
+      if (lx.code(m.start)) {
         var j = m.end
         while (j < s.length && s.charAt(j).isWhitespace) j += 1
-        if (j < s.length && codeAt(j) && s.charAt(j) == ')') {
+        if (j < s.length && lx.code(j) && s.charAt(j) == ')') {
           var e = m.start
           while (e > 0 && s.charAt(e - 1).isWhitespace) e -= 1
           return rewriteIgnoreNulls(

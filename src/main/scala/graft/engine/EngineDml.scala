@@ -2,6 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import EngineLex.codeMask
+
 /** The user-typed DML statement routes (A6): DELETE/UPDATE/MERGE/
   * upsert/RETURNING via the copy-on-write rewriter in [[Dml]], plus
   * COPY TO/FROM and the insert-source binding shared by all insert
@@ -287,9 +289,9 @@ private[engine] trait EngineDml {
     * of `firstTopLevelKeyword` (one codeMask pass), with the same
     * whitespace/paren boundary rules. */
   private[engine] def allTopLevelKeyword(s: String, kw: String): Seq[Int] = {
-    val (code, depth) = codeMask(s)
+    val lx = codeMask(s)
     (0 until s.length).filter { i =>
-      code(i) && depth(i) == 0 && i + kw.length <= s.length &&
+      lx.code(i) && lx.depth(i) == 0 && i + kw.length <= s.length &&
         s.regionMatches(true, i, kw, 0, kw.length) &&
         (i == 0 || s.charAt(i - 1).isWhitespace) &&
         (i + kw.length == s.length ||
@@ -666,11 +668,11 @@ private[engine] trait EngineDml {
     * conjunctions. */
   private[engine] def splitOnKeyword(s: String, kw: String): Seq[String] = {
     val out = scala.collection.mutable.Buffer.empty[String]
-    val (code, depth) = codeMask(s)
+    val lx = codeMask(s)
     var last = 0
     var i = 0
     while (i < s.length) {
-      if (code(i) && depth(i) == 0 && i + kw.length <= s.length &&
+      if (lx.code(i) && lx.depth(i) == 0 && i + kw.length <= s.length &&
           s.regionMatches(true, i, kw, 0, kw.length) &&
           (i == 0 || s.charAt(i - 1).isWhitespace) &&
           (i + kw.length == s.length ||

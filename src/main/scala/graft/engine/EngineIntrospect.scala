@@ -2,6 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import EngineLex.codeMask
+
 /** The catalog/introspection statement routes (A6): ALTER column
   * surgery, CREATE MACRO, PREPARE/EXECUTE, statement-form PIVOT/
   * UNPIVOT, DISTINCT ON, FROM-first, EXPORT/IMPORT DATABASE,
@@ -173,11 +175,11 @@ private[engine] trait EngineIntrospect {
         s"CREATE MACRO needs <name>(<params>) AS <expr> — got: $other")
     }
     // balanced close of the parameter list (quote-aware)
-    val (codeAt, depth) = codeMask(afterParen)
+    val lx = codeMask(afterParen)
     // the OPENING paren was consumed by headRe, so the list's close is
     // the first top-level `)` of the remaining text
     val close = (0 until afterParen.length).find(i =>
-      codeAt(i) && afterParen.charAt(i) == ')' && depth(i) == 0)
+      lx.code(i) && afterParen.charAt(i) == ')' && lx.depth(i) == 0)
       .getOrElse(throw new IllegalArgumentException(
         s"CREATE MACRO $name: unbalanced parameter list"))
     val params = splitTopLevel(afterParen.substring(0, close), ',')
@@ -286,7 +288,7 @@ private[engine] trait EngineIntrospect {
   private[engine] def bindPrepared(
       text: String, args: Seq[String],
       named: Map[String, String] = Map.empty): String = {
-    val (codeAt, _) = codeMask(text)
+    val lx = codeMask(text)
     val sb = new StringBuilder
     var i = 0
     var qIdx = 0
@@ -297,7 +299,7 @@ private[engine] trait EngineIntrospect {
     var sawNamed = false
     while (i < text.length) {
       val ch = text.charAt(i)
-      if (codeAt(i) && ch == '$' && i + 1 < text.length &&
+      if (lx.code(i) && ch == '$' && i + 1 < text.length &&
           text.charAt(i + 1).isDigit) {
         var j = i + 1
         while (j < text.length && text.charAt(j).isDigit) j += 1
@@ -309,7 +311,7 @@ private[engine] trait EngineIntrospect {
         used += n
         sb.append('(').append(args(n - 1)).append(')')
         i = j
-      } else if (codeAt(i) && ch == '$' && i + 1 < text.length &&
+      } else if (lx.code(i) && ch == '$' && i + 1 < text.length &&
           (text.charAt(i + 1).isLetter || text.charAt(i + 1) == '_')) {
         var j = i + 1
         while (j < text.length && (text.charAt(j).isLetterOrDigit ||
@@ -323,7 +325,7 @@ private[engine] trait EngineIntrospect {
         usedNames += pname
         sb.append('(').append(named(pname)).append(')')
         i = j
-      } else if (codeAt(i) && ch == '?') {
+      } else if (lx.code(i) && ch == '?') {
         require(qIdx < args.length,
           s"prepared statement has more ? parameters than the" +
             s" ${args.length} argument(s) EXECUTE passed")
@@ -551,24 +553,14 @@ private[engine] trait EngineIntrospect {
   private[engine] val donRe = "(?is)^SELECT\\s+DISTINCT\\s+ON\\s*\\((.*)$".r
 
   private[engine] def distinctOnToWindow(afterParen: String): String = {
-    // keys: scan to the balancing close paren (quote-aware)
-    var depth = 1
-    var inStr = false
-    var i = 0
-    while (i < afterParen.length && depth > 0) {
-      val ch = afterParen.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    require(depth == 0, "unbalanced parens in DISTINCT ON key list")
-    val keys = afterParen.substring(0, i - 1).trim
-    val rest = afterParen.substring(i)
+    // keys: to the first top-level `)` (the opening paren was consumed)
+    val lx = codeMask(afterParen)
+    val close = (0 until afterParen.length).find(i =>
+      lx.code(i) && afterParen.charAt(i) == ')' && lx.depth(i) == 0)
+      .getOrElse(-1)
+    require(close >= 0, "unbalanced parens in DISTINCT ON key list")
+    val keys = afterParen.substring(0, close).trim
+    val rest = afterParen.substring(close + 1)
     val fromIdx = firstTopLevelKeyword(rest, Seq("FROM")).getOrElse(
       throw new IllegalArgumentException(
         "DISTINCT ON statement needs a FROM clause"))

@@ -1,27 +1,91 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.util.regex.Pattern
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The shared statement lexing kernel: one quote/comment/paren state
-  * machine (`codeMask`) and the top-level keyword/separator scanners
-  * every route and shim builds on. Mixed into [[Engine]]; split out by
-  * file only. */
-private[engine] trait EngineLex {
-  this: Engine.type =>
+import EngineLex.codeMask
 
-  /** Per-character top-level map of a statement: `code(i)` is true when
-    * char i sits outside string literals, double-quoted/backtick
-    * identifiers, and both comment styles; `depth(i)` is the paren depth
-    * BEFORE char i. This is the ONE state machine behind every keyword
-    * scanner and splitter in the router — the same quote/comment rules
-    * the A12 lexer (`Sql.segments`) applies — so a QUALIFY/ASOF/WHERE
-    * sitting inside a `--` comment, a block comment, or a quoted
-    * identifier never triggers a route. */
-  private[engine] def codeMask(s: String): (Array[Boolean], Array[Int]) = {
+/** A statement as the router's one quote/comment state machine
+  * (`EngineLex.codeMask`) reads it. `shield(i)` is 0 when char i is
+  * code — outside string literals, double-quoted/backtick identifiers
+  * and both comment styles — and otherwise the character that opened
+  * the region holding it: `'`, `"`, `` ` ``, or `-` / `/` for a line /
+  * block comment. `depth(i)` is the paren depth BEFORE char i, counted
+  * over code only. `unclosed` is true when the text ends inside a
+  * region (an unterminated literal, identifier or block comment). */
+private[engine] final class Lexed(
+    val s: String, val shield: Array[Char], val depth: Array[Int],
+    val unclosed: Boolean) {
+
+  def code(i: Int): Boolean = shield(i) == 0
+
+  /** End (exclusive) of the region holding char `i`: a shielded run
+    * is one region, because two regions of the same kind never touch
+    * (a doubled quote is an escape, not a close and a reopen). */
+  def regionEnd(i: Int): Int = {
+    var j = i + 1
+    while (j < s.length && shield(j) == shield(i)) j += 1
+    j
+  }
+
+  /** Index of the `)` that closes the code `(` at `open`; -1 when the
+    * text ends first. */
+  def closeOf(open: Int): Int = {
+    val d = depth(open) + 1
+    var c = open + 1
+    while (c < s.length && !(code(c) && s.charAt(c) == ')' && depth(c) == d))
+      c += 1
+    if (c < s.length) c else -1
+  }
+
+  /** Index of the code `close` bracket that balances the code `open`
+    * bracket at `at` (square or curly brackets: `depth` counts parens
+    * only); -1 when the text ends first. */
+  def balance(at: Int, open: Char, close: Char): Int = {
+    var d = 0
+    var j = at
+    while (j < s.length) {
+      if (code(j) && s.charAt(j) == open) d += 1
+      else if (code(j) && s.charAt(j) == close) {
+        d -= 1
+        if (d == 0) return j
+      }
+      j += 1
+    }
+    -1
+  }
+
+  /** The string literal that opens at `from` after any whitespace, as
+    * (body with its `''` escapes kept, index just past the closing
+    * quote); None when no literal opens there or it never closes. The
+    * router's one literal scanner: every shim that takes a literal
+    * operand (SIMILAR TO, GLOB, `~`, AT TIME ZONE) reads it here. */
+  def literalAfter(from: Int): Option[(String, Int)] = {
+    var p = from
+    while (p < s.length && s.charAt(p).isWhitespace) p += 1
+    if (p >= s.length || s.charAt(p) != '\'' || shield(p) != '\'') None
+    else {
+      val end = regionEnd(p)
+      if (end == s.length && unclosed) None
+      else Some((s.substring(p + 1, end - 1), end))
+    }
+  }
+}
+
+private[engine] object EngineLex {
+
+  /** Lex a statement: THE quote/comment state machine behind every
+    * keyword scanner, splitter and dialect shim of the router, the
+    * statement splitter (`Sql.segments`) and the path-table tokens
+    * (`Catalog.rewritePathTables`) — so a QUALIFY/ASOF/WHERE or a `;`
+    * sitting inside a `--` comment, a block comment, a string literal or
+    * a quoted identifier never triggers a route or a split. Quotes
+    * escape by doubling (`''`, `""`, ``` `` ```). */
+  def codeMask(s: String): Lexed = {
     val n = s.length
-    val code = new Array[Boolean](n)
+    val shield = new Array[Char](n)
     val depth = new Array[Int](n)
-    var inS, inD, inB, inLine, inBlock = false
+    var open: Char = 0 // the region being read; 0 = code
     var skip = 0 // chars already consumed by a two-char token
     var d = 0
     var i = 0
@@ -29,33 +93,76 @@ private[engine] trait EngineLex {
       depth(i) = d
       val ch = s.charAt(i)
       val nx = if (i + 1 < n) s.charAt(i + 1) else ' '
-      if (skip > 0) skip -= 1
-      else if (inLine) { if (ch == '\n') inLine = false }
-      else if (inBlock) {
-        if (ch == '*' && nx == '/') { inBlock = false; skip = 1 }
-      } else if (inS) {
-        if (ch == '\'' && nx == '\'') skip = 1
-        else if (ch == '\'') inS = false
-      } else if (inD) {
-        if (ch == '"' && nx == '"') skip = 1
-        else if (ch == '"') inD = false
-      } else if (inB) {
-        if (ch == '`' && nx == '`') skip = 1
-        else if (ch == '`') inB = false
-      } else if (ch == '-' && nx == '-') inLine = true
-      else if (ch == '/' && nx == '*') { inBlock = true; skip = 1 }
-      else if (ch == '\'') inS = true
-      else if (ch == '"') inD = true
-      else if (ch == '`') inB = true
+      if (skip > 0) { skip -= 1; shield(i) = shield(i - 1) }
       else {
-        code(i) = true
-        if (ch == '(') d += 1
-        else if (ch == ')') d = math.max(0, d - 1)
+        val was = open
+        open match {
+          case '-' => if (ch == '\n') open = 0
+          case '/' => if (ch == '*' && nx == '/') { open = 0; skip = 1 }
+          case q if q != 0 =>
+            if (ch == q && nx == q) skip = 1
+            else if (ch == q) open = 0
+          case _ =>
+            if (ch == '-' && nx == '-') open = '-'
+            else if (ch == '/' && nx == '*') { open = '/'; skip = 1 }
+            else if (ch == '\'' || ch == '"' || ch == '`') open = ch
+            else if (ch == '(') d += 1
+            else if (ch == ')') d = math.max(0, d - 1)
+        }
+        // a region's opening and closing chars both belong to it
+        shield(i) = if (was != 0) was else open
       }
       i += 1
     }
-    (code, depth)
+    new Lexed(s, shield, depth, open != 0)
   }
+
+  /** A shim trigger: true when every pattern is found (case-insensitive,
+    * `.` spanning lines). Compiled once, where the shim is declared. */
+  def finds(res: String*): String => Boolean = {
+    val ps = res.map(Pattern.compile(_, Pattern.CASE_INSENSITIVE | Pattern.DOTALL))
+    s => ps.forall(_.matcher(s).find())
+  }
+}
+
+/** One entry of the router's dialect shim table (`Engine.shims`): a
+  * name, a cheap text trigger, and a rewrite of the lexed statement.
+  * The trigger is a necessary condition — on text it rejects, the
+  * rewrite would return the text unchanged. A shim marked `reenter`
+  * turns the statement into a new shape, so when it fires its output
+  * runs through the whole table again. */
+private[engine] class Shim(
+    val name: String, val trigger: String => Boolean, val reenter: Boolean)(
+    val rewrite: (SparkSession, Lexed) => String)
+
+private[engine] object Shim {
+  def apply(name: String, trigger: String => Boolean, reenter: Boolean = false)(
+      rewrite: (SparkSession, Lexed) => String): Shim =
+    new Shim(name, trigger, reenter)(rewrite)
+}
+
+/** A shim that reads only the statement text. It also applies on its
+  * own as a `String => String` — trigger, lex, rewrite — which is how a
+  * shim re-applies itself to its own output and how other routes reuse
+  * it outside the table. */
+private[engine] final class TextShim(
+    name: String, trigger: String => Boolean, reenter: Boolean)(
+    f: Lexed => String)
+    extends Shim(name, trigger, reenter)((_, lx) => f(lx))
+    with (String => String) {
+  def apply(s: String): String = if (trigger(s)) f(codeMask(s)) else s
+}
+
+private[engine] object TextShim {
+  def apply(name: String, trigger: String => Boolean, reenter: Boolean = false)(
+      f: Lexed => String): TextShim =
+    new TextShim(name, trigger, reenter)(f)
+}
+
+/** The top-level keyword/separator scanners every route and shim builds
+  * on, over `codeMask`. Mixed into [[Engine]]; split out by file only. */
+private[engine] trait EngineLex {
+  this: Engine.type =>
 
   /** Index of the first top-level (outside string literals, quoted
     * identifiers, comments, and parens) whitespace-delimited occurrence
@@ -65,10 +172,10 @@ private[engine] trait EngineLex {
   private[engine] def firstTopLevelKeyword(
       s: String, kws: Seq[String],
       parenBoundary: Boolean = false): Option[Int] = {
-    val (code, depth) = codeMask(s)
+    val lx = codeMask(s)
     var i = 0
     while (i < s.length) {
-      if (code(i) && depth(i) == 0) {
+      if (lx.code(i) && lx.depth(i) == 0) {
         val hit = kws.exists(kw =>
           i + kw.length <= s.length &&
             s.regionMatches(true, i, kw, 0, kw.length) &&
@@ -87,11 +194,11 @@ private[engine] trait EngineLex {
     * lists carry commas inside function calls and string literals). */
   private[engine] def splitTopLevel(s: String, sep: Char): Seq[String] = {
     val out = scala.collection.mutable.Buffer.empty[String]
-    val (code, depth) = codeMask(s)
+    val lx = codeMask(s)
     var last = 0
     var i = 0
     while (i < s.length) {
-      if (code(i) && depth(i) == 0 && s.charAt(i) == sep) {
+      if (lx.code(i) && lx.depth(i) == 0 && s.charAt(i) == sep) {
         out += s.substring(last, i); last = i + 1
       }
       i += 1

@@ -3,13 +3,16 @@ package graft.engine
 /** SQL-text utilities: quoting (A10/A11), the statement-at-cursor splitter
   * (A12), and the example-query generator (A21).
   *
-  * Reference behavior: `/root/reference/src/App.tsx:44-64` (quoting,
-  * example SQL) and `:66-151` (the mini-lexer). The lexer semantics are kept
-  * exactly — `'…'` and `"…"` regions with doubled-quote escapes, `--` line
-  * comments, slash-star block comments, statements split on top-level `;`,
-  * the cursor-statement fallback order (containing statement, else nearest
-  * non-empty earlier statement, else nearest later) — but identifiers quote
-  * with backticks because that is Spark SQL's quoting character.
+  * Reference behavior: the reference workbench's `src/App.tsx:44-64`
+  * (quoting, example SQL) and `:66-151` (the mini-lexer). The splitter
+  * keeps the reference's statement semantics — statements split on
+  * top-level `;`, the cursor-statement fallback order (containing
+  * statement, else nearest non-empty earlier statement, else nearest
+  * later) — over the router's one quote/comment lexer
+  * (`EngineLex.codeMask`): `'…'` and `"…"` regions with doubled-quote
+  * escapes, `--` line comments and slash-star block comments as in the
+  * reference, plus backtick identifiers, because identifiers quote with
+  * backticks in Spark SQL (`sqlIdentifier` emits them).
   */
 object Sql {
 
@@ -35,36 +38,15 @@ object Sql {
   /** Half-open [start, end) character range of one `;`-delimited statement. */
   final case class Segment(start: Int, end: Int)
 
-  /** A12 lexer core: split `sql` into segments on top-level `;` — quotes
-    * (with `''`/`""` escapes) and both comment styles shield `;`. Always
-    * returns at least one (possibly empty) trailing segment, exactly like
-    * the reference (src/App.tsx:69-135). */
+  /** A12: split `sql` into segments on top-level `;` — string literals,
+    * quoted identifiers (`"…"` and Spark's `` `…` ``) and both comment
+    * styles shield `;`. Always returns at least one (possibly empty)
+    * trailing segment, exactly like the reference (src/App.tsx:69-135). */
   def segments(sql: String): Vector[Segment] = {
-    val out = Vector.newBuilder[Segment]
-    var start = 0
-    var inSingle, inDouble, inLine, inBlock = false
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val ch = sql.charAt(i)
-      val next = if (i + 1 < n) sql.charAt(i + 1) else '\u0000'
-      if (inLine) { if (ch == '\n') inLine = false }
-      else if (inBlock) { if (ch == '*' && next == '/') { inBlock = false; i += 1 } }
-      else if (inSingle) {
-        if (ch == '\'' && next == '\'') i += 1
-        else if (ch == '\'') inSingle = false
-      } else if (inDouble) {
-        if (ch == '"' && next == '"') i += 1
-        else if (ch == '"') inDouble = false
-      } else if (ch == '-' && next == '-') { inLine = true; i += 1 }
-      else if (ch == '/' && next == '*') { inBlock = true; i += 1 }
-      else if (ch == '\'') inSingle = true
-      else if (ch == '"') inDouble = true
-      else if (ch == ';') { out += Segment(start, i); start = i + 1 }
-      i += 1
-    }
-    out += Segment(start, n)
-    out.result()
+    val lx = EngineLex.codeMask(sql)
+    val cuts = (0 until sql.length).filter(i => lx.code(i) && sql.charAt(i) == ';')
+    (-1 +: cuts).zip(cuts :+ sql.length)
+      .map { case (semi, end) => Segment(semi + 1, end) }.toVector
   }
 
   /** All non-empty statements of a script, in order (B30). */

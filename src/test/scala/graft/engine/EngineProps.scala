@@ -35,23 +35,15 @@ object EngineProps extends Properties("EngineRewrites") {
   } yield "SELECT " + ts.mkString(" ")
 
   private def allPureShims(s: String): String =
-    // every pure-text shim, applied in sequence (order is irrelevant
-    // for the identity property). Trailing commas are excluded BY
-    // DESIGN — a generated `, )` sequence IS that pass's trigger.
-    Seq[String => String](
-      Engine.rewriteGlob, Engine.rewriteDateDiff, Engine.rewriteSimilarTo,
-      Engine.rewriteDuckdbLiterals, Engine.rewriteStarExclude,
-      Engine.rewriteUsingSample, Engine.rewriteAsofJoin,
-      Engine.rewriteQualify, Engine.rewriteDollarQuotes,
-      Engine.rewriteLambdaSyntax, Engine.rewriteAggOrderBy,
-      Engine.rewriteListComprehension, Engine.rewriteIntDiv,
-      Engine.checkCaretPow, Engine.rewriteDowField,
-      Engine.rewriteListSlice, Engine.rewriteMapLiteral,
-      Engine.rewriteDuckCastTypes, Engine.rewriteMaterializedCte,
-      Engine.rewriteArrayKw, Engine.rewriteOrderByNulls,
-      Engine.checkPositionalJoin, Engine.rewriteTildeMatch,
-      Engine.rewriteAtTimeZone, Engine.rewriteIgnoreNulls
-    ).foldLeft(s)((acc, f) => f(acc))
+    // every pure-text shim of the router's table, applied in sequence
+    // (order is irrelevant for the identity property), plus the dollar-
+    // quote conversion that runs on the raw statement before the table.
+    // Trailing commas are excluded BY DESIGN — a generated `, )`
+    // sequence IS that pass's trigger.
+    (Engine.shims.collect {
+      case t: TextShim if t.name != "trailing-commas" => t
+    } :+ ((q: String) => Engine.rewriteDollarQuotes(q)))
+      .foldLeft(s)((acc, f) => f(acc))
 
   property("pure-text shims are the identity on trigger-free statements") =
     Prop.forAll(statement) { s => allPureShims(s) == s }

@@ -332,6 +332,14 @@ class EngineSpec extends AnyFunSuite {
         "QUALIFY row_number() OVER (PARTITION BY k ORDER BY v) <= 2 " +
         "ORDER BY k").collect().map(_.getInt(0)).toSeq
     assert(distinct == Seq(1, 2))
+    // a CTE body runs the whole shim table before its QUALIFY wraps it:
+    // the trailing comma must be gone when the predicate joins the list
+    val inCte = Engine.sql(spark,
+      "WITH c AS (SELECT k, v, FROM engine_spec_qual " +
+        "QUALIFY row_number() OVER (PARTITION BY k ORDER BY v) = 1) " +
+        "SELECT k, v FROM c ORDER BY k")
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(inCte == Seq((1, 10), (2, 5)))
   }
 
   test("star EXCLUDE shims to Spark's EXCEPT, anchored to the star") {
@@ -2251,6 +2259,35 @@ class EngineSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](Engine.sql(spark,
       "SELECT TIMESTAMP '2024-01-01 00:00:00' AT TIME ZONE upper('utc')"))
       .getMessage.contains("literal zone"))
+  }
+
+  test("SIMILAR TO with an unterminated pattern is left for Spark's parser") {
+    val q = "SELECT 'abc' SIMILAR TO 'abc"
+    assert(Engine.rewriteSimilarTo(q) == q)
+    assert(Engine.tryQuery(spark, q).isLeft)
+  }
+
+  test("GLOB with an unterminated pattern is left for Spark's parser") {
+    val q = "SELECT 'abc' GLOB 'a*c"
+    assert(Engine.rewriteGlob(q) == q)
+    assert(Engine.tryQuery(spark, q).isLeft)
+  }
+
+  test("~ and !~ with an unterminated pattern are left for Spark's parser") {
+    // not refused as a computed pattern: the pattern IS a literal
+    Seq("SELECT 'abc' ~ 'ab", "SELECT 'abc' !~ 'ab").foreach { q =>
+      assert(Engine.rewriteTildeMatch(q) == q)
+      assert(Engine.tryQuery(spark, q).isLeft)
+    }
+  }
+
+  test("AT TIME ZONE reads its literals with the shared lexer") {
+    assert(intercept[IllegalArgumentException](Engine.rewriteAtTimeZone(
+      "SELECT ts AT TIME ZONE 'UTC")).getMessage
+      .contains("unterminated zone literal"))
+    // a string-literal operand with an escaped quote stays one operand
+    assert(Engine.rewriteAtTimeZone("SELECT 'it''s' AT TIME ZONE 'UTC'") ==
+      "SELECT to_utc_timestamp('it''s', 'UTC')")
   }
 
   test("EXPLAIN ANALYZE runs the query and returns the executed plan") {

@@ -19,6 +19,9 @@ object SqlProps extends Properties("Sql") {
       s"$base \"quoted;ident\"",
       s"$base /* c; c */",
       s"$base 'it''s'",
+      s"$base `semi;colon`",
+      s"$base `it's`",
+      s"$base `tick``;quote`",
       base)
   } yield decoration
 

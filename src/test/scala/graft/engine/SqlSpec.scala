@@ -42,6 +42,26 @@ class SqlSpec extends AnyFunSuite {
       Seq("SELECT \"a\"\";b\"", "SELECT 2"))
   }
 
+  test("split: backtick identifiers shield ; and quote characters") {
+    assert(Sql.splitStatements("SELECT 1 AS `a;b`; SELECT 2") ==
+      Seq("SELECT 1 AS `a;b`", "SELECT 2"))
+    assert(Sql.splitStatements("SELECT 'x' AS `it's`; SELECT 2") ==
+      Seq("SELECT 'x' AS `it's`", "SELECT 2"))
+    assert(Sql.splitStatements("SELECT 1 AS `a``;b`; SELECT 2") ==
+      Seq("SELECT 1 AS `a``;b`", "SELECT 2"))
+    // the example query for a table whose name needs backticks
+    val example = Sql.tableExampleSql("o'brien")
+    assert(Sql.splitStatements(example + "\nSELECT 2") ==
+      Seq(example.stripSuffix(";"), "SELECT 2"))
+  }
+
+  test("runScript runs each statement of a script with backtick identifiers") {
+    val df = Engine.runScript(graft.TestSpark.spark,
+      "SELECT 1 AS `a;b`; SELECT 2 AS `it's`").get
+    assert(df.columns.toSeq == Seq("it's"))
+    assert(df.collect()(0).getInt(0) == 2)
+  }
+
   test("statementAtPosition picks the containing statement") {
     val s = "SELECT 1; SELECT 2; SELECT 3"
     assert(Sql.statementAtPosition(s, 0) == "SELECT 1")
