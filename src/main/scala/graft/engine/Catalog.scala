@@ -68,27 +68,6 @@ object Catalog {
     if (base.headOption.exists(c => c.isDigit)) s"t_$base" else base
   }
 
-  private val viewOwner =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val pathView =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  /** Raw registered path → resolved filesystem location. The reference
-    * registers files in the engine's virtual FS under their RELATIVE
-    * import paths and its generated `read_parquet([...])` DDL names
-    * those same paths (`/root/reference/src/App.tsx:316-327`); the Spark
-    * analog resolves them back to where the bytes actually live. */
-  private val pathLocation =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  /** View name -> mtime/size fingerprint of its underlying paths at
-    * registration. A registered path-table view snapshots its file
-    * LISTING; a reference user legitimately COPYs over a path and
-    * re-reads it in the next statement (DuckDB re-lists per call), so
-    * reuse must be freshness-checked: on a changed fingerprint the view
-    * re-registers (fresh listing + schema), otherwise the cached view
-    * serves — one stat per path per statement, not a re-inference. */
-  private val viewStamp =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   /** Glob-pattern predicate shared by the path-existence check and the
     * stamp (they MUST agree — a path one side treats as a glob and the
     * other stats literally yields a constant stamp and permanent
@@ -132,8 +111,9 @@ object Catalog {
     * registration would silently serve the first file's data). The loser
     * gets a short path-hash suffix; the reference never collides because
     * its table name IS the raw path, so this restores that injectivity. */
-  def claimViewName(spark: SparkSession, path: String): String =
-    pathView.getOrElseUpdate((spark, path), {
+  def claimViewName(spark: SparkSession, path: String): String = {
+    val st = EngineState.of(spark)
+    st.pathView.getOrElseUpdate(path, {
       // claim by atomic putIfAbsent (not check-then-act): under concurrent
       // first claims of two colliding paths, exactly one wins the base
       // name and the other observes the foreign owner and takes the
@@ -141,8 +121,8 @@ object Catalog {
       // practically impossible, so one fallback level suffices.
       val base = viewNameFor(path)
       def owns(name: String): Boolean =
-        !userClaimed.contains((spark, name)) &&
-          viewOwner.putIfAbsent((spark, name), path).forall(_ == path)
+        !st.userClaimed.contains(name) &&
+          st.viewOwner.putIfAbsent(name, path).forall(_ == path)
       if (owns(base)) base
       else {
         val alt = s"${base}_${md5hex(path).take(6)}"
@@ -150,6 +130,7 @@ object Catalog {
         alt
       }
     })
+  }
 
   /** True when `name` is one of the engine's AUTO-registered path-table
     * views (quoted-path rewrites, imports, table-function sets) rather
@@ -158,13 +139,7 @@ object Catalog {
     * whole-catalog operations (EXPORT DATABASE) must skip them: their
     * data lives in the original files already. */
   def isAutoRegisteredView(spark: SparkSession, name: String): Boolean =
-    viewOwner.contains((spark, name))
-
-  /** Names the USER has claimed with their own DDL: a later
-    * quoted-path registration must take a suffixed name instead of
-    * silently clobbering the user's relation. */
-  private val userClaimed =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
+    EngineState.of(spark).viewOwner.contains(name)
 
   /** A user's own CREATE VIEW/TABLE re-using an auto-registered name
     * turns it into a USER relation: the router calls this on EVERY
@@ -174,11 +149,10 @@ object Catalog {
     * the user's view — and (c) the freshness stamp dies with the old
     * registration. */
   def releaseAutoClaim(spark: SparkSession, name: String): Unit = {
-    viewOwner.remove((spark, name)).foreach { ownedKey =>
-      pathView.remove((spark, ownedKey))
-    }
-    viewStamp.remove((spark, name))
-    userClaimed.put((spark, name), true)
+    val st = EngineState.of(spark)
+    st.viewOwner.remove(name).foreach(st.pathView.remove)
+    st.viewStamp.remove(name)
+    st.userClaimed.put(name, ())
     ()
   }
 
@@ -377,21 +351,22 @@ object Catalog {
     val key = ((fmt +: resolved) ++
       opts.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" })
       .mkString("\u0001")
-    val view = pathView.getOrElseUpdate((spark, key), {
+    val st = EngineState.of(spark)
+    val view = st.pathView.getOrElseUpdate(key, {
       val base = s"t_${fmt}set_${md5hex(key).take(10)}"
-      val name =
-        if (userClaimed.contains((spark, base))) s"${base}_u" else base
-      viewOwner.putIfAbsent((spark, name), key)
+      val name = if (st.userClaimed.contains(base)) s"${base}_u" else base
+      st.viewOwner.putIfAbsent(name, key)
       name
     })
-    // stamp-checked reuse (see viewStamp): re-register only when the
-    // underlying paths changed since registration, so a COPY-overwritten
-    // path re-reads fresh while the steady state costs one stat per path
+    // stamp-checked reuse (see EngineState.viewStamp): re-register only
+    // when the underlying paths changed since registration, so a
+    // COPY-overwritten path re-reads fresh while the steady state costs
+    // one stat per path
     val stamp = pathStamp(resolved)
     if (!spark.catalog.tableExists(view) ||
-        !viewStamp.get((spark, view)).contains(stamp)) {
+        !st.viewStamp.get(view).contains(stamp)) {
       readSet(spark, fmt, resolved, opts).createOrReplaceTempView(view)
-      viewStamp.put((spark, view), stamp)
+      st.viewStamp.put(view, stamp)
     }
     view
   }
@@ -403,6 +378,7 @@ object Catalog {
   private[engine] def rewritePathTables(
       spark: SparkSession, lx: Lexed): (String, Seq[String]) = {
     val statement = lx.s
+    val st = EngineState.of(spark)
     val toks = tokens(lx)
     val missing = Seq.newBuilder[String]
     val edits = Seq.newBuilder[(Tok, String)]
@@ -433,7 +409,7 @@ object Catalog {
           val view = claimViewName(spark, path)
           val registered = spark.catalog.tableExists(view)
           // an import-registered path resolves to where its bytes live
-          val loc = pathLocation.getOrElse((spark, path), path)
+          val loc = st.pathLocation.getOrElse(path, path)
           val p = Paths.get(loc)
           if (registered || Files.exists(p)) {
             // same stamp-checked freshness as the table-function route:
@@ -442,10 +418,10 @@ object Catalog {
             val stamp = pathStamp(Seq(loc))
             if (!registered ||
                 (Files.exists(p) &&
-                  !viewStamp.get((spark, view)).contains(stamp))) {
+                  !st.viewStamp.get(view).contains(stamp))) {
               read(spark, p).createOrReplaceTempView(view)
-              pathLocation.putIfAbsent((spark, path), path)
-              viewStamp.put((spark, view), stamp)
+              st.pathLocation.putIfAbsent(path, path)
+              st.viewStamp.put(view, stamp)
             }
             edits += ((t, Sql.sqlIdentifier(view)))
           } else missing += path
@@ -556,8 +532,7 @@ object Catalog {
         // except GLOB patterns (read_parquet('dir/*.parquet'), DuckDB's
         // daily idiom), which Spark's reader resolves itself and reports
         // loudly when they match nothing
-        val resolved = ps.map(p =>
-          pathLocation.getOrElse((spark, p), p))
+        val resolved = ps.map(p => st.pathLocation.getOrElse(p, p))
         val absent = ps.zip(resolved)
           .collect { case (raw, r)
             if !isGlobPath(r) && !Files.exists(Paths.get(r)) => raw }
@@ -597,7 +572,8 @@ object Catalog {
     read(spark, root.resolve(file.path)).createOrReplaceTempView(name)
     // the raw import path stays addressable by the SQL-text routes (the
     // reference's generated read_parquet DDL names these same paths)
-    pathLocation.put((spark, file.path), root.resolve(file.path).toString)
+    EngineState.of(spark).pathLocation
+      .put(file.path, root.resolve(file.path).toString)
     name
   }
 

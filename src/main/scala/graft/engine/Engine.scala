@@ -68,14 +68,11 @@ object Engine
     // per-name generation snapshot (ADVICE r20): retirement is vetoed
     // only by a registration OF THIS NAME during the statement, never by
     // a concurrent registration of an unrelated name
-    val pkGenBefore = pkRetirePlan.map(n => pkGenOf(spark, n))
+    val state = EngineState.of(spark)
+    val pkGenBefore = pkRetirePlan.map(n => (n, state.pkGen(n)))
     def retirePkAfterSuccess(): Unit =
-      pkRetirePlan.foreach { name =>
-        if (pkGenBefore.contains(pkGenOf(spark, name))) {
-          val store = primaryKeys(spark)
-          store.synchronized { store.remove(name) }
-          ()
-        }
+      pkGenBefore.foreach { case (name, gen) =>
+        state.pkRetireIfUnchanged(name, gen)
       }
     // RETURNING (DuckDB/Postgres): a trailing clause on plain
     // INSERT/UPDATE/DELETE that yields the affected rows — split off
@@ -164,26 +161,18 @@ object Engine
       case alterRenameColRe(table, oldName, newName) =>
         val out = runAlterRenameColumn(spark, table, oldName, newName)
         // a renamed key column follows in the PK registry
-        locally {
-          val store = primaryKeys(spark)
-          store.synchronized {
-            store.get(pkName(spark, table)).foreach { keys =>
-              val o = oldName.stripPrefix("`").stripSuffix("`")
-              val n = newName.stripPrefix("`").stripSuffix("`")
-              store.update(pkName(spark, table),
-                keys.map(k => if (k.equalsIgnoreCase(o)) n else k))
-            }
-          }
-        }
+        state.pkRenameColumn(pkName(spark, table),
+          oldName.stripPrefix("`").stripSuffix("`"),
+          newName.stripPrefix("`").stripSuffix("`"))
         out
       case prepareRe(name, text) =>
         // PREPARE stores the RAW statement text; binding and the full
         // router (every dialect shim included) apply at EXECUTE time, so
         // prepared statements compose with the same surface typed SQL gets
-        prepared(spark).update(name.toLowerCase, text)
+        state.prepared.update(name.toLowerCase, text)
         spark.emptyDataFrame
       case executeRe(name, argText) =>
-        val stored = prepared(spark).getOrElse(name.toLowerCase,
+        val stored = state.prepared.getOrElse(name.toLowerCase,
           throw new IllegalArgumentException(
             s"EXECUTE $name: no prepared statement with this name —" +
               " PREPARE it first"))
@@ -200,7 +189,7 @@ object Engine
         sql(spark, bindPrepared(stored,
           if (named.nonEmpty) Nil else args, named.toMap))
       case deallocRe(name) =>
-        if (prepared(spark).remove(name.toLowerCase).isEmpty)
+        if (state.prepared.remove(name.toLowerCase).isEmpty)
           throw new IllegalArgumentException(
             s"DEALLOCATE $name: no prepared statement with this name")
         spark.emptyDataFrame
@@ -409,18 +398,7 @@ object Engine
         // PRIMARY KEY)` enforces on t, not on a ghost. No key in the
         // new definition → drop the replaced table's old entry (the
         // registry never outlives the definition that declared it).
-        locally {
-          val store = primaryKeys(spark)
-          store.synchronized {
-            store.remove(pkName(spark, tmp)) match {
-              case Some(keys) =>
-                store.update(pkName(spark, name), keys)
-                bumpPkGen(spark, pkName(spark, name))
-              case None => store.remove(pkName(spark, name))
-            }
-          }
-          ()
-        }
+        state.pkMove(pkName(spark, tmp), pkName(spark, name))
         spark.emptyDataFrame
       case ddl if splitCreateCols(ddl).isDefined =>
         // plain column-list CREATE TABLE: DuckDB type names map to
@@ -444,16 +422,7 @@ object Engine
         val out =
           spark.sql(s"$prefix(${defs.map(mapColumnDef).mkString(", ")})$suffix")
         if (!ineNoop) ddlCreateNameRe.findFirstMatchIn(ddl).foreach { m =>
-          val store = primaryKeys(spark)
-          store.synchronized {
-            pk match {
-              case Some(keys) =>
-                store.update(pkName(spark, m.group(1)), keys)
-                bumpPkGen(spark, pkName(spark, m.group(1)))
-              case None => store.remove(pkName(spark, m.group(1)))
-            }
-          }
-          ()
+          state.pkRegister(pkName(spark, m.group(1)), pk)
         }
         out
       case ddl if splitDdlAs(ddl).isDefined =>

@@ -1120,23 +1120,12 @@ private[engine] trait EngineDml {
   // Known non-enforcing path: MERGE INTO — Spark-native surface DuckDB
   // 1.x does not parse, so no migrating DuckDB script reaches it; its
   // route documents the gap.
-
-  /** Per-session PRIMARY KEY registry (lowercase table name → key
-    * columns in the declared spelling). Weak keys: a closed session's
-    * entries vanish with it. Every routed CREATE of a name clears the
-    * old entry (the column-list route re-registers when it declares a
-    * key); DROP TABLE clears; ALTER RENAME COLUMN follows the rename;
-    * ALTER DROP COLUMN of a key column refuses (as DuckDB refuses
-    * dropping an indexed column). */
-  private[engine] val primaryKeyStore =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Seq[String]]]()
-  private[engine] def primaryKeys(
-      spark: SparkSession): scala.collection.mutable.Map[String, Seq[String]] =
-    primaryKeyStore.synchronized {
-      primaryKeyStore.computeIfAbsent(spark,
-        _ => scala.collection.mutable.Map.empty)
-    }
+  // The registry itself (name → key columns in the declared spelling,
+  // plus per-name generations) is per session, in `EngineState`. Every
+  // routed CREATE of a name clears the old entry (the column-list route
+  // re-registers when it declares a key); DROP TABLE clears; ALTER
+  // RENAME COLUMN follows the rename; ALTER DROP COLUMN of a key column
+  // refuses (as DuckDB refuses dropping an indexed column).
 
   /** Registry key for a table spelling: backquotes stripped, lowercased,
     * and QUALIFIED with the resolved database — an unqualified spelling
@@ -1175,52 +1164,16 @@ private[engine] trait EngineDml {
     else unq
   }
 
-  /** PER-NAME registration generation, bumped by every PK registration
-    * of that name (including a registry move on CREATE OR REPLACE's
-    * rename). The router's post-success retirement compares the TARGET
-    * name's generation across a statement's execution: unchanged means
-    * no route registered a key for that name, so a CREATE TABLE may
-    * retire the name's stale entry — changed means the statement itself
-    * just registered, and retiring would erase its own work. Per name,
-    * not a session-global counter (ADVICE r20): a concurrent PK
-    * registration of an UNRELATED name must not veto this statement's
-    * retirement — the global epoch let a phantom key survive a
-    * same-schema re-create raced by any other CREATE. */
-  private[engine] val pkGenStore =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Long]]()
-  private def pkGens(
-      spark: SparkSession): scala.collection.concurrent.TrieMap[String, Long] =
-    pkGenStore.synchronized {
-      pkGenStore.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }
-  /** Current generation of `name` (0 = never registered). */
-  private[engine] def pkGenOf(spark: SparkSession, name: String): Long =
-    pkGens(spark).getOrElse(name, 0L)
-  /** Bump `name`'s generation — call under every registry write of the
-    * name (registration or move-in). */
-  private[engine] def bumpPkGen(spark: SparkSession, name: String): Unit = {
-    val gens = pkGens(spark)
-    gens.updateWith(name) { v => Some(v.getOrElse(0L) + 1L) }
-    ()
-  }
-
   /** The registered key of `table`, validated against its CURRENT
     * schema — a table re-created or renamed outside the routed paths
     * drops its stale entry instead of enforcing a phantom constraint. */
   private[engine] def pkOf(
       spark: SparkSession, table: String): Option[Seq[String]] = {
-    val store = primaryKeys(spark)
     val ident = table.trim.stripPrefix("`").stripSuffix("`")
-    store.synchronized {
-      store.get(pkName(spark, table)).flatMap { keys =>
-        val ok = spark.catalog.tableExists(ident) && {
-          val fields = spark.table(ident).schema.fieldNames
-          keys.forall(k => fields.exists(_.equalsIgnoreCase(k)))
-        }
-        if (ok) Some(keys)
-        else { store.remove(pkName(spark, table)); None }
+    EngineState.of(spark).pkValidated(pkName(spark, table)) { keys =>
+      spark.catalog.tableExists(ident) && {
+        val fields = spark.table(ident).schema.fieldNames
+        keys.forall(k => fields.exists(_.equalsIgnoreCase(k)))
       }
     }
   }

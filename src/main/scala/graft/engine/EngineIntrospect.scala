@@ -250,7 +250,7 @@ private[engine] trait EngineIntrospect {
   // DuckDB-WASM supports prepared statements; an editor user's
   // parameterized snippets (`PREPARE q AS SELECT … WHERE x > $1;
   // EXECUTE q(5)`) route as driver-side template binding: the statement
-  // TEXT is stored per session, EXECUTE substitutes `$n`/`?` parameters
+  // TEXT is stored per session (EngineState), EXECUTE substitutes `$n`/`?` parameters
   // (quote/comment-aware via the shared codeMask) with the call's
   // argument expressions, and the bound text runs through the normal
   // router — so prepared statements compose with every dialect shim.
@@ -264,18 +264,6 @@ private[engine] trait EngineIntrospect {
   private[engine] val deallocRe =
     "(?is)^DEALLOCATE\\s+(?:PREPARE\\s+)?([A-Za-z_]\\w*)\\s*$".r
   private[engine] val attachRe = "(?is)^(ATTACH|DETACH)\\b.*$".r
-
-  /** Per-session prepared-statement store (name → raw statement text).
-    * Weak keys: a closed session's entries vanish with the session. */
-  private[engine] val preparedStatements =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, String]]()
-  private[engine] def prepared(
-      spark: SparkSession): scala.collection.mutable.Map[String, String] =
-    preparedStatements.synchronized {
-      preparedStatements.computeIfAbsent(spark,
-        _ => scala.collection.mutable.Map.empty)
-    }
 
   /** Substitute `$n` (1-based), `?` (positional), or `$name` (named —
     * bound by EXECUTE's `name := expr` arguments) parameters in a

@@ -115,26 +115,23 @@ object Bpe {
     * per (session, sfDir) — the tokenizer a production pipeline ships to
     * every consumer instead of retraining. */
   private[graft] def mergesPath(s: SparkSession, dir: String): String =
-    Layout.written.getOrElseUpdate((s, dir, "bpe_merges"), {
+    Layout.written(s, dir, "bpe_merges") {
       val path = Layout.tmpRoot("bpe_merges", dir)
       import s.implicits._
       train(s, dir).toDF("rank", "a", "b")
         .coalesce(1).write.mode("overwrite").parquet(path)
       path
-    })
-
-  private val mergesLoaded = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, String, String)]]
+    }
 
   /** Load the persisted merges (N rows — a model-artifact fetch, not a
     * data collect), rank-sorted; memoized per (session, dir). */
   private[graft] def merges(s: SparkSession, dir: String): Seq[(Long, String, String)] =
-    mergesLoaded.getOrElseUpdate((s, dir), {
+    graft.engine.EngineState.of(s).memo(dir, "loaded/bpe_merges") {
       s.read.parquet(mergesPath(s, dir)).collect().toSeq
         .map(r => (r.getLong(r.fieldIndex("rank")),
           r.getString(r.fieldIndex("a")), r.getString(r.fieldIndex("b"))))
         .sortBy(_._1)
-    })
+    }
 
   /** Vocabulary tokenized by the LOADED artifact: the N merges compose
     * into one map-side fold chain over each word — per-row expression

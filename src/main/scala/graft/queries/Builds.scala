@@ -19,9 +19,9 @@ object Builds {
   /** (leg name, seconds) per build; a failed leg reports -1 (the bench
     * sentinel) rather than poisoning the others. */
   def timedBuilds(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def leg(name: String, memoKeys: String*)(
+    def leg(name: String, memos: String*)(
         body: => Unit): (String, Double) = {
-      memoKeys.foreach(k => Layout.written.remove((s, dir, k)))
+      memos.foreach(graft.engine.EngineState.of(s).dropMemo(dir, _))
       val t0 = System.nanoTime()
       try { body; (name, (System.nanoTime() - t0) / 1e9) }
       catch {
@@ -32,38 +32,35 @@ object Builds {
     }
     Seq(
       // two converged Lloyd passes over the corpus → ≤16-row artifact
-      leg("codebook_train", "codebook") {
+      leg("codebook_train", "layout/codebook") {
         Similarity.trainedCodebookPath(s, dir); ()
       },
       // per-subspace residual k-means (2 passes) → ≤128-row artifact
-      leg("pq_train", "pq_codebook") {
+      leg("pq_train", "layout/pq_codebook") {
         Similarity.pqCodebookPath(s, dir); ()
       },
       // one encode pass + centroid-partitioned codes-at-rest write
-      leg("ivfpq_layout_write", "ivfpq_emb") {
+      leg("ivfpq_layout_write", "layout/ivfpq_emb") {
         Similarity.buildIvfpqLayout(s, dir); ()
       },
       // N BPE merge rounds over the corpus vocabulary → N-row artifact
-      leg("bpe_train", "bpe_merges") {
+      leg("bpe_train", "layout/bpe_merges") {
         Bpe.mergesPath(s, dir); ()
       },
       // range-sort rewrite of orders (the c_sort_skip layout)
-      leg("sorted_write", "sorted_orders") {
+      leg("sorted_write", "layout/sorted_orders") {
         Layout.sortedOrders(s, dir); ()
       },
       // Morton-interleave rewrite of lineitem (the c_zorder_skip layout)
-      leg("zorder_write", "zorder_li") {
+      leg("zorder_write", "layout/zorder_li") {
         Layout.zorderLineitem(s, dir); ()
       },
       // full-corpus winnowing fingerprint index (r18: the memo behind
       // p_dedup_winnow_full — the read leg stays cheap because this
       // build is amortized, so the bench measures the build here)
-      {
-        Tables.dropMemo(s, dir, "winnow_sel_full")
-        Tables.dropMemo(s, dir, "winnow_base_full")
-        leg("winnow_index_build") {
-          Dedup.buildWinnowIndex(s, dir); ()
-        }
+      leg("winnow_index_build",
+          "persist/winnow_sel_full", "persist/winnow_base_full") {
+        Dedup.buildWinnowIndex(s, dir); ()
       })
   }
 }

@@ -512,8 +512,6 @@ object Dedup {
     * relative to the corpus (only near-dup pairs), so the iteration runs
     * on the residue, never the full table. */
   private val edgeViewSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private val edgeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** The materialized near-dup edge residue, memoized per (session, dir):
     * the recursion below references the edge list once per hop, and an
@@ -525,7 +523,7 @@ object Dedup {
     * cheap, already-paid-for statistic — `survivors` reads it to decide
     * whether the label side is safely broadcastable. */
   private def edgeResidue(s: SparkSession, dir: String): DataFrame =
-    edgeMemo.getOrElseUpdate((s, dir),
+    graft.engine.EngineState.of(s).memo(dir, "checkpoint/dedup_edges")(
       ngramJaccard(s, dir).select(col("d1"), col("d2"))
         .localCheckpoint()) // eager: lineage cut to a materialized leaf
 

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.EngineState
+
 /** Shared helpers for the declared-query inventory.
   *
   * Every query in `graft.SparkEntry.queries` takes `(spark, sfDir)` and must
@@ -42,19 +44,10 @@ object Tables {
     * query cost. Reuse is safe: the returned DataFrame is an immutable
     * lazy plan, physical planning re-reads session confs on every action
     * (so DeterminismSpec's regime switches still apply), and the testdata
-    * files never change within a run.
-    *
-    * Retention note (ADVICE r9, accepted for the single-session harness):
-    * memo keys hold SparkSession references for the JVM lifetime, so a
-    * host that creates and stops MANY sessions would retain stopped
-    * sessions' plans; the harness and test suites share one session
-    * (TestSpark/Session are memoized), so nothing accumulates here. */
-  private val tableMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String),
-      DataFrame]
-
+    * files never change within a run. Every memo in this package lives in
+    * `EngineState`, whose doc comment says how long it is retained. */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    tableMemo.getOrElseUpdate((s, dir, name),
+    EngineState.of(s).memo(dir, s"table/$name")(
       s.read.parquet(s"$dir/$name.parquet"))
 
   /** Register every testdata table as a temp view (for spark.sql queries —
@@ -62,7 +55,7 @@ object Tables {
     * /root/reference/src/duckdb.ts:46-49) and return the session.
     *
     * Registration always runs (ADVICE r9): the expensive part — footer
-    * reads — is already eliminated by `tableMemo`, so these are 10
+    * reads — is already eliminated by the `t` memo, so these are 10
     * near-free catalog puts, and re-putting every call self-heals a view
     * name clobbered by the engine's user-facing import paths
     * (`Catalog.registerFile` / `createOrReplaceParquetView` derive view
@@ -137,10 +130,6 @@ object Tables {
 
   // --- shared intermediate cache -------------------------------------------
 
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String),
-      DataFrame]
-
   /** Memoized persisted intermediate, keyed by (session, dir, name): the
     * builders of shared subtrees (shingle index, simhash bands, re-agg
     * base) are invoked once per query execution, and a Verify/Bench session
@@ -150,12 +139,6 @@ object Tables {
     * of materializing the intermediate once and reading it from storage. */
   def memoPersist(s: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, name),
+    EngineState.of(s).memo(dir, s"persist/$name")(
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Drop one memoized intermediate (unpersisting its cache) so a bench
-    * build leg can re-measure the REAL construction cost — the memo
-    * analog of `Layout.written.remove` for path-backed artifacts. */
-  def dropMemo(s: SparkSession, dir: String, name: String): Unit =
-    memo.remove((s, dir, name)).foreach(_.unpersist())
 }
