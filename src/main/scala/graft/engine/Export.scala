@@ -1,16 +1,19 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.EachPartition
 
 /** CSV export — A15 (RFC-4180 escaper) and A16 (streaming export);
   * reference `/root/reference/src/arrow.ts:17-26,47-88`,
   * `src/App.tsx:504-531`.
   *
   * Two paths, mirroring the reference's split:
-  *  - `toCsvParts`: driver-side streaming via `toLocalIterator` (the analog
-  *    of the Arrow record-batch iterator) with the reference's ~1e6-char
-  *    flush parts, every cell through the A14 formatter. For interactive
-  *    export of a result a human will open.
+  *  - `toCsvParts`: the whole result as CSV text on the driver, in the
+  *    reference's ~1e6-char flush parts, every cell through the A14
+  *    formatter. The statement runs as one job and the executors render
+  *    the lines; the driver only cuts them into parts. For interactive
+  *    export of a result a human will open: the result must fit in the
+  *    driver's memory and under `spark.driver.maxResultSize`.
   *  - `writeCsv`: the at-scale path — a fully distributed
   *    `df.write.csv(header=true)`, which is RFC-4180 and never funnels the
   *    dataset through the driver. A 100 TB export must use this one.
@@ -33,24 +36,45 @@ object Export {
   /** The reference's flush-chunk size (`src/arrow.ts:53`). */
   val FlushChars = 1000000
 
-  /** A16: streaming export — header from the schema, cells through the A14
-    * formatter, buffer flushed to a new part every ~`flushChars` chars.
-    * Streams one partition at a time to the driver; peak driver memory is
-    * one partition + one part, not the result. */
+  /** A16: the whole result as CSV text — header from the schema, cells
+    * through the A14 formatter, cut into parts of ~`flushChars` chars (a
+    * part closes at the first line end at or past `flushChars`).
+    *
+    * The statement runs ONCE, as one job (`EachPartition`): each task
+    * renders its own rows to CSV lines, so the cell formatting runs on
+    * the executors, and returns the lines as one string plus their end
+    * offsets. The driver walks the partitions in order and cuts the
+    * parts. The whole CSV therefore lives on the driver, as the parts,
+    * and the tasks' results pass through it once more on the way in: a
+    * result over `spark.driver.maxResultSize` fails with Spark's own
+    * error. Results that size go through `writeCsv`. */
   def toCsvParts(
       df: DataFrame, header: Boolean = true,
       flushChars: Int = FlushChars): CsvExport = {
     val columns = df.columns
+    val partitions = EachPartition(df, "toCsvParts") { rows =>
+      val text = new StringBuilder
+      val ends = Array.newBuilder[Int]
+      rows.foreach { row =>
+        text.append(csvLine(row.toSeq.map(Render.formatCell)))
+        ends += text.length
+      }
+      (text.result(), ends.result())
+    }
     val parts = Seq.newBuilder[String]
     val buffer = new StringBuilder
     var rows = 0L
     if (header) buffer.append(csvLine(columns.toSeq))
-    Engine.stream(df).foreach { row =>
-      buffer.append(csvLine(row.toSeq.map(Render.formatCell)))
-      rows += 1
-      if (buffer.length >= flushChars) {
-        parts += buffer.result()
-        buffer.clear()
+    for ((text, ends) <- partitions) {
+      var from = 0
+      for (end <- ends) {
+        buffer.underlying.append(text, from, end)
+        from = end
+        rows += 1
+        if (buffer.length >= flushChars) {
+          parts += buffer.result()
+          buffer.clear()
+        }
       }
     }
     if (buffer.nonEmpty) parts += buffer.result()
@@ -87,9 +111,9 @@ object Export {
     * so a caller migrating from it can consume bit-compatible Arrow.
     * Record batches are serialized DISTRIBUTED (one IPC message per
     * partition chunk, executors do the columnar encoding) and streamed to
-    * `out` one batch at a time — the driver holds a single batch, never
-    * the result, so the export scales like `toCsvParts` but in Arrow's
-    * columnar frame format. */
+    * `out` one batch at a time — the driver holds one partition's
+    * batches, never the result, unlike `toCsvParts`. The price is one
+    * job per partition, run one after another (`toLocalIterator`). */
   def toArrowStream(df: DataFrame, out: java.io.OutputStream): Unit = {
     import org.apache.arrow.vector.ipc.{ArrowStreamWriter, WriteChannel}
     import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}

@@ -2,6 +2,9 @@ package graft.engine
 
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
+import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
+
+import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.graft.FirstPage
@@ -61,51 +64,66 @@ object Render {
     * values below 1e21 print with no decimal point (`String(42.0)` is
     * `"42"`); `-0` prints `"0"`; fixed notation within [1e-6, 1e21),
     * exponent notation outside, spelled `1e+21` / `1.5e-7`. Digit
-    * selection matches because `shortestRepr` below picks the minimal
-    * round-tripping decimal, as JS does. */
+    * selection matches because `shortestDigits` below picks the minimal
+    * round-tripping decimal, closest to the value, as JS does. */
   private[engine] def jsNumber(d: Double): String = {
     if (d.isNaN) "NaN"
     else if (d == Double.PositiveInfinity) "Infinity"
     else if (d == Double.NegativeInfinity) "-Infinity"
     else if (d == 0.0) "0" // also -0.0: JS String(-0) === "0"
     else {
-      val a = math.abs(d)
+      val (digits, n) = shortestDigits(math.abs(d))
+      val k = digits.length
+      // the value is 0.<digits> x 10^n (ECMA-262's s, k and n)
       val s =
-        if (a == math.rint(a) && a < 1e21)
-          new java.math.BigDecimal(shortestRepr(a)).toBigInteger.toString
-        else {
-          val bd = new java.math.BigDecimal(shortestRepr(a))
-            .stripTrailingZeros
-          if (a >= 1e-6 && a < 1e21) bd.toPlainString
-          else { // JS exponent form: d[.ddd]e±x
-            val digits = bd.unscaledValue.toString
-            val exp = digits.length - 1 - bd.scale
-            val mant =
-              if (digits.length == 1) digits
-              else s"${digits.head}.${digits.tail}"
-            val sign = if (exp >= 0) "+" else "-"
-            s"${mant}e$sign${math.abs(exp)}"
-          }
+        if (k <= n && n <= 21) digits + "0" * (n - k)
+        else if (0 < n && n <= 21) digits.substring(0, n) + "." + digits.substring(n)
+        else if (-6 < n && n <= 0) "0." + "0" * -n + digits
+        else { // JS exponent form: d[.ddd]e±x
+          val mant = if (k == 1) digits else s"${digits.head}.${digits.tail}"
+          val exp = n - 1
+          s"${mant}e${if (exp >= 0) "+" else "-"}${math.abs(exp)}"
         }
       if (d < 0) "-" + s else s
     }
   }
 
-  /** Shortest decimal that round-trips to `a` exactly — the digit
-    * selection JS `String(value)` uses. This JVM's `Double.toString` is
-    * not always minimal (JDK-4511638, fixed only in JDK 19: e.g.
-    * `1e23.toString` is `"9.999999999999999E22"`), so probe 1..17
-    * significant digits and take the first representation that parses
-    * back to the same double. */
-  private def shortestRepr(a: Double): String = {
-    var p = 0
-    while (p < 17) {
-      val s = String.format(java.util.Locale.ROOT, s"%.${p}e",
-        java.lang.Double.valueOf(a))
-      if (java.lang.Double.parseDouble(s) == a) return s
-      p += 1
+  /** The shortest decimal that round-trips to `a` (finite, > 0): its
+    * significant digits, no leading or trailing zero, and the exponent
+    * `n` with `a` = 0.<digits> x 10^n. The digits come from Schubfach
+    * (Giulietti, "The Schubfach way to render doubles", 2020), the
+    * algorithm JDK 19 adopted for `Double.toString`; this JVM's own
+    * `Double.toString` is not always minimal (JDK-4511638). Schubfach
+    * never returns fewer than 2 digits, so a 2-digit answer is checked
+    * against the 1-digit roundings of the exact value: the closer one
+    * that parses back wins (`java.lang.Double.MIN_VALUE` is `5e-324` in
+    * JS, where Schubfach says `4.9E-324`). Only a subnormal can need this: a normal
+    * double's rounding interval is far narrower than the gap between a
+    * 2-digit decimal and its 1-digit neighbours. */
+  private def shortestDigits(a: Double): (String, Int) = {
+    val s = DoubleToDecimal.toString(a) // "123.45", "0.00123" or "1.2E-7"
+    val e = s.indexOf('E')
+    val mant = if (e < 0) s else s.substring(0, e)
+    val dot = mant.indexOf('.')
+    val all = mant.substring(0, dot) + mant.substring(dot + 1)
+    var from = 0
+    while (all.charAt(from) == '0') from += 1
+    var to = all.length
+    while (all.charAt(to - 1) == '0') to -= 1
+    val n = dot - from + (if (e < 0) 0 else s.substring(e + 1).toInt)
+    if (to - from != 2 || a >= java.lang.Double.MIN_NORMAL)
+      (all.substring(from, to), n)
+    else {
+      val exact = new JBigDecimal(a)
+      val oneDigit = Seq(RoundingMode.FLOOR, RoundingMode.CEILING)
+        .map(m => exact.round(new MathContext(1, m)))
+        .filter(c => java.lang.Double.parseDouble(c.toString) == a)
+        .sortBy(c => c.subtract(exact).abs)
+      oneDigit.headOption match {
+        case Some(c) => (c.unscaledValue.toString, 1 - c.scale)
+        case None => (all.substring(from, to), n)
+      }
     }
-    java.lang.Double.toString(a)
   }
 
   /** Minimal JSON rendering for nested values (`JSON.stringify` analog). */

@@ -33,6 +33,36 @@ object RenderProps extends Properties("Render.jsNumber") {
       !s.contains('.') && !s.contains('e') && !s.contains('E')
     }
 
+  // every double from 2^53 up is integral; below 1e21 JS prints it whole
+  private val bigIntegral: Gen[Double] =
+    Gen.chooseNum(9007199254740992.0, 1e21).retryUntil(_ < 1e21)
+
+  private val subnormal: Gen[Double] = Gen.oneOf(
+    Gen.chooseNum(1L, (1L << 52) - 1),
+    Gen.chooseNum(1L, 1000L)) // the few-digit end, next to 5e-324
+    .map(java.lang.Double.longBitsToDouble)
+
+  /** The fewest significant digits that parse back to `d`: the exact
+    * value rounded half-even to p digits, for the smallest such p. */
+  private def fewestDigits(d: Double): Int = {
+    val exact = new java.math.BigDecimal(d)
+    (1 to 17).find { p =>
+      val r = exact.round(new java.math.MathContext(p, java.math.RoundingMode.HALF_EVEN))
+      java.lang.Double.parseDouble(r.toString) == d
+    }.get
+  }
+
+  /** Significant digits printed: the mantissa without sign, point,
+    * leading or trailing zeros. */
+  private def printedDigits(s: String): Int =
+    s.takeWhile(_ != 'e').filter(_.isDigit).dropWhile(_ == '0')
+      .reverse.dropWhile(_ == '0').length
+
+  property("shortest: jsNumber(d) prints the fewest digits that round-trip") =
+    Prop.forAll(Gen.oneOf(finiteDouble, bigIntegral, subnormal).retryUntil(_ != 0.0)) { d =>
+      printedDigits(Render.jsNumber(d)) == fewestDigits(d)
+    }
+
   property("exponent notation only outside [1e-6, 1e21)") =
     Prop.forAll(finiteDouble) { d =>
       val a = math.abs(d)

@@ -1,9 +1,7 @@
 package graft.engine
 
 import java.time.LocalDate
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,7 +36,7 @@ class RenderSpec extends AnyFunSuite {
     assert(Render.formatCell(1e21) == "1e+21")
     assert(Render.formatCell(1.5e-7) == "1.5e-7")
     // JDK 17 Double.toString is non-minimal here ("9.999999999999999E22");
-    // JS String(1e23) === "1e+23" — shortestRepr restores parity
+    // JS String(1e23) === "1e+23" — the Schubfach digits restore parity
     assert(Render.formatCell(1e23) == "1e+23")
     assert(Render.formatCell(0.000001d) == "0.000001")
     // floats arrive in JS as the widened double
@@ -47,6 +45,21 @@ class RenderSpec extends AnyFunSuite {
     assert(Render.formatCell(Double.NaN) == "NaN")
     // JSON.stringify inside nested values: 42.0 -> 42, NaN -> null
     assert(Render.formatCell(Seq(42.0d, Double.NaN)) == "[42,null]")
+  }
+
+  test("A14: doubles print the shortest round-tripping digits") {
+    // integral doubles >= 2^53: a 17-digit string rounded again would
+    // print 7056189866916628500 and 684865059874709300
+    assert(Render.jsNumber(7.0561898669166285e18) == "7056189866916628000")
+    assert(Render.jsNumber(6.8486505987470925e17) == "684865059874709200")
+    assert(Render.jsNumber(-6.8486505987470925e17) == "-684865059874709200")
+    // Schubfach prints at least 2 digits ("4.9E-324"); JS prints the 1
+    assert(Render.jsNumber(java.lang.Double.MIN_VALUE) == "5e-324")
+    assert(Render.jsNumber(2 * java.lang.Double.MIN_VALUE) == "1e-323")
+    assert(Render.jsNumber(3 * java.lang.Double.MIN_VALUE) == "1.5e-323")
+    assert(Render.jsNumber(Double.MaxValue) == "1.7976931348623157e+308")
+    assert(Render.jsNumber(Double.MinValue) == "-1.7976931348623157e+308")
+    assert(Render.jsNumber(java.lang.Double.MIN_NORMAL) == "2.2250738585072014e-308")
   }
 
   test("A14: temporals render ISO-8601 UTC with milliseconds (JS shape)") {
@@ -181,31 +194,13 @@ class RenderSpec extends AnyFunSuite {
   }
 
   test("A13 single pass: a grouped, ordered statement fires at most 2 jobs") {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    @volatile var marked = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == "render-marker")) marked = true
-        else jobs.incrementAndGet()
-    }
     val df = spark.sql(
       """SELECT id % 37 AS k, count(*) AS c FROM range(0, 5000, 1, 8)
         |GROUP BY id % 37 ORDER BY k""".stripMargin)
-    sc.addSparkListener(listener)
-    try {
+    val jobs = graft.TestSpark.jobsFiredBy {
       val page = Render.tableToRows(df)
       assert(page.totalRows == 37 && page.rows.head == Seq("0", "136"))
-      // the bus delivers in order: once the marker job is seen, every
-      // job tableToRows started has been counted
-      sc.setJobGroup("render-marker", "flush")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!marked && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(marked)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 2, s"tableToRows fired ${jobs.get} jobs")
+    }
+    assert(jobs <= 2, s"tableToRows fired $jobs jobs")
   }
 }
