@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ParquetFooters
 
 /** Import/catalog layer — A1-A4 and A9 (`/root/reference/src/fileImport.ts`,
   * `src/duckdb.ts:41-44`, `src/App.tsx:316-327`).
@@ -156,11 +157,14 @@ object Catalog {
     ()
   }
 
-  /** Read one file with extension-based format routing. */
+  /** Read one file with extension-based format routing. A parquet
+    * schema comes from the footers, read on the driver
+    * (`ParquetFooters`), so registering parquet runs no job; csv and json
+    * store no schema, and inferring one still runs a job. */
   def read(spark: SparkSession, absolute: Path): DataFrame = {
     val p = absolute.toString
     val lower = p.toLowerCase
-    if (lower.endsWith(".parquet")) spark.read.parquet(p)
+    if (lower.endsWith(".parquet")) ParquetFooters.read(spark, Seq(p))
     else if (lower.endsWith(".csv"))
       // escape="\"" = RFC-4180 doubled-quote escapes (Spark's default
       // escape is backslash; DuckDB auto-detects — SURVEY §7.4.2)
@@ -263,9 +267,8 @@ object Catalog {
     // vanish from the schema.
     val hive =
       opts.get("hive_partitioning").exists(_.equalsIgnoreCase("true"))
-    def based(r: org.apache.spark.sql.DataFrameReader)
-        : org.apache.spark.sql.DataFrameReader =
-      if (!hive) r
+    val baseOpt =
+      if (!hive) Map.empty[String, String]
       else {
         require(paths.forall(isGlobPath),
           "hive_partitioning=true expects glob paths" +
@@ -276,11 +279,11 @@ object Catalog {
         require(bases.length == 1 && bases.head.nonEmpty,
           "hive_partitioning=true needs paths sharing one non-glob base" +
             " directory")
-        r.option("basePath", bases.head)
+        Map("basePath" -> bases.head)
       }
     fmt match {
       case "parquet" =>
-        based(spark.read.option("mergeSchema", "true")).parquet(paths: _*)
+        ParquetFooters.read(spark, paths, baseOpt + ("mergeSchema" -> "true"))
       case "csv" =>
         // columns= carries an explicit Spark-DDL schema: inference off,
         // header defaulting to FALSE (Spark cannot sniff a header the
@@ -288,8 +291,8 @@ object Catalog {
         val explicit = opts.get("columns")
         val header = opts.getOrElse("header",
           if (explicit.isDefined) "false" else "true").toLowerCase
-        val base0 = based(spark.read.option("header", header)
-          .option("escape", "\""))
+        val base0 = spark.read.options(baseOpt).option("header", header)
+          .option("escape", "\"")
         val base = explicit match {
           case Some(ddl) => base0.schema(ddl)
           case None => base0.option("inferSchema", "true")
@@ -297,10 +300,10 @@ object Catalog {
         opts.get("delim").orElse(opts.get("sep"))
           .fold(base)(d => base.option("sep", d))
           .csv(paths: _*)
-      case "orc" => based(spark.read).orc(paths: _*)
+      case "orc" => spark.read.options(baseOpt).orc(paths: _*)
       case "json" if paths.forall(_.toLowerCase.endsWith(".json")) =>
-        based(spark.read.option("multiLine", "true")).json(paths: _*)
-      case _ => based(spark.read).json(paths: _*)
+        spark.read.options(baseOpt).option("multiLine", "true").json(paths: _*)
+      case _ => spark.read.options(baseOpt).json(paths: _*)
     }
   }
 
@@ -566,7 +569,9 @@ object Catalog {
   }
 
   /** A4: register one file as a temp view; returns the (collision-safe)
-    * view name. No byte copy — the scan stays lazy and distributed. */
+    * view name. No byte copy — the scan stays lazy and distributed. A
+    * parquet file registers from its footer, read on the driver, with no
+    * job; a csv or json file still runs its schema-inference job. */
   def registerFile(spark: SparkSession, root: Path, file: ImportedFile): String = {
     val name = claimViewName(spark, file.path)
     read(spark, root.resolve(file.path)).createOrReplaceTempView(name)
@@ -579,7 +584,8 @@ object Catalog {
 
   /** A9: union view over all imported parquet files (`src/App.tsx:316-327`).
     * DuckDB's `read_parquet([...])` unifies schemas by name; Spark needs
-    * `mergeSchema` for the same union-by-name semantics (SURVEY §7.4.4). */
+    * `mergeSchema` for the same union-by-name semantics (SURVEY §7.4.4).
+    * Files that all share one footer schema need no merge and no job. */
   def createOrReplaceParquetView(
       spark: SparkSession, root: Path, imported: Seq[ImportedFile],
       tableName: String): Option[String] = {
@@ -589,7 +595,7 @@ object Catalog {
     if (paths.isEmpty) None
     else {
       val name = Sql.sqlIdentifier(tableName)
-      spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      ParquetFooters.read(spark, paths, Map("mergeSchema" -> "true"))
         .createOrReplaceTempView(tableName)
       Some(name)
     }

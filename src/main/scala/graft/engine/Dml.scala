@@ -4,8 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetFooters
 
 /** Copy-on-write DML over an immutable parquet layout — UPDATE/DELETE as
   * the file-rewrite they are at scale (VERDICT r14 #1; reference surface:
@@ -71,35 +74,36 @@ object Dml {
     * None = no stats anywhere in the file (all-null column, statless
     * writer, or a non-integer physical type) — the caller must treat
     * the file as affected; pruning on absent stats would drop rows. */
-  private def fileRange(file: Path, column: String): Option[(Long, Long)] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file.toString), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val ranges = reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-        b.getColumns.asScala
-          .find(_.getPath.toDotString == column)
-          .flatMap { c =>
-            val st = c.getStatistics
-            if (st == null || !st.hasNonNullValue) None
-            else (st.genericGetMin, st.genericGetMax) match {
-              // only the integral physical types fold losslessly; a
-              // Float/Double stat must NOT longValue-truncate (a negative
-              // min would move toward zero — an unsound prune), so
-              // floating-point columns fall to None = file always affected
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                Some((mn.longValue, mx.longValue))
-              case (mn: java.lang.Integer, mx: java.lang.Integer) =>
-                Some((mn.longValue, mx.longValue))
-              case _ => None // binary/float stats don't fold to a range
-            }
+  private def fileRange(
+      conf: Configuration, file: Path, column: String): Option[(Long, Long)] = {
+    val ranges = footerBlocks(conf, file).flatMap { b =>
+      b.getColumns.asScala
+        .find(_.getPath.toDotString == column)
+        .flatMap { c =>
+          val st = c.getStatistics
+          if (st == null || !st.hasNonNullValue) None
+          else (st.genericGetMin, st.genericGetMax) match {
+            // only the integral physical types fold losslessly; a
+            // Float/Double stat must NOT longValue-truncate (a negative
+            // min would move toward zero — an unsound prune), so
+            // floating-point columns fall to None = file always affected
+            case (mn: java.lang.Long, mx: java.lang.Long) =>
+              Some((mn.longValue, mx.longValue))
+            case (mn: java.lang.Integer, mx: java.lang.Integer) =>
+              Some((mn.longValue, mx.longValue))
+            case _ => None // binary/float stats don't fold to a range
           }
-      }
-      if (ranges.isEmpty) None
-      else Some((ranges.map(_._1).min, ranges.map(_._2).max))
-    } finally reader.close()
+        }
+    }
+    if (ranges.isEmpty) None
+    else Some((ranges.map(_._1).min, ranges.map(_._2).max))
   }
+
+  /** A data file's row groups, from its footer opened with the session's
+    * Hadoop conf. */
+  private def footerBlocks(conf: Configuration, file: Path) =
+    ParquetFooters.footer(conf, new org.apache.hadoop.fs.Path(file.toString),
+      rowGroups = true).getBlocks.asScala.toSeq
 
   /** The prune + rewrite + swap core. `loMicros`/`hiMicros` bound the
     * mutation's half-open key range [lo, hi) on `pruneCol` (an INT64
@@ -114,15 +118,17 @@ object Dml {
     * itself. Package-visible so DmlSpec can certify the selection
     * itself, not only its end-to-end effect. */
   private[graft] def overlapping(
-      files: Seq[Path], column: String, loMicros: Long,
-      hiMicros: Long): Seq[Path] =
+      spark: SparkSession, files: Seq[Path], column: String, loMicros: Long,
+      hiMicros: Long): Seq[Path] = {
+    val conf = spark.sessionState.newHadoopConf()
     files.filter { f =>
-      fileRange(f, column) match {
+      fileRange(conf, f, column) match {
         case Some((mn, mx)) =>
           mx >= loMicros && (mn < hiMicros || hiMicros == Long.MaxValue)
         case None => true // no stats — cannot prove disjoint, must rewrite
       }
     }
+  }
 
   /** Data files of a layout directory (top level, dotfiles excluded). */
   private[graft] def layoutFiles(path: String): Seq[Path] =
@@ -177,7 +183,7 @@ object Dml {
       transform: DataFrame => DataFrame): Stats = {
     val files = dataFiles(Paths.get(path))
     rewriteFiles(spark, path, files,
-      overlapping(files, pruneCol, loMicros, hiMicros))(transform)
+      overlapping(spark, files, pruneCol, loMicros, hiMicros))(transform)
   }
 
   /** The UNPRUNED rewrite — every data file is affected. This is the
@@ -202,7 +208,7 @@ object Dml {
       // scratch dir next to the layout, pid-scoped like Layout.tmpRoot so
       // concurrent harness JVMs never interleave their swaps
       val tmp = Paths.get(s"${path}_cow_p${ProcessHandle.current.pid}")
-      transform(spark.read.parquet(affected.map(_.toString): _*))
+      transform(ParquetFooters.read(spark, affected.map(_.toString)))
         .write.mode("overwrite").parquet(tmp.toString)
       val replacements = dataFiles(tmp)
       affected.foreach(deleteWithCrc)
@@ -287,7 +293,7 @@ object Dml {
       source: DataFrame, srcKeys: Seq[String],
       setCols: Seq[String]): Stats =
     mergeCore(spark, path,
-      overlapping(_, pruneCol, loMicros, hiMicros),
+      overlapping(spark, _, pruneCol, loMicros, hiMicros),
       source, srcKeys, setCols)
 
   /** The statement-routed merge — no user-supplied prune range, but the
@@ -350,7 +356,7 @@ object Dml {
           s"DELETE USING key column $n not found in the source"))
     }
     val files = dataFiles(Paths.get(path))
-    val target = spark.read.parquet(path)
+    val target = ParquetFooters.read(spark, Seq(path))
     val keyField = target.schema.fields
       .find(_.name.equalsIgnoreCase(srcKeys.head)).getOrElse(
         throw new IllegalArgumentException(
@@ -362,7 +368,7 @@ object Dml {
           min(col(srcKeys.head)).cast("long"),
           max(col(srcKeys.head)).cast("long")).head()
         if (span.isNullAt(0)) Seq.empty // empty source deletes nothing
-        else insertCheckFiles(files, keyField.name,
+        else insertCheckFiles(spark, files, keyField.name,
           span.getLong(0), span.getLong(1))
       case _ => files
     }
@@ -378,13 +384,16 @@ object Dml {
     * footer statistics fold reads long stats); anything else — and any
     * file without stats — stays a candidate. */
   private[graft] def insertCheckFiles(
-      files: Seq[Path], keyCol: String, kLo: Long, kHi: Long): Seq[Path] =
+      spark: SparkSession, files: Seq[Path], keyCol: String, kLo: Long,
+      kHi: Long): Seq[Path] = {
+    val conf = spark.sessionState.newHadoopConf()
     files.filter { f =>
-      fileRange(f, keyCol) match {
+      fileRange(conf, f, keyCol) match {
         case Some((mn, mx)) => mx >= kLo && mn <= kHi
         case None => true
       }
     }
+  }
 
   /** `preSpan`: Some(spanOpt) when the CALLER already certified source-key
     * uniqueness over the same pinned source in its own batch job and hands
@@ -436,8 +445,8 @@ object Dml {
     }.withColumn("_src_hit", lit(true))
     val files = dataFiles(Paths.get(path))
     // target schema + head key resolve BEFORE the rewrite (footer read,
-    // no scan) — both branch prunes derive from them
-    val target = spark.read.parquet(path)
+    // no job) — both branch prunes derive from them
+    val target = ParquetFooters.read(spark, Seq(path))
     // name comparisons against the TARGET use its stored case too —
     // source and target may legally disagree on identifier case
     def isKey(c: String) = srcKeys.exists(_.equalsIgnoreCase(c))
@@ -483,7 +492,7 @@ object Dml {
     }
     def spanPrune(fs: Seq[Path]): Option[Seq[Path]] = spanOpt.map {
       case (lo, hi) =>
-        if (lo > hi) Seq.empty else insertCheckFiles(fs, keyCol, lo, hi)
+        if (lo > hi) Seq.empty else insertCheckFiles(spark, fs, keyCol, lo, hi)
     }
     // matched branch: a file whose head-key footer range misses the
     // source's key span cannot contain a matched row — skip it
@@ -522,7 +531,7 @@ object Dml {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(srcKeys.map(targetField)))
-      else spark.read.parquet(candidates.map(_.toString): _*)
+      else ParquetFooters.read(spark, candidates.map(_.toString))
         .select(srcKeys.map(col).toSeq: _*)
     val inserts = renamed.join(targetKeys, srcKeys, "left_anti")
       .select(target.columns.map { c =>
@@ -545,8 +554,9 @@ object Dml {
     val insTmp = Paths.get(s"${path}_ins_p${ProcessHandle.current.pid}")
     inserts.write.mode("overwrite").parquet(insTmp.toString)
     val dir = Paths.get(path)
+    val conf = spark.sessionState.newHadoopConf()
     dataFiles(insTmp).zipWithIndex.foreach { case (f, i) =>
-      if (fileRowCount(f) > 0)
+      if (footerBlocks(conf, f).map(_.getRowCount).sum > 0)
         Files.move(f,
           dir.resolve(s"part-ins-${System.nanoTime()}-$i.parquet"))
     }
@@ -555,14 +565,4 @@ object Dml {
     stats
   }
 
-  /** Total record count from the footer block metadata — no data pages
-    * are read. */
-  private def fileRowCount(file: Path): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file.toString), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
 }

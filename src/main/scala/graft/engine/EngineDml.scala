@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.ParquetFooters
 
 import EngineLex.codeMask
 
@@ -576,7 +577,7 @@ private[engine] trait EngineDml {
       // json fields are named, not positional: absent fields read NULL —
       // the format's own semantics, not a width error
       case "json" | "ndjson" => spark.read.schema(schema).json(path)
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => ParquetFooters.read(spark, Seq(path))
       case "orc" => spark.read.orc(path)
       case other => throw new IllegalArgumentException(
         s"COPY FROM supports csv/parquet/json/orc formats — got $other")
@@ -958,9 +959,9 @@ private[engine] trait EngineDml {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
     }
-    // the layout's physical schema (footer read, no scan) — the prune
+    // the layout's physical schema (footer read, no job) — the prune
     // column must be INT64-backed for Dml's statistics fold
-    val schema = spark.read.parquet(path).schema
+    val schema = ParquetFooters.read(spark, Seq(path)).schema
     def colOf(e: Expression): Option[StructField] = e match {
       case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
           if a.nameParts.size == 1 =>
@@ -1405,7 +1406,7 @@ private[engine] trait EngineDml {
     val files = Dml.layoutFiles(dir.toString)
     val candidates =
       if (!span.nonEmpty) Seq.empty // empty batch: no collision
-      else Dml.insertCheckFiles(files, keyField.name, span.lo, span.hi)
+      else Dml.insertCheckFiles(spark, files, keyField.name, span.lo, span.hi)
     if (candidates.isEmpty)
       // zero overlapping files ⇒ provably no collision: an empty
       // relation with the key columns keeps the caller's join shape
@@ -1414,7 +1415,7 @@ private[engine] trait EngineDml {
         org.apache.spark.sql.types.StructType(
           keys.map(k => spark.table(ident).schema.fields
             .find(_.name.equalsIgnoreCase(k)).get))))
-    else Some(spark.read.parquet(candidates.map(_.toString): _*))
+    else Some(ParquetFooters.read(spark, candidates.map(_.toString)))
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The fused statement-route check: ONE batch job (soundness + span),

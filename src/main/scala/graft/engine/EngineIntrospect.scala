@@ -376,8 +376,7 @@ private[engine] trait EngineIntrospect {
       }
     val (table, afterOn) = cutAt(rest, "ON")
     val (onExpr, afterUsing) = cutAt(afterOn, "USING")
-    val src =
-      if (table.startsWith("(")) s"$table __graft_piv_src" else table
+    val src = sourceItem(table, "__graft_piv_src")
     // the aggregate text runs to GROUP BY if present, else to the
     // ORDER/LIMIT tail, else to the end
     val aggCut = firstTopLevelKeyword(afterUsing,
@@ -496,6 +495,17 @@ private[engine] trait EngineIntrospect {
   // subquery via `rewriteSubqueryBodies`.
   private[engine] val unpivotStmtRe = "(?is)^UNPIVOT\\s+(.+)$".r
 
+  /** A PIVOT/UNPIVOT source as a FROM item. Spark needs an alias on a
+    * parenthesized subquery: the user's own (`(…) AS s`, `(…) s`) is
+    * kept, and a bare one gets `dflt`. */
+  private def sourceItem(table: String, dflt: String): String =
+    if (!table.startsWith("(")) table
+    else {
+      val close = codeMask(table).closeOf(0)
+      if (close >= 0 && table.substring(close + 1).trim.nonEmpty) table
+      else s"$table $dflt"
+    }
+
   private[engine] def unpivotStatementSql(rest: String): String = {
     val oi = firstTopLevelKeyword(rest, Seq("ON")).getOrElse(
       throw new IllegalArgumentException(
@@ -517,8 +527,7 @@ private[engine] trait EngineIntrospect {
           trailing.trim.matches("(?is)^(ORDER|LIMIT|OFFSET)\\b.*"),
           "routed UNPIVOT supports a single NAME/VALUE pair and an" +
             s" ORDER BY/LIMIT tail — unexpected: $trailing")
-        val src =
-          if (table.startsWith("(")) s"$table __graft_unp_src" else table
+        val src = sourceItem(table, "__graft_unp_src")
         s"SELECT * FROM $src UNPIVOT ($v FOR $n IN ($onCols))$trailing"
       case other => throw new IllegalArgumentException(
         s"routed UNPIVOT INTO must be NAME <col> VALUE <col>: $other")
@@ -594,10 +603,12 @@ private[engine] trait EngineIntrospect {
   // `FROM t WHERE … LIMIT …` read as implicit SELECT *, and
   // `FROM t SELECT cols …` carries an explicit select list (trailing
   // clauses — WHERE/GROUP BY/ORDER BY/… — follow the list, as DuckDB
-  // accepts). Spark rejects a leading FROM, so the statement rewrites to
-  // SELECT-first form and re-enters `sql` (the rewritten text starts
-  // with SELECT, so it lands in the default branch: path-table rewrite
-  // and the rest of the routing still apply). Statement-level only, like
+  // accepts). Spark 4.1 parses `FROM t` and `FROM t SELECT …` itself,
+  // but not a select-less `FROM t WHERE …` or `FROM t LIMIT …`, so the
+  // statement rewrites to SELECT-first form and re-enters `sql` (the
+  // rewritten text starts with SELECT, so it lands in the default
+  // branch: path-table rewrite and the rest of the routing still
+  // apply). Statement-level only, like
   // every routed shim — a FROM-first SUBQUERY inside a larger statement
   // is not rewritten.
   private[engine] val fromFirstRe = "(?is)^FROM\\s+(.+)$".r

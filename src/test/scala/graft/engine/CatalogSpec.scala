@@ -2,6 +2,13 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.graft.ParquetFooters
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A1-A4/A9 import + format routing over the FIXTURES.md §4 micro-fixtures
@@ -131,5 +138,147 @@ class CatalogSpec extends AnyFunSuite {
     Files.copy(fixtures.resolve("mini.csv"), tmp.resolve("mini.csv"))
     assert(Catalog.createOrReplaceParquetView(
       spark, tmp, Catalog.collectFiles(tmp), "nope").isEmpty)
+  }
+
+  /** A parquet file from parquet-mr's example writer: no Spark schema in
+    * its key-value metadata, so Spark converts the parquet schema itself,
+    * as it does for files pyarrow or DuckDB wrote. `rows` rows set `id`
+    * to the row number and leave every other column NULL. */
+  private def writeRaw(path: Path, schema: String, rows: Int): Path = {
+    val mt = MessageTypeParser.parseMessageType(schema)
+    val out = HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(
+      path.toString), spark.sessionState.newHadoopConf())
+    val w = ExampleParquetWriter.builder(out).withType(mt).build()
+    val groups = new SimpleGroupFactory(mt)
+    try (0 until rows).foreach { i =>
+      val g: Group = groups.newGroup()
+      g.add("id", i.toLong)
+      w.write(g)
+    } finally w.close()
+    path
+  }
+
+  private val rawSchema =
+    """message m {
+      |  required int64 id;
+      |  optional group st { optional int32 a; optional binary b (STRING); }
+      |  optional group lst (LIST) {
+      |    repeated group list { optional int32 element; } }
+      |  optional group mp (MAP) { repeated group key_value {
+      |    required binary key (STRING); optional int64 value; } }
+      |  optional fixed_len_byte_array(9) dec (DECIMAL(20,4));
+      |  optional int64 dec2 (DECIMAL(12,2));
+      |  optional int64 ts (TIMESTAMP(MICROS,true));
+      |  optional int64 ts_ntz (TIMESTAMP(MICROS,false));
+      |  optional int32 d (DATE);
+      |  optional binary raw;
+      |}""".stripMargin
+
+  /** The footer schema of `paths`. Whenever there is one, the read
+    * handed it must plan what `spark.read.parquet` infers (both make
+    * every column nullable) and return the same rows. */
+  private def footerSchema(paths: String*): Option[StructType] = {
+    val got = ParquetFooters.schema(spark, paths)
+    if (got.isDefined) {
+      val (viaFooter, inferred) =
+        (ParquetFooters.read(spark, paths), spark.read.parquet(paths: _*))
+      assert(viaFooter.schema == inferred.schema, paths)
+      assert(viaFooter.collect().toSeq == inferred.collect().toSeq, paths)
+    }
+    got
+  }
+
+  test("footer schema equals Spark's inference, or is None") {
+    val tmp = Files.createTempDirectory("footers")
+    // nested struct/list/map, decimals, TIMESTAMP and TIMESTAMP_NTZ,
+    // converted from the parquet schema
+    val raw = writeRaw(tmp.resolve("raw.parquet"), rawSchema, 3).toString
+    val rawSchemaRead = footerSchema(raw)
+    assert(rawSchemaRead.exists(s => s.fieldNames.toSeq == Seq("id", "st",
+      "lst", "mp", "dec", "dec2", "ts", "ts_ntz", "d", "raw")))
+    assert(rawSchemaRead.get("ts_ntz").dataType.typeName == "timestamp_ntz")
+    // a zero-row file still has a footer
+    assert(footerSchema(
+      writeRaw(tmp.resolve("empty.parquet"), rawSchema, 0).toString).isDefined)
+    // TIMESTAMP(NANOS), by default and under the legacy nanosAsLong flag
+    val nanos = writeRaw(tmp.resolve("nanos.parquet"),
+      "message m { required int64 id; optional int64 t (TIMESTAMP(NANOS,true)); }",
+      2).toString
+    assert(footerSchema(nanos).exists(_("t").dataType == LongType))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try assert(footerSchema(nanos).exists(_("t").dataType == LongType))
+    finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    // a Spark-written directory: its _SUCCESS and .crc siblings are
+    // skipped, the Spark schema in the footer is used as written
+    import spark.implicits._
+    val sparkDir = tmp.resolve("spark_dir.parquet").toString
+    spark.sql("SELECT 1L AS id, named_struct('a', 1, 'b', array(1.5D)) AS st," +
+      " map('k', 2L) AS m, CAST(3.25 AS DECIMAL(10, 2)) AS dec," +
+      " TIMESTAMP'2024-01-02 03:04:05' AS ts," +
+      " TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts_ntz")
+      .repartition(2).write.parquet(sparkDir)
+    val siblings = Files.list(Paths.get(sparkDir)).toArray.map(
+      _.asInstanceOf[Path].getFileName.toString)
+    assert(siblings.contains("_SUCCESS") && siblings.exists(_.endsWith(".crc")))
+    assert(footerSchema(sparkDir).isDefined)
+    // schemas that differ fall back: the set still unions by name
+    val a = tmp.resolve("mix_a.parquet").toString
+    val b = tmp.resolve("mix_b.parquet").toString
+    Seq((1L, "x")).toDF("id", "name").coalesce(1).write.parquet(a)
+    Seq((2L, 9.5)).toDF("id", "extra").coalesce(1).write.parquet(b)
+    assert(footerSchema(a, b).isEmpty)
+    val mixed = Engine.sql(spark,
+      s"SELECT * FROM read_parquet(['$a', '$b']) ORDER BY id")
+    assert(mixed.schema ==
+      spark.read.option("mergeSchema", "true").parquet(a, b).schema)
+    assert(mixed.collect().map(r => (r.getAs[Long]("id"),
+      Option(r.getAs[String]("name")), Option(r.getAs[java.lang.Double]("extra"))))
+      .toSeq == Seq((1L, Some("x"), None), (2L, None, Some(9.5))))
+    // hive partitions: a directory of k=v subdirectories says nothing; a
+    // hive_partitioning glob reads the key column as Spark does
+    val hive = tmp.resolve("hive")
+    Seq((1L, 1), (2L, 2)).toDF("id", "k").write.partitionBy("k")
+      .parquet(hive.toString)
+    assert(footerSchema(hive.toString).isEmpty)
+    val glob = s"$hive/*/*.parquet"
+    val hiveRead = Engine.sql(spark,
+      s"SELECT * FROM read_parquet('$glob', hive_partitioning=true)")
+    assert(hiveRead.schema ==
+      spark.read.option("basePath", hive.toString).parquet(glob).schema)
+    assert(hiveRead.columns.toSeq == Seq("id", "k"))
+    // a missing path and a non-parquet file: no footer schema, and the
+    // read fails with Spark's own error
+    assert(ParquetFooters.schema(spark, Seq(s"$tmp/absent.parquet")).isEmpty)
+    val bad = Files.writeString(tmp.resolve("bad.parquet"), "not parquet")
+    assert(ParquetFooters.schema(spark, Seq(bad.toString)).isEmpty)
+    // (the job's stage and task ids differ; the failure does not)
+    def root(t: Throwable): Throwable = Option(t.getCause).fold(t)(root)
+    val want = intercept[Exception](spark.read.parquet(bad.toString))
+    val got = intercept[Exception](Catalog.read(spark, bad))
+    assert(got.getClass == want.getClass)
+    assert(root(got).toString == root(want).toString)
+    assert(root(got).toString.contains("not a Parquet file"))
+  }
+
+  test("parquet import, read_parquet views and DML schema reads fire no job") {
+    val tmp = Files.createTempDirectory("nojob")
+    writeRaw(tmp.resolve("a.parquet"), rawSchema, 3)
+    writeRaw(tmp.resolve("b.parquet"), rawSchema, 2)
+    var views = Seq.empty[String]
+    assert(graft.TestSpark.jobsFiredBy {
+      views = Catalog.importFolder(spark, tmp)._2
+    } == 0)
+    assert(views.size == 2)
+    assert(graft.TestSpark.jobsFiredBy {
+      Engine.sql(spark, "CREATE OR REPLACE VIEW catalog_spec_nojob AS" +
+        s" SELECT * FROM read_parquet('$tmp/*.parquet')")
+    } == 0)
+    assert(spark.table("catalog_spec_nojob").count() == 5)
+    // the DML prune reads the layout's schema from the footers
+    var range: Option[(String, Long, Long)] = None
+    assert(graft.TestSpark.jobsFiredBy {
+      range = Engine.pruneRange(spark, tmp.toString, "id >= 2")
+    } == 0)
+    assert(range.contains(("id", 2L, Long.MaxValue)))
   }
 }

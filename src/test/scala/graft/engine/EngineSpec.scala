@@ -582,6 +582,26 @@ class EngineSpec extends AnyFunSuite {
       "PIVOT (SELECT k, v FROM engine_spec_piv3) ON k USING SUM(v)"))
   }
 
+  test("PIVOT and UNPIVOT keep a subquery source's own alias") {
+    Engine.exec(spark,
+      "CREATE OR REPLACE TEMPORARY VIEW engine_spec_piv4 AS " +
+        "SELECT * FROM VALUES ('x', 'A'), ('x', 'B'), ('y', 'A') v(g, k)")
+    // DuckDB accepts `(subquery) AS s` and `(subquery) s` as the source
+    // and returns the same rows as the unaliased form
+    val bare = Engine.sql(spark,
+      "PIVOT (SELECT * FROM engine_spec_piv4) ON k USING COUNT(*) ORDER BY g")
+      .collect().toSeq
+    assert(bare.map(r => (r.getString(0), r.getLong(1), r.getLong(2))) ==
+      Seq(("x", 1L, 1L), ("y", 1L, 0L)))
+    for (alias <- Seq("AS s", "s"))
+      assert(Engine.sql(spark,
+        s"PIVOT (SELECT * FROM engine_spec_piv4) $alias ON k USING COUNT(*)" +
+          " ORDER BY g").collect().toSeq == bare, alias)
+    assert(Engine.sql(spark,
+      "UNPIVOT (SELECT g, k FROM engine_spec_piv4) AS s ON k" +
+        " INTO NAME n VALUE val ORDER BY g, val").count() == 3L)
+  }
+
   test("PIVOT orders numeric key columns numerically, not lexically") {
     Engine.exec(spark,
       "CREATE OR REPLACE TEMPORARY VIEW engine_spec_piv2 AS " +

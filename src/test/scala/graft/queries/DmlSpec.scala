@@ -227,16 +227,16 @@ class DmlSpec extends AnyFunSuite {
     val (kLo, kHi) = (keys.getLong(0), keys.getLong(1))
     val mid = kLo + (kHi - kLo) / 2
     // a span covering ~1/8 of the key range: strict subset, never empty
-    val narrow = Dml.insertCheckFiles(files, "o_orderkey",
+    val narrow = Dml.insertCheckFiles(spark, files, "o_orderkey",
       mid, mid + (kHi - kLo) / 8)
     assert(narrow.nonEmpty && narrow.size < files.size,
       s"narrow span selected ${narrow.size}/${files.size} files")
     // a span past the key range proves full disjointness
-    assert(Dml.insertCheckFiles(files, "o_orderkey",
+    assert(Dml.insertCheckFiles(spark, files, "o_orderkey",
       kHi + 1000000, kHi + 2000000).isEmpty,
       "out-of-range span must select no files")
     // and the full span selects everything (sanity)
-    assert(Dml.insertCheckFiles(files, "o_orderkey", kLo, kHi).size == 8)
+    assert(Dml.insertCheckFiles(spark, files, "o_orderkey", kLo, kHi).size == 8)
   }
 
   test("MERGE: fully-matched source appends no empty part file") {
