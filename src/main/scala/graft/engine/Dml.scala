@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetFooters
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Copy-on-write DML over an immutable parquet layout — UPDATE/DELETE as
   * the file-rewrite they are at scale (VERDICT r14 #1; reference surface:
@@ -29,11 +30,14 @@ import org.apache.spark.sql.graft.ParquetFooters
   *     rewritten — which is what makes a point DELETE on a 100 TB table a
   *     handful-of-files job, not a table rewrite (DmlSpec asserts they
   *     stay BYTE-identical).
-  *  3. SWAP: delete the affected originals, move the replacements in.
-  *     (A production table format makes this step atomic via its log /
-  *     manifest; a filesystem swap is the honest single-writer analog —
-  *     readers concurrent with the swap need the manifest layer, which is
-  *     out of scope here and orthogonal to the pruning + rewrite shape.)
+  *  3. LAND: `land` — the one commit point of every route — writes
+  *     the replacements to a scratch directory, drops zero-row parts,
+  *     deletes the affected originals, moves the parts in and scrubs
+  *     the scratch directory. (A production table format makes this
+  *     step atomic via its log / manifest; a filesystem swap is the
+  *     honest single-writer analog — readers concurrent with the swap
+  *     need the manifest layer, which is out of scope here and
+  *     orthogonal to the pruning + rewrite shape.)
   *
   * Driver-side work is FILE METADATA only (one footer read per file — at
   * real scale these min/max live in the table format's manifest and the
@@ -105,30 +109,32 @@ object Dml {
     ParquetFooters.footer(conf, new org.apache.hadoop.fs.Path(file.toString),
       rowGroups = true).getBlocks.asScala.toSeq
 
-  /** The prune + rewrite + swap core. `loMicros`/`hiMicros` bound the
-    * mutation's half-open key range [lo, hi) on `pruneCol` (an INT64
-    * timestamp/long column); `transform` is the row-level mutation,
-    * applied ONLY to rows of affected files — it must be a superset-safe
-    * row map (rows outside the predicate pass through unchanged), which
-    * `deleteWhere`/`updateWhere` guarantee by construction. */
-  /** The files whose footer [min,max] on `column` intersects [lo, hi) —
-    * plus every file WITHOUT stats on the column (absence can't prove
-    * disjointness). `hi == Long.MaxValue` reads as +∞ (inclusive): the
-    * half-open form can't otherwise express a range containing MaxValue
-    * itself. Package-visible so DmlSpec can certify the selection
+  /** The files whose footer [min,max] on `column` intersects the
+    * inclusive range [lo, hi] — plus every file WITHOUT stats on the
+    * column (absence can't prove disjointness). The one footer-range
+    * file filter: every prune (a routed WHERE range, a MERGE source's
+    * key span, a PRIMARY KEY batch's span) converts its own bounds to
+    * this form. Package-visible so DmlSpec can certify the selection
     * itself, not only its end-to-end effect. */
   private[graft] def overlapping(
-      spark: SparkSession, files: Seq[Path], column: String, loMicros: Long,
-      hiMicros: Long): Seq[Path] = {
+      spark: SparkSession, files: Seq[Path], column: String, lo: Long,
+      hi: Long): Seq[Path] = {
     val conf = spark.sessionState.newHadoopConf()
     files.filter { f =>
       fileRange(conf, f, column) match {
-        case Some((mn, mx)) =>
-          mx >= loMicros && (mn < hiMicros || hiMicros == Long.MaxValue)
+        case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true // no stats — cannot prove disjoint, must rewrite
       }
     }
   }
+
+  /** The inclusive upper bound of a half-open range [lo, hi), where
+    * `hi == Long.MaxValue` reads as +∞: the half-open form can't
+    * otherwise express a range containing MaxValue itself. MinValue
+    * stays put rather than wrap (the empty range then keeps only files
+    * holding MinValue — a superset, so still sound). */
+  private def inclusive(hi: Long): Long =
+    if (hi == Long.MaxValue || hi == Long.MinValue) hi else hi - 1
 
   /** Data files of a layout directory (top level, dotfiles excluded). */
   private[graft] def layoutFiles(path: String): Seq[Path] =
@@ -177,13 +183,20 @@ object Dml {
     else sourceIn.localCheckpoint()
   }
 
+  /** The prune + rewrite + land core. `loMicros`/`hiMicros` bound the
+    * mutation's half-open key range [lo, hi) on `pruneCol` (an INT64
+    * timestamp/long column); `transform` is the row-level mutation,
+    * applied ONLY to rows of affected files — it must be a superset-safe
+    * row map (rows outside the predicate pass through unchanged), which
+    * `deleteWhere`/`updateWhere` guarantee by construction. */
   def copyOnWrite(
       spark: SparkSession, path: String, pruneCol: String,
       loMicros: Long, hiMicros: Long)(
       transform: DataFrame => DataFrame): Stats = {
     val files = dataFiles(Paths.get(path))
     rewriteFiles(spark, path, files,
-      overlapping(spark, files, pruneCol, loMicros, hiMicros))(transform)
+      overlapping(spark, files, pruneCol, loMicros, inclusive(hiMicros)))(
+      transform)
   }
 
   /** The UNPRUNED rewrite — every data file is affected. This is the
@@ -202,24 +215,44 @@ object Dml {
       spark: SparkSession, path: String,
       files: Seq[Path], affected: Seq[Path])(
       transform: DataFrame => DataFrame): Stats = {
+    if (affected.nonEmpty)
+      land(spark, path,
+        transform(ParquetFooters.read(spark, affected.map(_.toString))),
+        replaced = affected)
+    Stats(files.size, affected.size)
+  }
+
+  /** Land `rows` in the layout at `path` in place of the `replaced`
+    * files: ONE job writes them to a pid-scoped scratch dir next to the
+    * layout (so concurrent harness JVMs never interleave), the parts'
+    * footer record counts (driver-side metadata, no scan) drop the
+    * zero-row ones, the replaced files are deleted, the remaining parts
+    * move in and the scratch dir is scrubbed (_SUCCESS, .crc). Every
+    * route commits through here. A zero-row part carries no statistics,
+    * so landing one would make every later footer prune treat its file
+    * as affected — except when the step would otherwise leave the
+    * layout with no data file at all: one zero-row part then stays, as
+    * readers and the prunes need a footer to read the schema from. */
+  private def land(
+      spark: SparkSession, path: String, rows: DataFrame,
+      replaced: Seq[Path]): Unit = {
     val dir = Paths.get(path)
-    if (affected.isEmpty) Stats(files.size, 0)
-    else {
-      // scratch dir next to the layout, pid-scoped like Layout.tmpRoot so
-      // concurrent harness JVMs never interleave their swaps
-      val tmp = Paths.get(s"${path}_cow_p${ProcessHandle.current.pid}")
-      transform(ParquetFooters.read(spark, affected.map(_.toString)))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val replacements = dataFiles(tmp)
-      affected.foreach(deleteWithCrc)
-      replacements.zipWithIndex.foreach { case (f, i) =>
-        Files.move(f, dir.resolve(s"part-cow-${System.nanoTime()}-$i.parquet"))
-      }
-      // scrub the scratch dir (_SUCCESS, .crc)
-      Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
-      Stats(files.size, affected.size)
+    val tmp = Paths.get(s"${path}_cow_p${ProcessHandle.current.pid}")
+    rows.write.mode("overwrite").parquet(tmp.toString)
+    val conf = spark.sessionState.newHadoopConf()
+    val parts = dataFiles(tmp)
+    val nonEmpty =
+      parts.filter(footerBlocks(conf, _).map(_.getRowCount).sum > 0)
+    val kept =
+      if (nonEmpty.isEmpty && replaced.nonEmpty &&
+          dataFiles(dir).forall(replaced.contains)) parts.take(1)
+      else nonEmpty
+    replaced.foreach(deleteWithCrc)
+    kept.zipWithIndex.foreach { case (f, i) =>
+      Files.move(f, dir.resolve(s"part-cow-${System.nanoTime()}-$i.parquet"))
     }
+    Files.walk(tmp).iterator().asScala.toSeq.reverse
+      .foreach(Files.deleteIfExists(_))
   }
 
   /** DELETE FROM layout WHERE rowPred — rows matching `rowPred` drop from
@@ -292,27 +325,26 @@ object Dml {
       loMicros: Long, hiMicros: Long,
       source: DataFrame, srcKeys: Seq[String],
       setCols: Seq[String]): Stats =
-    mergeCore(spark, path,
-      overlapping(spark, _, pruneCol, loMicros, hiMicros),
-      source, srcKeys, setCols)
+    mergeCore(spark, path, source, srcKeys, Some(setCols),
+      within = overlapping(spark, _, pruneCol, loMicros, inclusive(hiMicros)))
 
   /** The statement-routed merge — no user-supplied prune range, but the
     * matched branch still KEY-PRUNES from the source itself: a target
     * file whose footer [min,max] on the head key misses the source's
     * key span cannot contain a matched row, so it is never opened, let
-    * alone rewritten (sound for the same reason `insertCheckFiles` is —
-    * matched ⇒ key ∈ source span ⇒ file range overlaps). On a
-    * key-clustered layout a day's upserts rewrite a handful of files,
-    * not the table — the shape a 100 TB MERGE must have. Non-INT64
-    * head keys fall back to the full rewrite (the stats fold reads
-    * integer statistics); the range-pruned `mergeInto` remains the
-    * explicit-range API. */
+    * alone rewritten (matched ⇒ key ∈ source span ⇒ file range
+    * overlaps). On a key-clustered layout a day's upserts rewrite a
+    * handful of files, not the table — the shape a 100 TB MERGE must
+    * have. Non-INT64 head keys fall back to the full rewrite (the stats
+    * fold reads integer statistics); the range-pruned `mergeInto`
+    * remains the explicit-range API. `refuse` replaces MERGE's
+    * duplicate-key refusal (the PRIMARY KEY routes refuse NULL keys
+    * too, with their own messages). */
   def mergeIntoAll(
       spark: SparkSession, path: String, source: DataFrame,
       srcKeys: Seq[String], setCols: Seq[String],
-      preSpan: Option[Option[Engine.BatchSpan]] = None): Stats =
-    mergeCore(spark, path, identity, source, srcKeys, setCols,
-      pruneMatchedBySpan = true, preSpan = preSpan)
+      refuse: Option[SourceKeys => Unit] = None): Stats =
+    mergeCore(spark, path, source, srcKeys, Some(setCols), refuse = refuse)
 
   /** INSERT-if-absent (the `ON CONFLICT DO NOTHING` upsert): only the
     * WHEN-NOT-MATCHED branch runs — source rows whose keys exist in the
@@ -324,9 +356,8 @@ object Dml {
   def insertOnlyAll(
       spark: SparkSession, path: String, source: DataFrame,
       srcKeys: Seq[String],
-      preSpan: Option[Option[Engine.BatchSpan]] = None): Stats =
-    mergeCore(spark, path, _ => Seq.empty, source, srcKeys, Seq.empty,
-      preSpan = preSpan)
+      refuse: Option[SourceKeys => Unit] = None): Stats =
+    mergeCore(spark, path, source, srcKeys, None, refuse = refuse)
 
   /** UPDATE-only merge (the `UPDATE … FROM` join update): matched keys
     * take the source's columns through the key-span-pruned broadcast
@@ -335,17 +366,17 @@ object Dml {
   def updateFromAll(
       spark: SparkSession, path: String, source: DataFrame,
       srcKeys: Seq[String], setCols: Seq[String]): Stats =
-    mergeCore(spark, path, identity, source, srcKeys, setCols,
-      pruneMatchedBySpan = true, insertBranch = false,
-      label = "UPDATE FROM")
+    mergeCore(spark, path, source, srcKeys, Some(setCols),
+      insert = false, label = "UPDATE FROM")
 
   /** DELETE-by-keys (the equi-key `DELETE … USING` shape): drop target
     * rows whose key tuple appears in the source, as a key-span-pruned
     * copy-on-write rewrite — a file whose head-key footer range misses
     * the source's key span cannot contain a deletable row and is never
     * opened. The source pins to a snapshot first (it may legally read
-    * FROM the target). Non-equi conditions take the unpruned anti-join
-    * rewrite in the Engine route instead. */
+    * FROM the target). Duplicate and NULL source keys are harmless to
+    * the anti-join, so nothing is refused. Non-equi conditions take the
+    * unpruned anti-join rewrite in the Engine route instead. */
   def deleteUsingKeys(
       spark: SparkSession, path: String, sourceIn: DataFrame,
       srcKeysIn: Seq[String]): Stats = {
@@ -356,72 +387,105 @@ object Dml {
           s"DELETE USING key column $n not found in the source"))
     }
     val files = dataFiles(Paths.get(path))
-    val target = ParquetFooters.read(spark, Seq(path))
-    val keyField = target.schema.fields
+    val keyField = ParquetFooters.read(spark, Seq(path)).schema.fields
       .find(_.name.equalsIgnoreCase(srcKeys.head)).getOrElse(
         throw new IllegalArgumentException(
           s"DELETE USING key column ${srcKeys.head} not found in the" +
             " target layout"))
-    val affected = keyField.dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        val span = source.agg(
-          min(col(srcKeys.head)).cast("long"),
-          max(col(srcKeys.head)).cast("long")).head()
-        if (span.isNullAt(0)) Seq.empty // empty source deletes nothing
-        else insertCheckFiles(spark, files, keyField.name,
-          span.getLong(0), span.getLong(1))
-      case _ => files
+    val affected = prunableKey(keyField).fold(files) { c =>
+      keyFiles(spark, files, Some(c),
+        sourceKeys(source, srcKeys, withSpan = true).span)
     }
-    val keysDf = source.select(srcKeys.map(col).toSeq: _*).dropDuplicates()
     rewriteFiles(spark, path, files, affected)(
-      _.join(broadcast(keysDf), srcKeys, "left_anti"))
+      _.join(broadcast(source.select(srcKeys.map(col): _*)), srcKeys,
+        "left_anti"))
   }
 
-  /** The files the WHEN-NOT-MATCHED existence check must read: the
-    * anti-join needs only target KEYS, and a file whose footer [min,max]
-    * on the head key misses the source's key span [kLo, kHi] (inclusive)
-    * cannot contain a matching key. Only INT64-backed keys prune (the
-    * footer statistics fold reads long stats); anything else — and any
-    * file without stats — stays a candidate. */
-  private[graft] def insertCheckFiles(
-      spark: SparkSession, files: Seq[Path], keyCol: String, kLo: Long,
-      kHi: Long): Seq[Path] = {
-    val conf = spark.sessionState.newHadoopConf()
-    files.filter { f =>
-      fileRange(conf, f, keyCol) match {
-        case Some((mn, mx)) => mx >= kLo && mn <= kHi
-        case None => true
+  /** What ONE aggregate over a DML source says about its key tuples:
+    * a duplicated tuple (NULL keys group together, so two all-NULL
+    * tuples count as a duplicate), a tuple with a NULL key, and — when
+    * asked — the head key's [min, max] over its non-NULL values (None
+    * when there are none: no target row can equal a source key). Each
+    * route applies its own refusal: MERGE refuses a duplicate and
+    * allows a NULL key, a PRIMARY KEY refuses both; the witnesses are
+    * arbitrary violating tuples (`first` over the final aggregation's
+    * input order). */
+  final case class SourceKeys(
+      duplicate: Option[Row], nullKey: Option[Row], span: Option[(Long, Long)])
+
+  private[engine] def sourceKeys(
+      source: DataFrame, keys: Seq[String], withSpan: Boolean): SourceKeys = {
+    val tuple = struct(keys.map(col): _*)
+    val grouped = source.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("graft_key_n"))
+    val aggs = Seq(
+      first(when(col("graft_key_n") > 1, tuple), ignoreNulls = true),
+      first(when(keys.map(col(_).isNull).reduce(_ || _), tuple),
+        ignoreNulls = true)) ++
+      // each key casts BEFORE the fold: a string key's lexicographic
+      // min/max ('10' < '9') is not the span of its numeric values
+      (if (withSpan) Seq(min(col(keys.head).cast("long")),
+        max(col(keys.head).cast("long")))
+      else Seq.empty)
+    val r = grouped.agg(aggs.head, aggs.tail: _*).head()
+    SourceKeys(Option(r.getStruct(0)), Option(r.getStruct(1)),
+      if (withSpan && !r.isNullAt(2)) Some((r.getLong(2), r.getLong(3)))
+      else None)
+  }
+
+  /** The target key column the footer prune can use: an INT64 head key
+    * (the statistics fold reads integer stats); None prunes nothing. */
+  private def prunableKey(keyField: StructField): Option[String] =
+    Some(keyField.name).filter(_ => keyField.dataType == LongType)
+
+  /** The files that can hold a target row whose key equals a source key:
+    * with a prunable head key `keyCol`, those whose footer range meets
+    * the source's head-key `span` (none when the span is None — the
+    * source has no non-NULL head key); every file otherwise. */
+  private[engine] def keyFiles(
+      spark: SparkSession, files: Seq[Path], keyCol: Option[String],
+      span: Option[(Long, Long)]): Seq[Path] =
+    keyCol.fold(files) { c =>
+      span.fold(Seq.empty[Path]) { case (lo, hi) =>
+        overlapping(spark, files, c, lo, hi)
       }
     }
-  }
 
-  /** `preSpan`: Some(spanOpt) when the CALLER already certified source-key
-    * uniqueness over the same pinned source in its own batch job and hands
-    * over the head-key span (r22 — the OR REPLACE/IGNORE route's
-    * requireKeysSoundSpan); the guard aggregate here is then skipped.
-    * spanOpt must be Some(BatchSpan) exactly when the target head key is
-    * INT64 — a mismatch (caller resolved a different schema) falls back
-    * to the guard aggregate. */
+  /** The key columns of the rows in `files` — an empty relation of the
+    * key schema when there are none (no read, no job), which keeps the
+    * caller's join shape. */
+  private[engine] def keysIn(
+      spark: SparkSession, files: Seq[Path],
+      keyFields: Seq[StructField]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(keyFields))
+    else ParquetFooters.read(spark, files.map(_.toString))
+      .select(keyFields.map(f => col(f.name)): _*)
+
+  /** The merge core every MERGE-shaped route shares. `setColsIn = None`
+    * runs no WHEN MATCHED branch (insert-if-absent); `insert = false`
+    * runs no WHEN NOT MATCHED branch (UPDATE … FROM). `within` narrows
+    * the matched branch's files further (the explicit-range
+    * `mergeInto`); the source's key span prunes both branches. */
   private def mergeCore(
       spark: SparkSession, path: String,
-      affectedSel: Seq[Path] => Seq[Path],
       sourceIn: DataFrame, srcKeysIn: Seq[String],
-      setColsIn: Seq[String],
-      pruneMatchedBySpan: Boolean = false,
-      insertBranch: Boolean = true,
+      setColsIn: Option[Seq[String]],
+      insert: Boolean = true,
       label: String = "MERGE",
-      preSpan: Option[Option[Engine.BatchSpan]] = None): Stats = {
+      refuse: Option[SourceKeys => Unit] = None,
+      within: Seq[Path] => Seq[Path] = identity): Stats = {
     // Pin the SOURCE to a snapshot before any file is touched: the merge
-    // evaluates it several times (uniqueness guard, matched-branch
-    // broadcast, key span, insert anti-join), and the middle of those
-    // REPLACES target files — a source reading from the target (legal
-    // SQL MERGE: `USING (SELECT … FROM t …)`) would otherwise hit
-    // deleted part files or, worse, observe post-update rows and insert
-    // a different set than the statement's pre-merge snapshot. The
-    // source is broadcast-sized by contract, so the eager checkpoint is
-    // O(upsert batch), not O(table) — and `pinSource` (r21) skips it
-    // entirely when the source is deterministic and provably
-    // target-independent.
+    // evaluates it several times (key check, matched-branch broadcast,
+    // insert anti-join), and the middle of those REPLACES target files
+    // — a source reading from the target (legal SQL MERGE: `USING
+    // (SELECT … FROM t …)`) would otherwise hit deleted part files or,
+    // worse, observe post-update rows and insert a different set than
+    // the statement's pre-merge snapshot. The source is broadcast-sized
+    // by contract, so the eager checkpoint is O(upsert batch), not
+    // O(table) — and `pinSource` (r21) skips it entirely when the
+    // source is deterministic and provably target-independent.
     val source = pinSource(sourceIn, path)
     // resolve key/SET names against the actual column case: Spark
     // resolves identifiers case-insensitively by default, so `ON t.ID =
@@ -436,7 +500,7 @@ object Dml {
               s" (${against.mkString(", ")})"))
       }
     val srcKeys = resolve(srcKeysIn, source.columns.toSeq, "key")
-    val setCols = resolve(setColsIn, source.columns.toSeq, "SET")
+    val setCols = setColsIn.map(resolve(_, source.columns.toSeq, "SET"))
     // prefix non-key source columns + add a hit marker, so the left join
     // never collides with target names and NULL source VALUES still
     // register as a match
@@ -454,114 +518,65 @@ object Dml {
       target.schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
         throw new IllegalArgumentException(
           s"$label key column $n not found in the target layout"))
-    val keyField = targetField(srcKeys.head)
-    val keyCol = keyField.name
-    // ONE aggregation over the checkpointed broadcast-sized source
-    // covers both preconditions (was two driver-blocking jobs; at
-    // script granularity the per-job overhead dominates tiny upserts):
-    // 1. SQL MERGE raises on multiple source matches per target row —
-    //    the guard is source-key uniqueness, total count vs distinct
-    //    key-tuple count (a struct of NULL keys is non-NULL, so NULL
-    //    key rows count like the groupBy guard it replaces);
-    // 2. the source's head-key span for the footer prunes, when the
-    //    head key is INT64; (1, 0) encodes an EMPTY source.
-    val keyTuple = org.apache.spark.sql.functions
-      .struct(srcKeys.map(col).toSeq: _*)
-    val longKey =
-      keyField.dataType == org.apache.spark.sql.types.LongType
-    val spanOpt: Option[(Long, Long)] = preSpan match {
-      case Some(s) if s.isDefined == longKey =>
-        // caller-certified batch: uniqueness already enforced (with the
-        // caller's own error message) over the same pinned source; its
-        // span maps onto the guard's empty-source (1, 0) encoding
-        s.map(bs => if (bs.nonEmpty) (bs.lo, bs.hi) else (1L, 0L))
-      case _ =>
-        val guardCols = Seq(count(lit(1)).as("__n"),
-          org.apache.spark.sql.functions.countDistinct(keyTuple)
-            .as("__d")) ++
-          (if (longKey) Seq(min(col(srcKeys.head)).cast("long").as("__lo"),
-            max(col(srcKeys.head)).cast("long").as("__hi"))
-          else Seq.empty)
-        val guard = source.agg(guardCols.head, guardCols.tail: _*).head()
-        require(guard.getLong(0) == guard.getLong(1),
-          s"$label source has duplicate keys on (${srcKeys.mkString(", ")})" +
-            " — each target row must match at most one source row")
-        if (!longKey) None
-        else if (guard.isNullAt(2)) Some((1L, 0L))
-        else Some((guard.getLong(2), guard.getLong(3)))
+    val keyCol = prunableKey(targetField(srcKeys.head))
+    // ONE aggregate over the pinned broadcast-sized source: SQL MERGE
+    // raises on multiple source matches per target row, and the span
+    // feeds both branches' footer prunes
+    val facts = sourceKeys(source, srcKeys, withSpan = keyCol.isDefined)
+    refuse match {
+      case Some(r) => r(facts)
+      case None => require(facts.duplicate.isEmpty,
+        s"$label source has duplicate keys on (${srcKeys.mkString(", ")})" +
+          " — each target row must match at most one source row")
     }
-    def spanPrune(fs: Seq[Path]): Option[Seq[Path]] = spanOpt.map {
-      case (lo, hi) =>
-        if (lo > hi) Seq.empty else insertCheckFiles(spark, fs, keyCol, lo, hi)
-    }
+    def keyed(fs: Seq[Path]) = keyFiles(spark, fs, keyCol, facts.span)
     // matched branch: a file whose head-key footer range misses the
     // source's key span cannot contain a matched row — skip it
-    val affected =
-      if (pruneMatchedBySpan) spanPrune(files).getOrElse(affectedSel(files))
-      else affectedSel(files)
-    val stats = rewriteFiles(spark, path, files, affected) { df =>
-      val joined = df.join(broadcast(renamed), srcKeys, "left")
-      val matched = col("_src_hit").isNotNull
-      val updated = setCols.foldLeft(joined) { (d, name) =>
-        // write the replacement under the TARGET schema's case (source
-        // and target may legally disagree on identifier case): a
-        // withColumn under the source's case would persist rewritten
-        // part files with mixed-case column names across the layout —
-        // reads still resolve under caseSensitive=false, but exact-name
-        // footer-stat lookups on rewritten files would stop pruning.
-        // Only the `_src_` lookup keeps the source's case.
-        val tgtName = df.columns.find(_.equalsIgnoreCase(name)).getOrElse(name)
-        d.withColumn(tgtName,
-          when(matched, col(s"_src_$name")).otherwise(col(tgtName)))
-      }
-      updated.select(df.columns.map(col).toSeq: _*)
-    }
-    if (!insertBranch) return stats // UPDATE FROM: matched-only, no append
-    // WHEN NOT MATCHED: source keys absent from the ENTIRE layout append.
-    // (The check spans the full key space — a source row matching an
-    // out-of-range target row must not duplicate — but only files whose
-    // head-key footer range overlaps the source's key span are READ: on
-    // a key-clustered layout a day's upserts open a handful of files,
-    // not the table. The POST-rewrite listing — the rewrite replaced
-    // the affected files under new names.)
-    val candidates = spanPrune(dataFiles(Paths.get(path)))
-      .getOrElse(dataFiles(Paths.get(path)))
-    val targetKeys =
-      if (candidates.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(srcKeys.map(targetField)))
-      else ParquetFooters.read(spark, candidates.map(_.toString))
-        .select(srcKeys.map(col).toSeq: _*)
-    val inserts = renamed.join(targetKeys, srcKeys, "left_anti")
-      .select(target.columns.map { c =>
-        val srcName = renamed.columns
-          .find(_.equalsIgnoreCase(s"_src_$c"))
-        if (isKey(c)) col(srcKeys.find(_.equalsIgnoreCase(c)).get).as(c)
-        else srcName match {
-          case Some(sn) => col(sn).as(c)
-          case None => lit(null).cast(targetField(c).dataType).as(c)
+    val stats = setCols match {
+      case None => Stats(files.size, 0)
+      case Some(cols) =>
+        rewriteFiles(spark, path, files, keyed(within(files))) { df =>
+          val joined = df.join(broadcast(renamed), srcKeys, "left")
+          val matched = col("_src_hit").isNotNull
+          val updated = cols.foldLeft(joined) { (d, name) =>
+            // write the replacement under the TARGET schema's case
+            // (source and target may legally disagree on identifier
+            // case): a withColumn under the source's case would persist
+            // rewritten part files with mixed-case column names across
+            // the layout — reads still resolve under caseSensitive=false,
+            // but exact-name footer-stat lookups on rewritten files would
+            // stop pruning. Only the `_src_` lookup keeps the source's
+            // case.
+            val tgtName =
+              df.columns.find(_.equalsIgnoreCase(name)).getOrElse(name)
+            d.withColumn(tgtName,
+              when(matched, col(s"_src_$name")).otherwise(col(tgtName)))
+          }
+          updated.select(df.columns.map(col).toSeq: _*)
         }
-      }.toSeq: _*)
-    // append ONLY files that actually carry rows: a fully-matched (or
-    // empty) source must not grow the layout by an empty, statless part
-    // file per merge — those files defeat every future footer prune.
-    // ONE job: write to a pid-scoped scratch dir, read each part's
-    // footer record count (driver-side metadata, no scan), and move only
-    // non-empty parts in — replacing the former checkpoint-then-append
-    // pair of jobs (at script granularity per-job overhead dominates a
-    // tiny upsert batch).
-    val insTmp = Paths.get(s"${path}_ins_p${ProcessHandle.current.pid}")
-    inserts.write.mode("overwrite").parquet(insTmp.toString)
-    val dir = Paths.get(path)
-    val conf = spark.sessionState.newHadoopConf()
-    dataFiles(insTmp).zipWithIndex.foreach { case (f, i) =>
-      if (footerBlocks(conf, f).map(_.getRowCount).sum > 0)
-        Files.move(f,
-          dir.resolve(s"part-ins-${System.nanoTime()}-$i.parquet"))
     }
-    Files.walk(insTmp).iterator().asScala.toSeq.reverse
-      .foreach(Files.deleteIfExists(_))
+    if (insert) {
+      // WHEN NOT MATCHED: source keys absent from the ENTIRE layout
+      // append. (The check spans the full key space — a source row
+      // matching an out-of-range target row must not duplicate — but
+      // only files whose head-key footer range overlaps the source's key
+      // span are READ: on a key-clustered layout a day's upserts open a
+      // handful of files, not the table. The POST-rewrite listing — the
+      // rewrite replaced the affected files under new names.)
+      val targetKeys = keysIn(spark, keyed(dataFiles(Paths.get(path))),
+        srcKeys.map(targetField))
+      // each column lands under the TARGET's type: a part typed by the
+      // source (a STRING key beside BIGINT parts) makes the layout
+      // unreadable (PARQUET_COLUMN_DATA_TYPE_MISMATCH)
+      val inserts = renamed.join(targetKeys, srcKeys, "left_anti")
+        .select(target.columns.map { c =>
+          val srcName =
+            if (isKey(c)) srcKeys.find(_.equalsIgnoreCase(c))
+            else renamed.columns.find(_.equalsIgnoreCase(s"_src_$c"))
+          srcName.fold(lit(null))(col).cast(targetField(c).dataType).as(c)
+        }.toSeq: _*)
+      land(spark, path, inserts, replaced = Seq.empty)
+    }
     stats
   }
 

@@ -331,8 +331,6 @@ object Engine
         // own SHOW statements (TABLES/DATABASES/…) pass through and a
         // typo'd name still gets Spark's loud SHOW parse error
         describe(spark.table(name))
-      case fromFirstRe(rest) => sql(spark, fromFirstToSelect(rest))
-      case donRe(rest) => sql(spark, distinctOnToWindow(rest))
       case pivotStmtRe(rest) => runPivotStatement(spark, rest)
       case unpivotStmtRe(rest) => sql(spark, unpivotStatementSql(rest))
       case tempTableRe(orReplace, ifNotExists, rest) =>

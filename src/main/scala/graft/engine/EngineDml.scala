@@ -1,7 +1,10 @@
 package graft.engine
 
+import java.nio.file.Path
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graft.ParquetFooters
+import org.apache.spark.sql.types.StructField
 
 import EngineLex.codeMask
 
@@ -919,7 +922,8 @@ private[engine] trait EngineDml {
       keys.exists(_.equalsIgnoreCase(c))
     }).foreach { keys =>
       val post = Dml.applyAssignments(spark.table(table), pred, assignments)
-      requireKeysSound(post, keys, s"UPDATE $table")
+      requirePkSound(Dml.sourceKeys(post, keys, withSpan = false), keys,
+        s"UPDATE $table")
     }
     withTablePath(spark, table)(path =>
       rewriteRouted(spark, path, where)(
@@ -1076,6 +1080,17 @@ private[engine] trait EngineDml {
     * the catalog's file listing, and report (n_files, n_rewritten). */
   private[engine] def withTablePath(spark: SparkSession, table: String)(
       op: String => Dml.Stats): DataFrame = {
+    val stats = op(tablePath(spark, table))
+    spark.catalog.refreshTable(table)
+    import spark.implicits._
+    Seq((stats.nFiles.toLong, stats.nRewritten.toLong))
+      .toDF("n_files", "n_rewritten")
+  }
+
+  /** The directory of a catalog table's copy-on-write layout — the one
+    * place a table's metadata is resolved for the rewriter, refusing the
+    * shapes it cannot mutate. */
+  private[engine] def tablePath(spark: SparkSession, table: String): String = {
     val catalog = spark.sessionState.catalog
     require(catalog.getTempView(table).isEmpty &&
       catalog.getGlobalTempView(table).isEmpty,
@@ -1084,8 +1099,11 @@ private[engine] trait EngineDml {
     val meta = catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
     // the rewriter reads/writes parquet part files; a csv/json/orc table
-    // would silently no-op (no .parquet files to rewrite) — refuse loudly
-    require(meta.provider.exists(_.equalsIgnoreCase("parquet")),
+    // (or a view) would silently no-op (no .parquet files to rewrite) —
+    // refuse loudly
+    require(meta.tableType != org.apache.spark.sql.catalyst.catalog
+      .CatalogTableType.VIEW &&
+      meta.provider.exists(_.equalsIgnoreCase("parquet")),
       s"DML target '$table' uses provider ${meta.provider.getOrElse("?")} —" +
         " the copy-on-write rewriter supports parquet tables")
     // a PARTITIONED BY table keeps its data in partition subdirectories;
@@ -1096,12 +1114,7 @@ private[engine] trait EngineDml {
       s"DML target '$table' is partitioned by " +
         s"${meta.partitionColumnNames.mkString(", ")} — the copy-on-write" +
         " rewriter supports unpartitioned parquet tables")
-    val path = java.nio.file.Paths.get(meta.location).toString
-    val stats = op(path)
-    spark.catalog.refreshTable(table)
-    import spark.implicits._
-    Seq((stats.nFiles.toLong, stats.nRewritten.toLong))
-      .toDF("n_files", "n_rewritten")
+    java.nio.file.Paths.get(meta.location).toString
   }
 
   // --- PRIMARY KEY metadata + enforcement (round 19) ----------------------
@@ -1184,66 +1197,21 @@ private[engine] trait EngineDml {
     * enforces on every insert flavor (measured: plain INSERT and OR
     * IGNORE raise 'duplicate key', OR REPLACE raises 'can not update
     * the same row twice in the same command'; NULL keys violate the
-    * implied NOT NULL). ONE bounded aggregate certifies both — NULL
-    * keys group together, so the same grouped pass surfaces them; the
-    * example key in the message is a 1-row collect. */
-  private[engine] def requireKeysSound(
-      source: DataFrame, keys: Seq[String], what: String): Unit = {
-    requireKeysSoundSpan(source, keys, what, wantSpan = false)
-    ()
-  }
-
-  /** The batch's head-key span when the batch is non-empty — `nonEmpty =
-    * false` encodes an empty batch (nothing can collide, scan nothing). */
-  private[engine] final case class BatchSpan(
-      nonEmpty: Boolean, lo: Long, hi: Long)
-
-  /** ONE job over the (pinned) batch certifies BOTH halves of the
-    * in-batch PRIMARY KEY contract (no duplicate key tuple, no NULL key —
-    * the `requireKeysSound` guard) AND, when `wantSpan`, computes the
-    * head-key [min,max] span the footer prune consumes (r22, VERDICT r21
-    * #2: the soundness groupBy and the span agg were two separate
-    * driver-blocking jobs per statement; at script granularity the
-    * per-job overhead dominates a small INSERT). The span folds over the
-    * grouped keys — min/max over distinct key tuples equal min/max over
-    * the batch's rows — and is only consulted when no violation threw,
-    * so NULL-key groups (which min/max skip) cannot distort a span that
-    * gets used. The violation witness is an arbitrary violating group
-    * (`first` over the final aggregation's input order), exactly as the
-    * former `.limit(1)` picked an arbitrary one. */
-  private[engine] def requireKeysSoundSpan(
-      source: DataFrame, keys: Seq[String], what: String,
-      wantSpan: Boolean): Option[BatchSpan] = {
-    import org.apache.spark.sql.functions.{
-      col, count, first, lit, max, min, struct, when}
-    val grouped = source.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("graft_pk_n"))
-    val isViol = col("graft_pk_n") > 1 ||
-      keys.map(col(_).isNull).reduce(_ || _)
-    val aggCols = Seq(
-      count(lit(1)).as("graft_pk_groups"),
-      first(when(isViol, struct(keys.map(col): _*)), ignoreNulls = true)
-        .as("graft_pk_viol")) ++
-      (if (wantSpan) Seq(min(col(keys.head)).cast("long").as("graft_pk_lo"),
-        max(col(keys.head)).cast("long").as("graft_pk_hi"))
-      else Seq.empty)
-    val r = grouped.agg(aggCols.head, aggCols.tail: _*).head()
-    if (!r.isNullAt(1)) {
-      val v = r.getStruct(1)
-      val nulls = keys.indices.exists(v.isNullAt)
-      if (nulls) throw new IllegalArgumentException(
-        s"$what: NULL in PRIMARY KEY column(s) ${keys.mkString(", ")}" +
-          " violates the constraint (as in DuckDB)")
+    * implied NOT NULL). `facts` is the batch's one source-key aggregate
+    * (`Dml.sourceKeys`), which also carries the span the footer prune
+    * consumes. */
+  private[engine] def requirePkSound(
+      facts: Dml.SourceKeys, keys: Seq[String], what: String): Unit = {
+    if (facts.nullKey.isDefined) throw new IllegalArgumentException(
+      s"$what: NULL in PRIMARY KEY column(s) ${keys.mkString(", ")}" +
+        " violates the constraint (as in DuckDB)")
+    facts.duplicate.foreach { v =>
       val key = keys.zipWithIndex
         .map { case (k, i) => s"$k: ${v.get(i)}" }.mkString(", ")
       throw new IllegalArgumentException(
         s"""$what: duplicate key "$key" violates the PRIMARY KEY""" +
           " constraint (repeated within the written rows, as in DuckDB)")
     }
-    if (!wantSpan) None
-    else if (r.getLong(0) == 0L || r.isNullAt(2))
-      Some(BatchSpan(nonEmpty = false, 0L, 0L))
-    else Some(BatchSpan(nonEmpty = true, r.getLong(2), r.getLong(3)))
   }
 
   /** True when `p` holds for a node of `plan` OR of any subquery plan
@@ -1303,41 +1271,60 @@ private[engine] trait EngineDml {
     if (unstable || orderUnstable) df.localCheckpoint(true) else df
   }
 
-  /** Refuse a batch that collides with rows already in the table —
-    * runs BEFORE any write, so a refused statement lands nothing
-    * (DuckDB's statement atomicity, measured). Join shape for scale:
-    * the TABLE probes a BROADCAST of the batch's keys (map-side
-    * semi-join, one scan, no table shuffle) — the batch is the small
-    * side by construction; the reversed shape would shuffle the whole
-    * table per insert.
-    *
-    * FOOTER PRUNE (r21, VERDICT r20 #1 — was the repo's one `weak`):
-    * the scan opens ONLY files whose head-key footer [min,max] overlaps
-    * the batch's key span — the same `Dml.insertCheckFiles` bound the
-    * MERGE/upsert routes use (sound for the same reason: a colliding
-    * row's key ∈ batch span ⇒ its file's range overlaps). On a
-    * key-clustered 100 TB layout a small INSERT reads footers plus a
-    * handful of files instead of the table. Prune preconditions (else
-    * the full `spark.table` scan, unchanged semantics): unpartitioned
-    * parquet catalog table whose location lists cleanly, INT64 head
-    * key, and a non-empty batch span; any failure falls back. */
-  private[engine] def requireNoExistingKey(
-      spark: SparkSession, table: String, source: DataFrame,
-      keys: Seq[String], what: String): Unit =
-    requireNoExistingKeyPruned(spark, table, source, keys, what,
-      pkCheckRelation(spark, table, source, keys))
+  /** The footer-prunable layout of a PRIMARY KEY table: its data files
+    * and key fields, when `table` is an unpartitioned parquet catalog
+    * table with an INT64 head key — the shapes whose footer statistics
+    * fold to a key range. Metadata only, no job; any failure
+    * (unroutable name, missing table, unlistable directory) yields None
+    * and the caller scans the whole table. */
+  private[engine] def pkLayout(
+      spark: SparkSession, table: String,
+      keys: Seq[String]): Option[(Seq[Path], Seq[StructField])] =
+    try {
+      val ident = tableRef(spark, table)
+      val path = tablePath(spark, ident)
+      val schema = spark.table(ident).schema
+      val fields =
+        keys.map(k => schema.fields.find(_.name.equalsIgnoreCase(k)).get)
+      if (fields.head.dataType != org.apache.spark.sql.types.LongType) None
+      else Some((Dml.layoutFiles(path), fields))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The semi-join probe against a pre-selected slice of the table —
-    * `pruned = None` scans the full table (the prune's preconditions
-    * failed). Split out (r22) so the fused batch check can hand over the
-    * span it already computed instead of this path re-running a span
-    * job. */
-  private[engine] def requireNoExistingKeyPruned(
+  /** The key columns of the layout's rows a batch with head-key `span`
+    * can collide with: only files whose head-key footer [min,max]
+    * overlaps the span are read (sound: a colliding row's key ∈ batch
+    * span ⇒ its file's range overlaps). Zero overlapping files (an
+    * empty batch, a span in a gap) is an empty relation — provably no
+    * collision, no read. */
+  private[engine] def pkSlice(
+      spark: SparkSession, layout: (Seq[Path], Seq[StructField]),
+      span: Option[(Long, Long)]): DataFrame = {
+    val (files, fields) = layout
+    Dml.keysIn(spark,
+      Dml.keyFiles(spark, files, Some(fields.head.name), span), fields)
+  }
+
+  /** The PRIMARY KEY check of a written batch, before any write — so a
+    * refused statement lands nothing (DuckDB's statement atomicity,
+    * measured): ONE aggregate over the (pinned) batch certifies
+    * in-batch soundness and yields its head-key span, then the batch's
+    * keys probe the footer-pruned slice of the table for a collision.
+    * Join shape for scale: the slice probes a BROADCAST of the batch's
+    * keys (map-side semi-join, one scan, no table shuffle) — the batch
+    * is the small side by construction. On a key-clustered 100 TB
+    * layout a small INSERT reads footers plus a handful of files
+    * instead of the table; a table that is not a prunable layout
+    * (`pkLayout`) is scanned whole. The span is sound for the probe
+    * because both read the SAME pinned source (callers pass
+    * stableSnapshot-pinned batches). */
+  private[engine] def requireSoundAbsentKeys(
       spark: SparkSession, table: String, source: DataFrame,
-      keys: Seq[String], what: String, pruned: Option[DataFrame]): Unit = {
+      keys: Seq[String], what: String): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val scan = pruned.getOrElse(spark.table(table))
-    scan
+    val layout = pkLayout(spark, table, keys)
+    val facts = Dml.sourceKeys(source, keys, withSpan = layout.isDefined)
+    requirePkSound(facts, keys, what)
+    layout.fold(spark.table(table))(pkSlice(spark, _, facts.span))
       .join(broadcast(source.select(keys.map(col): _*)), keys, "left_semi")
       .limit(1).collect().headOption.foreach { r =>
         val key = keys.map(k => s"$k: ${r.getAs[Any](k)}").mkString(", ")
@@ -1346,95 +1333,6 @@ private[engine] trait EngineDml {
             s" constraint on $table (as in DuckDB) — INSERT OR REPLACE /" +
             " INSERT OR IGNORE / ON CONFLICT spell the upsert intents")
       }
-  }
-
-  /** Metadata-only prune eligibility: the head-key field when `table` is
-    * an unpartitioned parquet catalog table with an INT64 head key —
-    * the shapes whose footer statistics fold to a key range. No job
-    * runs; failures (unroutable name, missing table) yield None. */
-  private[engine] def pkPruneField(
-      spark: SparkSession, table: String,
-      keys: Seq[String]): Option[org.apache.spark.sql.types.StructField] =
-  try {
-    val ident = tableRef(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(ident))
-    val isPlainParquet =
-      meta.tableType != org.apache.spark.sql.catalyst.catalog
-        .CatalogTableType.VIEW &&
-      meta.partitionColumnNames.isEmpty &&
-      meta.provider.exists(_.equalsIgnoreCase("parquet"))
-    if (!isPlainParquet) None
-    else spark.table(ident).schema.fields
-      .find(_.name.equalsIgnoreCase(keys.head))
-      .filter(_.dataType == org.apache.spark.sql.types.LongType)
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** The footer-pruned slice of `table` that can possibly collide with
-    * `source` on `keys` — None when the prune's preconditions don't
-    * hold (caller scans the full table). Package-visible so the spec
-    * can certify the file selection itself, not only its effect. This
-    * signature runs the span agg inline; the fused statement routes use
-    * `pkCheckRelationSpan` with the span their batch check already
-    * computed. */
-  private[engine] def pkCheckRelation(
-      spark: SparkSession, table: String, source: DataFrame,
-      keys: Seq[String]): Option[DataFrame] =
-    pkPruneField(spark, table, keys).flatMap { field =>
-      import org.apache.spark.sql.functions.{col, max, min}
-      val span = source
-        .agg(min(col(keys.head)).cast("long"),
-          max(col(keys.head)).cast("long")).head()
-      pkCheckRelationSpan(spark, table, keys, field,
-        if (span.isNullAt(0)) BatchSpan(nonEmpty = false, 0L, 0L)
-        else BatchSpan(nonEmpty = true, span.getLong(0), span.getLong(1)))
-    }
-
-  /** File selection given an already-computed batch span. */
-  private[engine] def pkCheckRelationSpan(
-      spark: SparkSession, table: String, keys: Seq[String],
-      keyField: org.apache.spark.sql.types.StructField,
-      span: BatchSpan): Option[DataFrame] = try {
-    val ident = tableRef(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(ident))
-    val dir = java.nio.file.Paths.get(meta.location)
-    // listing failure (missing dir, foreign FS) throws → the
-    // catch falls back to the full scan; an EMPTY listing of an
-    // existing local layout genuinely means an empty table — the
-    // first INSERT after CREATE collides with nothing
-    val files = Dml.layoutFiles(dir.toString)
-    val candidates =
-      if (!span.nonEmpty) Seq.empty // empty batch: no collision
-      else Dml.insertCheckFiles(spark, files, keyField.name, span.lo, span.hi)
-    if (candidates.isEmpty)
-      // zero overlapping files ⇒ provably no collision: an empty
-      // relation with the key columns keeps the caller's join shape
-      Some(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          keys.map(k => spark.table(ident).schema.fields
-            .find(_.name.equalsIgnoreCase(k)).get))))
-    else Some(ParquetFooters.read(spark, candidates.map(_.toString)))
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** The fused statement-route check: ONE batch job (soundness + span),
-    * then the pruned existence probe — replaces the former
-    * requireKeysSound + requireNoExistingKey pair's three driver-blocking
-    * jobs (soundness groupBy, span agg, semi-join) with two. The span is
-    * sound for the probe because both read the SAME pinned source
-    * (callers pass stableSnapshot-pinned batches). */
-  private[engine] def requireSoundAbsentKeys(
-      spark: SparkSession, table: String, source: DataFrame,
-      keys: Seq[String], what: String): Unit = {
-    val field = pkPruneField(spark, table, keys)
-    val span = requireKeysSoundSpan(source, keys, what, field.isDefined)
-    val pruned = for {
-      f <- field
-      s <- span
-      rel <- pkCheckRelationSpan(spark, table, keys, f, s)
-    } yield rel
-    requireNoExistingKeyPruned(spark, table, source, keys, what, pruned)
   }
 
   /** NULL-pad a bound subset-insert to the target's full schema —
@@ -1494,23 +1392,16 @@ private[engine] trait EngineDml {
             "UPDATE SET col = EXCLUDED.col, ..." else "NOTHING")))
     val landed = stableSnapshot(boundInsertSource(spark, table, body))
     requireKeysBound(landed, keys, s"$verb INTO $table")
-    // ONE batch job certifies in-batch soundness AND yields the head-key
-    // span mergeCore's footer prunes need (r22 — was a soundness groupBy
-    // here plus mergeCore's own guard agg over the same batch): the span
-    // is handed over, so mergeCore skips its guard job. Long-ness is
-    // checked against the TARGET schema, the type mergeCore prunes by.
-    val longKey = spark.table(table).schema.fields
-      .find(_.name.equalsIgnoreCase(keys.head))
-      .exists(_.dataType == org.apache.spark.sql.types.LongType)
-    val span = requireKeysSoundSpan(landed, keys, verb, wantSpan = longKey)
+    // the merge's one source-key aggregate refuses with the PRIMARY
+    // KEY's messages (NULL keys too), not MERGE's duplicate refusal
+    val refuse = Some((f: Dml.SourceKeys) => requirePkSound(f, keys, verb))
     val padded = paddedToTarget(spark, table, landed)
     val nonKeys = spark.table(table).schema.fieldNames.toSeq
       .filterNot(f => keys.exists(_.equalsIgnoreCase(f)))
     withTablePath(spark, table) { path =>
       if (kind.equalsIgnoreCase("REPLACE"))
-        Dml.mergeIntoAll(spark, path, padded, keys, nonKeys,
-          preSpan = Some(span))
-      else Dml.insertOnlyAll(spark, path, padded, keys, preSpan = Some(span))
+        Dml.mergeIntoAll(spark, path, padded, keys, nonKeys, refuse)
+      else Dml.insertOnlyAll(spark, path, padded, keys, refuse)
     }
   }
 

@@ -605,12 +605,11 @@ private[engine] trait EngineIntrospect {
   // clauses — WHERE/GROUP BY/ORDER BY/… — follow the list, as DuckDB
   // accepts). Spark 4.1 parses `FROM t` and `FROM t SELECT …` itself,
   // but not a select-less `FROM t WHERE …` or `FROM t LIMIT …`, so the
-  // statement rewrites to SELECT-first form and re-enters `sql` (the
-  // rewritten text starts with SELECT, so it lands in the default
-  // branch: path-table rewrite and the rest of the routing still
-  // apply). Statement-level only, like
-  // every routed shim — a FROM-first SUBQUERY inside a larger statement
-  // is not rewritten.
+  // `from-first` shim rewrites the text to SELECT-first form and
+  // re-enters the shim table (path-table rewrite and the rest of the
+  // routing still apply). A FROM-first subquery body is rewritten too:
+  // `rewriteSubqueryBodies` runs every body that opens with FROM
+  // through the same table.
   private[engine] val fromFirstRe = "(?is)^FROM\\s+(.+)$".r
 
   /** Keywords that can follow a FROM-first select list; the rewrite

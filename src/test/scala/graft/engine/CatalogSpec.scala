@@ -200,14 +200,28 @@ class CatalogSpec extends AnyFunSuite {
     // a zero-row file still has a footer
     assert(footerSchema(
       writeRaw(tmp.resolve("empty.parquet"), rawSchema, 0).toString).isDefined)
-    // TIMESTAMP(NANOS), by default and under the legacy nanosAsLong flag
+    // TIMESTAMP(NANOS) under the session's legacy nanosAsLong flag (the
+    // engine's builder sets it): LongType. Without the flag both readers
+    // refuse the type alike. The shared session's value is restored.
     val nanos = writeRaw(tmp.resolve("nanos.parquet"),
       "message m { required int64 id; optional int64 t (TIMESTAMP(NANOS,true)); }",
       2).toString
     assert(footerSchema(nanos).exists(_("t").dataType == LongType))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try assert(footerSchema(nanos).exists(_("t").dataType == LongType))
-    finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val nanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(nanosFlag)
+    try {
+      spark.conf.set(nanosFlag, "false")
+      Seq[() => Any](() => ParquetFooters.read(spark, Seq(nanos)),
+        () => spark.read.parquet(nanos)).foreach { read =>
+        val e = intercept[Exception](read())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage)
+            .contains("PARQUET_TYPE_ILLEGAL")), e.getMessage)
+      }
+      spark.conf.set(nanosFlag, "true")
+      assert(footerSchema(nanos).exists(_("t").dataType == LongType))
+    } finally prior.fold(spark.conf.unset(nanosFlag))(
+      spark.conf.set(nanosFlag, _))
     // a Spark-written directory: its _SUCCESS and .crc siblings are
     // skipped, the Spark schema in the footer is used as written
     import spark.implicits._

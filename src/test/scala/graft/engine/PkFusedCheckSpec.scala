@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused PK batch check (r22): one job certifies in-batch soundness
   * AND yields the head-key span the footer prune consumes — the refusal
-  * semantics and messages must be exactly those of the former
-  * requireKeysSound + requireNoExistingKey pair. Plus the r22
+  * semantics and messages must be exactly those of the separate
+  * in-batch and existing-key checks it replaced. Plus the r22
   * stableSnapshot hardening: row-set-unstable-but-deterministic sources
   * (LIMIT, first/any_value, dropDuplicates) must pin to a snapshot. */
 class PkFusedCheckSpec extends AnyFunSuite {
@@ -58,17 +58,32 @@ class PkFusedCheckSpec extends AnyFunSuite {
       Seq.empty[(Long, String)].toDF("k", "v"), Seq("k"), "INSERT")
   }
 
-  test("span equals the batch's min/max and empty encodes nonEmpty=false") {
+  test("one source-key aggregate: span, duplicate and NULL witnesses") {
     import spark.implicits._
-    val span = Engine.requireKeysSoundSpan(
-      Seq(5L, 99L, 42L).toDF("k"), Seq("k"), "T", wantSpan = true)
-    assert(span.contains(Engine.BatchSpan(nonEmpty = true, 5L, 99L)))
-    val empty = Engine.requireKeysSoundSpan(
-      Seq.empty[Long].toDF("k"), Seq("k"), "T", wantSpan = true)
-    assert(empty.exists(!_.nonEmpty))
-    val noSpan = Engine.requireKeysSoundSpan(
-      Seq(5L).toDF("k"), Seq("k"), "T", wantSpan = false)
-    assert(noSpan.isEmpty)
+    val span = Dml.sourceKeys(
+      Seq(5L, 99L, 42L).toDF("k"), Seq("k"), withSpan = true)
+    assert(span == Dml.SourceKeys(None, None, Some((5L, 99L))))
+    // an empty batch has no span: no target row can collide with it
+    val empty = Dml.sourceKeys(
+      Seq.empty[Long].toDF("k"), Seq("k"), withSpan = true)
+    assert(empty == Dml.SourceKeys(None, None, None))
+    val noSpan = Dml.sourceKeys(
+      Seq(5L).toDF("k"), Seq("k"), withSpan = false)
+    assert(noSpan.span.isEmpty)
+    // the witnesses name the violating tuple; the span skips NULL keys
+    val bad = Dml.sourceKeys(
+      Seq(Some(7L), Some(7L), None, Some(3L)).toDF("k"), Seq("k"),
+      withSpan = true)
+    assert(bad.duplicate.map(_.getLong(0)).contains(7L))
+    assert(bad.nullKey.exists(_.isNullAt(0)))
+    assert(bad.span.contains((3L, 7L)))
+    // two all-NULL key tuples group together: a duplicate (MERGE's
+    // uniqueness semantics), and a NULL key (the PRIMARY KEY's)
+    val twoNulls = Dml.sourceKeys(
+      Seq(Option.empty[Long], Option.empty[Long]).toDF("k"), Seq("k"),
+      withSpan = true)
+    assert(twoNulls.duplicate.isDefined && twoNulls.nullKey.isDefined &&
+      twoNulls.span.isEmpty)
   }
 
   test("stableSnapshot pins row-set-unstable deterministic sources") {

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The PK existing-key check's footer prune (r21, VERDICT r20 #1): a
   * small INSERT against a key-clustered layout must open only files
   * whose head-key footer [min,max] overlaps the batch's key span —
-  * certified on the FILE SELECTION itself (`pkCheckRelation`'s
-  * inputFiles), not only the end-to-end effect. */
+  * certified on the FILE SELECTION itself (`pkSlice`'s inputFiles, fed
+  * the span of the batch's one source-key aggregate), not only the
+  * end-to-end effect. */
 class PkPruneSpec extends AnyFunSuite {
 
   private lazy val spark = graft.TestSpark.spark
@@ -20,6 +21,16 @@ class PkPruneSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $name VALUES (1000, 'e'), (1010, 'f')")
   }
 
+  /** The slice of `table` the fused check probes for `batch`, as the
+    * check itself computes it; None when the table is not prunable. */
+  private def slice(table: String,
+      batch: org.apache.spark.sql.DataFrame)
+      : Option[org.apache.spark.sql.DataFrame] =
+    Engine.pkLayout(spark, table, Seq("k")).map { layout =>
+      Engine.pkSlice(spark, layout,
+        Dml.sourceKeys(batch, Seq("k"), withSpan = true).span)
+    }
+
   test("only key-span-overlapping files are selected") {
     import spark.implicits._
     freshTable("pk_prune_t")
@@ -27,8 +38,7 @@ class PkPruneSpec extends AnyFunSuite {
     assert(all.size >= 3, s"expected >=3 part files, got ${all.size}")
 
     // batch span [10, 100]: the 1000-group files can never overlap it
-    val rel = Engine.pkCheckRelation(
-      spark, "pk_prune_t", Seq(10L, 100L).toDF("k"), Seq("k"))
+    val rel = slice("pk_prune_t", Seq(10L, 100L).toDF("k"))
     assert(rel.isDefined, "prune preconditions should hold")
     val opened = rel.get.inputFiles.toSet
     assert(opened.nonEmpty && opened.subsetOf(all))
@@ -40,45 +50,39 @@ class PkPruneSpec extends AnyFunSuite {
     assert(ks.contains(10L) && ks.contains(100L) && !ks.contains(1000L) &&
       !ks.contains(1010L), s"unexpected slice: $ks")
     // a span inside a gap between file ranges proves no collision
-    val gap = Engine.pkCheckRelation(
-      spark, "pk_prune_t", Seq(500L).toDF("k"), Seq("k"))
+    val gap = slice("pk_prune_t", Seq(500L).toDF("k"))
     assert(gap.isDefined && gap.get.inputFiles.isEmpty)
   }
 
   test("a span overlapping no file proves no collision without any read") {
     import spark.implicits._
     freshTable("pk_prune_t2")
-    val rel = Engine.pkCheckRelation(
-      spark, "pk_prune_t2", Seq(50000L).toDF("k"), Seq("k"))
+    val rel = slice("pk_prune_t2", Seq(50000L).toDF("k"))
     assert(rel.isDefined)
     assert(rel.get.inputFiles.isEmpty, "no file overlaps [50000,50000]")
     assert(rel.get.count() == 0)
     // empty batch: nothing can collide
-    val relEmpty = Engine.pkCheckRelation(
-      spark, "pk_prune_t2", Seq.empty[Long].toDF("k"), Seq("k"))
+    val relEmpty = slice("pk_prune_t2", Seq.empty[Long].toDF("k"))
     assert(relEmpty.isDefined && relEmpty.get.count() == 0)
   }
 
   test("non-INT64 head key falls back to the full scan (None)") {
-    import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS pk_prune_s")
     spark.sql("CREATE TABLE pk_prune_s (k STRING, v STRING) USING parquet")
     spark.sql("INSERT INTO pk_prune_s VALUES ('x', 'a')")
-    val rel = Engine.pkCheckRelation(
-      spark, "pk_prune_s", Seq("x").toDF("k"), Seq("k"))
-    assert(rel.isEmpty)
+    assert(Engine.pkLayout(spark, "pk_prune_s", Seq("k")).isEmpty)
   }
 
   test("pruned check still refuses a genuine collision end-to-end") {
     import spark.implicits._
     freshTable("pk_prune_t3")
     val e = intercept[IllegalArgumentException] {
-      Engine.requireNoExistingKey(spark, "pk_prune_t3",
+      Engine.requireSoundAbsentKeys(spark, "pk_prune_t3",
         Seq((110L, "dup")).toDF("k", "v"), Seq("k"), "INSERT INTO pk_prune_t3")
     }
     assert(e.getMessage.contains("duplicate key"))
     // and a non-colliding batch sails through the pruned path
-    Engine.requireNoExistingKey(spark, "pk_prune_t3",
+    Engine.requireSoundAbsentKeys(spark, "pk_prune_t3",
       Seq((111L, "new")).toDF("k", "v"), Seq("k"), "INSERT INTO pk_prune_t3")
   }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Dml, Scale}
+import graft.engine.{Dml, Engine, Scale}
 
 /** Mechanism certification for the copy-on-write DML rewriter (VERDICT
   * r14 #1): the hash-backed `c_dml_rewrite`/`c_dml_merge` queries prove
@@ -227,16 +227,16 @@ class DmlSpec extends AnyFunSuite {
     val (kLo, kHi) = (keys.getLong(0), keys.getLong(1))
     val mid = kLo + (kHi - kLo) / 2
     // a span covering ~1/8 of the key range: strict subset, never empty
-    val narrow = Dml.insertCheckFiles(spark, files, "o_orderkey",
+    val narrow = Dml.overlapping(spark, files, "o_orderkey",
       mid, mid + (kHi - kLo) / 8)
     assert(narrow.nonEmpty && narrow.size < files.size,
       s"narrow span selected ${narrow.size}/${files.size} files")
     // a span past the key range proves full disjointness
-    assert(Dml.insertCheckFiles(spark, files, "o_orderkey",
+    assert(Dml.overlapping(spark, files, "o_orderkey",
       kHi + 1000000, kHi + 2000000).isEmpty,
       "out-of-range span must select no files")
     // and the full span selects everything (sanity)
-    assert(Dml.insertCheckFiles(spark, files, "o_orderkey", kLo, kHi).size == 8)
+    assert(Dml.overlapping(spark, files, "o_orderkey", kLo, kHi).size == 8)
   }
 
   test("MERGE: fully-matched source appends no empty part file") {
@@ -294,5 +294,78 @@ class DmlSpec extends AnyFunSuite {
       .map(_.getLong(0)).toSet
     assert(updated == keys,
       "uppercase source columns must merge onto lowercase target columns")
+  }
+
+  /** A catalog table over two part files holding the disjoint key
+    * ranges [0, 1000) and [1000, 2000); returns its layout directory. */
+  private def twoFileTable(t: String): String = {
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) USING parquet")
+    Seq((0L, 1000L), (1000L, 2000L)).foreach { case (lo, hi) =>
+      spark.range(lo, hi).select(col("id").as("k"), lit("a").as("v"))
+        .coalesce(1).write.mode("append").insertInto(t)
+    }
+    spark.catalog.refreshTable(t)
+    Paths.get(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).location).toString
+  }
+
+  test("a DELETE that empties a file lands no zero-row part in its place") {
+    val t = s"dmlspec_empty_p${ProcessHandle.current.pid}"
+    try {
+      val path = twoFileTable(t)
+      assert(Dml.layoutFiles(path).size == 2)
+      Engine.sql(spark, s"DELETE FROM $t WHERE k < 1000")
+      // a statless zero-row part would be "affected" for every later
+      // footer prune; the emptied file must simply be gone
+      assert(Dml.layoutFiles(path).size == 1)
+      assert(spark.table(t).count() == 1000)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a full-table DELETE keeps the table readable and writable") {
+    val t = s"dmlspec_all_p${ProcessHandle.current.pid}"
+    try {
+      val path = twoFileTable(t)
+      Engine.sql(spark, s"DELETE FROM $t")
+      // one zero-row file stays: the schema lives in its footer
+      assert(Dml.layoutFiles(path).size == 1)
+      assert(Engine.sql(spark, s"SELECT count(*) FROM $t").head().getLong(0)
+        == 0L)
+      Engine.sql(spark, s"INSERT INTO $t VALUES (5, 'x'), (6, 'y')")
+      Engine.sql(spark, s"DELETE FROM $t WHERE k = 5")
+      assert(spark.table(t).collect().map(_.getLong(0)).toSeq == Seq(6L))
+      Engine.sql(spark, s"DELETE FROM $t WHERE k >= 0")
+      assert(spark.table(t).count() == 0 &&
+        Dml.layoutFiles(path).size == 1)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("MERGE with string source keys against a BIGINT target prunes numerically") {
+    val t = s"dmlspec_strkey_p${ProcessHandle.current.pid}"
+    try {
+      val path = twoFileTable(t)
+      import spark.implicits._
+      // lexicographically '1500' < '9': a span folded over the strings
+      // would be the empty [1500, 9], pruning every file, so neither key
+      // would match and both rows would append as duplicates
+      val source = Seq(("9", "x"), ("1500", "y")).toDF("k", "v")
+      val stats = Dml.mergeIntoAll(spark, path, source, Seq("k"), Seq("v"))
+      assert(stats.nRewritten == 2, s"both key ranges must be rewritten: $stats")
+      val got = spark.read.parquet(path).filter(col("v") =!= "a")
+        .select(col("k").cast("long"), col("v")).as[(Long, String)]
+        .collect().toSet
+      assert(got == Set((9L, "x"), (1500L, "y")))
+      assert(spark.read.parquet(path).count() == 2000)
+      // a fresh string key appends under the layout's BIGINT type
+      Dml.mergeIntoAll(spark, path, Seq(("5000", "z")).toDF("k", "v"),
+        Seq("k"), Seq("v"))
+      Dml.layoutFiles(path).foreach { f =>
+        assert(spark.read.parquet(f.toString).schema("k").dataType ==
+          org.apache.spark.sql.types.LongType, s"$f")
+      }
+      assert(spark.read.parquet(path).filter(col("k") === 5000L)
+        .collect().map(_.getString(1)).toSeq == Seq("z"))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 }
