@@ -15,7 +15,7 @@ object SparkEntry {
   /** Flagship query (template 1 analog, `/root/reference/src/App.tsx:154-164`)
     * on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Templates.t1AccountSummary(spark, "/root/testdata/sf0.001")
+    Tables.q(Templates.t1AccountSummarySql)(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -122,10 +122,10 @@ final class EngineState private {
   private val memos = TrieMap.empty[(String, String), Any]
 
   /** `build`, computed once per (testdata dir, name) in this session.
-    * Names are namespaced by the kind of value — `table/`, `persist/`,
-    * `layout/`, `loaded/`, `stats/`, `checkpoint/` — so two owners never
-    * share a key (`Tables.t(…, "orders")` and the `orders` layout both
-    * say `orders`). One name always holds one value type. */
+    * Names are namespaced by the kind of value — `table/`, `view/`,
+    * `persist/`, `layout/`, `loaded/`, `stats/`, `checkpoint/` — so two
+    * owners never share a key (`Tables.t(…, "orders")` and the `orders`
+    * layout both say `orders`). One name always holds one value type. */
   private[graft] def memo[A](dir: String, name: String)(build: => A): A =
     memos.getOrElseUpdate((dir, name), build).asInstanceOf[A]
 

@@ -15,17 +15,17 @@ import org.apache.spark.sql.types.{
   * point and builds the NATIVE Catalyst expression directly — zero
   * wrapper cost, full codegen, indistinguishable from typing the Spark
   * name. Names Spark already defines are registered only as
-  * ARITY-DISPATCHED extensions (date_sub/date_add/regexp_replace: the
-  * builtin-arity form is rebuilt verbatim, the extra-arity DuckDB form
-  * is new — a builtin call's meaning never changes; date_diff is
+  * DISPATCHED extensions (date_sub/regexp_replace by arity, date_add and
+  * length by argument type: the builtin form is rebuilt verbatim, the
+  * DuckDB form is new — a builtin call's meaning never changes; date_diff is
   * grammar-owned in Spark and routes via `graft_date_diff` + the
   * Engine text shim instead), and only where the semantics genuinely
   * match;
   * near-misses are adapted in the builder (string_split quotes its
   * separator because DuckDB splits on a literal while Spark's split
-  * takes a regex), restricted to the matching slice (`len` is aliased
-  * for STRINGS only — a list argument fails type-checking loudly; use
-  * array_length), or left out entirely (list_sum's NULL rules) so an
+  * takes a regex), dispatched on the argument's resolved type
+  * (`length`/`len` count a list's elements and keep Spark's length
+  * for strings), or left out entirely (list_sum's NULL rules) so an
   * alias never silently computes something different.
   *
   * strftime: DuckDB formats with C-style % codes, Spark with
@@ -241,12 +241,11 @@ object DuckdbCompat {
       val args = arity("array_to_string", 2)(args0)
       ArrayJoin(args(0), args(1), None)
     },
-    // len on strings (DuckDB's most common spelling); a list argument
-    // fails type-checking loudly — use array_length for lists
-    "len" -> { args0 =>
-      val args = arity("len", 1)(args0)
-      Length(args(0))
-    },
+    // length/len dispatch on the argument's resolved type, as DuckDB
+    // does: a list gives its element count (BIGINT; NULL list → NULL),
+    // anything else is Spark's own length (strings, binary, NULL)
+    "length" -> lengthBuilder("length"),
+    "len" -> lengthBuilder("len"),
     "array_length" -> { args0 =>
       val args = arity("array_length", 1)(args0)
       Size(args(0))
@@ -342,13 +341,14 @@ object DuckdbCompat {
       new aggregate.Percentile(args(0), args(1))
     },
     // --- time family --------------------------------------------------
+    // epoch_us/epoch_ms of a TIMESTAMP_NTZ (DuckDB's naive TIMESTAMP)
+    // count its wall clock from 1970-01-01 00:00, in any session zone:
+    // the NTZ value is read as a UTC instant, not in the session zone
     "epoch_us" -> { args0 =>
-      val args = arity("epoch_us", 1)(args0)
-      UnixMicros(args(0))
+      UnixMicros(naiveAsUtc(arity("epoch_us", 1)(args0).head))
     },
     "epoch_ms" -> { args0 =>
-      val args = arity("epoch_ms", 1)(args0)
-      UnixMillis(args(0))
+      UnixMillis(naiveAsUtc(arity("epoch_ms", 1)(args0).head))
     },
     "strftime" -> { args0 =>
       val args = arity("strftime", 2)(args0)
@@ -1087,6 +1087,21 @@ object DuckdbCompat {
     }
     Cast(out, LongType) // DuckDB returns BIGINT for every part
   }
+
+  private def lengthBuilder(name: String): Builder = { args0 =>
+    val arg = arity(name, 1)(args0).head
+    if (arg.resolved && arg.dataType.isInstanceOf[ArrayType])
+      Cast(Size(arg, legacySizeOfNull = false), LongType)
+    else Length(arg)
+  }
+
+  /** A TIMESTAMP_NTZ read as the UTC instant with the same wall clock
+    * (so its epoch is the wall clock's); other types pass through. */
+  private def naiveAsUtc(e: Expression): Expression =
+    if (e.resolved &&
+        e.dataType == org.apache.spark.sql.types.TimestampNTZType)
+      Cast(e, org.apache.spark.sql.types.TimestampType, Some("UTC"))
+    else e
 
   /** Install every alias through the public extension point; composes
     * with the optimizer-rule extensions in `Session.builder`. */

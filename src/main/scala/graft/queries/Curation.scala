@@ -177,19 +177,6 @@ object Curation {
     * per-lang reducer therefore sees ≤ k × map-tasks rows, not the whole
     * language, at any corpus size. PlanSpec pins the Partial/Final pair
     * so an optimizer-setting regression resurfaces as a test failure. */
-  val sampleStratified: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val k = 20
-    t(s, dir, "documents")
-      .withColumn("h", md5(concat(lit("strat_"), col("doc_id"))))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("lang")).orderBy(col("h"), col("doc_id")))
-        .cast(LongType))
-      .filter(col("rk") <= k)
-      .select(col("lang"), col("rk"), col("doc_id"), col("h"))
-      .orderBy(col("lang"), col("rk"))
-  }
-
   val sampleStratifiedSql: String =
     """SELECT lang, rk, doc_id, h FROM (
       |  SELECT lang, doc_id, md5('strat_' || CAST(doc_id AS VARCHAR)) AS h,
@@ -345,15 +332,6 @@ object Curation {
       ELSE concat('http://site', CAST(pmod(doc_id div 4, 50) AS STRING),
         '.example/page/', CAST(doc_id div 4 AS STRING), '#frag')
     END"""
-
-  val urlDedup: Q = (s, dir) =>
-    t(s, dir, "documents")
-      .withColumn("url", expr(urlExpr))
-      .withColumn("canon", canonicalUrl(col("url")))
-      .groupBy(col("canon"))
-      .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("survivor_id"))
-      .orderBy(col("canon"))
-      .limit(100)
 
   val urlDedupSql: String =
     """WITH u AS (SELECT doc_id,
@@ -530,11 +508,11 @@ object Curation {
        |FROM d GROUP BY lang ORDER BY lang""".stripMargin
 
   val queries: Map[String, Q] = Map(
-    "p_dedup_url" -> urlDedup,
+    "p_dedup_url" -> q(urlDedupSql),
     "p_pipeline_full" -> pipelineFull,
     "p_text_pii" -> piiScrub,
     "p_filter_blocklist" -> blocklist,
-    "p_sample_stratified" -> sampleStratified,
+    "p_sample_stratified" -> q(sampleStratifiedSql),
     "p_filter_quality" -> qualityFilter,
     "p_filter_quality_approx" -> qualityFilterApprox,
     "p_filter_quality_model" -> qualityModel)

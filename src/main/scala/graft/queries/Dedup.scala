@@ -91,12 +91,6 @@ object Dedup {
     * md5(text), so the shuffle key is 16 bytes regardless of document size.
     * (The sf0.01 corpus plants near-dups, not byte-identical dups, so
     * n_dup_docs is 0 here — the mechanism is what's under test.) */
-  val exact: Q = (s, dir) =>
-    t(s, dir, "documents")
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(md5(col("text"))).as("n_unique"),
-        (count(lit(1)) - countDistinct(md5(col("text")))).as("n_dup_docs"))
-
   val exactSql: String =
     """SELECT COUNT(*) AS n_docs, COUNT(DISTINCT md5(text)) AS n_unique,
       |  COUNT(*) - COUNT(DISTINCT md5(text)) AS n_dup_docs
@@ -1161,7 +1155,7 @@ object Dedup {
     "p_dedup_incremental" -> incremental,
     "p_dedup_winnow" -> winnow,
     "p_dedup_winnow_full" -> winnowFull,
-    "p_dedup_exact" -> exact,
+    "p_dedup_exact" -> q(exactSql),
     "p_dedup_minhash_recall" -> minhashRecall,
     "p_dedup_simhash_recall" -> simhashRecall,
     "p_dedup_ngram" -> ngramJaccard,

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import Tables._
 
 /** Diagnostic probe queries pinning the driver's hash canonicalization.
@@ -28,9 +26,11 @@ import Tables._
   *  - probe_rows_bigint stays: ~100 rows of pure BIGINT with a unique ORDER
   *    BY key — a canary for any row-order/row-count-correlated failure.
   *
-  * Each probe's Spark side and oracle side are the same ANSI SQL text where
-  * possible (also evidence for B1, the table-less `SELECT 42 AS ok`,
-  * /root/reference/src/App.tsx:21).
+  * Each probe is its oracle text, routed through the engine's SQL path
+  * (`Tables.q`; also evidence for B1, the table-less `SELECT 42 AS ok`,
+  * the reference's `src/App.tsx:21`). The one exception is probe_ts_ntz: the
+  * NTZ type needs its Spark spelling (a naive TIMESTAMP literal is an
+  * instant in Spark), so it is a plain `spark.sql` of that spelling.
   */
 object Probes {
 
@@ -50,11 +50,6 @@ object Probes {
 
   // ~100 rows, BIGINT-only, unique ORDER BY key: falsifies the row-order /
   // row-count hypothesis independently of DECIMAL rendering.
-  private val rowsBigint: Q = (s, dir) =>
-    t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("l_suppkey"))
   private val rowsBigintSql =
     """SELECT l_suppkey, COUNT(*) AS n FROM lineitem
       |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin
@@ -62,12 +57,9 @@ object Probes {
   private val ntz: Q = (s, _) => s.sql(ntzSpark)
 
   val queries: Map[String, Q] =
-    sql.map { case (name, q) =>
-      val fn: Q = (s, _) => s.sql(q)
-      name -> fn
-    } +
+    sql.map { case (name, text) => name -> q(text) } +
       ("probe_ts_ntz" -> ntz) +
-      ("probe_rows_bigint" -> rowsBigint)
+      ("probe_rows_bigint" -> q(rowsBigintSql))
 
   val oracle: Map[String, String] = sql +
     ("probe_ts_ntz" -> ntzOracle) +

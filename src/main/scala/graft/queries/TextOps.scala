@@ -24,14 +24,6 @@ object TextOps {
 
   // --- Term frequency ------------------------------------------------------
 
-  val tf: Q = (s, dir) =>
-    t(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("word"))
-      .limit(50)
-
   val tfSql: String =
     """SELECT word, COUNT(*) AS n
       |FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -535,7 +527,7 @@ object TextOps {
        |ORDER BY doc_id, chunk_id""".stripMargin
 
   val queries: Map[String, Q] = Map(
-    "p_text_tf" -> tf,
+    "p_text_tf" -> q(tfSql),
     "p_chunk_docs" -> chunkDocs,
     "p_text_tokens" -> tokens,
     "p_text_quality" -> quality,

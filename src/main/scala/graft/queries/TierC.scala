@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.engine.Engine
 import Tables._
 
 /** Tier C — the delegated SQL surface (SURVEY.md §2 Tier C). The reference
@@ -15,6 +14,35 @@ import Tables._
   * joins, windows, set ops, grouping sets/rollup/cube, distinct aggregates,
   * FILTER clauses, subqueries, CTEs, JSON functions, higher-order array
   * functions, interval arithmetic.
+  *
+  * A query whose DuckDB text returns the builder's rows through the
+  * engine's SQL path, with the same physical operators, IS that text
+  * (`Tables.q`, registry below): the joins left/semi/anti/range, most
+  * windows, the aggregates, sampling, histogram, retention and the scalar
+  * witnesses. A DataFrame builder stays only for one of these reasons:
+  *  - a hand-shaped plan the text does not give (pre-aggregation before
+  *    the Expand or the pivot): c_rollup, c_cube, c_pivot, c_string_agg,
+  *    c_unpivot, c_window_groups;
+  *  - an explicit physical choice (hint, salting, Bloom filter, UDAF):
+  *    c_join_inner, c_join_theta, c_salted_agg, c_salted_join,
+  *    c_bloom_semijoin, c_udaf_sumsq;
+  *  - its text is another declared query's: c_grouping_reagg
+  *    (c_sql_grouping_sets), c_window_range_bucketed (c_window_range);
+  *  - a measured baseline reads the builder: c_stats_moments
+  *    (perfbench's watchlist);
+  *  - the text was slower in the `graft.Bench` A/B beyond the builder's
+  *    run-to-run spread: c_event_hourly, c_window_frame, c_window_ranks.
+  *    Each builder groups on the raw truncated timestamp and formats the
+  *    few bucket rows after the aggregate; the text formats every row;
+  *  - the routed text fails or differs (`routed_expected_failures.txt`,
+  *    RoutedOracleSpec): c_gapfill, c_higher_order, c_json_extract,
+  *    c_kmv_distinct, c_nested_types, c_pivot_dynamic,
+  *    c_window_frame_exclude;
+  *  - the routed text matches since `epoch_us` reads TIMESTAMP_NTZ, but
+  *    its plan and timing are not yet compared: c_funnel,
+  *    c_funnel_window, c_join_asof, c_sessionize;
+  *  - no oracle (rows-only): c_current_date, c_approx_distinct,
+  *    c_approx_quantile.
   *
   * Determinism rules as in Templates: fixed literals, unique-key ORDER BY,
   * money summed exactly in DECIMAL and cast to DOUBLE only at the output
@@ -65,22 +93,6 @@ object TierC {
     * lines-per-order factor), then left-join — the at-scale shape for
     * "orders with/without recent shipments". Inner sums stay exact DECIMAL;
     * only the final output casts to DOUBLE. */
-  val joinLeft: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= ts("1998-06-01"))
-      .groupBy(col("l_orderkey"))
-      .agg(decSum("l_extendedprice").as("sub_cost"))
-    t(s, dir, "orders")
-      .join(li, col("o_orderkey") === col("l_orderkey"), "left")
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        count(col("l_orderkey")).as("n_matched"),
-        sum(coalesce(col("sub_cost"), lit(0))).cast(DoubleType)
-          .as("shipped_value"))
-      .orderBy(col("o_orderpriority"))
-  }
-
   val joinLeftSql: String =
     s"""SELECT o_orderpriority, COUNT(*) AS n_orders,
        |  COUNT(l_orderkey) AS n_matched,
@@ -95,13 +107,6 @@ object TierC {
        |ORDER BY o_orderpriority""".stripMargin
 
   /** Left-semi join (EXISTS): customers having at least one big order. */
-  val joinSemi: Q = (s, dir) =>
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders").filter(col("o_totalprice") > 450000),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_name"))
-      .orderBy(col("c_custkey"))
-
   val joinSemiSql: String =
     """SELECT c_custkey, c_name FROM customer
       |WHERE EXISTS (SELECT 1 FROM orders
@@ -109,13 +114,6 @@ object TierC {
       |ORDER BY c_custkey""".stripMargin
 
   /** Left-anti join (NOT EXISTS): customers with no big order. */
-  val joinAnti: Q = (s, dir) =>
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders").filter(col("o_totalprice") > 450000),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name"))
-      .orderBy(col("c_custkey"))
-
   val joinAntiSql: String =
     """SELECT c_custkey, c_name FROM customer
       |WHERE NOT EXISTS (SELECT 1 FROM orders
@@ -196,16 +194,6 @@ object TierC {
     * order's date. The equi key (orderkey) drives a co-partitioned
     * sort-merge/shuffled-hash join at scale; the BETWEEN band is evaluated
     * as a join residual on co-located rows — never a cross product. */
-  val joinRange: Q = (s, dir) =>
-    t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"),
-        col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") >= col("o_orderdate") &&
-          col("l_shipdate") <= col("o_orderdate") + expr("INTERVAL 60 DAY"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_early"))
-      .orderBy(col("o_orderpriority"))
-
   val joinRangeSql: String =
     """SELECT o_orderpriority, COUNT(*) AS n_early
       |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
@@ -264,20 +252,11 @@ object TierC {
   }
 
   /** DISTINCT ON (the DuckDB idiom for first-row-per-group): Spark has no
-    * DISTINCT ON, so the engine expresses it as row_number over the same
-    * (partition, order) and keeps rank 1 — the canonical translation a
-    * reference user switching engines needs. One shuffle on the group key;
-    * the window never sees unaggregated skew beyond each key's rows. */
-  val distinctOn: Q = (s, dir) => {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(desc("o_totalprice"), col("o_orderkey"))
-    t(s, dir, "orders")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      .orderBy(col("o_custkey"))
-  }
-
+    * DISTINCT ON, so the router's `distinct-on` shim expresses it as
+    * row_number over the same (partition, order) and keeps rank 1 — the
+    * canonical translation a reference user switching engines needs. One
+    * shuffle on the group key; the window never sees unaggregated skew
+    * beyond each key's rows. */
   val distinctOnSql: String =
     """SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey, o_totalprice
       |FROM orders ORDER BY o_custkey, o_totalprice DESC, o_orderkey"""
@@ -436,16 +415,6 @@ object TierC {
     * SINGLE-task sort of |suppliers| rows, and suppliers grow with the
     * data. This query stays as the RANGE-frame operator witness;
     * `c_window_range_bucketed` below is the formulation that scales. */
-  val windowRange: Q = (s, dir) => {
-    val n = t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"))
-      .agg(count(lit(1)).as("n"))
-    val w = Window.orderBy(col("n")).rangeBetween(-10, 0)
-    n.select(col("l_suppkey"), col("n"),
-        sum(col("n")).over(w).as("band_sum"))
-      .orderBy(col("l_suppkey"))
-  }
-
   val windowRangeSql: String =
     """SELECT l_suppkey, n,
       |  CAST(SUM(n) OVER (ORDER BY n
@@ -457,24 +426,11 @@ object TierC {
 
   /** Time-interval RANGE frame: each event's trailing-1-hour activity
     * count per user — the sliding-window-per-row shape (rate counters,
-    * burst detection) that tumbling windows can't express. The Spark
-    * side ranges over the exact epoch-micros integer (`Tables.eventUs`)
-    * with a 3.6e9 µs bound — numerically identical to the oracle's
-    * `INTERVAL 1 HOUR` bound on its microsecond timestamps, and keeping
-    * the hot frame comparator on a primitive long instead of a timestamp;
-    * RANGE makes equal-ts peers share a frame on both engines, so ties
+    * burst detection) that tumbling windows can't express. Both engines
+    * range over the microsecond timestamp with the same `INTERVAL 1 HOUR`
+    * bound; RANGE makes equal-ts peers share a frame on both engines, so ties
     * cannot reorder results. One shuffle on user_id; the frame scan is
     * the standard running-window pass over each partition sorted once. */
-  val windowRangeTime: Q = (s, dir) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(eventUs)
-      .rangeBetween(-3600L * 1000L * 1000L, Window.currentRow)
-    t(s, dir, "events")
-      .withColumn("n_1h", count(lit(1)).over(w))
-      .select(col("event_id"), col("user_id"),
-        tstr(eventTs(col("ts"))).as("t"), col("n_1h"))
-      .orderBy(col("event_id"))
-  }
-
   val windowRangeTimeSql: String =
     s"""SELECT event_id, user_id, ${oSec("ts")} AS t,
        |  COUNT(*) OVER (PARTITION BY user_id ORDER BY ts
@@ -617,14 +573,6 @@ object TierC {
     * min/max per bucket are single stored values — no float accumulation —
     * so they hash-match without canonicalization. One two-phase aggregate;
     * bucket count is bounded by the value range, not the input size. */
-  val histogram: Q = (s, dir) =>
-    t(s, dir, "events")
-      .groupBy(expr("CAST(FLOOR(value / 20) AS BIGINT)").as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("value")).cast(DoubleType).as("lo"),
-        max(col("value")).cast(DoubleType).as("hi"))
-      .orderBy(col("bucket"))
-
   val histogramSql: String =
     """SELECT CAST(FLOOR(value / 20) AS BIGINT) AS bucket, COUNT(*) AS n,
       |  CAST(MIN(value) AS DOUBLE) AS lo, CAST(MAX(value) AS DOUBLE) AS hi
@@ -703,14 +651,6 @@ object TierC {
     * `p_sample_stratified`; the first two hex chars < '04' keep 4/256 ≈
     * 1.56% uniformly, scan-local (no shuffle, pushable behind any
     * downstream agg), and the SAME rows come back on every engine. */
-  val sampleHash: Q = (s, dir) =>
-    t(s, dir, "orders")
-      .filter(substring(md5(concat(lit("smp_"),
-        col("o_orderkey").cast("string"))), 1, 2) < "04")
-      .select(col("o_orderkey"), col("o_custkey"),
-        col("o_totalprice").cast(DoubleType).as("o_totalprice"))
-      .orderBy(col("o_orderkey"))
-
   val sampleHashSql: String =
     """SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE)
       |  AS o_totalprice
@@ -743,31 +683,9 @@ object TierC {
 
   // --- Window functions ----------------------------------------------------
 
-  // The monthly aggregates below group on the RAW truncated timestamp and
-  // render 'yyyy-MM-dd' AFTER aggregation (injective on month buckets, so
-  // group identity is unchanged): the formatter and string group-key
-  // hashing run on dozens of month rows, not every fact row — the same
-  // format-after-aggregate rewrite as Templates t3–t6.
-  private def monthlySupplier(s: org.apache.spark.sql.SparkSession, dir: String) =
-    t(s, dir, "lineitem")
-      .groupBy(date_trunc("month", col("l_shipdate")).as("_m"),
-        col("l_suppkey").as("account_id"))
-      .agg(decSum("l_extendedprice").as("cost_dec"))
-      .select(dstr(col("_m")).as("mes"), col("account_id"), col("cost_dec"))
-
   /** Top-3 suppliers per month via row_number — the aggregate shrinks the
     * data before the window, so the window partitions (one month each) are
     * tiny regardless of input scale. */
-  val windowTopk: Q = (s, dir) =>
-    monthlySupplier(s, dir)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("mes"))
-          .orderBy(col("cost_dec").desc, col("account_id"))).cast(LongType))
-      .filter(col("rn") <= 3)
-      .select(col("mes"), col("account_id"),
-        col("cost_dec").cast(DoubleType).as("cost"), col("rn"))
-      .orderBy(desc("mes"), col("rn"))
-
   val windowTopkSql: String =
     s"""SELECT mes, account_id, CAST(cost_dec AS DOUBLE) AS cost, rn FROM (
        |  SELECT mes, account_id, cost_dec,
@@ -786,20 +704,6 @@ object TierC {
     * monthly aggregate (dozens of rows at any input scale), never on raw
     * data; an unpartitioned window over a fact table would be a
     * scale-killer. */
-  val windowLag: Q = (s, dir) => {
-    val m = t(s, dir, "lineitem")
-      .groupBy(date_trunc("month", col("l_shipdate")).as("_m"))
-      .agg(decSum("l_extendedprice").as("total_dec"))
-      .select(dstr(col("_m")).as("mes"), col("total_dec"))
-    val w = Window.orderBy(col("mes"))
-    m.withColumn("prev_dec", lag(col("total_dec"), 1).over(w))
-      .select(col("mes"),
-        col("total_dec").cast(DoubleType).as("total"),
-        col("prev_dec").cast(DoubleType).as("prev"),
-        (col("total_dec") - col("prev_dec")).cast(DoubleType).as("delta"))
-      .orderBy(col("mes"))
-  }
-
   val windowLagSql: String =
     s"""SELECT mes, CAST(total_dec AS DOUBLE) AS total,
        |  CAST(prev_dec AS DOUBLE) AS prev,
@@ -851,29 +755,6 @@ object TierC {
     * distinct (user, week) activity projection, and a join keyed on
     * user_id — group-key cardinality (weeks × weeks) is tiny at any
     * input scale. */
-  val retention: Q = (s, dir) => {
-    // weeks ride as raw truncated timestamps through distinct/join/filter
-    // (same cardinality and ordering — formatting is injective and
-    // monotone on week buckets) and render once on the final
-    // weeks × weeks rows: the format-after-aggregate rewrite again.
-    val e = t(s, dir, "events")
-      .select(col("user_id"), col("event_type"),
-        eventTs(col("ts")).as("t"))
-    val cohort = e.filter(col("event_type") === "signup")
-      .groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("t"))).as("_cw"))
-    val activity = e
-      .select(col("user_id"), date_trunc("week", col("t")).as("_aw"))
-      .distinct()
-    cohort.join(activity, "user_id")
-      .filter(col("_aw") >= col("_cw"))
-      .groupBy(col("_cw"), col("_aw"))
-      .agg(count(lit(1)).as("n_users"))
-      .select(dstr(col("_cw")).as("cohort_week"),
-        dstr(col("_aw")).as("act_week"), col("n_users"))
-      .orderBy(col("cohort_week"), col("act_week"))
-  }
-
   private def oWeek(x: String): String =
     s"strftime(date_trunc('week', $x), '%Y-%m-%d')"
 
@@ -1054,19 +935,6 @@ object TierC {
     * keeps the output bounded; the low-cardinality partition key is the
     * witness role (at 100 TB a global relative rank would use the
     * range-bucketed formulation `c_window_range_bucketed` demonstrates). */
-  val windowPct: Q = (s, dir) => {
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice"), col("o_orderkey"))
-    t(s, dir, "orders")
-      .filter(col("o_orderdate") >= ts("1995-01-01") &&
-        col("o_orderdate") < ts("1995-02-01"))
-      .select(col("o_orderpriority"), col("o_orderkey"),
-        percent_rank().over(w).as("pct_rank"),
-        cume_dist().over(w).as("cume"))
-      .orderBy(col("o_orderpriority"), col("o_orderkey"))
-      .limit(500)
-  }
-
   val windowPctSql: String =
     """SELECT o_orderpriority, o_orderkey,
       |  percent_rank() OVER (PARTITION BY o_orderpriority
@@ -1152,14 +1020,6 @@ object TierC {
     * integer-valued, so quartile interpolation lands on exact binary
     * fractions and parity is exact; the HASH-FREE approx variant is
     * `c_approx_quantile` (engines use different sketches by design). */
-  val percentile_ : Q = (s, dir) =>
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(expr("percentile(l_quantity, 0.5)").as("med"),
-        expr("percentile(l_quantity, 0.25)").as("q1"),
-        expr("percentile(l_quantity, 0.75)").as("q3"))
-      .orderBy(col("l_returnflag"))
-
   val percentileSql: String =
     """SELECT l_returnflag,
       |  quantile_cont(l_quantity, 0.5) AS med,
@@ -1242,14 +1102,6 @@ object TierC {
   /** DISTINCT aggregates — two distinct counts + a plain count in one agg
     * (Spark plans an expand + two-phase agg; scales as a shuffle on the
     * group key × distinct column). */
-  val aggDistinct: Q = (s, dir) =>
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_suppkey")).as("n_supp"),
-        countDistinct(col("l_partkey")).as("n_part"),
-        count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag"))
-
   val aggDistinctSql: String =
     """SELECT l_returnflag, COUNT(DISTINCT l_suppkey) AS n_supp,
       |  COUNT(DISTINCT l_partkey) AS n_part, COUNT(*) AS n
@@ -1258,16 +1110,6 @@ object TierC {
   /** FILTER (WHERE …) aggregate clause — SQL-standard syntax both engines
     * support; Spark compiles it to If() inside the aggregate, so it stays
     * one scan + one agg, no self-join. */
-  val aggFilter: Q = (s, dir) =>
-    t(s, dir, "lineitem")
-      .groupBy(col("l_linestatus"))
-      .agg(
-        count(lit(1)).as("n"),
-        expr("COUNT(*) FILTER (WHERE l_returnflag = 'R')").as("n_returned"),
-        expr("CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) " +
-          "FILTER (WHERE l_quantity > 25) AS DOUBLE)").as("big_qty_revenue"))
-      .orderBy(col("l_linestatus"))
-
   val aggFilterSql: String =
     """SELECT l_linestatus, COUNT(*) AS n,
       |  COUNT(*) FILTER (WHERE l_returnflag = 'R') AS n_returned,
@@ -1347,14 +1189,6 @@ object TierC {
 
   /** INTERVAL date arithmetic on a FIXED literal (B25's semantics without
     * wall-clock nondeterminism — SURVEY §7.4). */
-  val interval: Q = (s, dir) =>
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >=
-        expr("TIMESTAMP '1998-09-01' - INTERVAL '30' DAY"))
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"), dsum("l_extendedprice").as("revenue"))
-      .orderBy(col("l_returnflag"))
-
   val intervalSql: String =
     s"""SELECT l_returnflag, COUNT(*) AS n,
        |  ${oDsum("l_extendedprice")} AS revenue
@@ -1424,16 +1258,9 @@ object TierC {
        |FROM spine LEFT JOIN c ON spine.h = c.h
        |ORDER BY hora""".stripMargin
 
-  /** B9 semantics witness: NULLIF(...) IS NOT NULL kept literally on the
-    * Spark side too (unlike t5/t6, which use the pushdown-friendly `=!=`) —
-    * this query exists to pin the null-check semantics themselves. */
-  val isNotNull: Q = (s, dir) =>
-    t(s, dir, "lineitem")
-      .filter(nullif(col("l_linestatus"), lit("F")).isNotNull)
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag"))
-
+  /** B9 semantics witness: NULLIF(...) IS NOT NULL, the predicate t5/t6
+    * also use (`NullifPushdown` turns it into a pushed-down NotEq) — this
+    * query exists to pin the null-check semantics themselves. */
   val isNotNullSql: String =
     """SELECT l_returnflag, COUNT(*) AS n FROM lineitem
       |WHERE NULLIF(l_linestatus, 'F') IS NOT NULL
@@ -1493,41 +1320,41 @@ object TierC {
 
   val queries: Map[String, Q] = Map(
     "c_join_inner" -> joinInner,
-    "c_join_left" -> joinLeft,
-    "c_join_semi" -> joinSemi,
-    "c_join_anti" -> joinAnti,
+    "c_join_left" -> q(joinLeftSql),
+    "c_join_semi" -> q(joinSemiSql),
+    "c_join_anti" -> q(joinAntiSql),
     "c_join_asof" -> joinAsof,
     "c_join_theta" -> joinTheta,
-    "c_join_range" -> joinRange,
+    "c_join_range" -> q(joinRangeSql),
     "c_udaf_sumsq" -> udafSumsq,
     "c_pivot" -> pivot_,
     "c_pivot_dynamic" -> pivotDynamic,
-    "c_sample_hash" -> sampleHash,
+    "c_sample_hash" -> q(sampleHashSql),
     "c_unpivot" -> unpivot_,
     "c_grouping_reagg" -> groupingReagg,
-    "c_histogram" -> histogram,
-    "c_window_range" -> windowRange,
-    "c_window_range_time" -> windowRangeTime,
+    "c_histogram" -> q(histogramSql),
+    "c_window_range" -> q(windowRangeSql),
+    "c_window_range_time" -> q(windowRangeTimeSql),
     "c_window_range_bucketed" -> windowRangeBucketed,
     "c_window_groups" -> windowGroups,
     "c_window_frame_exclude" -> windowFrameExclude,
-    "c_distinct_on" -> distinctOn,
+    "c_distinct_on" -> q(distinctOnSql),
     "c_string_agg" -> stringAgg,
     "c_salted_agg" -> saltedAgg,
     "c_salted_join" -> saltedJoin,
     "c_bloom_semijoin" -> bloomSemijoin,
-    "c_window_pct" -> windowPct,
+    "c_window_pct" -> q(windowPctSql),
     "c_stats_moments" -> statsMoments,
-    "c_window_topk" -> windowTopk,
-    "c_window_lag" -> windowLag,
+    "c_window_topk" -> q(windowTopkSql),
+    "c_window_lag" -> q(windowLagSql),
     "c_window_frame" -> windowFrame,
     "c_window_ranks" -> windowRanks,
-    "c_percentile" -> percentile_,
+    "c_percentile" -> q(percentileSql),
     "c_approx_quantile" -> approxQuantile,
     "c_rollup" -> rollup,
     "c_cube" -> cube_,
-    "c_agg_distinct" -> aggDistinct,
-    "c_agg_filter" -> aggFilter,
+    "c_agg_distinct" -> q(aggDistinctSql),
+    "c_agg_filter" -> q(aggFilterSql),
     "c_higher_order" -> higherOrder,
     "c_nested_types" -> nestedTypes,
     "c_json_extract" -> jsonExtract,
@@ -1536,9 +1363,9 @@ object TierC {
     "c_sessionize" -> sessionize,
     "c_funnel" -> funnel,
     "c_funnel_window" -> funnelWindow,
-    "c_retention" -> retention,
-    "c_interval" -> interval,
-    "c_is_not_null" -> isNotNull,
+    "c_retention" -> q(retentionSql),
+    "c_interval" -> q(intervalSql),
+    "c_is_not_null" -> q(isNotNullSql),
     "c_current_date" -> currentDate,
     "c_approx_distinct" -> approxDistinct,
     "c_kmv_distinct" -> kmvDistinct)

@@ -2,29 +2,23 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.Engine
 import Tables._
 
 /** Tier C queries routed through the ENGINE's SQL path — `Engine.sql` /
-  * `Engine.runScript` over the registered temp-view catalog — rather than
-  * the DataFrame API. This is the direct analog of the reference's only
-  * execution surface, `conn.query(sql)` (`/root/reference/src/duckdb.ts:
-  * 46-54`): the SQL text reaches Catalyst verbatim, exactly as the
-  * reference hands the editor text to DuckDB. Where the dialects agree the
+  * `Engine.runScript` over the registered temp-view catalog, via the one
+  * text helper `Tables.q` / `script` (`qAt` / `scriptAt` for texts that
+  * name files under the testdata dir) — rather than the DataFrame API.
+  * This is the direct analog of the reference's only execution surface,
+  * `conn.query(sql)` (the reference's `src/duckdb.ts:46-54`): the SQL text
+  * reaches Catalyst verbatim, exactly as the reference hands the editor
+  * text to DuckDB. Every query here is text. Where the dialects agree the
   * SAME text is used on both sides; divergences (path-as-table syntax,
-  * identifier quoting, strftime↔date_format) get a per-side text, which is
-  * itself the point of those queries.
+  * identifier quoting, strftime↔date_format, file paths under the dir)
+  * get a per-side text, which is itself the point of those queries. The
+  * one builder is `c_sql_path`: it witnesses Spark's own
+  * parquet.`path` spelling through plain `spark.sql`, outside the router.
   */
 object TierCSql {
-
-  /** Route one statement through the engine's delegation point (A6) with
-    * the testdata catalog registered (un-deadens Tables.views). */
-  private def q(sqlText: String): Q =
-    (s, dir) => Engine.sql(views(s, dir), sqlText)
-
-  private def script(scriptText: String): Q =
-    (s, dir) => Engine.runScript(views(s, dir), scriptText)
-      .getOrElse(sys.error("script produced no result"))
 
   /** Shared-dialect money macro (valid in both Spark SQL and DuckDB). */
   private def msum(x: String): String =
@@ -1720,7 +1714,7 @@ object TierCSql {
     "c_sql_window_named" -> q(windowNamed),
     "c_sql_window_breadth" -> q(windowBreadth),
     "c_sql_order_by_all" -> q(orderByAll),
-    "c_sql_read_fn" -> ((s, dir) => Engine.sql(views(s, dir), readFnSql(dir))),
+    "c_sql_read_fn" -> qAt(readFnSql),
     "c_sql_columns" -> q(columnsFn),
     "c_sql_list_struct" -> q(listStructLits),
     "c_sql_struct_pack" -> q(structPack),
@@ -1741,32 +1735,20 @@ object TierCSql {
     "c_sql_grouping_sets" -> q(groupingSets),
     "c_sql_view_script" -> script(viewScript),
     "c_sql_view_qualify" -> script(viewQualifyScript),
-    "c_sql_ctas" -> ((s, dir) => Engine.runScript(views(s, dir),
-      ctasScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_create_replace" -> ((s, dir) => Engine.runScript(views(s, dir),
-      createReplaceScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_dml" -> ((s, dir) => Engine.runScript(views(s, dir),
-      dmlSqlScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_merge" -> ((s, dir) => Engine.runScript(views(s, dir),
-      mergeSqlScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_upsert" -> ((s, dir) => Engine.runScript(views(s, dir),
-      upsertScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_delete_using" -> ((s, dir) => Engine.runScript(views(s, dir),
-      deleteUsingScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_update_from" -> ((s, dir) => Engine.runScript(views(s, dir),
-      updateFromScript(dir)).getOrElse(sys.error("script produced no result"))),
+    "c_sql_ctas" -> scriptAt(ctasScript),
+    "c_sql_create_replace" -> scriptAt(createReplaceScript),
+    "c_sql_dml" -> scriptAt(dmlSqlScript),
+    "c_sql_merge" -> scriptAt(mergeSqlScript),
+    "c_sql_upsert" -> scriptAt(upsertScript),
+    "c_sql_delete_using" -> scriptAt(deleteUsingScript),
+    "c_sql_update_from" -> scriptAt(updateFromScript),
     "c_sql_unpivot_stmt" -> q(unpivotStmt),
-    "c_sql_copy" -> ((s, dir) => Engine.runScript(views(s, dir),
-      copySqlScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_copy_from" -> ((s, dir) => Engine.runScript(views(s, dir),
-      copyFromScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_hive_part" -> ((s, dir) => Engine.runScript(views(s, dir),
-      hivePartScript(dir)).getOrElse(sys.error("script produced no result"))),
-    "c_sql_returning" -> ((s, dir) => Engine.runScript(views(s, dir),
-      returningScript(dir)).getOrElse(sys.error("script produced no result"))),
+    "c_sql_copy" -> scriptAt(copySqlScript),
+    "c_sql_copy_from" -> scriptAt(copyFromScript),
+    "c_sql_hive_part" -> scriptAt(hivePartScript),
+    "c_sql_returning" -> scriptAt(returningScript),
     "c_sql_glob" -> q(globPredicate),
-    "c_sql_read_csv_cols" -> ((s, dir) => Engine.runScript(views(s, dir),
-      csvColsScript(dir)).getOrElse(sys.error("script produced no result"))),
+    "c_sql_read_csv_cols" -> scriptAt(csvColsScript),
     "c_sql_temp_table" -> script(tempTableScript),
     "c_sql_pk_upsert" -> script(pkUpsertScript),
     "c_sql_alter_col" -> script(alterColScript),

@@ -549,4 +549,41 @@ class DuckdbCompatSpec extends AnyFunSuite {
         .collect())
     assert(e.getMessage.contains("literal format"))
   }
+
+  test("epoch_us / epoch_ms count a TIMESTAMP_NTZ's wall clock in any zone") {
+    val saved = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      Seq("UTC", "America/Los_Angeles").foreach { zone =>
+      spark.conf.set("spark.sql.session.timeZone", zone)
+        assert(one("SELECT epoch_us(TIMESTAMP_NTZ '2024-01-01 00:00:01')") ==
+          1704067201000000L, zone)
+        assert(one("SELECT epoch_ms(TIMESTAMP_NTZ '2024-01-01 00:00:01.5')") ==
+          1704067201500L, zone)
+        // a column, as in a query over events.ts
+        assert(one("SELECT epoch_us(t) FROM VALUES" +
+          " (TIMESTAMP_NTZ '1969-12-31 23:59:59') v(t)") == -1000000L, zone)
+        assert(one("SELECT epoch_us(CAST(NULL AS TIMESTAMP_NTZ))") == null)
+      }
+      // an instant TIMESTAMP keeps its own epoch: 00:00:01 in Los Angeles
+      // is 08:00:01 UTC
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      assert(one("SELECT epoch_us(TIMESTAMP '2024-01-01 00:00:01')") ==
+        1704096001000000L)
+    } finally spark.conf.set("spark.sql.session.timeZone", saved)
+  }
+
+  test("length / len count a list's elements, keep Spark's string length") {
+    assert(one("SELECT length(array(7, 8, 9))") == 3L)
+    assert(one("SELECT len(array('a', 'b'))") == 2L)
+    assert(one("SELECT length(string_split('a b c d', ' '))") == 4L)
+    assert(one("SELECT length(array())") == 0L)
+    assert(one("SELECT length(CAST(NULL AS ARRAY<INT>))") == null)
+    assert(spark.sql("SELECT length(array(1))").schema.head.dataType ==
+      org.apache.spark.sql.types.LongType)
+    // strings and binary keep Spark's length (characters / bytes)
+    assert(one("SELECT length('abcd')") == 4)
+    assert(one("SELECT len('héllo')") == 5)
+    assert(one("SELECT length(X'010203')") == 3)
+    assert(one("SELECT length(NULL)") == null)
+  }
 }

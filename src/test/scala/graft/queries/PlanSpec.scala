@@ -3,8 +3,9 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions — the scale-sensitive properties VERDICT r3
-  * called out: parquet pushdown of template filters (incl. the t5/t6 `=!=`
-  * rewrite) and broadcast of the small join side. */
+  * called out: parquet pushdown of template filters (incl. the t5/t6
+  * NULLIF predicates, which `NullifPushdown` rewrites) and broadcast of the
+  * small join side. */
 class PlanSpec extends AnyFunSuite {
 
   private lazy val spark = graft.TestSpark.spark
@@ -15,16 +16,16 @@ class PlanSpec extends AnyFunSuite {
     graft.engine.Engine.explain(df)
 
   test("t5/t6: the <> filters push down to the parquet scan as NotEq") {
-    val p5 = planOf(Templates.t5SavingsPlans(spark, dir))
+    val p5 = planOf(graft.SparkEntry.queries("t5_savings_plans")(spark, dir))
     assert(p5.contains("PushedFilters"))
     assert(p5.contains("Not(EqualTo(l_linestatus,F))"),
       s"t5 should push Not(EqualTo(l_linestatus,F)):\n$p5")
-    val p6 = planOf(Templates.t6ReservedInstances(spark, dir))
+    val p6 = planOf(graft.SparkEntry.queries("t6_reserved_instances")(spark, dir))
     assert(p6.contains("Not(EqualTo(l_returnflag,N))"))
   }
 
   test("t1: date range filter pushes down") {
-    val p = planOf(Templates.t1AccountSummary(spark, dir))
+    val p = planOf(graft.SparkEntry.queries("t1_account_summary")(spark, dir))
     assert(p.contains("GreaterThanOrEqual(l_shipdate"), p)
   }
 
@@ -34,7 +35,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("templates read only the referenced columns (pruning)") {
-    val p = planOf(Templates.t3MonthlySummary(spark, dir))
+    val p = planOf(graft.SparkEntry.queries("t3_monthly_summary")(spark, dir))
     // ReadSchema should mention the 3 used columns and not the rest
     assert(p.contains("l_shipdate") && p.contains("l_extendedprice"))
     assert(!p.contains("l_partkey"), "t3 must not read l_partkey")
@@ -85,7 +86,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("c_join_range: band predicate is a residual on the equi join") {
-    val p = planOf(TierC.joinRange(spark, dir))
+    val p = planOf(graft.SparkEntry.queries("c_join_range")(spark, dir))
     assert(p.contains("Join") || p.contains("join"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"equi+range must not degrade to a nested loop:\n$p")
@@ -438,7 +439,7 @@ class PlanSpec extends AnyFunSuite {
     // or the filter drifting out of the rewrite's recognized shape), the
     // plan silently degrades to the single-reducer window.
     val tree = graft.engine.Engine.explain(
-      Curation.sampleStratified(spark, dir), "simple")
+      graft.SparkEntry.queries("p_sample_stratified")(spark, dir), "simple")
     // anchor to the WindowGroupLimit node itself (ADVICE r9): a bare
     // indexOf("Partial") could match an unrelated node above the exchange
     val lines = tree.linesIterator.toVector

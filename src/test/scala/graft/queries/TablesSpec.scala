@@ -26,4 +26,15 @@ class TablesSpec extends AnyFunSuite {
     assert(spark.table("lineitem").count() == trueCount,
       "views() must re-register clobbered testdata views every call")
   }
+
+  test("views() leaves an unclobbered session's view objects in place") {
+    val catalog = spark.sessionState.catalog
+    Tables.views(spark, dir)
+    val before = Tables.tableNames.map(n => catalog.getRawTempView(n).get)
+    Tables.views(spark, dir)
+    Tables.tableNames.zip(before).foreach { case (n, view) =>
+      assert(catalog.getRawTempView(n).get eq view,
+        s"views() re-registered the untouched view $n")
+    }
+  }
 }
