@@ -132,6 +132,18 @@ class BenchHistorySpec extends AnyFunSuite {
     assert(graft.Bench.retryPlan(hot, Map.empty) == ((0.0, Set.empty)))
   }
 
+  test("SPARK_GRAFT_BENCH_ONLY entries match exactly, or as a prefix with *") {
+    val only = Seq("c_window_frame", "p_text_tf", "t*")
+    assert(graft.Bench.selects(only, "c_window_frame"))
+    assert(graft.Bench.selects(only, "p_text_tf"))
+    assert(!graft.Bench.selects(only, "c_window_frame_exclude"))
+    assert(!graft.Bench.selects(only, "p_text_tfidf"))
+    assert(graft.Bench.selects(only, "t1_account_summary"))
+    assert(graft.Bench.selects(only, "t"))
+    assert(!graft.Bench.selects(only, "c_sql_select"))
+    assert(graft.Bench.selects(Seq("*"), "anything"))
+  }
+
   test("historyMedians reads the recorded history, calib-normalized") {
     val meds = graft.Bench.historyMedians(historyPath)
     assume(Files.exists(historyPath), "no recorded history yet")
