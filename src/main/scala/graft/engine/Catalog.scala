@@ -307,37 +307,26 @@ object Catalog {
     }
   }
 
-  /** DuckDB type spelling → Spark DDL type for `columns=` schemas:
-    * names both engines share pass through; DuckDB-only spellings map
-    * to the Spark type with the same VALUES; anything unknown refuses
-    * (a guessed type reads the file differently than asked). */
+  /** DuckDB type spelling → Spark DDL type for `columns=` schemas: the
+    * router's one DuckDB type map (`Engine.mapTypeText`, over
+    * `duckOnlyTypes`) spells it, and only a scalar type Spark names the
+    * same way is accepted; anything else refuses (a guessed type reads
+    * the file differently than asked). */
   private[engine] def duckTypeToSpark(t: String): String = {
-    val up = t.trim.toUpperCase
-    up match {
-      case "VARCHAR" | "TEXT" | "STRING" | "BPCHAR" => "STRING"
-      case "INTEGER" | "INT" | "INT4" | "SIGNED" => "INT"
-      case "BIGINT" | "INT8" | "LONG" => "BIGINT"
-      case "SMALLINT" | "INT2" | "SHORT" => "SMALLINT"
-      case "TINYINT" | "INT1" => "TINYINT"
-      case "HUGEINT" => "DECIMAL(38,0)" // the values int128 can hold
-      case "DOUBLE" | "FLOAT8" => "DOUBLE"
-      // DuckDB's REAL is the 4-byte float (FLOAT4's alias), not DOUBLE:
-      // mapping it wider would parse float64 where DuckDB parses float32
-      // — a silent value divergence, exactly what this map refuses.
-      case "FLOAT" | "FLOAT4" | "REAL" => "FLOAT"
-      case "BOOLEAN" | "BOOL" | "LOGICAL" => "BOOLEAN"
-      case "DATE" => "DATE"
-      case "TIMESTAMP" | "DATETIME" => "TIMESTAMP"
-      case "BLOB" | "BYTEA" | "BINARY" => "BINARY"
-      case d if d.matches("DECIMAL\\s*\\(\\s*\\d+\\s*,\\s*\\d+\\s*\\)") ||
-          d.matches("NUMERIC\\s*\\(\\s*\\d+\\s*,\\s*\\d+\\s*\\)") =>
-        d.replaceFirst("NUMERIC", "DECIMAL")
-      case other => throw new IllegalArgumentException(
-        s"columns=: type '$other' is not mapped — use one of the" +
-          " shared SQL type names (VARCHAR/INTEGER/BIGINT/DOUBLE/" +
-          "BOOLEAN/DATE/TIMESTAMP/DECIMAL(p,s)/...)")
-    }
+    val mapped = Engine.mapTypeText(t.toUpperCase)
+      .replaceFirst("^NUMERIC\\(", "DECIMAL(")
+    if (columnTypes(mapped) ||
+        mapped.matches("DECIMAL\\(\\s*\\d+\\s*,\\s*\\d+\\s*\\)"))
+      mapped
+    else throw new IllegalArgumentException(
+      s"columns=: type '${t.trim.toUpperCase}' is not mapped — use one of" +
+        " the shared SQL type names (VARCHAR/INTEGER/BIGINT/DOUBLE/" +
+        "BOOLEAN/DATE/TIMESTAMP/DECIMAL(p,s)/...)")
   }
+
+  private val columnTypes = Set("STRING", "INT", "INTEGER", "BIGINT",
+    "LONG", "SMALLINT", "SHORT", "TINYINT", "DOUBLE", "FLOAT", "BOOLEAN",
+    "DATE", "TIMESTAMP", "BINARY")
 
   /** The deepest non-glob directory prefix of a path — the basePath a
     * hive-partitioned glob read anchors partition discovery at. */

@@ -1176,7 +1176,8 @@ private[engine] trait EngineDialect {
     "UINTEGER" -> "BIGINT", "UBIGINT" -> "DECIMAL(20,0)",
     "HUGEINT" -> "DECIMAL(38,0)",
     "FLOAT4" -> "FLOAT", "REAL" -> "FLOAT", "FLOAT8" -> "DOUBLE",
-    "LOGICAL" -> "BOOLEAN", "BYTEA" -> "BINARY", "BLOB" -> "BINARY")
+    "BOOL" -> "BOOLEAN", "LOGICAL" -> "BOOLEAN",
+    "BYTEA" -> "BINARY", "BLOB" -> "BINARY")
 
   /** Map one type text (name, optional `(args)`, optional `[]` list
     * suffixes) through `duckOnlyTypes`; `TYPE[]` becomes

@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graft.ParquetFooters
 import org.apache.spark.sql.types.StructField
 
-import EngineLex.codeMask
-
 /** The user-typed DML statement routes (A6): DELETE/UPDATE/MERGE/
   * upsert/RETURNING via the copy-on-write rewriter in [[Dml]], plus
   * COPY TO/FROM and the insert-source binding shared by all insert
@@ -286,21 +284,6 @@ private[engine] trait EngineDml {
             None
         }
       case _ => None
-    }
-  }
-
-  /** Every top-level index of `kw` in `s` — the all-occurrences variant
-    * of `firstTopLevelKeyword` (one codeMask pass), with the same
-    * whitespace/paren boundary rules. */
-  private[engine] def allTopLevelKeyword(s: String, kw: String): Seq[Int] = {
-    val lx = codeMask(s)
-    (0 until s.length).filter { i =>
-      lx.code(i) && lx.depth(i) == 0 && i + kw.length <= s.length &&
-        s.regionMatches(true, i, kw, 0, kw.length) &&
-        (i == 0 || s.charAt(i - 1).isWhitespace) &&
-        (i + kw.length == s.length ||
-          s.charAt(i + kw.length).isWhitespace ||
-          s.charAt(i + kw.length) == '(')
     }
   }
 
@@ -665,29 +648,6 @@ private[engine] trait EngineDml {
     spark.catalog.refreshByPath(path)
     import spark.implicits._
     Seq((path, format)).toDF("path", "format")
-  }
-
-  /** Split on a keyword at paren/quote/comment top level
-    * (case-insensitive, word boundaries) — the AND-splitter for MERGE ON
-    * conjunctions. */
-  private[engine] def splitOnKeyword(s: String, kw: String): Seq[String] = {
-    val out = scala.collection.mutable.Buffer.empty[String]
-    val lx = codeMask(s)
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      if (lx.code(i) && lx.depth(i) == 0 && i + kw.length <= s.length &&
-          s.regionMatches(true, i, kw, 0, kw.length) &&
-          (i == 0 || s.charAt(i - 1).isWhitespace) &&
-          (i + kw.length == s.length ||
-            s.charAt(i + kw.length).isWhitespace)) {
-        out += s.substring(last, i)
-        last = i + kw.length
-        i += kw.length
-      } else i += 1
-    }
-    out += s.substring(last)
-    out.toSeq
   }
 
   /** Split a trailing top-level RETURNING clause off a DML statement —

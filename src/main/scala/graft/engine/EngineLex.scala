@@ -164,30 +164,44 @@ private[engine] object TextShim {
 private[engine] trait EngineLex {
   this: Engine.type =>
 
-  /** Index of the first top-level (outside string literals, quoted
-    * identifiers, comments, and parens) whitespace-delimited occurrence
-    * of any of `kws`, if one exists. `parenBoundary` additionally
-    * accepts `(` as the trailing boundary — for keywords a user types
-    * flush against a paren, like `ON CONFLICT(k)`. */
-  private[engine] def firstTopLevelKeyword(
-      s: String, kws: Seq[String],
-      parenBoundary: Boolean = false): Option[Int] = {
+  /** Every top-level (outside string literals, quoted identifiers,
+    * comments, and parens) whitespace-delimited occurrence of any of
+    * `kws`, in order, case-insensitive: the one keyword matcher under
+    * `firstTopLevelKeyword`, `allTopLevelKeyword` and `splitOnKeyword`.
+    * `parenBoundary` also accepts `(` as the trailing boundary — for
+    * keywords a user types flush against a paren, like
+    * `ON CONFLICT(k)`. */
+  private[engine] def topLevelKeywords(
+      s: String, kws: Seq[String], parenBoundary: Boolean): Iterator[Int] = {
     val lx = codeMask(s)
-    var i = 0
-    while (i < s.length) {
-      if (lx.code(i) && lx.depth(i) == 0) {
-        val hit = kws.exists(kw =>
-          i + kw.length <= s.length &&
-            s.regionMatches(true, i, kw, 0, kw.length) &&
-            (i == 0 || s.charAt(i - 1).isWhitespace) &&
-            (i + kw.length == s.length ||
-              s.charAt(i + kw.length).isWhitespace ||
-              (parenBoundary && s.charAt(i + kw.length) == '(')))
-        if (hit) return Some(i)
-      }
-      i += 1
+    (0 until s.length).iterator.filter { i =>
+      lx.code(i) && lx.depth(i) == 0 &&
+        (i == 0 || s.charAt(i - 1).isWhitespace) &&
+        kws.exists { kw =>
+          val end = i + kw.length
+          end <= s.length && s.regionMatches(true, i, kw, 0, kw.length) &&
+            (end == s.length || s.charAt(end).isWhitespace ||
+              (parenBoundary && s.charAt(end) == '('))
+        }
     }
-    None
+  }
+
+  /** Index of the first top-level occurrence of any of `kws`. */
+  private[engine] def firstTopLevelKeyword(
+      s: String, kws: Seq[String]): Option[Int] =
+    topLevelKeywords(s, kws, parenBoundary = false).nextOption()
+
+  /** Every top-level index of `kw`, `(` accepted as its boundary. */
+  private[engine] def allTopLevelKeyword(s: String, kw: String): Seq[Int] =
+    topLevelKeywords(s, Seq(kw), parenBoundary = true).toSeq
+
+  /** Split on a top-level keyword — the AND-splitter for MERGE ON
+    * conjunctions. A keyword has no whitespace inside, so two hits never
+    * overlap. */
+  private[engine] def splitOnKeyword(s: String, kw: String): Seq[String] = {
+    val cuts = topLevelKeywords(s, Seq(kw), parenBoundary = false).toSeq
+    (-kw.length +: cuts).zip(cuts :+ s.length)
+      .map { case (from, to) => s.substring(from + kw.length, to) }
   }
 
   /** Split on a separator at paren/quote/comment top level only (SET

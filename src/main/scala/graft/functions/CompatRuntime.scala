@@ -15,6 +15,28 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object CompatRuntime {
 
+  /** The `StringSplit` regex that splits on `sep` literally, as DuckDB's
+    * `string_split` does (each case checked against DuckDB 1.0):
+    *  - NULL: a pattern that never matches, so the string comes back
+    *    whole (`string_split('a b', NULL)` = ['a b']);
+    *  - '': Spark's empty pattern, which splits into characters without
+    *    the trailing '' a regex split leaves (['a', 'b', 'c']);
+    *  - one UTF-16 char: that char, `\`-escaped when it is a regex
+    *    metacharacter — both forms take `String.split`'s fast path,
+    *    which splits without compiling a Pattern (a surrogate pair is
+    *    two chars and quotes like any longer separator);
+    *  - longer: `Pattern.quote`, the `\Q…\E` form, which also escapes
+    *    a `\E` inside the separator. */
+  def splitPattern(sep: UTF8String): UTF8String =
+    if (sep == null) UTF8String.fromString("(?!)")
+    else {
+      val s = sep.toString
+      if (s.length > 1) UTF8String.fromString(java.util.regex.Pattern.quote(s))
+      else if (s.nonEmpty && ".$|()[{^?*+\\".indexOf(s.charAt(0)) >= 0)
+        UTF8String.fromString("\\" + s)
+      else sep
+    }
+
   /** Non-negative gcd; gcd(0, 0) = 0 (measured: gcd(-12, 18) = 6). */
   def gcd(a: Long, b: Long): Long = {
     var x = math.abs(a)

@@ -33,6 +33,14 @@ import Tables._
   * aggregation or broadcast anti-join — no wide shuffle; the blocklist
   * side is dimension-sized by construction (a real blocklist is at most
   * millions of rows against billions of documents, still broadcastable).
+  *
+  * p_dedup_url, p_sample_stratified and p_filter_quality_model are their
+  * DuckDB text (`Tables.q`): it returns the builder's rows with the same
+  * physical operators and was no slower in the `graft.Bench` A/B. A
+  * DataFrame builder stays for p_filter_quality and its rows-only
+  * `_approx` twin (an explicit `broadcast` of the thresholds), and for
+  * p_text_pii, p_filter_blocklist and p_pipeline_full, whose routed text
+  * fails (`routed_expected_failures.txt`).
   */
 object Curation {
 
@@ -257,32 +265,6 @@ object Curation {
     * classifier. At 100 TB the vocabulary relation is bounded by
     * language, a broadcastable model artifact; the token-level join
     * shuffles on the word key exactly like tf-idf. */
-  val qualityModel: Q = (s, dir) => {
-    val labeled = t(s, dir, "documents")
-      .withColumn("ws", split(col("text"), " "))
-      .withColumn("ok", size(col("ws")).cast(LongType) >= 10 &&
-        col("n_chars").cast("double") / size(col("ws")) < 12)
-      .select(col("doc_id"), col("ws"), col("ok"))
-    val toks = labeled
-      .select(col("doc_id"), col("ok"), explode(col("ws")).as("word"))
-      .filter(col("word") =!= "")
-    val votes = toks.groupBy("word")
-      .agg(sum(when(col("ok"), 1L).otherwise(0L)).as("cg"),
-        sum(when(col("ok"), 0L).otherwise(1L)).as("cb"))
-      .filter(col("cg") + col("cb") >= 5)
-      .select(col("word"),
-        when(col("cg") > col("cb"), 1L)
-          .when(col("cb") > col("cg"), -1L)
-          .otherwise(0L).as("vote"))
-    toks.join(votes, Seq("word"), "left")
-      .groupBy("doc_id")
-      .agg(sum(coalesce(col("vote"), lit(0L))).as("score"))
-      .join(labeled.select(col("doc_id"), col("ok")), Seq("doc_id"))
-      .select(col("doc_id"), col("score"),
-        (col("score") > 0).as("keep"), col("ok").as("seed_ok"))
-      .orderBy(col("doc_id"))
-  }
-
   val qualityModelSql: String =
     """WITH labeled AS (
       |  SELECT doc_id, string_split(text, ' ') AS ws,
@@ -515,7 +497,7 @@ object Curation {
     "p_sample_stratified" -> q(sampleStratifiedSql),
     "p_filter_quality" -> qualityFilter,
     "p_filter_quality_approx" -> qualityFilterApprox,
-    "p_filter_quality_model" -> qualityModel)
+    "p_filter_quality_model" -> q(qualityModelSql))
 
   val oracle: Map[String, String] = Map(
     "p_dedup_url" -> urlDedupSql,

@@ -25,15 +25,6 @@ import Tables._
   */
 object Similarity {
 
-  /** Sequential dot product of two double-cast float arrays. */
-  private def dotExpr(a: String, b: String): String =
-    s"""aggregate(zip_with($a, $b,
-       |  (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-       |  CAST(0 AS DOUBLE), (acc, p) -> acc + p)""".stripMargin
-
-  private def normExpr(a: String): String =
-    s"SQRT(${dotExpr(a, a)})"
-
   // --- Brute-force exact top-k --------------------------------------------
 
   /** Exact cosine top-10 neighbors of vec_id 0. The cosine is the native
@@ -772,8 +763,8 @@ object Similarity {
         .filter(lit(false))
     else {
       val assigned = emb
-        .withColumn("cos_arr", expr(centCosArrD("embedding", cents)))
-        .withColumn("cent_id", expr(centArgmaxD("cos_arr", cents)))
+        .withColumn("cos_arr", expr(centCosArr("embedding", cents)))
+        .withColumn("cent_id", expr(centArgmax("cos_arr", cents)))
         .select(col("vec_id"), col("embedding"), col("cent_id"))
       semanticReport(assigned, 0.35)
     }
@@ -894,18 +885,31 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
 
-  // Float.toString round-trips exactly, so the literal arrays carry the
-  // bit-identical vectors; ConstantFolding collapses them to one Literal.
-  private def centLit(c: Array[Float]): String =
-    c.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ", ", ")")
-  private def centsLitOf(cents: Seq[(Long, Array[Float])]): String =
+  /** A codebook's element type: the SQL type its literal casts to (FLOAT
+    * for the raw seed vectors, DOUBLE for the trained centroids) and its
+    * widening for the driver-side cosine. Float.toString and
+    * Double.toString round-trip exactly through `CAST('v' AS <sql>)`, so
+    * an inlined vector is bit-identical to its source; ConstantFolding
+    * collapses each literal array to one Literal. */
+  private[graft] final class CentElem[T](
+      val sql: String, val widen: T => Double)
+  private[graft] object CentElem {
+    implicit val float: CentElem[Float] = new CentElem("FLOAT", _.toDouble)
+    implicit val double: CentElem[Double] = new CentElem("DOUBLE", d => d)
+  }
+
+  private def centLit[T](c: Array[T])(implicit e: CentElem[T]): String =
+    c.map(v => s"CAST('$v' AS ${e.sql})").mkString("array(", ", ", ")")
+  private def centsLitOf[T: CentElem](cents: Seq[(Long, Array[T])]): String =
     cents.map(c => centLit(c._2)).mkString("array(", ", ", ")")
-  private def idsLitOf(cents: Seq[(Long, Array[Float])]): String =
+  private def idsLitOf(cents: Seq[(Long, Any)]): String =
     cents.map(c => s"CAST(${c._1} AS BIGINT)").mkString("array(", ", ", ")")
 
-  /** Per-row array of cosines against every inlined centroid (map-side). */
-  private def centCosArr(
-      embCol: String, cents: Seq[(Long, Array[Float])]): String =
+  /** Per-row array of cosines against every inlined centroid (map-side).
+    * `cosine_sim` takes a float or double centroid side with the same
+    * IEEE fold sequence as the oracle's `oDot`/`oNorm` twins (r21). */
+  private def centCosArr[T: CentElem](
+      embCol: String, cents: Seq[(Long, Array[T])]): String =
     s"""transform(sequence(0, ${cents.size - 1}),
        |  j -> cosine_sim($embCol, element_at(${centsLitOf(cents)}, j + 1)))"""
       .stripMargin
@@ -914,10 +918,29 @@ object Similarity {
     * FIRST occurrence of the max, and the id array is ordered by centroid
     * id, so ties break to the lowest id — matching the oracle's
     * `ORDER BY cosine DESC, cent_id`. */
-  private def centArgmax(
-      arrCol: String, cents: Seq[(Long, Array[Float])]): String =
+  private def centArgmax(arrCol: String, cents: Seq[(Long, Any)]): String =
     s"element_at(${idsLitOf(cents)}, " +
       s"CAST(array_position($arrCol, array_max($arrCol)) AS INT))"
+
+  /** The empty (vec_id, label, cent_id, cosine) result of an IVF search
+    * with no query vector or no codebook. */
+  private def noProbeHits(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("label"),
+      lit(0L).as("cent_id"), lit(0.0).as("cosine")).filter(lit(false))
+
+  /** An nprobe=2 search over a centroid-partitioned layout: read only the
+    * probe directories (cent_id is a PartitionFilter, PlanSpec), then the
+    * exact-cosine re-rank. */
+  private def probedLayout(s: SparkSession, path: String,
+      probes: Seq[Long], q: Array[Float]): DataFrame =
+    s.read.parquet(path)
+      .filter(col("cent_id").isin(probes.map(_.toInt): _*) &&
+        col("vec_id") =!= 0)
+      .withColumn("cosine", expr(s"cosine_sim(embedding, ${centLit(q)})"))
+      .select(col("vec_id"), col("label"),
+        col("cent_id").cast("bigint").as("cent_id"), col("cosine"))
+      .orderBy(desc("cosine"), col("vec_id"))
+      .limit(5)
 
   val ivfFlat: Q = (s, dir) => {
     graft.functions.CosineSimilarity.register(s)
@@ -927,8 +950,7 @@ object Similarity {
     // table is empty) yields the empty result the previous join
     // formulation produced, instead of failing at plan-construction time.
     if (!cents.exists(_._1 == 0L))
-      emb.select(col("vec_id"), col("label"),
-        lit(0L).as("cent_id"), lit(0.0).as("cosine")).filter(lit(false))
+      noProbeHits(emb)
     else ivfProbed(emb, cents)
   }
 
@@ -940,12 +962,12 @@ object Similarity {
     * (zero-norm centroid) sorts FIRST, matching both engines' ORDER BY
     * DESC semantics (Scala tuple sortBy on the negated value would sort
     * NaN last and silently pick different probes than the oracle). */
-  private def probeIdsOf(
-      q: Array[Float], cents: Seq[(Long, Array[Float])]): Seq[Long] = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
+  private def probeIdsOf[T](q: Array[Float], cents: Seq[(Long, Array[T])])(
+      implicit e: CentElem[T]): Seq[Long] = {
+    def cos(a: Array[Float], b: Array[T]): Double = {
       var dot = 0.0; var na2 = 0.0; var nb2 = 0.0; var i = 0
       while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
+        val x = a(i).toDouble; val y = e.widen(b(i))
         dot += x * y; na2 += x * x; nb2 += y * y; i += 1
       }
       dot / (math.sqrt(na2) * math.sqrt(nb2))
@@ -959,18 +981,11 @@ object Similarity {
 
   private def ivfProbed(
       emb: DataFrame, cents: Seq[(Long, Array[Float])]): DataFrame = {
-    val centsLit = centsLitOf(cents)
-    val idsLit = idsLitOf(cents)
     val q = cents.find(_._1 == 0L).get._2
     val probeIds = probeIdsOf(q, cents)
     emb
-      .withColumn("cos_arr", expr(
-        s"""transform(sequence(0, ${cents.size - 1}),
-           |  j -> cosine_sim(embedding, element_at($centsLit, j + 1)))"""
-          .stripMargin))
-      .withColumn("cent_id", expr(
-        s"element_at($idsLit, " +
-          "CAST(array_position(cos_arr, array_max(cos_arr)) AS INT))"))
+      .withColumn("cos_arr", expr(centCosArr("embedding", cents)))
+      .withColumn("cent_id", expr(centArgmax("cos_arr", cents)))
       .filter(col("cent_id").isin(probeIds: _*) && col("vec_id") =!= 0)
       .withColumn("cosine", expr(s"cosine_sim(embedding, ${centLit(q)})"))
       .select(col("vec_id"), col("label"), col("cent_id"), col("cosine"))
@@ -1032,8 +1047,8 @@ object Similarity {
     * stream appends to and the layout the batch rewrite produces cannot
     * drift. Registers `cosine_sim` idempotently — the expr depends on
     * it. */
-  private[graft] def withCentroid(
-      df: DataFrame, cents: Seq[(Long, Array[Float])]): DataFrame = {
+  private[graft] def withCentroid[T: CentElem](
+      df: DataFrame, cents: Seq[(Long, Array[T])]): DataFrame = {
     graft.functions.CosineSimilarity.register(df.sparkSession)
     df.withColumn("cos_arr", expr(centCosArr("embedding", cents)))
       .withColumn("cent_id", expr(centArgmax("cos_arr", cents)).cast("int"))
@@ -1061,19 +1076,10 @@ object Similarity {
     val emb = t(s, dir, "embeddings")
     val cents = codebook(emb)
     if (!cents.exists(_._1 == 0L))
-      emb.select(col("vec_id"), col("label"),
-        lit(0L).as("cent_id"), lit(0.0).as("cosine")).filter(lit(false))
+      noProbeHits(emb)
     else {
       val q = cents.find(_._1 == 0L).get._2
-      val probes = probeIdsOf(q, cents).map(_.toInt)
-      val path = ivfPartitioned(s, dir, cents)
-      s.read.parquet(path)
-        .filter(col("cent_id").isin(probes: _*) && col("vec_id") =!= 0)
-        .withColumn("cosine", expr(s"cosine_sim(embedding, ${centLit(q)})"))
-        .select(col("vec_id"), col("label"),
-          col("cent_id").cast("bigint").as("cent_id"), col("cosine"))
-        .orderBy(desc("cosine"), col("vec_id"))
-        .limit(5)
+      probedLayout(s, ivfPartitioned(s, dir, cents), probeIdsOf(q, cents), q)
     }
   }
 
@@ -1492,7 +1498,7 @@ object Similarity {
           val it1 = lloydUpdate(emb,
             centCosArr("embedding", seeds), centArgmax("cos_arr", seeds))
           val it2 = lloydUpdate(emb,
-            centCosArrD("embedding", it1), centArgmaxD("cos_arr", it1))
+            centCosArr("embedding", it1), centArgmax("cos_arr", it1))
           it2.map { case (id, c) => (id, c.toSeq) }
         }
       trained.toDF("cent_id", "centroid")
@@ -1512,58 +1518,6 @@ object Similarity {
         .sortBy(_._1)
     }
 
-  // Double-array literal twins of centLit/centsLitOf — Double.toString
-  // round-trips exactly through CAST('v' AS DOUBLE), so the inlined
-  // trained centroids are bit-identical to the artifact's values.
-  private def centLitD(c: Array[Double]): String =
-    c.map(v => s"CAST('$v' AS DOUBLE)").mkString("array(", ", ", ")")
-  private def centsLitDOf(cents: Seq[(Long, Array[Double])]): String =
-    cents.map(c => centLitD(c._2)).mkString("array(", ", ", ")")
-  private def idsLitDOf(cents: Seq[(Long, Array[Double])]): String =
-    cents.map(c => s"CAST(${c._1} AS BIGINT)").mkString("array(", ", ", ")")
-
-  /** Cosine against a DOUBLE-array literal via the generic sequential
-    * fold — same IEEE op sequence as the oracle's `oDot`/`oNorm` twins
-    * (dot, |a|², |b|² each fold dims left-to-right, then one division). */
-  private def cosExprD(a: String, b: String): String =
-    s"(${dotExpr(a, b)}) / (${normExpr(a)} * ${normExpr(b)})"
-
-  private def centCosArrD(
-      embCol: String, cents: Seq[(Long, Array[Double])]): String =
-    // cosine_sim now accepts a double-array side (r21): same IEEE fold
-    // sequence as cosExprD's three aggregate(zip_with(...)) folds, native
-    // instead of interpreted-per-lambda-element — the 16-centroid argmax
-    // was the dominant map cost of the semantic/trained-IVF legs (§1.2).
-    s"""transform(sequence(0, ${cents.size - 1}),
-       |  j -> cosine_sim($embCol, element_at(${centsLitDOf(cents)}, j + 1)))"""
-      .stripMargin
-
-  private def centArgmaxD(
-      arrCol: String, cents: Seq[(Long, Array[Double])]): String =
-    s"element_at(${idsLitDOf(cents)}, " +
-      s"CAST(array_position($arrCol, array_max($arrCol)) AS INT))"
-
-  /** Driver-side nprobe selection against the TRAINED codebook — the
-    * `probeIdsOf` discipline (one-pass fold in dim order, ties cosine
-    * DESC then id ASC via Double.compare so NaN sorts first like both
-    * engines' ORDER BY DESC). */
-  private def probeIdsOfD(
-      q: Array[Float], cents: Seq[(Long, Array[Double])]): Seq[Long] = {
-    def cos(a: Array[Float], b: Array[Double]): Double = {
-      var dot = 0.0; var na2 = 0.0; var nb2 = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i)
-        dot += x * y; na2 += x * x; nb2 += y * y; i += 1
-      }
-      dot / (math.sqrt(na2) * math.sqrt(nb2))
-    }
-    cents.map { case (id, c) => (id, cos(q, c)) }
-      .sortWith { case ((id1, c1), (id2, c2)) =>
-        val cmp = java.lang.Double.compare(c2, c1)
-        if (cmp != 0) cmp < 0 else id1 < id2
-      }.take(2).map(_._1)
-  }
-
   /** The raw query vector (vec_id 0) — fetched directly because the
     * trained codebook no longer CONTAINS raw vectors. One-row collect. */
   private def queryVec(emb: DataFrame): Option[Array[Float]] =
@@ -1577,13 +1531,8 @@ object Similarity {
   private def ivfTrainedPartitioned(s: SparkSession, dir: String,
       cents: Seq[(Long, Array[Double])]): String =
     Layout.written(s, dir, "ivf_trained_emb") {
-      graft.functions.CosineSimilarity.register(s)
       val path = Layout.tmpRoot("ivf_trained_emb", dir)
-      val assigned = t(s, dir, "embeddings")
-        .withColumn("cos_arr", expr(centCosArrD("embedding", cents)))
-        .withColumn("cent_id",
-          expr(centArgmaxD("cos_arr", cents)).cast("int"))
-        .drop("cos_arr")
+      val assigned = withCentroid(t(s, dir, "embeddings"), cents)
       graft.engine.Scale.writePartitioned(assigned, path, "cent_id")
       path
     }
@@ -1601,19 +1550,11 @@ object Similarity {
     val cents = trainedCodebook(s, dir)
     val qOpt = queryVec(emb)
     if (cents.isEmpty || qOpt.isEmpty)
-      emb.select(col("vec_id"), col("label"),
-        lit(0L).as("cent_id"), lit(0.0).as("cosine")).filter(lit(false))
+      noProbeHits(emb)
     else {
       val q = qOpt.get
-      val probes = probeIdsOfD(q, cents).map(_.toInt)
-      val path = ivfTrainedPartitioned(s, dir, cents)
-      s.read.parquet(path)
-        .filter(col("cent_id").isin(probes: _*) && col("vec_id") =!= 0)
-        .withColumn("cosine", expr(s"cosine_sim(embedding, ${centLit(q)})"))
-        .select(col("vec_id"), col("label"),
-          col("cent_id").cast("bigint").as("cent_id"), col("cosine"))
-        .orderBy(desc("cosine"), col("vec_id"))
-        .limit(5)
+      probedLayout(s, ivfTrainedPartitioned(s, dir, cents),
+        probeIdsOf(q, cents), q)
     }
   }
 
@@ -1699,7 +1640,7 @@ object Similarity {
     * (requires `cos_arr` in scope — shared with the cent_id argmax so
     * the assignment is computed once). */
   private def residExpr(cents: Seq[(Long, Array[Double])]): String =
-    s"""zip_with(embedding, element_at(${centsLitDOf(cents)},
+    s"""zip_with(embedding, element_at(${centsLitOf(cents)},
        |  CAST(array_position(cos_arr, array_max(cos_arr)) AS INT)),
        |  (x, c) -> CAST(x AS DOUBLE) - c)""".stripMargin
 
@@ -1715,7 +1656,7 @@ object Similarity {
     * the 8×16×8 codebook between passes (bounded at ANY corpus size). */
   private def subLloydUpdate(resid8: DataFrame,
       cbs: Seq[Seq[(Long, Array[Double])]]): Seq[Seq[(Long, Array[Double])]] = {
-    val cwLit = cbs.map(cb => cb.map(c => centLitD(c._2))
+    val cwLit = cbs.map(cb => cb.map(c => centLit(c._2))
       .mkString("array(", ", ", ")")).mkString("array(", ", ", ")")
     val skLit = cbs.map(cb => cb.map(c => s"CAST(${c._1} AS BIGINT)")
       .mkString("array(", ", ", ")")).mkString("array(", ", ", ")")
@@ -1763,7 +1704,7 @@ object Similarity {
         if (cents.isEmpty) Seq.empty
         else {
           val resid8 = t(s, dir, "embeddings")
-            .withColumn("cos_arr", expr(centCosArrD("embedding", cents)))
+            .withColumn("cos_arr", expr(centCosArr("embedding", cents)))
             .withColumn("resid", expr(residExpr(cents)))
             .select(col("vec_id"), posexplode(expr(
               "transform(sequence(0, 7), j -> slice(resid, j * 8 + 1, 8))")))
@@ -1805,7 +1746,7 @@ object Similarity {
     * distance; requires `resid` in scope). */
   private def subDistResid(
       j: Int, cb: Seq[(Long, Array[Double])]): String = {
-    val cbLit = cb.map(c => centLitD(c._2)).mkString("array(", ", ", ")")
+    val cbLit = cb.map(c => centLit(c._2)).mkString("array(", ", ", ")")
     // graft_l2_slice ≡ the aggregate(zip_with(slice(resid, …), cw, …))
     // squared-distance fold — native, same IEEE sequence (r21)
     s"""transform(sequence(0, ${cb.size - 1}), k ->
@@ -1829,10 +1770,10 @@ object Similarity {
       graft.functions.CosineSimilarity.register(s)
       val path = Layout.tmpRoot("ivfpq_emb", dir)
       val assigned = t(s, dir, "embeddings")
-        .withColumn("cos_arr", expr(centCosArrD("embedding", cents)))
+        .withColumn("cos_arr", expr(centCosArr("embedding", cents)))
         .withColumn("resid", expr(residExpr(cents)))
         .withColumn("cent_id",
-          expr(centArgmaxD("cos_arr", cents)).cast("int"))
+          expr(centArgmax("cos_arr", cents)).cast("int"))
         .drop("cos_arr")
       val withDists = (0 until 8).foldLeft(assigned) { (df, j) =>
         df.withColumn(s"dist$j", expr(subDistResid(j, cbs(j))))
@@ -1875,7 +1816,7 @@ object Similarity {
   private def adcFrame(s: SparkSession, dir: String,
       cents: Seq[(Long, Array[Double])],
       cbs: Seq[Seq[(Long, Array[Double])]], q: Array[Float]): DataFrame = {
-    val probes = probeIdsOfD(q, cents).map(_.toInt)
+    val probes = probeIdsOf(q, cents).map(_.toInt)
     val centById = cents.toMap
     def lutFor(cid: Int): Array[Array[Double]] = Array.tabulate(8) { j =>
       cbs(j).map { case (_, cw) =>
@@ -2137,10 +2078,10 @@ object Similarity {
     val recon = memoPersist(s, dir, "pq_recall_recon") {
       val cents = trainedCodebook(s, dir)
       val cbs = pqCodebooks(s, dir)
-      val centsLit = centsLitDOf(cents)
+      val centsLit = centsLitOf(cents)
       // per-row: coarse assignment, residual, raw doubles, both recons
       val base = t(s, dir, "embeddings")
-        .withColumn("cos_arr", expr(centCosArrD("embedding", cents)))
+        .withColumn("cos_arr", expr(centCosArr("embedding", cents)))
         .withColumn("cent", expr(s"""element_at($centsLit,
           |  CAST(array_position(cos_arr, array_max(cos_arr)) AS INT))"""
           .stripMargin))
@@ -2150,7 +2091,7 @@ object Similarity {
       // each distance array is computed ONCE as a column (an argmin that
       // re-inlined the fold would double the expression tree)
       val withR = (0 until 8).foldLeft(base) { (df, j) =>
-        val cbLit = cbs(j).map(c => centLitD(c._2))
+        val cbLit = cbs(j).map(c => centLit(c._2))
           .mkString("array(", ", ", ")")
         df.withColumn(s"rdist$j", expr(subDistResid(j, cbs(j))))
           .withColumn(s"rrec$j", expr(
@@ -2161,7 +2102,7 @@ object Similarity {
       }
       val withS = (0 until 8).foldLeft(withR) { (df, j) =>
         val sliceLit = cents
-          .map(c => centLitD(c._2.slice(j * 8, j * 8 + 8)))
+          .map(c => centLit(c._2.slice(j * 8, j * 8 + 8)))
           .mkString("array(", ", ", ")")
         df.withColumn(s"sdist$j", expr(
           s"""transform(sequence(0, ${cents.size - 1}), k ->

@@ -134,8 +134,8 @@ object Tables {
   def eventTs(c: Column): Column = c
 
   /** The `ts` column as exact epoch MICROS (bigint) — the integer twin
-    * of eventTs for queries that compare/emit raw micros (as-of join,
-    * sessionize, funnel); matches the oracle's `epoch_us(ts)`. The
+    * of eventTs for queries that compare/emit raw micros (the as-of
+    * join); matches the oracle's `epoch_us(ts)`. The
     * NTZ→TIMESTAMP cast reinterprets in the session zone, which Session
     * pins to UTC, so `unix_micros` yields the same integer DuckDB's
     * `epoch_us` derives from the same naive value — exact int arithmetic,

@@ -19,6 +19,24 @@ import Tables._
   * Scale: TF is the classic map-side-combined word count; everything else
   * is per-document map work followed by a small aggregation or a top-k —
   * no join, no wide shuffle.
+  *
+  * A query whose DuckDB text returns the builder's rows through the
+  * engine's SQL path, with the same physical operators (or fewer,
+  * measured cheaper) and no slower in the `graft.Bench` A/B, IS that text
+  * (`Tables.q`, registry below): p_text_tf, p_text_quality (its top-k
+  * plans as one TakeOrderedAndProject where the builder sorted twice),
+  * p_pack_sequences, p_pipeline_e2e, p_chunk_docs (`withChunks` stays
+  * for `Streams.chunkStream`). A DataFrame builder stays only for one of
+  * these reasons:
+  *  - the text is slower at sf0.1 (builder → text medians of interleaved
+  *    runs, `local[4]`): p_text_repetition 143 → 171 ms and
+  *    p_text_langid 275 → 401 ms (its text splits each document once per
+  *    language score, the builder once);
+  *  - an explicit physical choice: p_text_tfidf (a broadcast of the
+  *    corpus count);
+  *  - the routed text fails (`routed_expected_failures.txt`):
+  *    p_text_tokens, p_text_fingerprint, p_text_boilerplate,
+  *    p_text_contamination, p_split_hash, p_corpus_mix.
   */
 object TextOps {
 
@@ -64,20 +82,6 @@ object TextOps {
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
   private def sqlList(xs: Seq[String]): String =
     xs.map(x => s"'$x'").mkString(", ")
-
-  val quality: Q = (s, dir) =>
-    t(s, dir, "documents")
-      .orderBy(col("doc_id")).limit(200)
-      .withColumn("ws", split(col("text"), " "))
-      .select(col("doc_id"), col("n_chars"),
-        size(col("ws")).cast(LongType).as("n_words"),
-        (col("n_chars").cast("double") / size(col("ws")))
-          .as("mean_word_len"),
-        (size(expr(s"array_intersect(ws, array(${sqlList(stopwords)}))"))
-          .cast("double") / size(col("ws"))).as("stopword_ratio"))
-      .withColumn("ok",
-        col("n_words") >= 10 && col("mean_word_len") < 12)
-      .orderBy(col("doc_id"))
 
   val qualitySql: String =
     s"""SELECT doc_id, n_chars,
@@ -354,21 +358,6 @@ object TextOps {
     * the shuffle is one hash partition by lang — at 100 TB the partition
     * key would be the shard/source the packer writes, never a global
     * unpartitioned window. All-integer arithmetic; hash-exact. */
-  val packSequences: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "documents")
-      .select(col("lang"), col("doc_id"),
-        size(split(col("text"), " ")).cast(LongType).as("tok"))
-      .withColumn("cum", sum(col("tok")).over(w))
-      .withColumn("bin", expr("CAST((cum - tok) DIV 4096 AS BIGINT)"))
-      .groupBy(col("lang"), col("bin"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("n_tokens"),
-        min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-      .orderBy(col("lang"), col("bin"))
-  }
-
   val packSequencesSql: String =
     """WITH d AS (
       |  SELECT lang, doc_id,
@@ -430,19 +419,6 @@ object TextOps {
     * corpus stats. Each stage is the operator verified individually above;
     * this witnesses the composition (filter pushes into the scan, dedup
     * shuffles 16-byte hashes, stats aggregate the survivors). */
-  val pipelineE2e: Q = (s, dir) =>
-    t(s, dir, "documents")
-      .withColumn("ws", split(col("text"), " "))
-      .filter(size(col("ws")) >= 10 &&
-        (col("n_chars").cast("double") / size(col("ws"))) < 12)
-      .groupBy(md5(lower(col("text"))).as("fp"))
-      .agg(min(col("doc_id")).as("doc_id"),
-        min(col("lang")).as("lang"),
-        min(size(col("ws"))).cast(LongType).as("n_words"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("total_words"))
-      .orderBy(col("lang"))
-
   val pipelineE2eSql: String =
     """WITH ok AS (
       |  SELECT doc_id, lang, text,
@@ -471,9 +447,9 @@ object TextOps {
   private val ChunkC = 32
   private val ChunkS = 24
 
-  /** The chunking transform over any frame carrying (doc_id, text) —
-    * shared VERBATIM by the declared query and `Streams.chunkStream`
-    * (stateless Column work, so batch and stream paths cannot drift).
+  /** The chunking transform over any frame carrying (doc_id, text), for
+    * `Streams.chunkStream`: the arithmetic of `chunkDocsSql` as stateless
+    * Column work (StreamsSpec checks the two give the same chunks).
     * Input columns other than `text` pass through onto every chunk row
     * (the stream keeps its event-time column for watermarking). */
   private[graft] def withChunks(docs: org.apache.spark.sql.DataFrame)
@@ -498,13 +474,6 @@ object TextOps {
         : _*)
   }
 
-  val chunkDocs: Q = (s, dir) =>
-    withChunks(
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).limit(200))
-      .orderBy(col("doc_id"), col("chunk_id"))
-
   val chunkDocsSql: String =
     s"""WITH b AS (SELECT doc_id, text FROM documents
        |           ORDER BY doc_id LIMIT 200),
@@ -528,9 +497,9 @@ object TextOps {
 
   val queries: Map[String, Q] = Map(
     "p_text_tf" -> q(tfSql),
-    "p_chunk_docs" -> chunkDocs,
+    "p_chunk_docs" -> q(chunkDocsSql),
     "p_text_tokens" -> tokens,
-    "p_text_quality" -> quality,
+    "p_text_quality" -> q(qualitySql),
     "p_text_repetition" -> repetition,
     "p_text_langid" -> langid,
     "p_text_fingerprint" -> fingerprint,
@@ -538,9 +507,9 @@ object TextOps {
     "p_text_tfidf" -> tfidf,
     "p_text_contamination" -> contamination,
     "p_split_hash" -> splitHash,
-    "p_pack_sequences" -> packSequences,
+    "p_pack_sequences" -> q(packSequencesSql),
     "p_corpus_mix" -> corpusMix,
-    "p_pipeline_e2e" -> pipelineE2e)
+    "p_pipeline_e2e" -> q(pipelineE2eSql))
 
   val oracle: Map[String, String] = Map(
     "p_text_tf" -> tfSql,

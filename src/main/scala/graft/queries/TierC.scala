@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -18,8 +18,9 @@ import Tables._
   * A query whose DuckDB text returns the builder's rows through the
   * engine's SQL path, with the same physical operators, IS that text
   * (`Tables.q`, registry below): the joins left/semi/anti/range, most
-  * windows, the aggregates, sampling, histogram, retention and the scalar
-  * witnesses. A DataFrame builder stays only for one of these reasons:
+  * windows, the aggregates, sampling, histogram, retention, the funnels,
+  * sessionization and the scalar witnesses. A DataFrame builder stays
+  * only for one of these reasons:
   *  - a hand-shaped plan the text does not give (pre-aggregation before
   *    the Expand or the pivot): c_rollup, c_cube, c_pivot, c_string_agg,
   *    c_unpivot, c_window_groups;
@@ -38,9 +39,10 @@ import Tables._
   *    RoutedOracleSpec): c_gapfill, c_higher_order, c_json_extract,
   *    c_kmv_distinct, c_nested_types, c_pivot_dynamic,
   *    c_window_frame_exclude;
-  *  - the routed text matches since `epoch_us` reads TIMESTAMP_NTZ, but
-  *    its plan and timing are not yet compared: c_funnel,
-  *    c_funnel_window, c_join_asof, c_sessionize;
+  *  - a different plan, slower as text: c_join_asof. The text's ASOF
+  *    JOIN routes as a broadcast hash join under a top-k; the builder is
+  *    one union and one running-`last` window (221 → 255 ms at sf0.1,
+  *    builder → text medians of interleaved runs, `local[4]`);
   *  - no oracle (rows-only): c_current_date, c_approx_distinct,
   *    c_approx_quantile.
   *
@@ -776,42 +778,9 @@ object TierC {
     * after t1, t3 = first purchase at or after t2 — so the whole funnel
     * is ONE shuffle on user_id with three window passes over it, never a
     * per-stage self-join of the events table. All-integer microsecond
-    * comparisons; the summary is four exact counts. */
-  /** Shared funnel staging (r8 VERDICT #2/"what's wrong" #2: the bounded
-    * and unbounded funnels duplicated ~25 lines that could drift): stage
-    * t(n) = first qualifying event at or after t(n-1), optionally also
-    * within `horizonUs` of it. `None` = the unbounded funnel; `Some(h)` =
-    * the time-bounded form. The no-horizon branch adds no predicate at
-    * all, so the unbounded plan is byte-identical to the pre-refactor
-    * one. */
-  private def funnelStaged(s: SparkSession, dir: String,
-      horizonUs: Option[Long]): DataFrame = {
-    val e = t(s, dir, "events")
-      .select(col("user_id"), col("event_type"), eventUs.as("us"))
-    val w = Window.partitionBy(col("user_id"))
-    def stage(evt: String, prev: Option[String]): Column = {
-      val base = prev match {
-        case None => col("event_type") === evt
-        case Some(p) =>
-          val after = col("event_type") === evt && col("us") >= col(p)
-          horizonUs.fold(after)(h => after && col("us") <= col(p) + h)
-      }
-      min(when(base, col("us"))).over(w)
-    }
-    val staged = e
-      .withColumn("t1", stage("view", None))
-      .withColumn("t2", stage("click", Some("t1")))
-      .withColumn("t3", stage("purchase", Some("t2")))
-      .select(col("user_id"), col("t1"), col("t2"), col("t3"))
-      .distinct()
-    staged.agg(count(lit(1)).as("n_users"),
-      sum(when(col("t1").isNotNull, 1L).otherwise(0L)).as("n_view"),
-      sum(when(col("t2").isNotNull, 1L).otherwise(0L)).as("n_view_click"),
-      sum(when(col("t3").isNotNull, 1L).otherwise(0L)).as("n_full_funnel"))
-  }
-
-  /** Oracle twin of `funnelStaged`, parameterized the same way so the two
-    * dialects cannot drift independently of each other. */
+    * comparisons; the summary is four exact counts. `horizonUs` gives
+    * the time-bounded form (each stage also within `h` of the prior);
+    * `None` adds no predicate. */
   private def funnelStagedSql(horizonUs: Option[Long]): String = {
     def bound(prev: String): String =
       horizonUs.fold("")(h => s" AND us <= $prev + $h")
@@ -836,20 +805,15 @@ object TierC {
        |FROM u""".stripMargin
   }
 
-  val funnel: Q = (s, dir) => funnelStaged(s, dir, None)
-
   val funnelSql: String = funnelStagedSql(None)
 
   /** Time-bounded funnel — the form real funnels take: each stage must
     * fire within a horizon of the prior stage (view → click within 7
     * days → purchase within 7 days of the click), not merely after it.
-    * Identical plan shape to `funnel` (ONE user_id shuffle, three chained
-    * window passes — PlanSpec gates both); the horizon is one extra
-    * integer bound per stage over exact microsecond epochs. */
-  val funnelWindow: Q = (s, dir) =>
-    funnelStaged(s, dir, Some(604800000000L)) // 7 days in microseconds
-
-  val funnelWindowSql: String = funnelStagedSql(Some(604800000000L))
+    * Identical plan shape to the funnel (ONE user_id shuffle, three
+    * chained window passes — PlanSpec gates both). */
+  val funnelWindowSql: String =
+    funnelStagedSql(Some(604800000000L)) // 7 days in microseconds
 
   /** Batch sessionization over events — the relational twin of
     * streaming.Streams.sessionCounts: gap-based session ids via
@@ -860,21 +824,6 @@ object TierC {
     * lag order, so session assignment is order-insensitive. Scale: both
     * windows partition by user_id — state is per-user and the shuffle is
     * one hash partition by user, the same key the streaming twin uses. */
-  val sessionize: Q = (s, dir) => {
-    val gapUs = 21600000000L // 6 hours
-    val e = t(s, dir, "events")
-      .select(col("user_id"), eventUs.as("ts_us"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    e.withColumn("is_new",
-        when(col("ts_us") - lag(col("ts_us"), 1).over(w) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("sid", sum(col("is_new")).over(run).cast(LongType))
-      .groupBy(col("user_id"), col("sid").as("session_id"))
-      .agg(min(col("ts_us")).as("start_us"), count(lit(1)).as("n_events"))
-      .orderBy(col("user_id"), col("start_us"))
-  }
-
   val sessionizeSql: String =
     """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
       |m AS (SELECT user_id, ts_us,
@@ -1360,9 +1309,9 @@ object TierC {
     "c_json_extract" -> jsonExtract,
     "c_event_hourly" -> eventHourly,
     "c_gapfill" -> gapfill,
-    "c_sessionize" -> sessionize,
-    "c_funnel" -> funnel,
-    "c_funnel_window" -> funnelWindow,
+    "c_sessionize" -> q(sessionizeSql),
+    "c_funnel" -> q(funnelSql),
+    "c_funnel_window" -> q(funnelWindowSql),
     "c_retention" -> q(retentionSql),
     "c_interval" -> q(intervalSql),
     "c_is_not_null" -> q(isNotNullSql),

@@ -382,8 +382,8 @@ object TierCSql {
   // `functions/DuckdbCompat` via SparkSessionExtensions): these two
   // witnesses run IDENTICAL text on both engines — DuckDB executes its
   // native functions, Spark executes the injected aliases, which build
-  // the native Catalyst expressions (string_split quotes its literal
-  // separator into Spark's regex split; strftime's %-codes translate to
+  // the native Catalyst expressions (string_split spells its separator
+  // as a regex that matches it literally; strftime's %-codes translate to
   // java.time patterns at plan time). NULLIF guards the one value-level
   // divergence met while building: DuckDB's array_to_string yields NULL
   // on an empty list where Spark's array_join yields ''.

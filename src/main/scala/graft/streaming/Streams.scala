@@ -258,12 +258,12 @@ object Streams {
       .start()
 
   /** Streaming twin of `p_chunk_docs`: overlap-window chunking on the
-    * document stream via `TextOps.withChunks` VERBATIM — stateless Column
-    * work (explode + slice), so each micro-batch is pure map work with no
-    * watermark or keyed state, and the batch and stream chunkers cannot
-    * drift. Non-text input columns (doc_id, event time) ride through onto
-    * every chunk row, so a downstream windowed aggregate can watermark on
-    * the original event time. */
+    * document stream via `TextOps.withChunks` — stateless Column work
+    * (explode + slice), so each micro-batch is pure map work with no
+    * watermark or keyed state; StreamsSpec checks its chunks against the
+    * declared query's. Non-text input columns (doc_id, event time) ride
+    * through onto every chunk row, so a downstream windowed aggregate can
+    * watermark on the original event time. */
   def chunkStream(docs: DataFrame): DataFrame =
     graft.queries.TextOps.withChunks(docs)
 

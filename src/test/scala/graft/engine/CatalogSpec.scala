@@ -295,4 +295,19 @@ class CatalogSpec extends AnyFunSuite {
     } == 0)
     assert(range.contains(("id", 2L, Long.MaxValue)))
   }
+
+  test("DuckDB's BOOL casts and binds columns= through the one type map") {
+    assert(Engine.sql(spark, "SELECT CAST(1 AS BOOL)").head().getBoolean(0))
+    assert(Engine.sql(spark, "SELECT 1::BOOL").head().getBoolean(0))
+    assert(Engine.sql(spark, "SELECT CAST('t' AS BOOL)").head().getBoolean(0))
+    // columns= maps through the same names, and refuses what it lacks
+    assert(Catalog.duckTypeToSpark("bool") == "BOOLEAN")
+    assert(Catalog.duckTypeToSpark("VARCHAR") == "STRING")
+    assert(Catalog.duckTypeToSpark("HUGEINT") == "DECIMAL(38,0)")
+    assert(Catalog.duckTypeToSpark("numeric (10, 2)") == "DECIMAL(10, 2)")
+    Seq("FANCYTYPE", "INT[]", "VARCHAR(10)", "STRUCT(a INT)").foreach { t =>
+      val e = intercept[IllegalArgumentException](Catalog.duckTypeToSpark(t))
+      assert(e.getMessage.contains("not mapped"), t)
+    }
+  }
 }

@@ -19,13 +19,76 @@ class DuckdbCompatSpec extends AnyFunSuite {
     assert(one("SELECT string_split('a.b.c', '.')") ==
       Seq("a", "b", "c"))
     assert(one("SELECT string_split('a|b', '|')") == Seq("a", "b"))
-    // computed separators are quoted too (the \\Q..\\E wrap is built
-    // around the expression, not the literal)
+    // computed separators are quoted too (the pattern is spelled per
+    // row from the separator's value)
     assert(one("SELECT string_split('x**y', repeat('*', 2))") ==
       Seq("x", "y"))
     // the regex flavor keeps regex semantics
     assert(one("SELECT string_split_regex('a1b22c', '[0-9]+')") ==
       Seq("a", "b", "c"))
+  }
+
+  /** A Spark SQL string literal for any text (backslash escapes). */
+  private def sqlLit(s: String): String =
+    "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+  test("string_split returns DuckDB 1.0's lists, separator by separator") {
+    // (input, separator, DuckDB 1.0's string_split(input, separator))
+    val metas = ".$|()[]{}^?*+-".map(c => (s"x${c}y$c${c}z", c.toString,
+      Seq("x", "y", "", "z")))
+    val cases = Seq(
+      ("a b  c", " ", Seq("a", "b", "", "c")),
+      (" a ", " ", Seq("", "a", "")),
+      ("a\\b\\\\c", "\\", Seq("a", "b", "", "c")),
+      ("a--b-c---d", "--", Seq("a", "b-c", "-d")),
+      ("a\\Eb\\E", "\\E", Seq("a", "b", "")),
+      ("a\\Q.b", "\\Q.", Seq("a", "b")),
+      ("a\uD83D\uDE00b", "\uD83D\uDE00", Seq("a", "b")),
+      ("abc", "", Seq("a", "b", "c")),
+      ("", "", Seq("")),
+      ("", " ", Seq("")),
+      ("", "--", Seq(""))) ++ metas
+    cases.foreach { case (in, sep, want) =>
+      assert(one(s"SELECT string_split(${sqlLit(in)}, ${sqlLit(sep)})") ==
+        want, s"string_split(${sqlLit(in)}, ${sqlLit(sep)})")
+    }
+    // NULL input gives NULL; a NULL separator leaves the string whole
+    assert(one("SELECT string_split(NULL, ' ')") == null)
+    assert(one("SELECT string_split('a b', NULL)") == Seq("a b"))
+    assert(one("SELECT string_split(NULL, NULL)") == null)
+    assert(one("SELECT string_split('', NULL)") == Seq(""))
+    // computed separators, one per row, NULL and '' included
+    assert(one("SELECT string_split('aXbXc', upper('x'))") ==
+      Seq("a", "b", "c"))
+    // over range(), not VALUES, so the generated code runs the per-row call
+    val rows = spark.sql("SELECT string_split(s, sep) FROM (SELECT id," +
+      " element_at(array('a b', 'a,b', 'a.b', 'abc', 'a--b'), i) AS s," +
+      " element_at(array(NULL, ',', '.', '', '--'), i) AS sep" +
+      " FROM (SELECT id, CAST(id AS INT) + 1 AS i FROM range(5)))" +
+      " ORDER BY id")
+      .collect().map(_.getSeq[String](0)).toSeq
+    assert(rows == Seq(Seq("a b"), Seq("a", "b"), Seq("a", "b"),
+      Seq("a", "b", "c"), Seq("a", "b")))
+  }
+
+  test("string_split plans a one-character literal as a fast-path pattern") {
+    // String.split skips Pattern compilation for one char, or a `\`
+    // and one non-alphanumeric char; the `\Q…\E` form always compiles
+    def pattern(sep: String): Any = spark.sql(
+      s"SELECT string_split(s, ${sqlLit(sep)}) FROM VALUES ('a') v(s)")
+      .queryExecution.analyzed.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.catalyst.expressions.StringSplit =>
+          e.regex
+      }).head match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
+          String.valueOf(v)
+        case other => other
+      }
+    assert(pattern(" ") == " ")
+    assert(pattern(",") == ",")
+    assert(pattern(".") == "\\.")
+    assert(pattern("\\") == "\\\\")
+    assert(pattern("--") == "\\Q--\\E")
   }
 
   test("list family maps to the native array expressions") {

@@ -135,7 +135,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("c_funnel: one events scan, windows share one user_id partition") {
-    val tree = graft.engine.Engine.explain(TierC.funnel(spark, dir), "simple")
+    val tree = graft.engine.Engine.explain(
+      graft.SparkEntry.queries("c_funnel")(spark, dir), "simple")
     val scans = "Scan parquet".r.findAllIn(tree).size
     assert(scans == 1, s"funnel must scan events once, saw $scans:\n$tree")
     // the three chained stage windows must reuse ONE user_id exchange,
@@ -225,7 +226,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("c_funnel_window: same one-scan one-shuffle shape as c_funnel") {
     val tree = graft.engine.Engine.explain(
-      TierC.funnelWindow(spark, dir), "simple")
+      graft.SparkEntry.queries("c_funnel_window")(spark, dir), "simple")
     val scans = "Scan parquet".r.findAllIn(tree).size
     assert(scans == 1, s"bounded funnel must scan events once:\n$tree")
     val userShuffles = "hashpartitioning\\(user_id".r.findAllIn(tree).size
@@ -523,7 +524,7 @@ class PlanSpec extends AnyFunSuite {
     // chunking is per-row explode+slice work; the only exchanges allowed
     // are the top-k on doc_id (limit 200) and the final sort — no
     // aggregate or join exchange may appear
-    val p = planOf(TextOps.chunkDocs(spark, dir))
+    val p = planOf(graft.SparkEntry.queries("p_chunk_docs")(spark, dir))
     assert(!p.contains("Join") && !p.contains("HashAggregate"),
       s"chunking must not join or aggregate:\n$p")
     assert(p.contains("Generate") || p.contains("explode"),

@@ -483,6 +483,12 @@ class StreamsSpec extends AnyFunSuite {
       s"stream chunks drifted from batch: ${(streamed diff batch).take(3)}" +
         s" / ${(batch diff streamed).take(3)}")
     assert(streamed.nonEmpty && streamed.map(_._1).size >= 30)
+    // the declared p_chunk_docs is its DuckDB text: same chunks for the
+    // same documents (its first 200 doc_ids include these 30)
+    val declared = rows(graft.SparkEntry.queries("p_chunk_docs")(
+      spark, "/root/testdata/sf0.001").filter(col("doc_id") <= docs.last._1))
+    assert(declared == batch,
+      s"declared chunks drifted from batch: ${(declared diff batch).take(3)}")
   }
 
   test("compactDedupIndex: probe results unchanged, bytes shrink") {
