@@ -17,6 +17,9 @@ package graft
   *   queries re-run once and keep the min, so a contended first pass
   *   recovers instead of shipping a flagged artifact (`n_retried` in the
   *   JSON reports how many healed).
+  * - `SPARK_GRAFT_BENCH_ONLY` (comma-separated names, a trailing `*` for a
+  *   prefix) times a subset: only the queries and probes it selects, no
+  *   artifact builds, and `bench_full.json` is left as it is.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -152,11 +155,10 @@ object Bench {
     // elapsed time) but is COUNTED in probes_errors (ADVICE r11) so a
     // dead probe reads as a failure in the JSON, not as a fast query.
     var probesErrors = 0
-    val probesTotal = SparkEntry.queries.toSeq
-      .filter(_._1.startsWith("probe_")).sortBy(_._1)
-      .map { case (name, fn) =>
+    val probesTotal = probesTimed(SparkEntry.queries.keys, only)
+      .map { name =>
         val t0 = System.nanoTime()
-        try { run(fn); (System.nanoTime() - t0) / 1e9 }
+        try { run(SparkEntry.queries(name)); (System.nanoTime() - t0) / 1e9 }
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -168,9 +170,11 @@ object Bench {
     // queries amortize training and layout writes away; time the real
     // builds once, AFTER the timed query set, so the 100 TB story carries
     // the amortized cost in the same JSON. Failed legs report -1 and are
-    // excluded from the subtotal.
+    // excluded from the subtotal. A subset run skips them: `builds` reads
+    // {} and `builds_total` 0.0.
     val builds: Seq[(String, Double)] =
-      try queries.Builds.timedBuilds(spark, sfDir)
+      if (only.isDefined) Seq.empty
+      else try queries.Builds.timedBuilds(spark, sfDir)
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] builds leg failed: ${e.getMessage}")
@@ -250,6 +254,14 @@ object Bench {
   private[graft] def selects(entries: Seq[String], name: String): Boolean =
     entries.exists(e =>
       if (e.endsWith("*")) name.startsWith(e.dropRight(1)) else name == e)
+
+  /** The `probe_*` names a run times after its query set, sorted: every
+    * probe on a full run, and only the probes a `SPARK_GRAFT_BENCH_ONLY`
+    * list selects on a subset run. */
+  private[graft] def probesTimed(
+      names: Iterable[String], only: Option[Seq[String]]): Seq[String] =
+    names.filter(n => n.startsWith("probe_") && only.forall(selects(_, n)))
+      .toSeq.sorted
 
   /** The healthy-host single-thread calibration anchor (BASELINE.md:
     * round 15 recorded calib_sec = 0.75 s on a clean host). History

@@ -56,11 +56,6 @@ object Catalog {
     finally stream.close()
   }
 
-  /** A3: flat file-list fallback (paths already known). */
-  def collectFromList(paths: Seq[String]): Seq[ImportedFile] =
-    paths.filter(isSupportedFilePath)
-      .map(p => ImportedFile(p, Files.size(Paths.get(p))))
-
   /** Temp-view name for a relative path: the reference keeps the raw path as
     * the table name (path-addressable); Spark view names can't contain
     * `/`/`.`, so sanitize deterministically. */

@@ -105,25 +105,4 @@ object Export {
     * alternative, readable back through `Catalog`'s `.orc` route). */
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
-
-  /** Arrow IPC stream export — the reference's native result surface (its
-    * queries return Arrow Tables, `/root/reference/src/duckdb.ts:46-49`),
-    * so a caller migrating from it can consume bit-compatible Arrow.
-    * Record batches are serialized DISTRIBUTED (one IPC message per
-    * partition chunk, executors do the columnar encoding) and streamed to
-    * `out` one batch at a time — the driver holds one partition's
-    * batches, never the result, unlike `toCsvParts`. The price is one
-    * job per partition, run one after another (`toLocalIterator`). */
-  def toArrowStream(df: DataFrame, out: java.io.OutputStream): Unit = {
-    import org.apache.arrow.vector.ipc.{ArrowStreamWriter, WriteChannel}
-    import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
-    import org.apache.spark.sql.graft.ArrowBridge
-    val ch = new WriteChannel(java.nio.channels.Channels.newChannel(out))
-    MessageSerializer.serialize(ch, ArrowBridge.arrowSchema(df))
-    // the bridge emits fully-framed IPC record-batch messages; pull them
-    // in partition order and append verbatim.
-    ArrowBridge.arrowBatches(df).toLocalIterator
-      .foreach(batch => ch.write(batch))
-    ArrowStreamWriter.writeEndOfStream(ch, IpcOption.DEFAULT)
-  }
 }

@@ -1,7 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
   * BINARY columns with typed metadata, decoded/feature-extracted in
@@ -9,10 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * Metadata decode is REAL: `HeaderDecoder` parses PNG/JPEG/GIF dimensions
   * straight from the container header bytes (no codec library needed for
-  * dims — they live in the headers by spec). Only the pixel-level steps
-  * (full decode, embedding, resize, frame extraction) remain clearly-marked
-  * deterministic stubs, because no codec ships in this environment. The
-  * Spark-side shape is the real one either way:
+  * dims — they live in the headers by spec). Pixel-level steps (full
+  * decode, embedding, resize, frame extraction) are not offered, because
+  * no codec ships with the engine. The Spark-side shape is the one a real
+  * decoder would use:
   *  - media rides as `binary` next to its metadata; Spark never interprets
   *    it, so pruning/pushdown on the metadata columns still works and a
   *    query that doesn't touch `media` never reads those parquet pages;
@@ -21,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    per row;
   *  - at 100 TB: size partitions by `spark.sql.files.maxPartitionBytes` so
   *    a partition of blobs fits executor memory; derived features (dims,
-  *    fingerprints, frame samples) persist as ordinary columns for
+  *    fingerprints, frame counts) persist as ordinary columns for
   *    downstream relational work.
   */
 object Multimodal {
@@ -427,7 +426,6 @@ object Multimodal {
   def withDecodedMeta(
       df: DataFrame, binaryCol: String,
       decoder: Decoder = HeaderDecoder): DataFrame = {
-    val spark = df.sparkSession
     import org.apache.spark.sql.catalyst.encoders.RowEncoder
     import org.apache.spark.sql.types._
     val metaType = StructType(Seq(
@@ -444,33 +442,4 @@ object Multimodal {
     }(RowEncoder.encoderFor(outSchema))
     out
   }
-
-  /** Deterministic frame sampling stub: n evenly spaced 16-byte slices of
-    * the payload stand in for decoded video frames; the output shape
-    * (array<binary> per row, exploded downstream) is the real one. */
-  def sampleFrames(df: DataFrame, binaryCol: String, n: Int): DataFrame =
-    df.withColumn("frames",
-      expr(s"transform(sequence(0, $n - 1), i -> " +
-        s"substring($binaryCol, CAST(i * greatest(length($binaryCol) div $n, 1) AS INT) + 1, 16))"))
-
-  /** Feature-extraction stub: a `dim`-float embedding per payload, derived
-    * deterministically from content hashes (values in [-1, 1]). A real
-    * model replaces the expression with a batched encoder behind the same
-    * column contract: `array<float>` named `embedding`, ready for the
-    * `p_sim_*` ANN path (Similarity.scala) unchanged. Pure codegen'd SQL
-    * expressions — no UDF, no per-row JVM boundary — so it runs inside
-    * whole-stage codegen and scales map-side with zero shuffles. */
-  def withStubEmbedding(
-      df: DataFrame, binaryCol: String, dim: Int): DataFrame =
-    df.withColumn("embedding",
-      expr(s"""transform(sequence(0, $dim - 1), i ->
-        |  CAST((CAST(CONV(SUBSTRING(md5(concat(base64($binaryCol), CAST(i AS STRING))), 1, 7), 16, 10) AS DOUBLE)
-        |        / 134217728.0 - 1.0) AS FLOAT))""".stripMargin))
-
-  /** Resize stub: clamps the payload to `maxBytes` (real impl: decode →
-    * scale → re-encode inside the same per-partition decoder discipline as
-    * `withDecodedMeta`). Keeps the binary column contract. */
-  def resizeStub(df: DataFrame, binaryCol: String, maxBytes: Int): DataFrame =
-    df.withColumn(binaryCol,
-      expr(s"substring($binaryCol, 1, $maxBytes)"))
 }

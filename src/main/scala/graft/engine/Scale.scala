@@ -3,11 +3,11 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale techniques that need explicit opt-in: bucketing for co-located
-  * joins and salting for skewed aggregations. (Pushdown, AQE partition
-  * coalescing and skew-join splitting are already on by default in
-  * `Session`; these two are the layout/rewrite decisions Spark cannot make
-  * for you.)
+/** Physical layouts that need explicit opt-in: bucketing for co-located
+  * joins, and partitioning, range-sorting and Z-ordering for file and
+  * row-group skipping. (Pushdown, AQE partition coalescing and skew-join
+  * splitting are already on by default in `Session`; these are the layout
+  * decisions Spark cannot make for you.)
   */
 object Scale {
 
@@ -87,37 +87,4 @@ object Scale {
       .sortWithinPartitions("_z")
       .drop("_z")
       .write.mode("overwrite").parquet(path)
-
-  /** Two-stage salted aggregation for skewed group keys: stage 1 groups on
-    * (key, salt) — splitting a hot key across `nSalts` reducers — stage 2
-    * merges the partials per key. The salt derives from stable row content
-    * (hash of all columns), keeping the result deterministic. Correct for
-    * decomposable aggregates (count/sum/min/max — partial+merge). */
-  def saltedSum(
-      df: DataFrame, key: Column, value: Column, nSalts: Int): DataFrame = {
-    val salt = pmod(hash(df.columns.map(col).toSeq: _*), lit(nSalts))
-    df.groupBy(key.as("k"), salt.as("_salt"))
-      .agg(sum(value).as("_partial"))
-      .groupBy(col("k"))
-      .agg(sum(col("_partial")).as("total"))
-  }
-
-  /** Input-split sizing for wide-row scans (the Multimodal guidance as a
-    * utility): `spark.sql.files.maxPartitionBytes` defaults to 128 MB of
-    * FILE bytes per task, but a task's in-memory footprint is
-    * split bytes × the decode expansion (a compressed image/audio blob
-    * can inflate 5-20× when decoded). Set the split so that
-    * split × expansion ≈ the memory budget per task. Returns the applied
-    * byte count; pass expansionFactor 1.0 for plain relational scans. */
-  def sizeScanPartitions(
-      spark: org.apache.spark.sql.SparkSession,
-      taskMemoryBudgetBytes: Long, expansionFactor: Double): Long = {
-    require(expansionFactor >= 1.0 && taskMemoryBudgetBytes > 0,
-      "expansion >= 1 and a positive budget")
-    // floor at 4 MB: below that, per-task scheduling overhead dominates
-    val bytes = math.max(4L << 20,
-      (taskMemoryBudgetBytes / expansionFactor).toLong)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", bytes.toString)
-    bytes
-  }
 }

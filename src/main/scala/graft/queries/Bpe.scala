@@ -145,27 +145,6 @@ object Bpe {
     vocab(s, dir).withColumn("toks", expr(symsExpr))
   }
 
-  /** Per-document BPE token count as ONE map-side expression over the
-    * `text` column, with the merges inlined as literals — the transform
-    * the STREAMING twin shares verbatim (`Streams.tokenizeStream`). The
-    * batch packing path instead tokenizes the (small) vocabulary once
-    * and broadcast-joins it; this form trades that join for pure per-row
-    * work, which is the right shape when rows arrive one micro-batch at
-    * a time and there is no corpus to pre-aggregate. The outer fold's
-    * lambda variables are renamed (tacc/tx, w) so they never shadow the
-    * merge folds' (acc, x). */
-  private[graft] def withTokenCount(
-      docs: DataFrame, ms: Seq[(Long, String, String)]): DataFrame = {
-    val perWord = ms.foldLeft("split(w, '')") {
-      case (e, (_, a, b)) => mergeFold(e, a, b)
-    }
-    docs.withColumn("n_tok", expr(
-      s"""aggregate(
-         |  transform(filter(split(text, ' '), w -> w <> ''),
-         |    w -> size($perWord)),
-         |  0, (tacc, tx) -> tacc + tx)""".stripMargin).cast(LongType))
-  }
-
   /** `p_tokenize_bpe`: the tokenized vocabulary — each word's BPE token
     * sequence and count under the trained artifact, most frequent first.
     * LIMIT 50 covers the full synthetic vocabulary (31 words); on a real

@@ -223,11 +223,8 @@ object Dedup {
     * index (r12): min over the identical distinct set, so values — and
     * every downstream hash — are unchanged (the oracle keeps its
     * explode+MIN formulation as the cross-engine witness), but the
-    * shuffle is gone and the transform becomes source-agnostic: the
-    * streaming near-dup twin (`Streams.nearDupStream`) applies THIS
-    * function verbatim, so the batch and stream paths cannot drift.
-    * Docs with fewer than 3 words have no shingles and drop out, exactly
-    * as they fall out of the batch index. */
+    * shuffle is gone. Docs with fewer than 3 words have no shingles and
+    * drop out, exactly as they fall out of the batch index. */
   private[graft] def withMinhashSig(docs: DataFrame): DataFrame = {
     // graft_md5_long ≡ CAST(conv(substring(md5(sh),1,7),16,10) AS BIGINT)
     // (one digest-fold expression; the lambda body is interpreted, so the
@@ -244,9 +241,7 @@ object Dedup {
           .as(s"mh$i")): _*)
   }
 
-  /** 4-row band keys k0..k3 from the mh0..mh15 signature columns — the
-    * banding transform, shared verbatim by the batch band relation and
-    * the streaming twin. */
+  /** 4-row band keys k0..k3 from the mh0..mh15 signature columns. */
   private[graft] def withBandKeys(sig: DataFrame): DataFrame =
     (0 until 4).foldLeft(sig) { (df, b) =>
       df.withColumn(s"k$b",
@@ -1144,16 +1139,13 @@ object Dedup {
 
   /** The eval side's (g, eval_doc) n-gram relation — small by nature
     * (benchmarks are thousands of docs), the broadcast build side. */
-  private[graft] def evalGramsOf(evalDocs: DataFrame): DataFrame =
+  private def evalGramsOf(evalDocs: DataFrame): DataFrame =
     gram5(evalDocs).groupBy(col("g"))
       .agg(min(col("doc_id")).as("eval_doc"))
 
   /** Contamination flags of `docs` against a prepared eval n-gram
-    * relation: (doc_id, n_hits, eval_doc). Shared by the batch query
-    * and the streaming twin (`Streams.decontaminateStream` runs this
-    * per micro-batch — a doc arrives in exactly one batch, so the
-    * per-batch grouping IS the global per-doc grouping). */
-  private[graft] def contaminatedAgainst(
+    * relation: (doc_id, n_hits, eval_doc). */
+  private def contaminatedAgainst(
       docs: DataFrame, evalGrams: DataFrame): DataFrame =
     gram5(docs.select(col("doc_id"), col("text")))
       .join(broadcast(evalGrams), Seq("g"))

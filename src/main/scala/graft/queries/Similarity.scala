@@ -89,7 +89,7 @@ object Similarity {
   // 8-plane projection ran per row in every LSH/bucket query. The int
   // weight matrix constant-folds to ARRAY<ARRAY<DOUBLE>> once at plan
   // time (exact: |w| ≤ 3), replacing the old per-element CAST.
-  private def bitsExprP(prefix: String, k: Int = 8): String =
+  private def bitsExprP(prefix: String, k: Int): String =
     s"""transform(sequence(0, ${k - 1}), j ->
        |  CASE WHEN graft_dot(embedding,
        |    element_at(CAST(${weightMatrixP(prefix, k)}
@@ -420,7 +420,6 @@ object Similarity {
 
   private def recallHarness(s: SparkSession, dir: String,
       corpus: DataFrame, pairsKey: String): DataFrame = {
-    import s.implicits._
     // IVF probe columns: the corpus row's nearest centroid (cent_id) and
     // each query's nprobe=2 nearest centroids (qc1, qc2) — all map-side
     // argmaxes over the inlined 16-entry codebook, exactly as in ivfFlat.
@@ -876,10 +875,8 @@ object Similarity {
     * sides: `array_position` finds the FIRST occurrence of the max, and
     * the codebook array is ordered by centroid id. */
   /** Codebook fetch: 16 rows (the coarse quantizer). At scale this is
-    * loading a trained model artifact, not a data-dependent collect.
-    * Package-visible so the streaming ingester's spec can load the same
-    * artifact the batch paths use. */
-  private[graft] def codebook(emb: DataFrame): Seq[(Long, Array[Float])] =
+    * loading a trained model artifact, not a data-dependent collect. */
+  private def codebook(emb: DataFrame): Seq[(Long, Array[Float])] =
     emb.filter(col("vec_id") < 16)
       .select(col("vec_id"), col("embedding")).collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -1042,10 +1039,8 @@ object Similarity {
   // one. A future variant with externally supplied codebooks must fold a
   // codebook fingerprint into the key.
   /** embedding → assigned coarse-centroid id (`cent_id`, INT), map-side:
-    * the ONE transform both the batch IVF-at-rest writer and the
-    * streaming ingester (`Streams.ivfIngest`) run, so the layout a
-    * stream appends to and the layout the batch rewrite produces cannot
-    * drift. Registers `cosine_sim` idempotently — the expr depends on
+    * the one transform both IVF-at-rest layouts are written with.
+    * Registers `cosine_sim` idempotently — the expr depends on
     * it. */
   private[graft] def withCentroid[T: CentElem](
       df: DataFrame, cents: Seq[(Long, Array[T])]): DataFrame = {
@@ -1230,8 +1225,8 @@ object Similarity {
   val pqSearch: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
     // single artifact-load path: the same vec_id-sorted codebook() fetch
-    // kmeansStep and Streams.ivfIngest use (ADVICE r12 — two inline
-    // collect paths for the same artifact can drift)
+    // kmeansStep uses (ADVICE r12 — two inline collect paths for the same
+    // artifact can drift)
     val withIds: Seq[(Long, Array[Float])] = codebook(emb)
     if (withIds.isEmpty || !withIds.exists(_._1 == 0L))
       emb.select(col("vec_id"), col("label"), lit(0.0).as("adc_dist"))

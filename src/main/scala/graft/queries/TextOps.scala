@@ -25,9 +25,8 @@ import Tables._
   * measured cheaper) and no slower in the `graft.Bench` A/B, IS that text
   * (`Tables.q`, registry below): p_text_tf, p_text_quality (its top-k
   * plans as one TakeOrderedAndProject where the builder sorted twice),
-  * p_pack_sequences, p_pipeline_e2e, p_chunk_docs (`withChunks` stays
-  * for `Streams.chunkStream`). A DataFrame builder stays only for one of
-  * these reasons:
+  * p_pack_sequences, p_pipeline_e2e, p_chunk_docs. A DataFrame builder
+  * stays only for one of these reasons:
   *  - the text is slower at sf0.1 (builder → text medians of interleaved
   *    runs, `local[4]`): p_text_repetition 143 → 171 ms and
   *    p_text_langid 275 → 401 ms (its text splits each document once per
@@ -446,33 +445,6 @@ object TextOps {
   // an md5 of the joined tokens as the cross-engine content witness.
   private val ChunkC = 32
   private val ChunkS = 24
-
-  /** The chunking transform over any frame carrying (doc_id, text), for
-    * `Streams.chunkStream`: the arithmetic of `chunkDocsSql` as stateless
-    * Column work (StreamsSpec checks the two give the same chunks).
-    * Input columns other than `text` pass through onto every chunk row
-    * (the stream keeps its event-time column for watermarking). */
-  private[graft] def withChunks(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val keep = docs.columns.filterNot(_ == "text").map(col).toSeq
-    docs
-      .withColumn("ws", split(col("text"), " "))
-      .withColumn("n", size(col("ws")))
-      .withColumn("nchunks", expr(
-        s"""CASE WHEN n <= $ChunkC THEN 1
-           |  ELSE 1 + (n - $ChunkC + ${ChunkS - 1}) div $ChunkS END"""
-          .stripMargin))
-      .select(keep ++ Seq(col("ws"),
-        explode(expr("sequence(0, nchunks - 1)")).as("chunk_id")): _*)
-      .select(keep ++ Seq(
-        col("chunk_id").cast("long").as("chunk_id"),
-        expr(s"CAST(chunk_id * $ChunkS + 1 AS BIGINT)").as("start_tok"),
-        expr(s"CAST(size(slice(ws, chunk_id * $ChunkS + 1, $ChunkC)) " +
-          "AS BIGINT)").as("n_tokens"),
-        expr(s"md5(concat_ws(' ', " +
-          s"slice(ws, chunk_id * $ChunkS + 1, $ChunkC)))").as("chunk_md5"))
-        : _*)
-  }
 
   val chunkDocsSql: String =
     s"""WITH b AS (SELECT doc_id, text FROM documents

@@ -268,15 +268,13 @@ object TierC {
     * Spark `array_join(array_sort(collect_list(...)))`. collect_list order
     * is partition-dependent, so the EXPLICIT sort is what makes the result
     * deterministic at any parallelism — never rely on arrival order. */
-  /** Two-stage SALTED aggregation as a checked operator (the skew
-    * mitigation `Scale.saltedSum` provides as a utility): stage 1 groups
-    * on (key, salt) so a hot key splits across `nSalts` reducers, stage 2
-    * merges the partials per key. Declared-query-checkable BECAUSE the
-    * inner sums are exact DECIMAL — decimal addition is associative, so
-    * re-associating by salt cannot change the result and the oracle is
-    * the PLAIN group-by (a double-summed salting would differ by float
-    * association order — the reason saltedSum's spec compares with a
-    * tolerance while this query hash-matches exactly). The salt derives
+  /** Two-stage SALTED aggregation, the skew mitigation for a hot group
+    * key: stage 1 groups on (key, salt) so a hot key splits across 13
+    * reducers, stage 2 merges the partials per key. Declared-query-
+    * checkable BECAUSE the inner sums are exact DECIMAL — decimal
+    * addition is associative, so re-associating by salt cannot change
+    * the result and the oracle is the PLAIN group-by (a double-summed
+    * salting would differ by float association order). The salt derives
     * from stable row content, so the split is deterministic too. */
   val saltedAgg: Q = (s, dir) => {
     val li = t(s, dir, "lineitem")
@@ -815,15 +813,14 @@ object TierC {
   val funnelWindowSql: String =
     funnelStagedSql(Some(604800000000L)) // 7 days in microseconds
 
-  /** Batch sessionization over events — the relational twin of
-    * streaming.Streams.sessionCounts: gap-based session ids via
+  /** Batch sessionization over events: gap-based session ids via
     * lag + running sum, all in exact integer MICROSECONDS (epoch
     * arithmetic on integers, so oracle parity is exact; outputting the
     * start as bigint micros also sidesteps temporal canonicalization).
     * Ties on ts_us are harmless: equal timestamps give diff 0 on either
     * lag order, so session assignment is order-insensitive. Scale: both
     * windows partition by user_id — state is per-user and the shuffle is
-    * one hash partition by user, the same key the streaming twin uses. */
+    * one hash partition by user. */
   val sessionizeSql: String =
     """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
       |m AS (SELECT user_id, ts_us,

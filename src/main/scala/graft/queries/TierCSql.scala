@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 import Tables._
 
 /** Tier C queries routed through the ENGINE's SQL path — `Engine.sql` /

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   AttributeSet, BindReferences, Expression, InterpretedProjection,
-  NamedExpression, SortOrder, SubqueryExpression}
+  SortOrder, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.classic.Dataset
@@ -16,7 +16,7 @@ import org.apache.spark.util.collection.Utils
   * — what a display needs, without the second Catalyst run, codegen and
   * job set a `count()` next to a `limit(n).collect()` costs. Lives in an
   * `org.apache.spark.sql` subpackage for the `private[sql]` execution
-  * hooks, like `ArrowBridge`.
+  * hooks.
   *
   * The optimized plan's root is read as `[Project] [global Sort] input`,
   * where the projection and the sort keys count only when they are

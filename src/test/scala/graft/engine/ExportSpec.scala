@@ -210,36 +210,4 @@ class ExportSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getString(1))).toSeq ==
         Seq((1L, "a\"b"), (2L, "x")))
   }
-
-  test("Arrow IPC stream export round-trips through an Arrow reader") {
-    val spark = graft.TestSpark.spark
-    import spark.implicits._
-    val df = Seq((1L, "a", 1.5), (2L, "b", -0.25), (3L, null, 42.0))
-      .toDF("id", "s", "v").orderBy("id")
-    val bytes = new java.io.ByteArrayOutputStream()
-    Export.toArrowStream(df, bytes)
-    // consume with the stock Arrow reader — schema, values, stream end
-    val alloc = new org.apache.arrow.memory.RootAllocator()
-    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
-      new java.io.ByteArrayInputStream(bytes.toByteArray), alloc)
-    try {
-      val root = reader.getVectorSchemaRoot
-      assert(root.getSchema.getFields.size() == 3)
-      val got = Seq.newBuilder[(Long, String, Double)]
-      while (reader.loadNextBatch()) {
-        val ids = root.getVector("id")
-          .asInstanceOf[org.apache.arrow.vector.BigIntVector]
-        val ss = root.getVector("s")
-          .asInstanceOf[org.apache.arrow.vector.VarCharVector]
-        val vs = root.getVector("v")
-          .asInstanceOf[org.apache.arrow.vector.Float8Vector]
-        for (i <- 0 until root.getRowCount)
-          got += ((ids.get(i),
-            if (ss.isNull(i)) null else new String(ss.get(i), "UTF-8"),
-            vs.get(i)))
-      }
-      assert(got.result().sortBy(_._1) ==
-        Seq((1L, "a", 1.5), (2L, "b", -0.25), (3L, null, 42.0)))
-    } finally { reader.close(); alloc.close() }
-  }
 }

@@ -253,30 +253,4 @@ class MultimodalSpec extends AnyFunSuite {
       .selectExpr("id", "meta").orderBy("id").collect().toSeq
     assert(a == b)
   }
-
-  test("frame sampling yields n binary slices per row") {
-    val out = Multimodal.sampleFrames(mediaDf, "media", 3)
-      .selectExpr("id", "size(frames) AS n").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(out.values.forall(_ == 3))
-  }
-
-  test("stub embedding: dim floats in [-1,1], deterministic, ANN-ready") {
-    val out = Multimodal.withStubEmbedding(mediaDf, "media", 8)
-    val rows = out.selectExpr("id", "embedding").orderBy("id").collect()
-    assert(rows.forall(_.getSeq[Float](1).length == 8))
-    assert(rows.forall(_.getSeq[Float](1).forall(v => v >= -1f && v <= 1f)))
-    val again = Multimodal.withStubEmbedding(mediaDf, "media", 8)
-      .selectExpr("id", "embedding").orderBy("id").collect()
-    assert(rows.map(_.getSeq[Float](1)).toSeq ==
-      again.map(_.getSeq[Float](1)).toSeq)
-    // distinct payloads produce distinct vectors (it's a feature, not a fill)
-    assert(rows.map(_.getSeq[Float](1)).distinct.length == rows.length)
-  }
-
-  test("resize stub clamps payload size, keeps the column contract") {
-    val out = Multimodal.resizeStub(mediaDf, "media", 4)
-      .selectExpr("length(media) AS n").collect().map(_.getInt(0))
-    assert(out.forall(_ <= 4))
-  }
 }

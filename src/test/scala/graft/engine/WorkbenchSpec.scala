@@ -78,11 +78,6 @@ class WorkbenchSpec extends AnyFunSuite {
     val byPath = Engine.sql(spark,
       s"SELECT label FROM '${root.resolve("dim.csv")}' WHERE code = 7")
     assert(byPath.collect()(0).getString(0) == "with,comma")
-
-    // Arrow interchange: the journey's result exports as an IPC stream
-    val arrow = new java.io.ByteArrayOutputStream()
-    Export.toArrowStream(df, arrow)
-    assert(arrow.size() > 0)
   }
 
   test("DuckDB-dialect journey: the routed statements compose end to end") {

@@ -144,6 +144,17 @@ class BenchHistorySpec extends AnyFunSuite {
     assert(graft.Bench.selects(Seq("*"), "anything"))
   }
 
+  test("a SPARK_GRAFT_BENCH_ONLY subset times only the probes it selects") {
+    val names = Seq("t1_a", "probe_str", "c_b", "probe_int", "probe_ts_ntz")
+    assert(graft.Bench.probesTimed(names, None) ==
+      Seq("probe_int", "probe_str", "probe_ts_ntz"))
+    assert(graft.Bench.probesTimed(names, Some(Seq("t1_a", "c_b"))).isEmpty)
+    assert(graft.Bench.probesTimed(names, Some(Seq("c_b", "probe_str"))) ==
+      Seq("probe_str"))
+    assert(graft.Bench.probesTimed(names, Some(Seq("probe_*"))) ==
+      Seq("probe_int", "probe_str", "probe_ts_ntz"))
+  }
+
   test("historyMedians reads the recorded history, calib-normalized") {
     val meds = graft.Bench.historyMedians(historyPath)
     assume(Files.exists(historyPath), "no recorded history yet")

@@ -49,28 +49,6 @@ class BpeSpec extends AnyFunSuite {
       "no word compressed — the merges were not applied")
   }
 
-  test("withTokenCount (artifact-inline path) agrees with the vocab join") {
-    // the streaming twin tokenizes each word in place with the inlined
-    // merges; the batch packer tokenizes the vocabulary once and joins.
-    // Same merges chain per word ⇒ identical per-doc sums.
-    import org.apache.spark.sql.functions._
-    val docs = Tables.t(spark, dir, "documents")
-      .select(col("doc_id"), col("lang"), col("text")).limit(50)
-    val direct = Bpe.withTokenCount(docs, Bpe.merges(spark, dir))
-      .select(col("doc_id"), col("n_tok")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val wordToks = Bpe.tokenizeBpe(spark, dir).collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    val expected = docs.select(col("doc_id"), col("text")).collect().map {
-      r =>
-        val toks = r.getString(1).split(" ").filter(_.nonEmpty)
-          .map(wordToks).sum
-        (r.getLong(0), toks)
-    }.toMap
-    assert(direct == expected,
-      "inline tokenization must equal the vocabulary-join accounting")
-  }
-
   test("packing closure: binned token sums equal the vocab-weighted total") {
     // sum of n_tokens over all bins == sum over vocab of freq * n_tok —
     // the token accounting must close end-to-end (explode → broadcast

@@ -368,4 +368,23 @@ class DmlSpec extends AnyFunSuite {
         .collect().map(_.getString(1)).toSeq == Seq("z"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
+
+  test("MERGE replayed with the same source leaves the rows unchanged") {
+    val t = s"dmlspec_replay_p${ProcessHandle.current.pid}"
+    try {
+      val path = twoFileTable(t)
+      import spark.implicits._
+      // one matched key and one fresh key: a replay must update the
+      // matched row to the same value and find the fresh key present
+      val source = Seq((1500L, "m"), (5000L, "n")).toDF("k", "v")
+      def rows: Seq[(Long, String)] = spark.read.parquet(path)
+        .as[(Long, String)].collect().toSeq.sorted
+      Dml.mergeIntoAll(spark, path, source, Seq("k"), Seq("v"))
+      val once = rows
+      assert(once.size == 2001 && once.contains((1500L, "m")) &&
+        once.contains((5000L, "n")))
+      Dml.mergeIntoAll(spark, path, source, Seq("k"), Seq("v"))
+      assert(rows == once, "a replayed merge must not change the rows")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
 }

@@ -173,8 +173,7 @@ class PlanSpec extends AnyFunSuite {
     // withMinhashSig (r12) replaced the 16-parallel-min groupBy over the
     // exploded shingle index: the signature must plan as a single scan +
     // projection of array folds, so any Exchange or (Hash)Aggregate in
-    // its subtree means signature construction regressed to a shuffle —
-    // and the streaming twin would inherit the regression.
+    // its subtree means signature construction regressed to a shuffle.
     import org.apache.spark.sql.functions.col
     val sig = Dedup.withMinhashSig(
       Tables.t(spark, dir, "documents").select(col("doc_id"), col("text")))
