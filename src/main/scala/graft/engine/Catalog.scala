@@ -152,25 +152,21 @@ object Catalog {
     ()
   }
 
-  /** Read one file with extension-based format routing. A parquet
-    * schema comes from the footers, read on the driver
+  /** Read one file with the format its extension names (`readSet`). A
+    * parquet schema comes from the footers, read on the driver
     * (`ParquetFooters`), so registering parquet runs no job; csv and json
     * store no schema, and inferring one still runs a job. */
   def read(spark: SparkSession, absolute: Path): DataFrame = {
     val p = absolute.toString
-    val lower = p.toLowerCase
-    if (lower.endsWith(".parquet")) ParquetFooters.read(spark, Seq(p))
-    else if (lower.endsWith(".csv"))
-      // escape="\"" = RFC-4180 doubled-quote escapes (Spark's default
-      // escape is backslash; DuckDB auto-detects — SURVEY §7.4.2)
-      spark.read.option("header", "true").option("inferSchema", "true")
-        .option("escape", "\"").csv(p)
-    else if (lower.endsWith(".ndjson")) spark.read.json(p)
-    else if (lower.endsWith(".json"))
-      spark.read.option("multiLine", "true").json(p)
-    else if (lower.endsWith(".orc")) spark.read.orc(p)
-    else throw new IllegalArgumentException(s"unsupported format: $p")
+    if (!isSupportedFilePath(p))
+      throw new IllegalArgumentException(s"unsupported format: $p")
+    readSet(spark, formatOf(p), Seq(p), Map.empty)
   }
+
+  /** The format a path's extension names: parquet, csv, json, ndjson or
+    * orc for a supported path (a glob's extension included). */
+  private def formatOf(path: String): String =
+    path.toLowerCase.split('.').last
 
   /** B3 for every supported format: DuckDB (and so the reference's default
     * SQL — `/root/reference/src/App.tsx:16-17`, README examples) accepts a
@@ -245,12 +241,16 @@ object Catalog {
     "read_json" -> "json", "read_json_auto" -> "json",
     "read_ndjson" -> "ndjson", "read_ndjson_auto" -> "ndjson")
 
-  /** One multi-file scan with the table-function's format. Multi-path
-    * parquet always merges schemas by name — DuckDB's
-    * `union_by_name=true` and the A9 union view's contract. `.json`
-    * files read as whole-document JSON (`multiLine`) only when EVERY
-    * path says so; ndjson/mixed sets use the line-delimited reader.
-    * `opts` carries the routed named options (csv header/delim). */
+  /** One scan of a path set in `fmt`: a table function's, a glob's, or
+    * one file's (`read`). A parquet set of several paths or a glob
+    * always merges schemas by name — DuckDB's `union_by_name=true` and
+    * the A9 union view's contract; one plain path reads as it is. csv
+    * reads headered with RFC-4180 doubled-quote escapes (Spark's
+    * default escape is backslash; DuckDB auto-detects — SURVEY
+    * §7.4.2). `.json` files read as whole-document JSON (`multiLine`)
+    * only when EVERY path says so; ndjson/mixed sets use the
+    * line-delimited reader. `opts` carries the routed named options
+    * (csv header/delim). */
   private def readSet(
       spark: SparkSession, fmt: String, paths: Seq[String],
       opts: Map[String, String]): DataFrame = {
@@ -278,7 +278,9 @@ object Catalog {
       }
     fmt match {
       case "parquet" =>
-        ParquetFooters.read(spark, paths, baseOpt + ("mergeSchema" -> "true"))
+        val set = paths.length > 1 || paths.exists(isGlobPath)
+        ParquetFooters.read(spark, paths,
+          if (set) baseOpt + ("mergeSchema" -> "true") else baseOpt)
       case "csv" =>
         // columns= carries an explicit Spark-DDL schema: inference off,
         // header defaulting to FALSE (Spark cannot sniff a header the
@@ -389,8 +391,8 @@ object Catalog {
         // table function over the pattern: the same set view, format by
         // extension, so both spellings share one registration
         if (tableFrom && isGlobPath(t.text)) {
-          val fmt = t.text.toLowerCase.split('.').last
-          edits += ((t, Sql.sqlIdentifier(claimSetView(spark, fmt, Seq(t.text)))))
+          edits += ((t, Sql.sqlIdentifier(
+            claimSetView(spark, formatOf(t.text), Seq(t.text)))))
         } else if (tableFrom) {
           val path = t.text
           val view = claimViewName(spark, path)

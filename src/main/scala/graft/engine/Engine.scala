@@ -473,10 +473,11 @@ object Engine
     *     generated WITHIN GROUP) sort key;
     *   - star-exclude runs before star-replace and columns, which read
     *     the EXCEPT spelling;
-    *   - the literal constructors run after path tables, so a
-    *     `read_parquet([…])` list is consumed as paths first; array-kw,
-    *     map-literal and list-comprehension run before the generic
-    *     literal pass, which would consume their brackets/braces. */
+    *   - the bracket passes run after path tables, so a
+    *     `read_parquet([…])` list is consumed as paths first;
+    *     subscripts turns every adjacent bracket into a call, so the
+    *     list comprehensions and the literal pass after it read each
+    *     bracket left as a list. */
   private[engine] val shims: Vector[Shim] = Vector(
     TextShim("from-first", s => fromFirstRe.matches(s), reenter = true)(
       _.s match { case fromFirstRe(rest) => fromFirstToSelect(rest) }),
@@ -499,8 +500,19 @@ object Engine
     // a table path needs a quote or a read_* call
     Shim("path-tables", s => s.contains("'") || readCall(s))(
       (spark, lx) => Catalog.rewritePathTables(spark, lx)._1),
-    rewriteArrayKw, rewriteListSlice, rewriteMapLiteral,
-    rewriteListComprehension, rewriteDuckdbLiterals, rewriteStructPack)
+    rewriteSubscripts, rewriteListComprehension, rewriteDuckdbLiterals,
+    rewriteStructPack)
+
+  /** The shims a bare expression gets, in table order: what a macro
+    * body and a DML statement's WHERE, SET and RETURNING text read as,
+    * the same as a select-list expression (`l[1]`, `[…]`, `{…}`,
+    * struct_pack, SIMILAR TO, date_diff). */
+  private[engine] val exprShims: Seq[TextShim] = Seq(rewriteSimilarTo,
+    rewriteDateDiff, rewriteSubscripts, rewriteDuckdbLiterals,
+    rewriteStructPack)
+
+  private[engine] def rewriteExpr(e: String): String =
+    exprShims.foldLeft(e)((t, shim) => shim(t))
 
   /** Run the shim table over one query's text — what the router's
     * default branch applies to a top-level statement, reusable for a
@@ -679,15 +691,16 @@ object Engine
     * guard-rail refusals (IllegalArgumentException — e.g. DML on a temp
     * view) surface as messages like any other authoring error. */
   def tryQuery(spark: SparkSession, statement: String): Either[String, DataFrame] = {
-    // the hint probe itself may refuse (bad table-function arguments);
-    // the refusal re-raises identically from `sql` below, so the probe
-    // just degrades to no hint
-    val missing =
-      try Catalog.rewritePathTables(spark, statement)._2
-      catch { case _: IllegalArgumentException => Nil }
-    def hint =
+    // probed only after a failure; the probe itself may refuse (bad
+    // table-function arguments), which `sql` has just reported, so it
+    // degrades to no hint
+    def hint = {
+      val missing =
+        try Catalog.rewritePathTables(spark, statement)._2
+        catch { case _: IllegalArgumentException => Nil }
       if (missing.isEmpty) ""
       else s"no such file for path table(s): ${missing.mkString(", ")}\n"
+    }
     try Right(sql(spark, statement))
     catch {
       case e: org.apache.spark.sql.AnalysisException =>

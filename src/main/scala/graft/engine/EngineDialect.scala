@@ -707,62 +707,118 @@ private[engine] trait EngineDialect {
     out.toString
   }
 
-  /** Whether the `[` at `i` opens a subscript, not a list literal — the
-    * adjacency rule described at `rewriteDuckdbLiterals`. */
-  private def isSubscript(s: String, i: Int): Boolean = {
-    val prev = if (i > 0) s.charAt(i - 1) else ' '
-    prev.isLetterOrDigit || prev == '_' ||
-      prev == ')' || prev == ']' || prev == '`' || prev == '\''
+  /** Whether the `[` at `i` opens a subscript or a slice, not a list
+    * literal: DuckDB's grammar reads a bracket that IMMEDIATELY follows
+    * an identifier, `)`, `]`, `}`, a backtick identifier or a string
+    * literal as one — except the `ARRAY[` constructor. */
+  private def isSubscript(lx: Lexed, i: Int): Boolean = {
+    val prev = if (i > 0) lx.s.charAt(i - 1) else ' '
+    (prev.isLetterOrDigit || prev == '_' || ")]}`'".contains(prev)) &&
+      keywordBefore(lx, i, "ARRAY") < 0
   }
 
-  /** DuckDB's collection LITERAL syntax → Spark's constructor functions:
-    * `[e1, e2, …]` → `array(e1, e2, …)` and `{'k': v, …}` →
-    * `named_struct('k', v, …)`. A `[` that IMMEDIATELY follows an
-    * identifier character, `)`, `]`, a backtick identifier, or a string
-    * literal is a SUBSCRIPT and stays untouched (DuckDB's own grammar
-    * needs the same adjacency to disambiguate; note the engines'
-    * subscript BASE differs — DuckDB is 1-based, Spark 0-based — so
-    * subscripts are native-Spark surface, while the `list_*` compat
-    * functions carry DuckDB's 1-based access semantics). Struct-literal
-    * colons swap to argument commas only at the struct's own nesting
-    * level; `::` cast syntax (valid in both engines) passes through.
-    * Pure text rewrite, idempotent (the output contains no `[`/`{` in
-    * literal position), applied AFTER the table-function route so a
+  /** Start of the constructor keyword `kw` that owns the bracket at
+    * `at` — `ARRAY[…]`, `MAP {…}`, whitespace allowed between — or -1
+    * when there is none. */
+  private def keywordBefore(lx: Lexed, at: Int, kw: String): Int = {
+    val s = lx.s
+    var k = at
+    while (k > 0 && lx.code(k - 1) && s.charAt(k - 1).isWhitespace) k -= 1
+    val st = k - kw.length
+    def word(c: Char) = c.isLetterOrDigit || "_.`".contains(c)
+    if (st >= 0 && lx.code(st) && s.regionMatches(true, st, kw, 0, kw.length) &&
+        (st == 0 || !word(s.charAt(st - 1)))) st
+    else -1
+  }
+
+  /** DuckDB's subscripts and slices — `x[i]`, `x[a:b]`, `x[a:]`,
+    * `x[:b]`, `x[:]` — each become ONE call on their base, which the
+    * analyzer resolves by the base's type (`DuckdbCompat`): the text
+    * cannot tell a list from a string, a struct or a map.
+    *   x[i]   → graft_subscript(x, i)
+    *   x[a:b] → list_slice(x, a, b), an omitted a spelled 1 and an
+    *            omitted b -1
+    * The base walks left over identifier chains, call, subscript and
+    * literal groups, quoted identifiers and one string literal
+    * (`exprStartLeft`). An empty `[]` (a type suffix) stays; step
+    * slices refuse. Runs before the literal pass, so every bracket that
+    * pass sees opens a list. */
+  private[engine] val rewriteSubscripts: TextShim = TextShim("subscripts",
+    _.contains("["))(subscripts)
+
+  private def subscripts(lx: Lexed): String = {
+    val s = lx.s
+    var i = 0
+    while (i < s.length) {
+      if (lx.code(i) && s.charAt(i) == '[' && isSubscript(lx, i)) {
+        val end = lx.balance(i, '[', ']')
+        val content = if (end > 0) s.substring(i + 1, end).trim else ""
+        val baseStart = if (content.isEmpty) i else exprStartLeft(lx, i)
+        if (baseStart < i) {
+          val base = s.substring(baseStart, i)
+          val call = sliceParts(content) match {
+            case None => s"graft_subscript($base, $content)"
+            case Some((lo, hi)) =>
+              s"list_slice($base, ${lo.getOrElse("1")}, ${hi.getOrElse("-1")})"
+          }
+          return rewriteSubscripts(
+            s.substring(0, baseStart) + call + s.substring(end + 1))
+        }
+      }
+      i += 1
+    }
+    s
+  }
+
+  /** DuckDB's collection LITERAL syntax → Spark's constructor
+    * functions: `[e1, …]` and `ARRAY[e1, …]` → `array(e1, …)`,
+    * `{'k': v, …}` → `named_struct('k', v, …)`, and `MAP {k: v, …}` →
+    * `map(k, v, …)`. It runs after `subscripts`, which has made every
+    * adjacent bracket a call, so each bracket left opens a list.
+    * Colons swap to argument commas only at a struct's or a map's own
+    * nesting level; `::` cast syntax (valid in both engines) passes
+    * through. Pure text rewrite, idempotent (the output holds no
+    * bracket or brace), applied AFTER the table-function route so a
     * `read_parquet([…])` list is consumed as paths, not expressions. */
   private[engine] val rewriteDuckdbLiterals: TextShim = TextShim("literals",
       s => s.exists(c => c == '[' || c == '{')) { lx =>
     val s = lx.s
     val sb = new StringBuilder
-    // stack of open constructs: 'L' converted list, 'S' struct,
-    // 'X' subscript bracket (untouched), 'P' paren
+    // stack of open constructs: 'L' list, 'S' struct, 'M' map, 'P' paren
     val stack = scala.collection.mutable.Stack.empty[Char]
+    // drop the ARRAY/MAP keyword that owns the bracket at i, if any:
+    // the keyword and the blanks after it were copied to sb verbatim
+    def dropKeyword(i: Int, kw: String): Boolean = {
+      val k = keywordBefore(lx, i, kw)
+      if (k >= 0) sb.setLength(sb.length - (i - k))
+      k >= 0
+    }
     var i = 0
     while (i < s.length) {
       val ch = s.charAt(i)
-      if (!lx.code(i)) { sb.append(ch); i += 1 }
+      if (!lx.code(i)) sb.append(ch)
       else ch match {
-        case '(' => stack.push('P'); sb.append(ch); i += 1
+        case '(' => stack.push('P'); sb.append(ch)
         case ')' =>
           if (stack.headOption.contains('P')) stack.pop()
-          sb.append(ch); i += 1
+          sb.append(ch)
         case '[' =>
-          if (isSubscript(s, i)) { stack.push('X'); sb.append(ch) }
-          else { stack.push('L'); sb.append("array(") }
-          i += 1
-        case ']' =>
-          val top = if (stack.nonEmpty) stack.pop() else 'X'
-          sb.append(if (top == 'L') ")" else "]")
-          i += 1
-        case '{' => stack.push('S'); sb.append("named_struct("); i += 1
-        case '}' =>
-          if (stack.headOption.contains('S')) stack.pop()
-          sb.append(')'); i += 1
+          dropKeyword(i, "ARRAY")
+          stack.push('L'); sb.append("array(")
+        case '{' =>
+          val map = dropKeyword(i, "MAP")
+          stack.push(if (map) 'M' else 'S')
+          sb.append(if (map) "map(" else "named_struct(")
+        case ']' | '}' =>
+          if (stack.headOption.exists(_ != 'P')) stack.pop()
+          sb.append(')')
         case ':' if i + 1 < s.length && s.charAt(i + 1) == ':' =>
-          sb.append("::"); i += 2 // cast syntax, both engines
-        case ':' if stack.headOption.contains('S') =>
-          sb.append(','); i += 1
-        case c => sb.append(c); i += 1
+          sb.append("::"); i += 1 // cast syntax, both engines
+        case ':' if stack.headOption.exists(c => c == 'S' || c == 'M') =>
+          sb.append(',')
+        case c => sb.append(c)
       }
+      i += 1
     }
     sb.toString
   }
@@ -1276,24 +1332,6 @@ private[engine] trait EngineDialect {
     sb.toString
   }
 
-  /** `ARRAY[…]` — the PostgreSQL-style constructor DuckDB also
-    * accepts: drop the keyword so the bracket takes the collection-
-    * literal route (DuckDB's own grammar reads ARRAY[ as a constructor
-    * even where `array` could name a column — same choice here). */
-  private[engine] val rewriteArrayKw: TextShim = TextShim("array-kw",
-      finds("\\bARRAY\\s*\\[")) { lx =>
-    val s = lx.s
-    val re = "(?is)\\bARRAY\\s*\\[".r
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- re.findAllMatchIn(s) if lx.code(m.start)) {
-      sb.append(s.substring(last, m.start)).append(" [")
-      last = m.end
-    }
-    sb.append(s.substring(last))
-    sb.toString
-  }
-
   /** `//` → Spark's ` DIV ` — DuckDB's integer-division operator.
     * Both truncate toward zero ((-7)//2 = -7 DIV 2 = -3, measured), so
     * the operators are the same operation in different spellings. `//`
@@ -1569,66 +1607,8 @@ private[engine] trait EngineDialect {
     }
   }
 
-  /** DuckDB list slicing — `base[a:b]`, `base[a:]`, `base[:b]`,
-    * `base[:]` — syntax Spark lacks entirely, so it carries DuckDB's
-    * semantics exactly (1-based, inclusive both ends, out-of-range
-    * clamped — Spark's `slice` clamps identically, measured):
-    *   base[a:b] → slice(base, a, greatest(0, (b) - (a) + 1))
-    *   base[a:]  → slice(base, a, greatest(0, size(base) - (a) + 1))
-    *   base[:b]  → slice(base, 1, b)
-    *   base[:]   → base
-    * The base expression walks left over identifier chains, subscript
-    * and call groups, and quoted identifiers (adjacency — the same
-    * rule that separates subscripts from literals). Negative (from-end)
-    * literal bounds and step slices refuse loudly; plain subscripts
-    * (no top-level `:`) stay native-Spark per the documented base
-    * divergence. NOTE `base` may appear twice in the open-ended form —
-    * Catalyst's subexpression elimination dedupes the evaluation. */
-  private[engine] val rewriteListSlice: TextShim = TextShim("list-slice",
-    s => s.contains("[") && s.contains(":"))(listSlice)
-
-  private def listSlice(lx: Lexed): String = {
-    val s = lx.s
-    var i = 0
-    while (i < s.length) {
-      if (lx.code(i) && s.charAt(i) == '[') {
-        if (isSubscript(s, i)) {
-          val end = lx.balance(i, '[', ']')
-          if (end > 0) {
-            val content = s.substring(i + 1, end)
-            sliceParts(content).foreach { case (loT, hiT) =>
-              val baseStart = exprStartLeft(lx, i)
-              val base = s.substring(baseStart, i)
-              require(base.nonEmpty, s"cannot locate the slice base in: $s")
-              def nonNeg(t: String, which: String): String = {
-                require(!t.trim.startsWith("-"),
-                  s"negative (from-end) slice $which is not routed —" +
-                    " spell it with size(): base[size(base)+n : …]" +
-                    " has no silent Spark reading to preserve")
-                t.trim
-              }
-              val repl = (loT.map(nonNeg(_, "lower bound")),
-                  hiT.map(nonNeg(_, "upper bound"))) match {
-                case (Some(a), Some(b)) =>
-                  s"slice($base, $a, greatest(0, ($b) - ($a) + 1))"
-                case (Some(a), None) =>
-                  s"slice($base, $a, greatest(0, size($base) - ($a) + 1))"
-                case (None, Some(b)) => s"slice($base, 1, $b)"
-                case (None, None) => base
-              }
-              return rewriteListSlice(
-                s.substring(0, baseStart) + repl + s.substring(end + 1))
-            }
-          }
-        }
-      }
-      i += 1
-    }
-    s
-  }
-
   /** Split subscript content at its ONE top-level `:` (w.r.t. parens
-    * and brackets; `::` casts never split) → (lower?, upper?); None
+    * brackets and braces; `::` casts never split) → (lower?, upper?); None
     * when the content is a plain subscript. Step slices (two colons)
     * refuse. */
   private[engine] def sliceParts(
@@ -1641,7 +1621,8 @@ private[engine] trait EngineDialect {
       if (lc.code(i)) {
         val c = content.charAt(i)
         if (c == '(') pd += 1 else if (c == ')') pd -= 1
-        else if (c == '[') bd += 1 else if (c == ']') bd -= 1
+        else if (c == '[' || c == '{') bd += 1
+        else if (c == ']' || c == '}') bd -= 1
         else if (c == ':' && pd == 0 && bd == 0) {
           if (i + 1 < content.length && content.charAt(i + 1) == ':' &&
               lc.code(i + 1)) i += 1 // '::' cast — skip the pair
@@ -1664,8 +1645,8 @@ private[engine] trait EngineDialect {
 
   /** Start index of the expression that ENDS (exclusive) at `end` — the
     * subscript/slice base: walks left over identifier chains (`a.b.c`),
-    * balanced call/subscript groups (`f(…)`, `m['k']`), quoted
-    * identifiers, and one string literal. */
+    * balanced call, subscript and literal groups (`f(…)`, `m['k']`,
+    * `[1, 2]`, `MAP {…}`), quoted identifiers, and one string literal. */
   private[engine] def exprStartLeft(lx: Lexed, end: Int): Int = {
     val s = lx.s
     var j = end
@@ -1682,8 +1663,8 @@ private[engine] trait EngineDialect {
           j = k
           done = q == '\''
         } else done = true
-      } else if (c == ')' || c == ']') {
-        val open = if (c == ')') '(' else '['
+      } else if (c == ')' || c == ']' || c == '}') {
+        val open = c match { case ')' => '(' case ']' => '[' case _ => '{' }
         var bal = 0; var k = j - 1; var found = -1
         while (k >= 0 && found < 0) {
           if (lx.code(k)) {
@@ -1692,7 +1673,13 @@ private[engine] trait EngineDialect {
           }
           k -= 1
         }
-        if (found < 0) done = true else j = found
+        // a constructor keyword belongs to its group: ARRAY [1], MAP {…}
+        val kw = c match {
+          case ']' => keywordBefore(lx, found, "ARRAY")
+          case '}' => keywordBefore(lx, found, "MAP")
+          case _ => -1
+        }
+        if (found < 0) done = true else j = if (kw >= 0) kw else found
       } else if (c.isLetterOrDigit || c == '_') {
         var k = j - 1
         while (k > 0 && (s.charAt(k - 1).isLetterOrDigit ||
@@ -1705,70 +1692,12 @@ private[engine] trait EngineDialect {
     j
   }
 
-  /** DuckDB's `MAP {'k': v, …}` literal → Spark's `map(k, v, …)`
-    * constructor. Runs BEFORE the collection-literal pass (which would
-    * turn the braces into named_struct). Subscript ACCESS semantics
-    * are documented-divergent (DuckDB map[k] yields a LIST, Spark the
-    * value) — portable access goes through map_keys/map_values or
-    * element_at, as noted in SURVEY §7. */
-  private[engine] val rewriteMapLiteral: TextShim = TextShim("map-literal",
-      finds("\\bMAP\\s*\\{")) { lx =>
-    val s = lx.s
-    val re = "(?is)\\bMAP\\s*\\{".r
-    re.findAllMatchIn(s).find(m => lx.code(m.start)) match {
-      case None => s
-      case Some(m) =>
-        val openBrace = m.end - 1
-        val close = lx.balance(openBrace, '{', '}')
-        require(close > 0, "unbalanced braces in MAP {…}")
-        val content = s.substring(openBrace + 1, close).trim
-        // split entries at commas that are top-level w.r.t. parens AND
-        // brackets/braces (list values carry commas; splitTopLevel only
-        // tracks parens)
-        def splitEntries(t: String): Seq[String] = {
-          val lt = codeMask(t)
-          val out = scala.collection.mutable.Buffer.empty[String]
-          var pd = 0; var bd = 0; var last = 0; var x = 0
-          while (x < t.length) {
-            if (lt.code(x)) {
-              val c = t.charAt(x)
-              if (c == '(') pd += 1 else if (c == ')') pd -= 1
-              else if (c == '[' || c == '{') bd += 1
-              else if (c == ']' || c == '}') bd -= 1
-              else if (c == ',' && pd == 0 && bd == 0) {
-                out += t.substring(last, x); last = x + 1
-              }
-            }
-            x += 1
-          }
-          out += t.substring(last)
-          out.toSeq
-        }
-        val args =
-          if (content.isEmpty) ""
-          else splitEntries(content).map { pair =>
-            val lp = codeMask(pair)
-            var k = -1; var x = 0
-            while (k < 0 && x < pair.length) {
-              if (lp.code(x) && pair.charAt(x) == ':' &&
-                  !(x + 1 < pair.length && pair.charAt(x + 1) == ':') &&
-                  !(x > 0 && pair.charAt(x - 1) == ':')) k = x
-              x += 1
-            }
-            require(k > 0, s"MAP literal entries must be key: value — got: $pair")
-            s"${pair.substring(0, k).trim}, ${pair.substring(k + 1).trim}"
-          }.mkString(", ")
-        rewriteMapLiteral(
-          s.substring(0, m.start) + s"map($args)" + s.substring(close + 1))
-    }
-  }
-
   /** DuckDB list comprehensions — `[expr FOR x IN list [IF cond]]` →
     * the `list_transform` / `list_filter` composition they are sugar
-    * for. Runs BEFORE the collection-literal pass (which would consume
-    * the brackets as an array constructor); the subscript adjacency
-    * rule is shared with it. Nested comprehensions rewrite via
-    * recursion on the pieces. */
+    * for. Runs after `subscripts`, so no bracket left is a subscript,
+    * and before the collection-literal pass (which would consume the
+    * brackets as an array constructor). Nested comprehensions rewrite
+    * via recursion on the pieces. */
   private val forWord = finds("\\bFOR\\b")
   private[engine] val rewriteListComprehension: TextShim = TextShim(
     "list-comprehension", s => s.contains("[") && forWord(s))(listComprehension)
@@ -1778,21 +1707,19 @@ private[engine] trait EngineDialect {
     var i = 0
     while (i < s.length) {
       if (lx.code(i) && s.charAt(i) == '[') {
-        if (!isSubscript(s, i)) {
-          val end = lx.balance(i, '[', ']')
-          if (end > 0) comprehensionParts(s.substring(i + 1, end)).foreach {
-            case (exprT, v, listT, condT) =>
-              val list = rewriteListComprehension(listT)
-              val expr = rewriteListComprehension(exprT)
-              val body = condT match {
-                case Some(c) =>
-                  s"list_transform(list_filter($list, $v ->" +
-                    s" ${rewriteListComprehension(c)}), $v -> $expr)"
-                case None => s"list_transform($list, $v -> $expr)"
-              }
-              return rewriteListComprehension(
-                s.substring(0, i) + body + s.substring(end + 1))
-          }
+        val end = lx.balance(i, '[', ']')
+        if (end > 0) comprehensionParts(s.substring(i + 1, end)).foreach {
+          case (exprT, v, listT, condT) =>
+            val list = rewriteListComprehension(listT)
+            val expr = rewriteListComprehension(exprT)
+            val body = condT match {
+              case Some(c) =>
+                s"list_transform(list_filter($list, $v ->" +
+                  s" ${rewriteListComprehension(c)}), $v -> $expr)"
+              case None => s"list_transform($list, $v -> $expr)"
+            }
+            return rewriteListComprehension(
+              s.substring(0, i) + body + s.substring(end + 1))
         }
       }
       i += 1

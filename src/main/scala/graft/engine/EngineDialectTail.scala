@@ -21,7 +21,7 @@ private[engine] trait EngineDialectTail {
     * The zone must be a string LITERAL (a computed zone can't be
     * classified and refuses loudly); Spark and DuckDB read the same
     * IANA zone rules, so the converted instants agree. Left operand
-    * extent via exprStartLeft (the list-slice walker). */
+    * extent via exprStartLeft (the subscript walker). */
   private[engine] val rewriteAtTimeZone: TextShim = TextShim("at-time-zone",
     finds("\\bAT\\s+TIME\\s+ZONE\\b"))(atTimeZone)
 

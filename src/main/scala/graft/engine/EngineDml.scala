@@ -50,8 +50,9 @@ private[engine] trait EngineDml {
 
   private[engine] def runDeleteUsing(
       spark: SparkSession, table: String, src: String,
-      cond: String): DataFrame = {
+      cond0: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, expr}
+    val cond = rewriteExpr(cond0)
     val source = spark.table(src)
     // the equi-key shape takes the key-span-PRUNED delete (a file whose
     // head-key footer range misses the source's key span is never
@@ -322,10 +323,17 @@ private[engine] trait EngineDml {
         targetField(lhs).name
       }
     }
+    // conflict keys that are the table's PRIMARY KEY refuse a NULL key
+    // too, as DuckDB does and as the OR IGNORE / OR REPLACE shorthand does
+    def lower(ks: Seq[String]) = ks.map(_.toLowerCase).toSet
+    val refuse = pkOf(spark, table).filter(lower(_) == lower(keys)).map(_ =>
+      (f: Dml.SourceKeys) =>
+        requirePkSound(f, keys, s"INSERT INTO $table ... ON CONFLICT"))
     withTablePath(spark, table) { path =>
       setCols match {
-        case Some(cols) => Dml.mergeIntoAll(spark, path, source, keys, cols)
-        case None => Dml.insertOnlyAll(spark, path, source, keys)
+        case Some(cols) =>
+          Dml.mergeIntoAll(spark, path, source, keys, cols, refuse)
+        case None => Dml.insertOnlyAll(spark, path, source, keys, refuse)
       }
     }
   }
@@ -673,8 +681,9 @@ private[engine] trait EngineDml {
     * bounded by what the statement already promises to produce. */
   private[engine] def runReturning(
       spark: SparkSession, stmt: String, retExprs: String): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
+    import org.apache.spark.sql.functions.lit
     val items = splitTopLevel(retExprs, ',').map(_.trim).filter(_.nonEmpty)
+      .map(rewriteExpr)
     require(items.nonEmpty, "RETURNING needs at least one expression")
     def snap(rows: DataFrame): DataFrame =
       rows.selectExpr(items: _*).localCheckpoint(true)
@@ -707,9 +716,7 @@ private[engine] trait EngineDml {
         "RETURNING is not routed for DELETE ... USING — run the join" +
           " SELECT first, then the DELETE")
       case deleteRe(table, where) =>
-        val pred =
-          coalesce(expr(Option(where).getOrElse("TRUE")), lit(false))
-        val victims = spark.table(table).filter(pred)
+        val victims = spark.table(table).filter(wherePred(Option(where)))
         requireStable(victims, "DELETE")
         val out = snap(victims)
         runDelete(spark, table, Option(where))
@@ -719,11 +726,10 @@ private[engine] trait EngineDml {
           "RETURNING is not routed for UPDATE ... FROM — run the join" +
             " SELECT first, then the UPDATE")
         val (sets, where) = splitOnWhere(blob)
-        val pred = coalesce(expr(where.getOrElse("TRUE")), lit(false))
         // the NEW values of exactly the matched rows: the same
         // assignment projection the update itself applies
         val updated = Dml.applyAssignments(
-          spark.table(table).filter(pred), lit(true),
+          spark.table(table).filter(wherePred(where)), lit(true),
           parseAssignments(sets))
         requireStable(updated, "UPDATE")
         val out = snap(updated)
@@ -834,7 +840,7 @@ private[engine] trait EngineDml {
     * the routed UPDATE and its RETURNING projection. */
   private[engine] def parseAssignments(
       sets: String): Seq[(String, org.apache.spark.sql.Column)] = {
-    import org.apache.spark.sql.functions.expr
+    def expr(e: String) = org.apache.spark.sql.functions.expr(rewriteExpr(e))
     // `SET (a, b) = (x, y)` — DuckDB/Postgres tuple assignment: zip the
     // two lists pairwise (same one-projection semantics as the comma
     // form). The names side is a plain identifier list; the values side
@@ -861,19 +867,25 @@ private[engine] trait EngineDml {
 
   private[engine] def runDelete(
       spark: SparkSession, table: String, where: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     // SQL DELETE removes rows where the predicate is TRUE; NULL keeps
-    val pred = coalesce(expr(where.getOrElse("TRUE")), lit(false))
+    val pred = wherePred(where)
     withTablePath(spark, table)(path =>
-      rewriteRouted(spark, path, where)(_.filter(not(pred))))
+      rewriteRouted(spark, path, where)(_.filter(!pred)))
+  }
+
+  /** A routed WHERE (absent: every row) in the expression dialect
+    * (`exprShims`), TRUE only where the predicate is TRUE: NULL reads
+    * as false. */
+  private def wherePred(where: Option[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{coalesce, expr, lit}
+    coalesce(expr(rewriteExpr(where.getOrElse("TRUE"))), lit(false))
   }
 
   private[engine] def runUpdate(
       spark: SparkSession, table: String, sets: String,
       where: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
     val assignments = parseAssignments(sets)
-    val pred = coalesce(expr(where.getOrElse("TRUE")), lit(false))
+    val pred = wherePred(where)
     // PRIMARY KEY enforcement: an UPDATE that assigns a key column can
     // mint a duplicate or a NULL key (DuckDB refuses both) — pre-check
     // the PROJECTED post-state, one bounded aggregate BEFORE the
@@ -917,7 +929,7 @@ private[engine] trait EngineDml {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
     val parsed =
-      try spark.sessionState.sqlParser.parseExpression(where)
+      try spark.sessionState.sqlParser.parseExpression(rewriteExpr(where))
       catch { case _: Exception => return None }
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)

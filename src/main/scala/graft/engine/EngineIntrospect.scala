@@ -211,12 +211,9 @@ private[engine] trait EngineIntrospect {
       throw new IllegalArgumentException(
         s"CREATE MACRO $name: a function with this name already exists —" +
           " use CREATE OR REPLACE MACRO")
-    // parse once at definition time, with the scalar-expression dialect
-    // shims applied to the body text (struct_pack, collection literals,
-    // SIMILAR TO — the same surface a select-list expression gets)
-    val parsed = spark.sessionState.sqlParser.parseExpression(
-      rewriteStructPack(rewriteDuckdbLiterals(
-        rewriteDateDiff(rewriteSimilarTo(body)))))
+    // parse once at definition time, with the expression shims applied
+    // to the body text (the same surface a select-list expression gets)
+    val parsed = spark.sessionState.sqlParser.parseExpression(rewriteExpr(body))
     val lowerParams = params.map(_.toLowerCase)
     val builder = (args: Seq[Expression]) => {
       require(args.length == params.length,

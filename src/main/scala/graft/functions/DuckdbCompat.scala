@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{
-  ArrayType, BooleanType, DoubleType, IntegerType, LongType, NullType,
-  StringType}
+  ArrayType, BooleanType, DoubleType, IntegerType, LongType, MapType,
+  NullType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DuckDB function-name compatibility pack (round 16): the reference
@@ -296,12 +297,23 @@ object DuckdbCompat {
     // DuckDB's functional list constructor (the call-form twin of the
     // [..] literal the router rewrites)
     "list_value" -> { args0 => CreateArray(args0) },
-    // DuckDB list_slice is 1-based with an INCLUSIVE end; Spark's slice
-    // takes (start, length) — length = end - begin + 1
+    // list_slice(x, begin, end) — DuckDB's 1-based slice with an
+    // INCLUSIVE end, of a list or a string (measured): a negative bound
+    // counts from the end (-1 is the last element), a begin below 1
+    // reads as 1, and a NULL bound gives NULL. The router spells the
+    // `x[a:b]` slice as this call, an omitted bound as 1 or -1.
     "list_slice" -> { args0 =>
-      val args = arity("list_slice", 3)(args0)
-      Slice(args(0), args(1),
-        Add(Subtract(args(2), args(1)), Literal(1)))
+      val Seq(x, lo, hi) = arity("list_slice", 3)(args0)
+      val text = x.resolved && x.dataType.isInstanceOf[StringType]
+      val n = if (text) Length(x) else Size(x, legacySizeOfNull = false)
+      def fromEnd(i: Expression) =
+        If(LessThan(i, Literal(0)), Add(Add(n, i), Literal(1)), i)
+      // If, not Greatest: a NULL bound must stay NULL
+      def atLeast(e: Expression, m: Int) =
+        If(LessThan(e, Literal(m)), Literal(m), e)
+      val from = atLeast(fromEnd(lo), 1)
+      val len = atLeast(Add(Subtract(fromEnd(hi), from), Literal(1)), 0)
+      if (text) Substring(x, from, len) else Slice(x, from, len)
     },
     // regexp_matches with DuckDB's optional FLAGS argument: each
     // supported flag maps to the regex's own inline modifier, prepended
@@ -512,23 +524,9 @@ object DuckdbCompat {
     "today" -> { args0 =>
       arity("today", 0)(args0); CurrentDate()
     },
-    // struct_extract(s, 'name') — field access as a function call;
-    // UnresolvedExtractValue is the same node `s.name` parses to. The
-    // numeric form struct_extract(s, k) is DuckDB's 1-BASED positional
-    // access (its only way into an unnamed struct, e.g. list_zip's
-    // elements on the oracle engine) → GetStructField by ordinal, which
-    // works on any struct and resolves its type lazily from the child.
     "struct_extract" -> { args0 =>
       val args = arity("struct_extract", 2)(args0)
-      args(1) match {
-        case Literal(k: Int, org.apache.spark.sql.types.IntegerType) =>
-          GetStructField(args(0), k - 1)
-        case Literal(k: Long, org.apache.spark.sql.types.LongType) =>
-          GetStructField(args(0), k.toInt - 1)
-        case _ =>
-          org.apache.spark.sql.catalyst.analysis
-            .UnresolvedExtractValue(args(0), args(1))
-      }
+      structExtract(args(0), args(1))
     },
     // week(d) — ISO week number in both engines (measured: 2024-01-15
     // → 3 on each); weekofyear is Spark's name for the same field
@@ -590,6 +588,28 @@ object DuckdbCompat {
     // always-out-of-bounds index, which is NULL.
     "list_extract" -> { args0 => listExtract("list_extract", args0) },
     "list_element" -> { args0 => listExtract("list_element", args0) },
+    // graft_subscript(x, i) — DuckDB's `x[i]`, which the router spells
+    // as this call because the text cannot tell a list from a string, a
+    // struct or a map. The base's resolved type picks DuckDB 1.0's
+    // reading (measured): a list's 1-based element (list_extract), a
+    // string's 1-based character ('' at 0 and out of range), a
+    // struct's field (struct_extract), and a map's value under the key
+    // as a list of at most one element. Any other type keeps Spark's
+    // own extraction.
+    "graft_subscript" -> { args0 =>
+      val Seq(x, i) = arity("graft_subscript", 2)(args0)
+      x.dataType match {
+        case _: ArrayType => listExtract("graft_subscript", args0)
+        case _: StringType =>
+          If(EqualTo(i, Literal(0)), Literal(""), Substring(x, i, Literal(1)))
+        case _: StructType => structExtract(x, i)
+        case MapType(_, valueType, _) =>
+          If(ArrayContains(MapKeys(x), i),
+            CreateArray(Seq(new ElementAt(x, i, None, false))),
+            Literal.create(Seq.empty, ArrayType(valueType)))
+        case _ => UnresolvedExtractValue(x, i)
+      }
+    },
     // list_zip(l1, …, ln) — element-wise zip padded to the LONGEST list
     // with NULLs (measured), struct fields named list_1…list_n (DuckDB's
     // documented naming; the container's 1.0 oracle leaves them unnamed,
@@ -925,9 +945,23 @@ object DuckdbCompat {
   private def listExtract(
       name: String, args0: Seq[Expression]): Expression = {
     val a = arity(name, 2)(args0)
-    val idx = If(EqualTo(a(1), Literal(0)), Literal(Int.MaxValue), a(1))
+    val i = Cast(a(1), IntegerType)
+    val idx = If(EqualTo(i, Literal(0)), Literal(Int.MaxValue), i)
     new ElementAt(a(0), idx, None, false)
   }
+
+  /** struct_extract(s, k) — field access as a function call;
+    * UnresolvedExtractValue is the same node `s.name` parses to. A
+    * numeric k is DuckDB's 1-BASED positional access (its only way into
+    * an unnamed struct, e.g. list_zip's elements on the oracle engine)
+    * → GetStructField by ordinal, which works on any struct and
+    * resolves its type lazily from the child. */
+  private def structExtract(s: Expression, k: Expression): Expression =
+    k match {
+      case Literal(n: Int, IntegerType) => GetStructField(s, n - 1)
+      case Literal(n: Long, LongType) => GetStructField(s, n.toInt - 1)
+      case _ => UnresolvedExtractValue(s, k)
+    }
 
   /** DuckDB's age(t1, t2) as a composed tree of codegen'd builtins.
     * Component-wise calendar subtraction for t1 >= t2 (mirrored via

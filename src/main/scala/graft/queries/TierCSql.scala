@@ -1381,10 +1381,10 @@ object TierCSql {
   // DuckDB collection literals routed (round 17): `[…]` list and
   // `{'k': v}` struct literal syntax rewrite to Spark's array /
   // named_struct constructors (`Engine.rewriteDuckdbLiterals` — pure
-  // text, subscripts excluded by the adjacency rule), so the IDENTICAL
-  // text runs on both engines, including the parenthesized struct
-  // field access both grammars share. Scalar outputs only — the hash
-  // compare stays type-flat.
+  // text; adjacent brackets are subscripts, `Engine.rewriteSubscripts`),
+  // so the IDENTICAL text runs on both engines, including the
+  // parenthesized struct field access both grammars share. Scalar
+  // outputs only — the hash compare stays type-flat.
   val listStructLits: String =
     """WITH v AS (SELECT unnest([10, 20, 30]) AS n)
       |SELECT n, CAST(list_contains(['A', 'R'], 'R') AS INT) AS has_r,

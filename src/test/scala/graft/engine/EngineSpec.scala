@@ -1090,12 +1090,12 @@ class EngineSpec extends AnyFunSuite {
       r.getStruct(1).getString(1) == "x")
     assert(r.getInt(2) == 7)
     assert(r.getBoolean(3))
-    // adjacent brackets are subscripts — native Spark surface, untouched
+    // adjacent brackets are subscripts, 1-based as in DuckDB: [0] is NULL
     Engine.exec(spark,
       "CREATE OR REPLACE TEMPORARY VIEW engine_spec_lit AS" +
         " SELECT array(10, 20) AS arr")
     assert(Engine.sql(spark, "SELECT arr[0] AS h FROM engine_spec_lit")
-      .collect()(0).getInt(0) == 10)
+      .collect()(0).isNullAt(0))
     // nested literals, and bracket text inside strings stays text
     val nested = Engine.sql(spark,
       "SELECT {'p': [1, 2], 'q': {'r': 3}} AS n").collect()(0).getStruct(0)
@@ -1459,6 +1459,13 @@ class EngineSpec extends AnyFunSuite {
     val bi = intercept[IllegalArgumentException](Engine.sql(spark,
       "CREATE MACRO abs(x) AS x"))
     assert(bi.getMessage.contains("already exists"))
+  }
+
+  test("a macro body reads l[1] as DuckDB's first element") {
+    Engine.exec(spark, "CREATE MACRO first_of(l) AS l[1]")
+    try assert(Engine.sql(spark, "SELECT first_of([7, 8]) AS v")
+      .head().getInt(0) == 7)
+    finally Engine.exec(spark, "DROP MACRO IF EXISTS first_of")
   }
 
   test("PREPARE/EXECUTE/DEALLOCATE round-trip with re-binding") {
@@ -1867,9 +1874,9 @@ class EngineSpec extends AnyFunSuite {
     assert(Engine.sql(spark,
       "SELECT [y * 10 FOR y IN [x + 1 FOR x IN [1,2,3] IF x > 1]] AS r")
       .collect()(0).getSeq[Int](0) == Seq(30, 40))
-    // subscripts keep the bracket-adjacency rule (native Spark, 0-based)
+    // subscripts keep the bracket-adjacency rule, 1-based as in DuckDB
     assert(Engine.sql(spark, "SELECT array(7,8)[1] AS r")
-      .collect()(0).getInt(0) == 8)
+      .collect()(0).getInt(0) == 7)
   }
 
   test("TRUNCATE without TABLE routes; table stays writable") {
@@ -1947,12 +1954,12 @@ class EngineSpec extends AnyFunSuite {
       r.getSeq[Int](3) == Seq(10, 20, 30))
     assert(r.getSeq[Int](4) == Seq(20, 30) && r.getSeq[Int](5).isEmpty)
     assert(r.getSeq[String](6) == Seq("b", "c"))
-    // plain subscripts keep native-Spark semantics (documented base
-    // divergence); :: casts inside a subscript never read as a slice
+    // subscripts are 1-based as in DuckDB; :: casts inside a subscript
+    // never read as a slice; negative bounds count from the end
     assert(Engine.sql(spark, "SELECT array(1,2)['1'::INT] AS r")
-      .collect()(0).getInt(0) == 2)
-    assert(intercept[IllegalArgumentException](Engine.sql(spark,
-      "SELECT [1,2,3][-2:-1]")).getMessage.contains("size()"))
+      .collect()(0).getInt(0) == 1)
+    assert(Engine.sql(spark, "SELECT [1,2,3][-2:-1] AS r")
+      .collect()(0).getSeq[Int](0) == Seq(2, 3))
     assert(intercept[IllegalArgumentException](Engine.sql(spark,
       "SELECT [1,2,3][1:3:2]")).getMessage.contains("step"))
   }

@@ -28,8 +28,10 @@ class ShimTableSpec extends AnyFunSuite {
           "star-exclude" -> "star-replace",
           "star-exclude" -> "columns",
           "path-tables" -> "literals",
-          "array-kw" -> "literals",
-          "map-literal" -> "literals",
+          "path-tables" -> "subscripts",
+          // every adjacent bracket is a call before the list passes read
+          "subscripts" -> "list-comprehension",
+          "subscripts" -> "literals",
           "list-comprehension" -> "literals")
     rules.foreach { case (a, b) =>
       assert(at(a) < at(b), s"$a must run before $b")

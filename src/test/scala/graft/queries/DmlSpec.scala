@@ -387,4 +387,34 @@ class DmlSpec extends AnyFunSuite {
       assert(rows == once, "a replayed merge must not change the rows")
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
+
+  test("routed DELETE and UPDATE read l[1] as DuckDB's first element") {
+    val t = s"dmlspec_sub_p${ProcessHandle.current.pid}"
+    try {
+      Engine.runScript(spark,
+        s"""DROP TABLE IF EXISTS $t;
+           |CREATE TABLE $t (k BIGINT, l BIGINT[]);
+           |INSERT INTO $t VALUES (1, [5, 6]), (2, [6, 5]), (3, [7, 8]);
+           |DELETE FROM $t WHERE l[1] = 5;
+           |UPDATE $t SET k = l[2] WHERE l[1] = 6""".stripMargin)
+      val rows = spark.table(t).collect().map(_.getLong(0)).sorted.toSeq
+      assert(rows == Seq(3L, 5L))
+    } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("ON CONFLICT on the PRIMARY KEY refuses a NULL key, as DuckDB does") {
+    val t = s"dmlspec_pknull_p${ProcessHandle.current.pid}"
+    try {
+      Engine.runScript(spark,
+        s"""DROP TABLE IF EXISTS $t;
+           |CREATE TABLE $t (k BIGINT PRIMARY KEY, v STRING);
+           |INSERT INTO $t VALUES (1, 'a')""".stripMargin)
+      Seq("DO NOTHING", "DO UPDATE SET v = EXCLUDED.v").foreach { action =>
+        val e = intercept[IllegalArgumentException](Engine.sql(spark,
+          s"INSERT INTO $t VALUES (NULL, 'x') ON CONFLICT (k) $action"))
+        assert(e.getMessage.contains("NULL in PRIMARY KEY"), action)
+      }
+      assert(spark.table(t).count() == 1)
+    } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+  }
 }
