@@ -456,16 +456,17 @@ object Engine
 
   private val readCall = finds("read_")
 
-  /** The dialect shim table: the full rewrite pipeline over ONE query's
-    * text, in order. The order is data that `ShimTableSpec` asserts:
+  /** The dialect shim table: the one rewrite pipeline, in order. A
+    * top-level statement runs it whole, once; a query body (reached
+    * through `subquery-bodies`, innermost first, or re-entered after a
+    * reshaping shim) runs only its Query entries, and each Token entry
+    * then scans the statement once (`Scope`). The order is data that
+    * `ShimTableSpec` asserts:
     *   - FROM-first, DISTINCT ON and UNION BY NAME re-spell the
-    *     statement into a new shape and re-enter the table;
+    *     statement into a new shape, whose Query pass re-enters;
     *   - subquery bodies run before every outer shim — their rewritten
     *     form is what the outer shims and the REPLACE/COLUMNS schema
-    *     probes must see. Each body re-enters the whole table
-    *     (`rewriteSubqueryBodies`), so a body at depth d is scanned d+1
-    *     times by the shims below that read every depth; they are
-    *     idempotent, and a body must be fully rewritten before its
+    *     probes must see, and a body must be fully reshaped before its
     *     statement-level shims (QUALIFY, ASOF) wrap it;
     *   - nulls-order runs after agg-order-by: inline aggregate ORDER BYs
     *     are consumed into WITHIN GROUP / min_by first, and the
@@ -479,23 +480,24 @@ object Engine
     *     list comprehensions and the literal pass after it read each
     *     bracket left as a list. */
   private[engine] val shims: Vector[Shim] = Vector(
-    TextShim("from-first", s => fromFirstRe.matches(s), reenter = true)(
+    TextShim("from-first", s => fromFirstRe.matches(s), Scope.Query,
+      reenter = true)(
       _.s match { case fromFirstRe(rest) => fromFirstToSelect(rest) }),
-    TextShim("distinct-on", s => donRe.matches(s), reenter = true)(
-      _.s match { case donRe(rest) => distinctOnToWindow(rest) }),
+    TextShim("distinct-on", s => donRe.matches(s), Scope.Query,
+      reenter = true)(_.s match { case donRe(rest) => distinctOnToWindow(rest) }),
     Shim("union-by-name",
       finds("\\bBY\\s+NAME\\b", "^(SELECT|FROM|VALUES|WITH)\\b"),
-      reenter = true)((spark, lx) => rewriteUnionByName(spark, lx.s)),
-    Shim("subquery-bodies", _.contains("("))(rewriteSubqueryBodies),
+      Scope.Query, reenter = true)((spark, lx) => rewriteUnionByName(spark, lx.s)),
+    Shim("subquery-bodies", _.contains("("), Scope.Query)(rewriteSubqueryBodies),
     rewriteTildeMatch, rewriteAtTimeZone, rewriteIgnoreNulls,
     rewriteTrailingCommas, rewriteLambdaSyntax, rewriteAggOrderBy,
     checkPositionalJoin, checkCaretPow, rewriteIntDiv, rewriteDowField,
     rewriteDuckCastTypes, rewriteMaterializedCte, rewriteOrderByNulls,
     rewriteStarExclude, rewriteSimilarTo, rewriteGlob, rewriteDateDiff,
-    Shim("columns", finds("^(SELECT|WITH)\\b", "\\bCOLUMNS\\s*\\("))(
-      (spark, lx) => rewriteColumnsFn(spark, lx.s)),
-    Shim("star-replace", finds("^(SELECT|WITH)\\b", "\\*.*\\bREPLACE\\s*\\("))(
-      (spark, lx) => rewriteStarReplace(spark, lx.s)),
+    Shim("columns", finds("^(SELECT|WITH)\\b", "\\bCOLUMNS\\s*\\("),
+      Scope.Query)((spark, lx) => rewriteColumnsFn(spark, lx.s)),
+    Shim("star-replace", finds("^(SELECT|WITH)\\b", "\\*.*\\bREPLACE\\s*\\("),
+      Scope.Query)((spark, lx) => rewriteStarReplace(spark, lx.s)),
     rewriteUsingSample, rewriteAsofJoin, rewriteQualify,
     // a table path needs a quote or a read_* call
     Shim("path-tables", s => s.contains("'") || readCall(s))(
@@ -503,36 +505,48 @@ object Engine
     rewriteSubscripts, rewriteListComprehension, rewriteDuckdbLiterals,
     rewriteStructPack)
 
-  /** The shims a bare expression gets, in table order: what a macro
-    * body and a DML statement's WHERE, SET and RETURNING text read as,
-    * the same as a select-list expression (`l[1]`, `[…]`, `{…}`,
-    * struct_pack, SIMILAR TO, date_diff). */
-  private[engine] val exprShims: Seq[TextShim] = Seq(rewriteSimilarTo,
-    rewriteDateDiff, rewriteSubscripts, rewriteDuckdbLiterals,
-    rewriteStructPack)
-
-  private[engine] def rewriteExpr(e: String): String =
-    exprShims.foldLeft(e)((t, shim) => shim(t))
+  private val queryShims = shims.filter(_.scope == Scope.Query)
+  private[engine] val clauseShims =
+    shims.filter(s => s.scope == Scope.Token || s.name == "subquery-bodies")
 
   /** Run the shim table over one query's text — what the router's
     * default branch applies to a top-level statement, reusable for a
     * DDL statement's AS-body. Text in, text out — routes that produce a
     * DataFrame directly (SUMMARIZE, PIVOT statements, DML) stay
-    * top-level-only. The text is lexed once, and again only after a
-    * shim has changed it. */
-  private[engine] def rewriteQueryText(spark: SparkSession, q0: String): String = {
+    * top-level-only. */
+  private[engine] def rewriteQueryText(spark: SparkSession, q: String): String =
+    runShims(spark, shims, q)
+
+  /** A query body's pass: the Query entries only. */
+  private[engine] def rewriteQueryBody(spark: SparkSession, q: String): String =
+    runShims(spark, queryShims, q)
+
+  /** A clause's pass — a DML statement's WHERE, SET, RETURNING or
+    * USING condition, a macro body — reads the dialect of a SELECT: the
+    * Query pass on its subquery bodies, then every Token entry. */
+  private[engine] def rewriteExpr(spark: SparkSession, e: String): String =
+    runShims(spark, clauseShims, e)
+
+  /** Run `table` over the text in order. The text is lexed once, and
+    * again only after a shim has changed it. When a reshaping shim
+    * fires, its output runs the Query pass and then only the Token
+    * entries after it: the Query pass has already run the rest. */
+  private def runShims(
+      spark: SparkSession, table: Vector[Shim], q0: String): String = {
     @annotation.tailrec
-    def run(s: String, lexed: Option[Lexed], i: Int): String =
-      if (i == shims.length) s
-      else if (!shims(i).trigger(s)) run(s, lexed, i + 1)
+    def run(s: String, lexed: Option[Lexed], i: Int, tokensOnly: Boolean): String =
+      if (i == table.length) s
+      else if ((tokensOnly && table(i).scope != Scope.Token) ||
+          !table(i).trigger(s)) run(s, lexed, i + 1, tokensOnly)
       else {
         val lx = lexed.getOrElse(codeMask(s))
-        val out = shims(i).rewrite(spark, lx)
-        if (out == s) run(s, Some(lx), i + 1)
-        else if (shims(i).reenter) rewriteQueryText(spark, out)
-        else run(out, None, i + 1)
+        val out = table(i).rewrite(spark, lx)
+        if (out == s) run(s, Some(lx), i + 1, tokensOnly)
+        else if (table(i).reenter)
+          run(rewriteQueryBody(spark, out), None, i + 1, tokensOnly = true)
+        else run(out, None, i + 1, tokensOnly)
       }
-    run(q0.trim.stripSuffix(";").trim, None, 0)
+    run(q0.trim.stripSuffix(";").trim, None, 0, tokensOnly = false)
   }
 
   /** Split a plain column-list `CREATE TABLE name (cols…) suffix` into

@@ -30,7 +30,7 @@ private[engine] trait EngineDialect {
     * spelling, suggested in the refusal). PERCENT-only passthrough is
     * the documented contract. */
   private[engine] val rewriteUsingSample: TextShim = TextShim("using-sample",
-      finds("SAMPLE")) { lx =>
+      finds("SAMPLE"), Scope.Query) { lx =>
     val s = lx.s
     val sb = new StringBuilder
     var i = 0
@@ -90,38 +90,14 @@ private[engine] trait EngineDialect {
     * schema-aware, statement-level); this shim runs first so a combined
     * `* EXCLUDE (…) REPLACE (…)` reaches it in EXCEPT spelling. */
   private[engine] val rewriteStarExclude: TextShim = TextShim("star-exclude",
-      finds("EXCLUDE")) { lx =>
-    val s = lx.s
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (lx.code(i) && ch == '*') {
-        sb.append(ch)
-        var j = i + 1
-        while (j < s.length && s.charAt(j).isWhitespace) j += 1
-        // the swap needs the full modifier shape `* EXCLUDE (` — a bare
-        // `* exclude` or `* exclude_fee` is multiplication by a column
-        // (underscore continues an identifier; '(' is what separates the
-        // modifier from arithmetic on a column named exclude)
-        val isModifier = j + 7 <= s.length &&
-          s.regionMatches(true, j, "EXCLUDE", 0, 7) && {
-            var k = j + 7
-            val boundary = k == s.length ||
-              (!s.charAt(k).isLetterOrDigit && s.charAt(k) != '_')
-            while (k < s.length && s.charAt(k).isWhitespace) k += 1
-            boundary && k < s.length && s.charAt(k) == '('
-          }
-        if (isModifier) {
-          sb.append(s.substring(i + 1, j)).append("EXCEPT")
-          i = j + 7
-        } else i += 1
-      } else {
-        sb.append(ch)
-        i += 1
-      }
-    }
-    sb.toString
+      finds("EXCLUDE"), Scope.Query) {
+    // the swap needs the full modifier shape `* EXCLUDE (` — a bare
+    // `* exclude` or `* exclude_fee` is multiplication by a column
+    // (underscore continues an identifier; '(' is what separates the
+    // modifier from arithmetic on a column named exclude)
+    _.replaceInCode(("(?i)\\*(\\p{javaWhitespace}*)EXCLUDE" +
+      "(?![\\p{javaLetterOrDigit}_])(?=\\p{javaWhitespace}*\\()").r)(
+      m => Some("*" + m.group(1) + "EXCEPT"))
   }
 
   /** ASOF [LEFT] JOIN — DuckDB's time-series join statement: for each
@@ -143,7 +119,7 @@ private[engine] trait EngineDialect {
     * likewise unspecified. Statement-level, first ASOF only (a second
     * fails loudly in Spark's parser). */
   private[engine] val rewriteAsofJoin: TextShim = TextShim("asof-join",
-    finds("^(SELECT|WITH)\\b", "ASOF"))(asofJoin)
+    finds("^(SELECT|WITH)\\b", "ASOF"), Scope.Query)(asofJoin)
 
   private def asofJoin(lx: Lexed): String = {
     val s = lx.s
@@ -462,24 +438,27 @@ private[engine] trait EngineDialect {
     * text); a computed pattern, or a literal that never closes, stays
     * for Spark's parser to refuse loudly. */
   private[engine] val rewriteSimilarTo: TextShim = TextShim("similar-to",
-      finds("\\bSIMILAR\\s+TO\\b")) { lx =>
+      finds("\\bSIMILAR\\s+TO\\b"))(lx => anchoredRlike(lx, identity) { i =>
+    val m = similarTo.pattern.matcher(lx.s).region(i, lx.s.length)
+    Option.when(m.lookingAt())(m.end)
+  })
+  private val similarTo = "(?i)SIMILAR\\p{javaWhitespace}+TO".r
+
+  /** `<op> 'pattern'` → `RLIKE '^(?:<regex(pattern)>)$'`, a whole-string
+    * match, for each operator that starts a word in code; `opEnd(i)`
+    * gives the index just past an operator starting at i. The literal
+    * must close, or the text stays for Spark's parser to refuse. */
+  private def anchoredRlike(lx: Lexed, regex: String => String)(
+      opEnd: Int => Option[Int]): String = {
     val s = lx.s
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
-      val pattern =
-        if (lx.code(i) && s.regionMatches(true, i, "SIMILAR", 0, 7) &&
-            (i == 0 || s.charAt(i - 1).isWhitespace)) {
-          var j = i + 7
-          val boundary = j >= s.length || s.charAt(j).isWhitespace
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          if (boundary && s.regionMatches(true, j, "TO", 0, 2))
-            lx.literalAfter(j + 2)
-          else None
-        } else None
-      pattern match {
+      val lit = if (lx.code(i) && (i == 0 || s.charAt(i - 1).isWhitespace))
+        opEnd(i).flatMap(lx.literalAfter) else None
+      lit match {
         case Some((body, end)) =>
-          sb.append("RLIKE '^(?:").append(body).append(")$'")
+          sb.append("RLIKE '^(?:").append(regex(body)).append(")$'")
           i = end
         case None => sb.append(s.charAt(i)); i += 1
       }
@@ -644,26 +623,11 @@ private[engine] trait EngineDialect {
     * textual); a computed pattern, or a literal that never closes,
     * stays for Spark's parser to refuse loudly. */
   private[engine] val rewriteGlob: TextShim = TextShim("glob",
-      finds("\\bGLOB\\b")) { lx =>
+      finds("\\bGLOB\\b"))(lx => anchoredRlike(lx, globToRegex) { i =>
     val s = lx.s
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val pattern =
-        if (lx.code(i) && s.regionMatches(true, i, "GLOB", 0, 4) &&
-            (i == 0 || s.charAt(i - 1).isWhitespace) &&
-            (i + 4 >= s.length || s.charAt(i + 4).isWhitespace))
-          lx.literalAfter(i + 4)
-        else None
-      pattern match {
-        case Some((body, end)) =>
-          sb.append("RLIKE '^(?:").append(globToRegex(body)).append(")$'")
-          i = end
-        case None => sb.append(s.charAt(i)); i += 1
-      }
-    }
-    sb.toString
-  }
+    Option.when(s.regionMatches(true, i, "GLOB", 0, 4) &&
+      (i + 4 >= s.length || s.charAt(i + 4).isWhitespace))(i + 4)
+  })
 
   /** `struct_pack(k := v, …)` → `named_struct('k', v, …)` — DuckDB's
     * functional struct constructor (the call-form twin of the `{…}`
@@ -773,8 +737,10 @@ private[engine] trait EngineDialect {
   /** DuckDB's collection LITERAL syntax → Spark's constructor
     * functions: `[e1, …]` and `ARRAY[e1, …]` → `array(e1, …)`,
     * `{'k': v, …}` → `named_struct('k', v, …)`, and `MAP {k: v, …}` →
-    * `map(k, v, …)`. It runs after `subscripts`, which has made every
-    * adjacent bracket a call, so each bracket left opens a list.
+    * `graft_map(k, v, …)`, Spark's pairwise map under a name that
+    * `DuckdbCompat`'s two-list `map` dispatch leaves alone. It runs
+    * after `subscripts`, which has made every adjacent bracket a call,
+    * so each bracket left opens a list.
     * Colons swap to argument commas only at a struct's or a map's own
     * nesting level; `::` cast syntax (valid in both engines) passes
     * through. Pure text rewrite, idempotent (the output holds no
@@ -808,7 +774,7 @@ private[engine] trait EngineDialect {
         case '{' =>
           val map = dropKeyword(i, "MAP")
           stack.push(if (map) 'M' else 'S')
-          sb.append(if (map) "map(" else "named_struct(")
+          sb.append(if (map) "graft_map(" else "named_struct(")
         case ']' | '}' =>
           if (stack.headOption.exists(_ != 'P')) stack.pop()
           sb.append(')')
@@ -823,11 +789,12 @@ private[engine] trait EngineDialect {
     sb.toString
   }
 
-  /** Apply the dialect rewrites to parenthesized SUBQUERY bodies — CTE
+  /** Apply the Query-scope shims to parenthesized SUBQUERY bodies — CTE
     * definitions, derived tables, IN/EXISTS/scalar subqueries: any
-    * depth-1 paren group whose content opens like a query re-enters the
-    * text pipeline (`rewriteQueryText`), innermost groups first via
-    * recursion. This is what lets a QUALIFY / DISTINCT ON / FROM-first /
+    * depth-1 paren group whose content opens like a query runs through
+    * `rewriteQueryBody`, innermost groups first via recursion; the
+    * Token-scope shims then read the bodies in the statement's one
+    * scan. This is what lets a QUALIFY / DISTINCT ON / FROM-first /
     * ASOF sit inside `WITH c AS (…)` or a derived table, not only at
     * statement level. Groups that do not open like a query (function
     * arguments, column lists) are descended for nested groups but
@@ -850,11 +817,11 @@ private[engine] trait EngineDialect {
             case pivotRe(rest) =>
               // DuckDB allows the PIVOT STATEMENT as a table expression
               // — substitute the SQL it desugars to in place
-              rewriteQueryText(spark, pivotStatementSql(spark, rest))
+              rewriteQueryBody(spark, pivotStatementSql(spark, rest))
             case unpivotRe(rest) =>
-              rewriteQueryText(spark, unpivotStatementSql(rest))
+              rewriteQueryBody(spark, unpivotStatementSql(rest))
             case q if q.matches("(?is)^(SELECT|WITH|VALUES|FROM)\\b.*") =>
-              rewriteQueryText(spark, content)
+              rewriteQueryBody(spark, content)
             case _ if content.contains('(') =>
               rewriteSubqueryBodies(spark, codeMask(content))
             case _ => content
@@ -943,7 +910,7 @@ private[engine] trait EngineDialect {
     // query statements only: a QUALIFY inside CREATE VIEW … AS SELECT
     // would wrap the DDL in a SELECT — leave non-queries to Spark's
     // parser (its error names the unexpected clause)
-    finds("^(SELECT|WITH)\\b", "QUALIFY")) { lx =>
+    finds("^(SELECT|WITH)\\b", "QUALIFY"), Scope.Query) { lx =>
     val s = lx.s
     firstTopLevelKeyword(s, Seq("QUALIFY")) match {
       case None => s
@@ -1025,7 +992,7 @@ private[engine] trait EngineDialect {
     * semantics-free at every nesting depth. Comments between the comma
     * and the boundary are preserved. */
   private[engine] val rewriteTrailingCommas: TextShim = TextShim(
-      "trailing-commas", _.contains(",")) { lx =>
+      "trailing-commas", _.contains(","), Scope.Query) { lx =>
     val s = lx.s
     def comment(j: Int) = lx.shield(j) == '-' || lx.shield(j) == '/'
     val drop = new Array[Boolean](s.length)
@@ -1057,22 +1024,13 @@ private[engine] trait EngineDialect {
     * higher-order functions take (`x -> expr`, `(a, b) -> expr`). The
     * single following `:` converts; `::` casts never match. */
   private[engine] val rewriteLambdaSyntax: TextShim = TextShim(
-      "lambda-syntax", finds("\\bLAMBDA\\b")) { lx =>
-    val s = lx.s
-    val re = "(?is)\\blambda\\s+([A-Za-z_]\\w*(?:\\s*,\\s*[A-Za-z_]\\w*)*)\\s*:(?!:)".r
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- re.findAllMatchIn(s) if lx.code(m.start)) {
-      sb.append(s.substring(last, m.start))
-      val params = m.group(1).split(",").map(_.trim)
-      sb.append(
-        if (params.length == 1) s"${params.head} ->"
-        else params.mkString("(", ", ", ") ->"))
-      last = m.end
-    }
-    sb.append(s.substring(last))
-    sb.toString
-  }
+      "lambda-syntax", finds("\\bLAMBDA\\b"))(_.replaceInCode(lambdaRe) { m =>
+    val params = m.group(1).split(",").map(_.trim)
+    Some(if (params.length == 1) s"${params.head} ->"
+      else params.mkString("(", ", ", ") ->"))
+  })
+  private val lambdaRe =
+    "(?is)\\blambda\\s+([A-Za-z_]\\w*(?:\\s*,\\s*[A-Za-z_]\\w*)*)\\s*:(?!:)".r
 
   // Aggregates where DuckDB permits ORDER BY but the result cannot
   // depend on it — the clause simply drops.
@@ -1269,18 +1227,10 @@ private[engine] trait EngineDialect {
     // pass 1: `:: TYPE [()] [[]...]`
     val colonRe =
       "::\\s*([A-Za-z_]\\w*)(\\s*\\([^)]*\\))?((?:\\s*\\[\\s*\\])*)".r
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- colonRe.findAllMatchIn(s) if lx.code(m.start)) {
+    val s1 = lx.replaceInCode(colonRe) { m =>
       val whole = m.matched.substring(2)
-      val mapped = mapTypeText(whole)
-      if (mapped != whole.trim) {
-        sb.append(s.substring(last, m.start)).append("::").append(mapped)
-        last = m.end
-      }
+      Some(mapTypeText(whole)).filter(_ != whole.trim).map("::" + _)
     }
-    sb.append(s.substring(last))
-    val s1 = sb.toString
     // pass 2: CAST(expr AS TYPE) / TRY_CAST — the LAST top-level AS
     // inside the call's parens delimits the type
     val lx1 = if (s1 == s) lx else codeMask(s1)
@@ -1319,17 +1269,9 @@ private[engine] trait EngineDialect {
     * CTE reuse itself (and the engine's explicit materialization tool
     * is CREATE TEMP TABLE). */
   private[engine] val rewriteMaterializedCte: TextShim = TextShim(
-      "materialized-cte", finds("\\bMATERIALIZED\\b")) { lx =>
-    val s = lx.s
-    val re = "(?is)\\bAS\\s+(?:NOT\\s+)?MATERIALIZED\\s*\\(".r
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- re.findAllMatchIn(s) if lx.code(m.start)) {
-      sb.append(s.substring(last, m.start)).append("AS (")
-      last = m.end
-    }
-    sb.append(s.substring(last))
-    sb.toString
+      "materialized-cte", finds("\\bMATERIALIZED\\b")) {
+    _.replaceInCode("(?is)\\bAS\\s+(?:NOT\\s+)?MATERIALIZED\\s*\\(".r)(
+      _ => Some("AS ("))
   }
 
   /** `//` → Spark's ` DIV ` — DuckDB's integer-division operator.
@@ -1357,8 +1299,8 @@ private[engine] trait EngineDialect {
     * operations — and `**` (DuckDB power) is a Spark parse error. Both
     * refuse loudly naming power(); an engine that computed xor where a
     * migrating script meant exponentiation would be silent wrongness
-    * (the regexp-flags precedent). Spark-native bitwise xor remains
-    * expressible as (a | b) & ~(a & b), named in the refusal. */
+    * (the regexp-flags precedent). Bitwise xor is DuckDB's xor(a, b)
+    * (`DuckdbCompat`), named in the refusal. */
   private[engine] val checkCaretPow: TextShim = TextShim("caret-pow",
       s => s.contains("^") || s.contains("**")) { lx =>
     val s = lx.s
@@ -1378,7 +1320,7 @@ private[engine] trait EngineDialect {
             else
               "^ is POWER in DuckDB but bitwise XOR in Spark — the same" +
                 " text computes two different things. Write power(a, b)" +
-                " for exponentiation, or (a | b) & ~(a & b) for xor")
+                " for exponentiation, or xor(a, b) for xor")
       }
       i += 1
     }

@@ -52,7 +52,7 @@ private[engine] trait EngineDml {
       spark: SparkSession, table: String, src: String,
       cond0: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, expr}
-    val cond = rewriteExpr(cond0)
+    val cond = rewriteExpr(spark, cond0)
     val source = spark.table(src)
     // the equi-key shape takes the key-span-PRUNED delete (a file whose
     // head-key footer range misses the source's key span is never
@@ -683,7 +683,7 @@ private[engine] trait EngineDml {
       spark: SparkSession, stmt: String, retExprs: String): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val items = splitTopLevel(retExprs, ',').map(_.trim).filter(_.nonEmpty)
-      .map(rewriteExpr)
+      .map(rewriteExpr(spark, _))
     require(items.nonEmpty, "RETURNING needs at least one expression")
     def snap(rows: DataFrame): DataFrame =
       rows.selectExpr(items: _*).localCheckpoint(true)
@@ -716,7 +716,8 @@ private[engine] trait EngineDml {
         "RETURNING is not routed for DELETE ... USING — run the join" +
           " SELECT first, then the DELETE")
       case deleteRe(table, where) =>
-        val victims = spark.table(table).filter(wherePred(Option(where)))
+        val victims =
+          spark.table(table).filter(wherePred(spark, Option(where)))
         requireStable(victims, "DELETE")
         val out = snap(victims)
         runDelete(spark, table, Option(where))
@@ -729,8 +730,8 @@ private[engine] trait EngineDml {
         // the NEW values of exactly the matched rows: the same
         // assignment projection the update itself applies
         val updated = Dml.applyAssignments(
-          spark.table(table).filter(wherePred(where)), lit(true),
-          parseAssignments(sets))
+          spark.table(table).filter(wherePred(spark, where)), lit(true),
+          parseAssignments(spark, sets))
         requireStable(updated, "UPDATE")
         val out = snap(updated)
         runUpdate(spark, table, sets, where)
@@ -805,19 +806,9 @@ private[engine] trait EngineDml {
     val target = spark.table(table)
     val (explicitCols, srcText) =
       if (body.startsWith("(")) {
-        var depth = 0
-        var i = 0
-        var end = -1
-        while (i < body.length && end < 0) {
-          body.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) end = i
-            case _ => ()
-          }
-          i += 1
-        }
+        val end = EngineLex.codeMask(body).closeOf(0)
         require(end > 0, "unbalanced column list in INSERT")
-        val cols = body.substring(1, end).split(',').toSeq
+        val cols = splitTopLevel(body.substring(1, end), ',')
           .map(_.trim.stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty)
         (Some(cols), body.substring(end + 1).trim)
       } else (None, body)
@@ -838,9 +829,10 @@ private[engine] trait EngineDml {
 
   /** Parse a SET list into (column, expression) assignments — shared by
     * the routed UPDATE and its RETURNING projection. */
-  private[engine] def parseAssignments(
+  private[engine] def parseAssignments(spark: SparkSession,
       sets: String): Seq[(String, org.apache.spark.sql.Column)] = {
-    def expr(e: String) = org.apache.spark.sql.functions.expr(rewriteExpr(e))
+    def expr(e: String) =
+      org.apache.spark.sql.functions.expr(rewriteExpr(spark, e))
     // `SET (a, b) = (x, y)` — DuckDB/Postgres tuple assignment: zip the
     // two lists pairwise (same one-projection semantics as the comma
     // form). The names side is a plain identifier list; the values side
@@ -868,24 +860,25 @@ private[engine] trait EngineDml {
   private[engine] def runDelete(
       spark: SparkSession, table: String, where: Option[String]): DataFrame = {
     // SQL DELETE removes rows where the predicate is TRUE; NULL keeps
-    val pred = wherePred(where)
+    val pred = wherePred(spark, where)
     withTablePath(spark, table)(path =>
       rewriteRouted(spark, path, where)(_.filter(!pred)))
   }
 
-  /** A routed WHERE (absent: every row) in the expression dialect
-    * (`exprShims`), TRUE only where the predicate is TRUE: NULL reads
+  /** A routed WHERE (absent: every row) in the clause dialect
+    * (`rewriteExpr`), TRUE only where the predicate is TRUE: NULL reads
     * as false. */
-  private def wherePred(where: Option[String]): org.apache.spark.sql.Column = {
+  private def wherePred(spark: SparkSession,
+      where: Option[String]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    coalesce(expr(rewriteExpr(where.getOrElse("TRUE"))), lit(false))
+    coalesce(expr(rewriteExpr(spark, where.getOrElse("TRUE"))), lit(false))
   }
 
   private[engine] def runUpdate(
       spark: SparkSession, table: String, sets: String,
       where: Option[String]): DataFrame = {
-    val assignments = parseAssignments(sets)
-    val pred = wherePred(where)
+    val assignments = parseAssignments(spark, sets)
+    val pred = wherePred(spark, where)
     // PRIMARY KEY enforcement: an UPDATE that assigns a key column can
     // mint a duplicate or a NULL key (DuckDB refuses both) — pre-check
     // the PROJECTED post-state, one bounded aggregate BEFORE the
@@ -929,7 +922,8 @@ private[engine] trait EngineDml {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
     val parsed =
-      try spark.sessionState.sqlParser.parseExpression(rewriteExpr(where))
+      try spark.sessionState.sqlParser.parseExpression(
+        rewriteExpr(spark, where))
       catch { case _: Exception => return None }
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)

@@ -174,14 +174,10 @@ private[engine] trait EngineIntrospect {
       case other => throw new IllegalArgumentException(
         s"CREATE MACRO needs <name>(<params>) AS <expr> — got: $other")
     }
-    // balanced close of the parameter list (quote-aware)
-    val lx = codeMask(afterParen)
-    // the OPENING paren was consumed by headRe, so the list's close is
-    // the first top-level `)` of the remaining text
-    val close = (0 until afterParen.length).find(i =>
-      lx.code(i) && afterParen.charAt(i) == ')' && lx.depth(i) == 0)
-      .getOrElse(throw new IllegalArgumentException(
-        s"CREATE MACRO $name: unbalanced parameter list"))
+    // the parameter list's close, read by the lexer over the list with
+    // the opening paren that headRe consumed
+    val close = codeMask("(" + afterParen).closeOf(0) - 1
+    require(close >= 0, s"CREATE MACRO $name: unbalanced parameter list")
     val params = splitTopLevel(afterParen.substring(0, close), ',')
       .map(_.trim).filter(_.nonEmpty)
     params.foreach { p =>
@@ -211,9 +207,10 @@ private[engine] trait EngineIntrospect {
       throw new IllegalArgumentException(
         s"CREATE MACRO $name: a function with this name already exists —" +
           " use CREATE OR REPLACE MACRO")
-    // parse once at definition time, with the expression shims applied
-    // to the body text (the same surface a select-list expression gets)
-    val parsed = spark.sessionState.sqlParser.parseExpression(rewriteExpr(body))
+    // parse once at definition time, with the clause shims applied to
+    // the body text (the same surface a select-list expression gets)
+    val parsed =
+      spark.sessionState.sqlParser.parseExpression(rewriteExpr(spark, body))
     val lowerParams = params.map(_.toLowerCase)
     val builder = (args: Seq[Expression]) => {
       require(args.length == params.length,

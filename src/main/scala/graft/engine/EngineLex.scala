@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.util.regex.Pattern
+import scala.util.matching.Regex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import EngineLex.codeMask
@@ -54,6 +55,12 @@ private[engine] final class Lexed(
     }
     -1
   }
+
+  /** The text with each match of `re` that starts in code replaced by
+    * `f(match)`; None keeps the match. */
+  def replaceInCode(re: Regex)(f: Regex.Match => Option[String]): String =
+    re.replaceSomeIn(s, m =>
+      if (code(m.start)) f(m).map(Regex.quoteReplacement) else None)
 
   /** The string literal that opens at `from` after any whitespace, as
     * (body with its `''` escapes kept, index just past the closing
@@ -125,38 +132,49 @@ private[engine] object EngineLex {
   }
 }
 
+/** Where a shim applies: `Query` reads or reshapes one query's clauses,
+  * so it runs on the statement and again on every query body inside
+  * it; `Token` rewrites a spelling wherever it sits, so one scan of the
+  * whole statement (or DML clause, or macro body) covers every depth. */
+private[engine] sealed trait Scope
+private[engine] object Scope {
+  case object Query extends Scope
+  case object Token extends Scope
+}
+
 /** One entry of the router's dialect shim table (`Engine.shims`): a
-  * name, a cheap text trigger, and a rewrite of the lexed statement.
-  * The trigger is a necessary condition — on text it rejects, the
-  * rewrite would return the text unchanged. A shim marked `reenter`
-  * turns the statement into a new shape, so when it fires its output
-  * runs through the whole table again. */
+  * name, a cheap text trigger, a scope, and a rewrite of the lexed
+  * statement. The trigger is a necessary condition — on text it
+  * rejects, the rewrite would return the text unchanged. A shim marked
+  * `reenter` turns the statement into a new shape, so when it fires its
+  * output runs through the table's Query entries again. */
 private[engine] class Shim(
-    val name: String, val trigger: String => Boolean, val reenter: Boolean)(
-    val rewrite: (SparkSession, Lexed) => String)
+    val name: String, val trigger: String => Boolean, val scope: Scope,
+    val reenter: Boolean)(val rewrite: (SparkSession, Lexed) => String)
 
 private[engine] object Shim {
-  def apply(name: String, trigger: String => Boolean, reenter: Boolean = false)(
+  def apply(name: String, trigger: String => Boolean,
+      scope: Scope = Scope.Token, reenter: Boolean = false)(
       rewrite: (SparkSession, Lexed) => String): Shim =
-    new Shim(name, trigger, reenter)(rewrite)
+    new Shim(name, trigger, scope, reenter)(rewrite)
 }
 
 /** A shim that reads only the statement text. It also applies on its
   * own as a `String => String` — trigger, lex, rewrite — which is how a
-  * shim re-applies itself to its own output and how other routes reuse
-  * it outside the table. */
+  * shim re-applies itself to its own output. */
 private[engine] final class TextShim(
-    name: String, trigger: String => Boolean, reenter: Boolean)(
+    name: String, trigger: String => Boolean, scope: Scope, reenter: Boolean)(
     f: Lexed => String)
-    extends Shim(name, trigger, reenter)((_, lx) => f(lx))
+    extends Shim(name, trigger, scope, reenter)((_, lx) => f(lx))
     with (String => String) {
   def apply(s: String): String = if (trigger(s)) f(codeMask(s)) else s
 }
 
 private[engine] object TextShim {
-  def apply(name: String, trigger: String => Boolean, reenter: Boolean = false)(
+  def apply(name: String, trigger: String => Boolean,
+      scope: Scope = Scope.Token, reenter: Boolean = false)(
       f: Lexed => String): TextShim =
-    new TextShim(name, trigger, reenter)(f)
+    new TextShim(name, trigger, scope, reenter)(f)
 }
 
 /** The top-level keyword/separator scanners every route and shim builds

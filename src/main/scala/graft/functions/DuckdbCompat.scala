@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{
-  ArrayType, BooleanType, DoubleType, IntegerType, LongType, MapType,
-  NullType, StringType, StructType}
+  ArrayType, BinaryType, BooleanType, DoubleType, IntegerType, LongType,
+  MapType, NullType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DuckDB function-name compatibility pack (round 16): the reference
@@ -609,6 +609,37 @@ object DuckdbCompat {
             Literal.create(Seq.empty, ArrayType(valueType)))
         case _ => UnresolvedExtractValue(x, i)
       }
+    },
+    // map(keys, values) over two lists is DuckDB's MAP constructor
+    // (`MAP(['a', 'b'], [1, 2])`, two entries; unequal lengths refuse
+    // with DuckDB's message); every other arity keeps Spark's pairwise
+    // map, which `graft_map` names for the literal pass's `MAP {k: v}`
+    "map" -> {
+      case Seq(k, v) if Seq(k, v).forall(_.dataType.isInstanceOf[ArrayType]) =>
+        val m = MapFromArrays(k, v)
+        If(Not(EqualTo(Size(k, false), Size(v, false))),
+          Cast(new RaiseError(Literal("The map key list does not align" +
+            " with the map value list (as in DuckDB)")), m.dataType), m)
+      case args => CreateMap(args)
+    },
+    "graft_map" -> (args => CreateMap(args)),
+    // xor(a, b) — DuckDB's bitwise xor (Spark spells it `^`, which
+    // DuckDB reads as power); Spark's coercion widens the two integral
+    // types and refuses any other, as DuckDB does
+    "xor" -> { args0 =>
+      val Seq(a, b) = arity("xor", 2)(args0)
+      BitwiseXor(a, b)
+    },
+    // concat skips NULL arguments in DuckDB ('a' for concat('a', NULL),
+    // '' when every argument is NULL) where Spark's returns NULL: over
+    // scalar arguments it is concat_ws('', …) on their string forms.
+    // Lists and binary values keep Spark's concat; `||` is NULL in both.
+    "concat" -> { args =>
+      if (args.exists(a => a.dataType.isInstanceOf[ArrayType] ||
+          a.dataType.isInstanceOf[MapType] || a.dataType == BinaryType))
+        Concat(args)
+      else ConcatWs(Literal("") +: args.map(a =>
+        if (a.dataType.isInstanceOf[StringType]) a else Cast(a, StringType)))
     },
     // list_zip(l1, …, ln) — element-wise zip padded to the LONGEST list
     // with NULLs (measured), struct fields named list_1…list_n (DuckDB's

@@ -1468,6 +1468,17 @@ class EngineSpec extends AnyFunSuite {
     finally Engine.exec(spark, "DROP MACRO IF EXISTS first_of")
   }
 
+  test("CREATE MACRO refuses ^ as a SELECT does") {
+    // DuckDB 1.0 reads x ^ 2 as power: sq(7) = 49.0, never xor's 5
+    val select = intercept[IllegalArgumentException](
+      Engine.sql(spark, "SELECT 7 ^ 2")).getMessage
+    val e = intercept[IllegalArgumentException](
+      Engine.exec(spark, "CREATE MACRO engine_spec_sq(x) AS x ^ 2"))
+    assert(e.getMessage == select)
+    assert(!spark.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("engine_spec_sq")))
+  }
+
   test("PREPARE/EXECUTE/DEALLOCATE round-trip with re-binding") {
     Engine.exec(spark,
       "PREPARE engine_spec_p AS SELECT id FROM range(10)" +

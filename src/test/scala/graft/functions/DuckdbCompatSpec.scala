@@ -649,4 +649,44 @@ class DuckdbCompatSpec extends AnyFunSuite {
     assert(one("SELECT length(X'010203')") == 3)
     assert(one("SELECT length(NULL)") == null)
   }
+
+  // Expected values below are DuckDB 1.0.0's, measured.
+
+  test("xor is DuckDB's bitwise xor, in the wider integral type") {
+    assert(one("SELECT xor(5::INT, 3::BIGINT)") == 6L)
+    assert(spark.sql("SELECT xor(5::INT, 3::BIGINT)").schema.head.dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(one("SELECT xor(1::TINYINT, 2::SMALLINT)") == 3.toShort)
+    assert(one("SELECT xor(NULL, 3)") == null)
+    // DuckDB has no xor over decimals
+    val e = intercept[Exception](one("SELECT xor(1.5, 2)"))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"))
+  }
+
+  test("MAP(keys, values) over two lists builds DuckDB's map") {
+    import graft.engine.Engine
+    def route(q: String): Any = Engine.sql(spark, q).collect()(0).get(0)
+    assert(route("SELECT MAP(['a', 'b'], [1, 2])['b']") == Seq(2))
+    assert(route("SELECT MAP(['a', 'b'], [1, 2])") == Map("a" -> 1, "b" -> 2))
+    val e = intercept[Exception](route("SELECT MAP(['a', 'b'], [1])"))
+    assert(e.getMessage.contains(
+      "The map key list does not align with the map value list"))
+    // the literal spelling keeps one entry whose key is the list [1]
+    assert(route("SELECT cardinality(MAP {[1]: [2]})") == 1)
+    assert(route("SELECT map_keys(MAP {[1]: [2]})") == Seq(Seq(1)))
+    // every other arity keeps Spark's pairwise map
+    assert(one("SELECT map('a', 1, 'b', 2)") == Map("a" -> 1, "b" -> 2))
+    assert(one("SELECT map()") == Map())
+  }
+
+  test("concat skips NULL arguments, as in DuckDB") {
+    assert(one("SELECT concat('a', NULL)") == "a")
+    assert(one("SELECT concat(NULL, NULL)") == "")
+    assert(one("SELECT concat('a', 1, NULL)") == "a1")
+    // lists and binary values keep Spark's concat; || is NULL in both
+    assert(one("SELECT concat(array(1), array(2, 3))") == Seq(1, 2, 3))
+    assert(one("SELECT concat(X'01', X'02')").asInstanceOf[Array[Byte]]
+      .toSeq == Seq[Byte](1, 2))
+    assert(one("SELECT 'a' || NULL") == null)
+  }
 }

@@ -417,4 +417,81 @@ class DmlSpec extends AnyFunSuite {
       assert(spark.table(t).count() == 1)
     } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
   }
+
+  /** A routed table of four rows — (k, v, s, b): (1, 7, 'abc', NULL),
+    * (6, 3, 'xyz', NULL), (7, 2, 'a', NULL), (4, 5, NULL, NULL) — after
+    * `stmt`, as (k, v, s, b) tuples in k order. */
+  private def afterStmt(tag: String, stmt: String => String)
+      : Seq[(Long, Long, String, Any)] = {
+    val t = s"dmlspec_${tag}_p${ProcessHandle.current.pid}"
+    try {
+      Engine.runScript(spark,
+        s"""DROP TABLE IF EXISTS $t;
+           |CREATE TABLE $t (k BIGINT, v BIGINT, s STRING, b BOOLEAN);
+           |INSERT INTO $t VALUES (1, 7, 'abc', NULL), (6, 3, 'xyz', NULL),
+           |  (7, 2, 'a', NULL), (4, 5, NULL, NULL)""".stripMargin)
+      Engine.sql(spark, stmt(t))
+      spark.table(t).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.get(3)))
+        .sortBy(_._1)
+    } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+  }
+
+  // Expected rows below are DuckDB 1.0.0's for the same statements.
+
+  test("a routed UPDATE refuses ^ as a SELECT does, leaving the table as it was") {
+    val select = intercept[IllegalArgumentException](
+      Engine.sql(spark, "SELECT 7 ^ 2")).getMessage
+    val t = s"dmlspec_caret_p${ProcessHandle.current.pid}"
+    try {
+      Engine.runScript(spark,
+        s"""DROP TABLE IF EXISTS $t;
+           |CREATE TABLE $t (k BIGINT, v BIGINT);
+           |INSERT INTO $t VALUES (1, 7)""".stripMargin)
+      val e = intercept[IllegalArgumentException](
+        Engine.sql(spark, s"UPDATE $t SET v = v ^ 2"))
+      assert(e.getMessage == select)
+      assert(spark.table(t).collect().map(_.getLong(1)).toSeq == Seq(7L))
+    } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a routed DELETE reads // as DuckDB's integer division") {
+    assert(afterStmt("intdiv", t => s"DELETE FROM $t WHERE k // 2 = 3")
+      .map(_._1) == Seq(1L, 4L))
+  }
+
+  test("a routed DELETE reads ~ as DuckDB's full regex match") {
+    assert(afterStmt("tilde", t => s"DELETE FROM $t WHERE s ~ 'a.*'")
+      .map(_._1) == Seq(4L, 6L))
+  }
+
+  test("a routed UPDATE reads DuckDB's BOOL type name in a CAST") {
+    assert(afterStmt("bool", t => s"UPDATE $t SET b = CAST(k % 2 AS BOOL)")
+      .map(r => (r._1, r._4)) ==
+      Seq((1L, true), (4L, false), (6L, false), (7L, true)))
+  }
+
+  test("a routed DELETE reads a quoted parquet path in a WHERE subquery") {
+    import spark.implicits._
+    val fx = s"target/dmlspec/keys_p${ProcessHandle.current.pid}.parquet"
+    Seq(1L, 6L).toDF("k").coalesce(1).write.mode("overwrite").parquet(fx)
+    assert(afterStmt("path",
+      t => s"DELETE FROM $t WHERE k IN (SELECT k FROM '$fx')")
+      .map(_._1) == Seq(4L, 7L))
+  }
+
+  test("INSERT's column list is read by the lexer: a quoted `a)` is one name") {
+    val t = s"dmlspec_paren_p${ProcessHandle.current.pid}"
+    try {
+      Engine.runScript(spark,
+        s"""DROP TABLE IF EXISTS $t;
+           |CREATE TABLE $t (`a)` INT, b INT)""".stripMargin)
+      val ret = Engine.sql(spark,
+        s"INSERT INTO $t (`a)`, b) VALUES (1, 2) RETURNING *")
+      assert(ret.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq ==
+        Seq((1, 2)))
+      assert(spark.table(t).collect().map(r => (r.getInt(0), r.getInt(1)))
+        .toSeq == Seq((1, 2)))
+    } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+  }
 }
