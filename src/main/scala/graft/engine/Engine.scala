@@ -74,11 +74,9 @@ object Engine
       pkGenBefore.foreach { case (name, gen) =>
         state.pkRetireIfUnchanged(name, gen)
       }
-    // RETURNING (DuckDB/Postgres): a trailing clause on plain
-    // INSERT/UPDATE/DELETE that yields the affected rows — split off
-    // here so every DML route below stays RETURNING-free
-    splitReturning(trimmed) match {
-      case (stmt, Some(ret)) => return runReturning(spark, stmt, ret)
+    // INSERT … RETURNING (DuckDB/Postgres); DML reads its own (runDml)
+    if (firstWord(trimmed) == "INSERT") splitReturning(trimmed) match {
+      case (stmt, Some(ret)) => return runInsertReturning(spark, stmt, ret)
       case _ => ()
     }
     val summarizeRe = "(?is)^SUMMARIZE\\s+(.+)$".r
@@ -202,29 +200,10 @@ object Engine
             " session catalog — register the files as path tables/views" +
             " (read_parquet/read_csv), or IMPORT DATABASE 'dir' for a" +
             " directory exported by EXPORT DATABASE")
-      case deleteUsingRe(table, src, cond) =>
-        runDeleteUsing(spark, table, src, cond)
-      case deleteRe(table, where) => runDelete(spark, table, Option(where))
-      case updateRe(table, blob) =>
-        // one top-level scan decides the shape: a FROM in the SET blob
-        // is the DuckDB/Postgres JOIN UPDATE (`UPDATE t SET col = s.col
-        // FROM s WHERE t.k = s.k`) — routed onto the UPDATE-only merge:
-        // matched keys take the source's columns via the key-span-pruned
-        // broadcast rewrite, absent keys do nothing (an UPDATE never
-        // inserts); richer shapes refuse loudly. Otherwise it is the
-        // plain predicate UPDATE. The SET list may carry WHERE inside a
-        // string literal or a subquery — both splits use the TOP-LEVEL
-        // keyword scanners.
-        splitUpdateFrom(blob) match {
-          case Some((sets, src, cond)) =>
-            runUpdateFrom(spark, table, sets, src, cond)
-          case None =>
-            val (sets, where) = splitOnWhere(blob)
-            runUpdate(spark, table, sets, where)
-        }
-      case mergeRe(table, tAlias, src, sAlias, onCond, sets, insert) =>
-        runMerge(spark, table, Option(tAlias), src, Option(sAlias),
-          onCond, sets, insert)
+      case dml if Set("DELETE", "UPDATE", "MERGE")(firstWord(dml)) =>
+        // RETURNING and the join spellings included: one clause pass,
+        // one parse by Spark's parser, the copy-on-write rewriter
+        runDml(spark, dml)
       case ins if insertConflictSplit(ins).isDefined =>
         val (table, body, keys, doUpdate) = insertConflictSplit(ins).get
         runUpsert(spark, table, body, keys, doUpdate)
@@ -521,9 +500,9 @@ object Engine
   private[engine] def rewriteQueryBody(spark: SparkSession, q: String): String =
     runShims(spark, queryShims, q)
 
-  /** A clause's pass — a DML statement's WHERE, SET, RETURNING or
-    * USING condition, a macro body — reads the dialect of a SELECT: the
-    * Query pass on its subquery bodies, then every Token entry. */
+  /** A clause's pass — a whole DELETE/UPDATE/MERGE statement, a macro
+    * body — reads the dialect of a SELECT: the Query pass on its
+    * subquery bodies, then every Token entry. */
   private[engine] def rewriteExpr(spark: SparkSession, e: String): String =
     runShims(spark, clauseShims, e)
 

@@ -2,221 +2,276 @@ package graft.engine
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.graft.ParquetFooters
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{
+  UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{
+  And, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Assignment, DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan,
+  MergeIntoTable, OneRowRelation, Project, SubqueryAlias, UpdateAction,
+  UpdateTable}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
+import org.apache.spark.sql.graft.{ParquetFooters, ParsedColumn}
 import org.apache.spark.sql.types.StructField
 
-/** The user-typed DML statement routes (A6): DELETE/UPDATE/MERGE/
-  * upsert/RETURNING via the copy-on-write rewriter in [[Dml]], plus
-  * COPY TO/FROM and the insert-source binding shared by all insert
-  * shapes. Mixed into [[Engine]]; split out by file only. */
+/** A relation a DML statement names: its catalog name, the qualifiers a
+  * clause may call it by, and the alias a join gives it. */
+private[engine] final case class DmlRel(
+    name: String, quals: Set[String], alias: String)
+
+/** The user-typed DML statement routes (A6): DELETE/UPDATE/MERGE (read
+  * once, by Spark's parser)/upsert/RETURNING via the copy-on-write
+  * rewriter in [[Dml]], plus COPY TO/FROM and the insert-source binding
+  * shared by all insert shapes. Mixed into [[Engine]]; split out by
+  * file only. */
 private[engine] trait EngineDml {
   this: Engine.type =>
 
-  // --- user-typed DML: routed to the copy-on-write rewriter ---------------
+  // --- user-typed DML: one parse, routed to the copy-on-write rewriter ----
   //
   // The reference's delegation point executes any DuckDB SQL, so a user
-  // can type `UPDATE`/`DELETE`/`MERGE` against a table they created (CTAS
-  // is already supported through this path). Spark's session-catalog
-  // parquet tables reject DML outright ("does not support
-  // DELETE/MERGE/UPDATE" — row-level ops need a DSv2 table format), so
-  // the engine closes the gap itself: the statement's WHERE/SET text
-  // parses through `expr` (full Catalyst expression syntax) and executes
-  // as the copy-on-write file rewrite in `engine/Dml.scala`, then the
-  // table's file listing is refreshed. When the WHERE's top-level
-  // conjunction bounds a long/timestamp column by literals, the rewrite
-  // takes the footer-stats-PRUNED path (`pruneRange` below) — a narrow
-  // typed DELETE on a range-clustered layout touches a handful of files;
-  // any predicate shape the extractor doesn't recognize falls back to the
-  // full rewrite, never to wrong pruning. Targets must be catalog TABLES:
-  // temp views over registered (read-only) files refuse with a clear
-  // message instead of mutating inputs.
-  private[engine] val deleteRe =
-    "(?is)^DELETE\\s+FROM\\s+([A-Za-z_][A-Za-z0-9_]*)(?:\\s+WHERE\\s+(.+))?$".r
+  // can type `UPDATE`/`DELETE`/`MERGE` against a table they created.
+  // Spark's session-catalog parquet tables reject DML outright (row-level
+  // ops need a DSv2 table format), so the engine closes the gap itself.
+  // The statement gets the clause pass (`rewriteExpr`) once, RETURNING
+  // items included; the lexer splits off RETURNING, cuts the source out
+  // of the join spellings Spark's grammar lacks (`UPDATE … FROM s`,
+  // `DELETE … USING s`) and respells a tuple SET; Spark's parser reads
+  // the rest once (DeleteFromTable, UpdateTable, MergeIntoTable). The
+  // parsed WHERE and SET values run as Columns in the copy-on-write file
+  // rewrite of `engine/Dml.scala`. When the WHERE's top-level
+  // conjunction bounds a long/timestamp/date column by literals, the
+  // rewrite takes the footer-stats-PRUNED path (`pruneRange`); any other
+  // shape takes the full rewrite, never wrong pruning. Targets must be
+  // catalog TABLES (bare, quoted or database-qualified): temp views over
+  // registered (read-only) files refuse instead of mutating inputs.
+
+  /** The statement's first word, upper-cased. */
+  private[engine] def firstWord(s: String): String =
+    s.takeWhile(c => c.isLetterOrDigit || c == '_').toUpperCase
+
+  private def dmlRel(spark: SparkSession, plan: LogicalPlan): DmlRel =
+    plan match {
+      case SubqueryAlias(a, r: UnresolvedRelation) =>
+        val rel = dmlRel(spark, r)
+        rel.copy(quals = rel.quals + a.name.toLowerCase, alias = a.name)
+      case r: UnresolvedRelation =>
+        val last = r.multipartIdentifier.last
+        DmlRel(catalogName(spark, r.multipartIdentifier),
+          Set(last.toLowerCase), last)
+      case other => throw new IllegalArgumentException(
+        s"routed DML needs a plain relation: ${other.simpleString(80)}")
+    }
+
+  /** Run a DELETE, UPDATE or MERGE statement: one clause pass, one
+    * parse, then the route of the parsed plan. */
+  private[engine] def runDml(spark: SparkSession, statement: String): DataFrame = {
+    val (stmt, returning) = splitReturning(rewriteExpr(spark, statement))
+    val (text, source) = plainDml(stmt)
+    val plan = spark.sessionState.sqlParser.parsePlan(text)
+    val src = source.map(s => DmlRel(s, Set(s.toLowerCase), s))
+    returning match {
+      case Some(items) => runReturning(spark, plan, source.isDefined, items)
+      case None => plan match {
+        case DeleteFromTable(t, cond) =>
+          val target = dmlRel(spark, t)
+          src match {
+            case Some(s) => runDeleteUsing(spark, target, s, cond)
+            case None => runDelete(spark, target.name, Some(cond))
+          }
+        case UpdateTable(t, as, cond) =>
+          val target = dmlRel(spark, t)
+          src match {
+            // plainDml refuses an UPDATE … FROM without a WHERE
+            case Some(s) => runUpdateFrom(spark, target, as, s, cond.get)
+            case None => runUpdate(spark, target.name, setList(as), cond)
+          }
+        case m: MergeIntoTable => runMerge(spark, m)
+      }
+    }
+  }
+
+  /** The text Spark's parser reads for a DML statement, and the source
+    * the lexer cut out at top level: `UPDATE t SET … FROM s WHERE …` and
+    * `DELETE FROM t USING s WHERE …`, which Spark's grammar lacks, become
+    * a plain UPDATE or DELETE; a tuple SET becomes the comma form. */
+  private def plainDml(stmt: String): (String, Option[String]) = {
+    def cut(kw: String, what: String) = {
+      val where = firstTopLevelKeyword(stmt, Seq("WHERE"))
+      val head = where.fold(stmt)(stmt.substring(0, _))
+      firstTopLevelKeyword(head, Seq(kw)).fold((stmt, Option.empty[String])) { i =>
+        val src = head.substring(i + kw.length).trim
+        require(src.matches("[A-Za-z_]\\w*"),
+          s"routed $what needs a plain source relation: $src")
+        val w = where.getOrElse(throw new IllegalArgumentException(
+          s"$what needs a WHERE joining target to source"))
+        (head.substring(0, i) + stmt.substring(w), Some(src))
+      }
+    }
+    firstWord(stmt) match {
+      case "UPDATE" =>
+        val (text, src) = cut("FROM", "UPDATE … FROM")
+        (commaSets(text), src)
+      case "DELETE" => cut("USING", "DELETE … USING")
+      case _ => (stmt, None)
+    }
+  }
+
+  /** `SET (a, b) = (x, y)` — DuckDB/Postgres tuple assignment — as the
+    * comma form `SET a = x, b = y`, the same one-projection semantics. */
+  private def commaSets(stmt: String): String = {
+    val lx = EngineLex.codeMask(stmt)
+    val open = firstTopLevelKeyword(stmt, Seq("SET"))
+      .fold(-1)(i => stmt.indexWhere(!_.isWhitespace, i + 3))
+    if (open < 0 || stmt.charAt(open) != '(') stmt
+    else {
+      val close = lx.closeOf(open)
+      val vOpen = if (close < 0) -1 else stmt.indexOf('(', close)
+      val vClose = if (vOpen < 0) -1 else lx.closeOf(vOpen)
+      require(vClose > 0 && stmt.substring(close + 1, vOpen).trim == "=",
+        s"malformed tuple SET assignment: ${stmt.substring(open)}")
+      def items(from: Int, to: Int) =
+        splitTopLevel(stmt.substring(from + 1, to), ',').map(_.trim)
+      val (ns, vs) = (items(open, close), items(vOpen, vClose))
+      require(ns.size == vs.size && ns.forall(_.nonEmpty),
+        s"tuple SET assigns ${ns.size} column(s) from ${vs.size}" +
+          " value(s) — the lists must pair up")
+      stmt.substring(0, open) + ns.zip(vs).map { case (n, v) => s"$n = $v" }
+        .mkString(", ") + stmt.substring(vClose + 1)
+    }
+  }
+
+  /** A parsed SET list as (column, value) assignments. */
+  private def setList(as: Seq[Assignment]): Seq[(String, Column)] =
+    as.map(a => (ref(a.key)._2, ParsedColumn(a.value)))
 
   // DELETE FROM t USING s WHERE <cond> — the DuckDB/Postgres join
   // delete: remove target rows for which SOME source row satisfies the
   // condition. The copy-on-write transform is a LEFT ANTI join against
-  // the broadcast source under the raw condition — anti-join keeps
-  // exactly the rows with NO qualifying match, which IS the statement's
-  // semantics (EXISTS-delete), with NULL conditions keeping the row
-  // like any SQL predicate. The source is an upsert-batch-sized
-  // relation by the same contract as MERGE, so the rewrite stays one
-  // map-shaped job with no target shuffle. Condition references qualify
-  // by the TABLE NAMES (aliases are not routed).
-  private[engine] val deleteUsingRe =
-    ("(?is)^DELETE\\s+FROM\\s+([A-Za-z_]\\w*)\\s+USING\\s+" +
-      "([A-Za-z_]\\w*)\\s+WHERE\\s+(.+)$").r
-
-  private[engine] def runDeleteUsing(
-      spark: SparkSession, table: String, src: String,
-      cond0: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, expr}
-    val cond = rewriteExpr(spark, cond0)
-    val source = spark.table(src)
+  // the broadcast (upsert-batch-sized, as for MERGE) source under the
+  // condition — anti-join keeps exactly the rows with NO qualifying
+  // match, the statement's EXISTS-delete semantics, NULL keeping the row.
+  private def runDeleteUsing(spark: SparkSession, target: DmlRel,
+      src: DmlRel, cond: Expression): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    val source = spark.table(src.name)
     // the equi-key shape takes the key-span-PRUNED delete (a file whose
     // head-key footer range misses the source's key span is never
-    // opened — the sibling MERGE/UPDATE FROM scale shape); any richer
-    // condition falls back to the full anti-join rewrite
+    // opened); any richer condition takes the full anti-join rewrite
     val equiKeys =
-      try Some(parseEquiKeys(cond, Set(table.toLowerCase),
-        Set(src.toLowerCase), "DELETE USING"))
+      try Some(joinKeys(cond, target.quals, src.quals, "DELETE USING"))
       catch { case _: IllegalArgumentException => None }
-    withTablePath(spark, table) { path =>
+    withTablePath(spark, target.name) { path =>
       equiKeys match {
         case Some(keys) => Dml.deleteUsingKeys(spark, path, source, keys)
         case None =>
           Dml.rewriteAllFiles(spark, path)(df =>
-            df.alias(table)
-              .join(broadcast(source.alias(src)), expr(cond), "left_anti"))
+            df.alias(target.alias).join(broadcast(source.alias(src.alias)),
+              ParsedColumn(cond), "left_anti"))
       }
     }
   }
-  private[engine] val updateRe =
-    "(?is)^UPDATE\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+SET\\s+(.+)$".r
 
-  /** Split `SET-list [WHERE predicate]` at the first WHERE keyword that
-    * sits outside string literals and parens (subqueries) — expressed
-    * through the shared top-level keyword scanner so the boundary and
-    * quote rules live in ONE place. */
-  private[engine] def splitOnWhere(s: String): (String, Option[String]) =
-    firstTopLevelKeyword(s, Seq("WHERE")) match {
-      case Some(i) =>
-        (s.substring(0, i).trim, Some(s.substring(i + "WHERE".length).trim))
-      case None => (s.trim, None)
+  /** A column reference of a join condition or assignment —
+    * (qualifier?, column); any other expression reads as its SQL, so
+    * it never pairs with a column. */
+  private def ref(e: Expression): (Option[String], String) = e match {
+    case UnresolvedAttribute(Seq(q, c)) => (Some(q.toLowerCase), c)
+    case UnresolvedAttribute(Seq(c)) => (None, c)
+    case a: UnresolvedAttribute =>
+      throw new IllegalArgumentException(s"unsupported column ref: ${a.sql}")
+    case other => (None, other.sql)
+  }
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  /** Same-named equi-key columns from an AND of `t.k = s.k` conjuncts
+    * — the join shape MERGE, UPDATE … FROM and DELETE … USING route
+    * (richer conditions refuse loudly). */
+  private def joinKeys(cond: Expression, tQuals: Set[String],
+      sQuals: Set[String], what: String): Seq[String] =
+    conjuncts(cond).map {
+      case conj @ EqualTo(l, r) =>
+        val (q1, c1) = ref(l); val (q2, c2) = ref(r)
+        require(c1.equalsIgnoreCase(c2),
+          s"$what keys must pair the same-named column: ${conj.sql}")
+        val quals = Set(q1, q2).flatten
+        require(quals.exists(tQuals) && quals.exists(sQuals),
+          s"$what conjunct must join target to source: ${conj.sql}")
+        c1
+      case conj => throw new IllegalArgumentException(
+        s"$what supports equi-key conjuncts: ${conj.sql}")
     }
+
+  /** Same-named source-column assignments — the `col = source.col`
+    * shape MERGE and UPDATE … FROM route. */
+  private def joinSets(as: Seq[Assignment], tQuals: Set[String],
+      sQuals: Set[String], what: String): Seq[String] =
+    as.map { a =>
+      val (lq, lc) = ref(a.key); val (rq, rc) = ref(a.value)
+      require(lq.forall(tQuals) && rq.forall(sQuals) &&
+        lc.equalsIgnoreCase(rc),
+        s"routed $what supports SET col = source.col of the same name" +
+          s" — got: ${a.key.sql} = ${a.value.sql}")
+      lc
+    }
+
+  /** The routed `UPDATE t SET … FROM s WHERE …` executor — the
+    * UPDATE-only merge (`Dml.updateFromAll`). */
+  private def runUpdateFrom(spark: SparkSession, target: DmlRel,
+      as: Seq[Assignment], src: DmlRel, cond: Expression): DataFrame = {
+    val keys = joinKeys(cond, target.quals, src.quals, "UPDATE … FROM")
+    val setCols = joinSets(as, target.quals, src.quals, "UPDATE … FROM")
+    val sourceDf = spark.table(src.name)
+    withTablePath(spark, target.name)(path =>
+      Dml.updateFromAll(spark, path, sourceDf, keys, setCols))
+  }
 
   // MERGE INTO target [[AS] t] USING source [[AS] s] ON <equi-keys>
   //   WHEN MATCHED THEN UPDATE SET <assignments>
   //   WHEN NOT MATCHED THEN INSERT <* | (cols) VALUES (vals)>
-  // — the canonical upsert statement the reference's delegation point
-  // accepts (/root/reference/src/duckdb.ts:46-49), routed to the engine's
-  // copy-on-write merge (`Dml.mergeIntoAll`). The alias captures use a
-  // lookahead so a missing alias never swallows the next keyword.
-  private[engine] val mergeRe =
-    ("(?is)^MERGE\\s+INTO\\s+([A-Za-z_]\\w*)" +
-      "(?:\\s+(?:AS\\s+)?(?!USING\\b)([A-Za-z_]\\w*))?" +
-      "\\s+USING\\s+([A-Za-z_]\\w*)" +
-      "(?:\\s+(?:AS\\s+)?(?!ON\\b)([A-Za-z_]\\w*))?" +
-      "\\s+ON\\s+(.+?)" +
-      "\\s+WHEN\\s+MATCHED\\s+THEN\\s+UPDATE\\s+SET\\s+(.+?)" +
-      "\\s+WHEN\\s+NOT\\s+MATCHED\\s+THEN\\s+INSERT\\s+(.+)$").r
-
-  /** Parse the routed MERGE's clauses down to `Dml.mergeIntoAll`'s
-    * (srcKeys, setCols) contract and execute it. The supported shape is
-    * the same-named upsert MERGE translates to: ON conjoins
-    * `t.k = s.k` equi-keys, each SET assignment copies the same-named
-    * source column, and INSERT is the full source row (`*`, or an
-    * explicit column list covering the source columns with identity
-    * values). Anything richer refuses with a clear message — never a
-    * silently-different merge. */
-  /** Parse `q.c` / `c` / backticked forms — (qualifier?, column). */
-  private[engine] def parseQualRef(raw: String): (Option[String], String) = {
-    val r = raw.trim.stripPrefix("`").stripSuffix("`")
-    r.split('.') match {
-      case Array(q, c) => (Some(q.toLowerCase), c)
-      case Array(c) => (None, c)
-      case _ =>
-        throw new IllegalArgumentException(s"unsupported column ref: $raw")
-    }
-  }
-
-  /** Same-named equi-key columns from a top-level AND of
-    * `t.k = s.k` conjuncts — the join shape both MERGE and
-    * UPDATE … FROM route (richer conditions refuse loudly). */
-  private[engine] def parseEquiKeys(cond: String, tQuals: Set[String],
-      sQuals: Set[String], what: String): Seq[String] =
-    splitOnKeyword(cond, "AND").map { conj =>
-      val eq = splitTopLevel(conj, '=')
-      require(eq.size == 2, s"$what supports equi-key conjuncts: $conj")
-      val (q1, c1) = parseQualRef(eq(0)); val (q2, c2) = parseQualRef(eq(1))
-      require(c1.equalsIgnoreCase(c2),
-        s"$what keys must pair the same-named column: $conj")
-      val quals = (Set(q1) ++ Set(q2)).flatten
-      require(quals.exists(tQuals) && quals.exists(sQuals),
-        s"$what conjunct must join target to source: $conj")
-      c1
-    }
-
-  /** Same-named source-column assignments from a SET list — the
-    * `col = source.col` shape MERGE and UPDATE … FROM route. */
-  private[engine] def parseSameNameSets(sets: String, tQuals: Set[String],
-      sQuals: Set[String], what: String): Seq[String] =
-    splitTopLevel(sets, ',').map { a =>
-      val eq = splitTopLevel(a, '=')
-      require(eq.size == 2, s"malformed $what SET assignment: $a")
-      val (lq, lc) = parseQualRef(eq(0)); val (rq, rc) = parseQualRef(eq(1))
-      require(lq.forall(tQuals) && rq.forall(sQuals) &&
-        lc.equalsIgnoreCase(rc),
-        s"routed $what supports SET col = source.col of the same name" +
-          s" — got: $a")
-      lc
-    }
-
-  /** Split an UPDATE's post-SET blob into the join-update parts
-    * (set list, source relation, join condition) when a top-level FROM
-    * is present — None for the plain predicate UPDATE. */
-  private[engine] def splitUpdateFrom(
-      blob: String): Option[(String, String, String)] = {
-    val (beforeWhere, whereOpt) = splitOnWhere(blob)
-    firstTopLevelKeyword(beforeWhere, Seq("FROM")).map { fi =>
-      val sets = beforeWhere.substring(0, fi).trim
-      val src = beforeWhere.substring(fi + "FROM".length).trim
-      require(src.matches("[A-Za-z_]\\w*"),
-        s"routed UPDATE … FROM needs a plain source relation: $src")
-      val cond = whereOpt.getOrElse(throw new IllegalArgumentException(
-        "UPDATE … FROM needs a WHERE joining target to source"))
-      (sets, src, cond)
-    }
-  }
-
-  /** The routed `UPDATE t SET … FROM s WHERE …` executor — the
-    * UPDATE-only merge (`Dml.updateFromAll`). */
-  private[engine] def runUpdateFrom(
-      spark: SparkSession, table: String, sets: String, src: String,
-      cond: String): DataFrame = {
-    val tQuals = Set(table.toLowerCase)
-    val sQuals = Set(src.toLowerCase)
-    val keys = parseEquiKeys(cond, tQuals, sQuals, "UPDATE … FROM")
-    val setCols = parseSameNameSets(sets, tQuals, sQuals, "UPDATE … FROM")
-    val sourceDf = spark.table(src)
-    withTablePath(spark, table)(path =>
-      Dml.updateFromAll(spark, path, sourceDf, keys, setCols))
-  }
-
-  private[engine] def runMerge(
-      spark: SparkSession, table: String, tAlias: Option[String],
-      src: String, sAlias: Option[String], onCond: String, sets: String,
-      insert: String): DataFrame = {
-    val tQuals = (Set(table) ++ tAlias).map(_.toLowerCase)
-    val sQuals = (Set(src) ++ sAlias).map(_.toLowerCase)
+  // — the canonical upsert, routed to the copy-on-write merge
+  // (`Dml.mergeIntoAll`) in its same-named shape: ON conjoins `t.k = s.k`
+  // equi-keys, each SET copies the same-named source column, and INSERT
+  // is the full source row (`*`, or a column list covering it with
+  // identity values). Anything richer refuses — never a silently
+  // different merge.
+  private def runMerge(spark: SparkSession, m: MergeIntoTable): DataFrame = {
+    val target = dmlRel(spark, m.targetTable)
+    val src = dmlRel(spark, m.sourceTable)
+    val (sets, insert) =
+      (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
+        case (Seq(UpdateAction(None, as, false)), Seq(InsertStarAction(None)),
+            Seq()) => (as, Nil)
+        case (Seq(UpdateAction(None, as, false)), Seq(InsertAction(None, ins)),
+            Seq()) => (as, ins)
+        case _ => throw new IllegalArgumentException(
+          "routed MERGE supports WHEN MATCHED THEN UPDATE SET … WHEN NOT" +
+            " MATCHED THEN INSERT * or (cols) VALUES (cols), unconditioned")
+      }
     // ON: top-level AND of target-key = source-key, same column name
-    val srcKeys = parseEquiKeys(onCond, tQuals, sQuals, "MERGE ON")
+    val srcKeys = joinKeys(m.mergeCondition, target.quals, src.quals, "MERGE ON")
     // SET: same-named source column per assignment
-    val setCols = parseSameNameSets(sets, tQuals, sQuals, "MERGE")
-    val sourceDf = spark.table(src)
+    val setCols = joinSets(sets, target.quals, src.quals, "MERGE")
+    val sourceDf = spark.table(src.name)
     // INSERT: `*`, or an explicit (cols) VALUES (vals) spelling of the
     // identical full-row insert
-    val ins = insert.trim.stripSuffix(";").trim
-    if (ins != "*") {
-      val cv = "(?is)^\\(([^)]*)\\)\\s*VALUES\\s*\\(([^)]*)\\)$".r
-      ins match {
-        case cv(cols, vals) =>
-          val cs = cols.split(',').map(parseQualRef(_)._2.toLowerCase).toSeq
-          val vs = vals.split(',').map(parseQualRef(_)._2.toLowerCase).toSeq
-          require(cs == vs,
-            "routed MERGE INSERT values must be the same-named source" +
-              s" columns: ($cols) VALUES ($vals)")
-          val full = sourceDf.columns.map(_.toLowerCase).toSet
-          require(cs.toSet == full,
-            "routed MERGE INSERT must cover the full source row — got" +
-              s" ${cs.mkString(", ")} of ${full.mkString(", ")}")
-        case _ =>
-          throw new IllegalArgumentException(
-            s"routed MERGE supports INSERT * or (cols) VALUES (cols): $ins")
-      }
+    if (insert.nonEmpty) {
+      val cs = insert.map(a => ref(a.key)._2.toLowerCase)
+      require(cs == insert.map(a => ref(a.value)._2.toLowerCase),
+        "routed MERGE INSERT values must be the same-named source" +
+          s" columns: (${insert.map(_.key.sql).mkString(", ")}) VALUES" +
+          s" (${insert.map(_.value.sql).mkString(", ")})")
+      val full = sourceDf.columns.map(_.toLowerCase).toSet
+      require(cs.toSet == full,
+        "routed MERGE INSERT must cover the full source row — got" +
+          s" ${cs.mkString(", ")} of ${full.mkString(", ")}")
     }
-    withTablePath(spark, table)(path =>
+    withTablePath(spark, target.name)(path =>
       Dml.mergeIntoAll(spark, path, sourceDf, srcKeys, setCols))
   }
 
@@ -540,6 +595,16 @@ private[engine] trait EngineDml {
     (fmt, header, partitionBy, compression)
   }
 
+  /** A COPY's format when it names none: the path's extension, else
+    * DuckDB's csv default. */
+  private def formatOfPath(path: String): String = {
+    val lower = path.toLowerCase
+    if (lower.endsWith(".parquet")) "parquet"
+    else if (lower.endsWith(".json") || lower.endsWith(".ndjson")) "json"
+    else if (lower.endsWith(".orc")) "orc"
+    else "csv"
+  }
+
   private[engine] def runCopyFrom(
       spark: SparkSession, table: String, path: String,
       opts: Option[String]): DataFrame = {
@@ -548,13 +613,7 @@ private[engine] trait EngineDml {
     // matters: reading a headerless file with header=true would consume
     // the first DATA row as a header and silently lose it
     val header = headerOpt.getOrElse(false)
-    val format = fmt.getOrElse {
-      val lower = path.toLowerCase
-      if (lower.endsWith(".parquet")) "parquet"
-      else if (lower.endsWith(".json") || lower.endsWith(".ndjson")) "json"
-      else if (lower.endsWith(".orc")) "orc"
-      else "csv"
-    }
+    val format = fmt.getOrElse(formatOfPath(path))
     val schema = spark.table(table).schema
     import org.apache.spark.sql.functions.col
     val read = format match {
@@ -609,15 +668,7 @@ private[engine] trait EngineDml {
     val df =
       if (s.startsWith("(")) sql(spark, s.stripPrefix("(").stripSuffix(")"))
       else sql(spark, s"SELECT * FROM $s")
-    // no explicit FORMAT: infer from the path extension, else DuckDB's
-    // csv default
-    val format = fmt.getOrElse {
-      val lower = path.toLowerCase
-      if (lower.endsWith(".parquet")) "parquet"
-      else if (lower.endsWith(".json") || lower.endsWith(".ndjson")) "json"
-      else if (lower.endsWith(".orc")) "orc"
-      else "csv"
-    }
+    val format = fmt.getOrElse(formatOfPath(path))
     if (partitionBy.nonEmpty || compression.isDefined) {
       // DuckDB's PARTITION_BY write maps exactly onto Spark's
       // hive-style partitionBy: one col=value directory level per key,
@@ -658,84 +709,82 @@ private[engine] trait EngineDml {
     Seq((path, format)).toDF("path", "format")
   }
 
-  /** Split a trailing top-level RETURNING clause off a DML statement —
-    * None when absent or when the statement isn't DML-shaped. */
+  /** Split a trailing top-level RETURNING clause off a DML statement. */
   private[engine] def splitReturning(s: String): (String, Option[String]) =
-    if (!s.matches("(?is)^(INSERT|UPDATE|DELETE)\\b.*")) (s, None)
-    else firstTopLevelKeyword(s, Seq("RETURNING")) match {
+    firstTopLevelKeyword(s, Seq("RETURNING")) match {
       case Some(i) => (s.substring(0, i).trim,
         Some(s.substring(i + "RETURNING".length).trim))
       case None => (s, None)
     }
 
-  /** DuckDB/Postgres RETURNING over the routed DML: the result is the
-    * AFFECTED rows projected through the clause's expressions —
-    * snapshotted eagerly (localCheckpoint) BEFORE the copy-on-write
-    * rewrite replaces the files the snapshot would otherwise re-read.
-    * DELETE returns the victims' OLD values, UPDATE the matched rows'
-    * NEW values, INSERT the landed rows (bound positionally with the
-    * target's types, DuckDB's binding). Join-DML and ON CONFLICT forms
-    * refuse loudly — their affected-row sets are not cleanly separable
-    * from the rewrite. Materializing the affected rows is RETURNING's
-    * own semantics (the client receives them), so the checkpoint is
-    * bounded by what the statement already promises to produce. */
-  private[engine] def runReturning(
-      spark: SparkSession, stmt: String, retExprs: String): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val items = splitTopLevel(retExprs, ',').map(_.trim).filter(_.nonEmpty)
-      .map(rewriteExpr(spark, _))
+  /** RETURNING's items, read as a SELECT's select list. */
+  private def returningItems(spark: SparkSession, items: String): Seq[Column] = {
     require(items.nonEmpty, "RETURNING needs at least one expression")
-    def snap(rows: DataFrame): DataFrame =
-      rows.selectExpr(items: _*).localCheckpoint(true)
-    // RETURNING's contract is "the values that actually land/are
-    // removed". For UPDATE/DELETE the copy-on-write rewrite re-evaluates
-    // the SET and WHERE expressions (the table has no row identity to
-    // join the snapshot back by), so a non-deterministic (rand, uuid)
-    // or per-query-time (current_timestamp — evaluated per query in
-    // Spark) expression would return values that differ from what the
-    // rewrite lands. Refuse that combination loudly instead of lying.
-    def requireStable(df: DataFrame, what: String): Unit = {
-      import org.apache.spark.sql.catalyst.expressions.{
-        CurrentDate, CurrentTimestamp, LocalTimestamp, Now}
-      val unstable = df.queryExecution.analyzed.exists(p =>
-        p.expressions.exists(e => e.exists {
-          case x if !x.deterministic => true
-          case _: CurrentTimestamp | _: CurrentDate | _: Now |
-              _: LocalTimestamp => true
-          case _ => false
-        }))
-      require(!unstable,
+    spark.sessionState.sqlParser.parsePlan(s"SELECT $items") match {
+      case Project(list, OneRowRelation()) => list.map(ParsedColumn(_))
+      case _ => throw new IllegalArgumentException(
+        s"RETURNING takes a select list — got: $items")
+    }
+  }
+
+  /** DuckDB/Postgres RETURNING on a parsed DELETE or UPDATE (`join`:
+    * the statement named a USING/FROM source, which refuses — the
+    * affected-row set of a join is not cleanly separable from the
+    * rewrite). The result is the AFFECTED rows — DELETE's OLD values,
+    * UPDATE's NEW ones, read through the same parsed WHERE and SET the
+    * rewrite then applies — projected through the items and snapshotted
+    * eagerly (localCheckpoint) BEFORE the copy-on-write rewrite replaces
+    * the files the snapshot would otherwise re-read; the client receives
+    * those rows anyway, so the checkpoint is bounded by what the
+    * statement promises. The rewrite re-evaluates SET and WHERE (the
+    * table has no row identity to join the snapshot back by), so a
+    * non-deterministic or current-time expression would return other
+    * values than it lands: that combination refuses instead of lying. */
+  private def runReturning(spark: SparkSession, plan: LogicalPlan,
+      join: Boolean, items: String): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val cols = returningItems(spark, items)
+    def returned(what: String, rows: DataFrame)(rewrite: => Unit) = {
+      require(!unstableExprs(rows),
         s"RETURNING is not routed for $what with non-deterministic or" +
           " current-time expressions: the rewrite re-evaluates them, so" +
           " the returned values would differ from the landed ones —" +
           " compute the value first (e.g. into a temp table), then" +
           " UPDATE/DELETE with the materialized value")
+      val out = rows.select(cols: _*).localCheckpoint(true)
+      rewrite
+      out
     }
-    stmt match {
-      case deleteUsingRe(_, _, _) => throw new IllegalArgumentException(
+    plan match {
+      case _: DeleteFromTable if join => throw new IllegalArgumentException(
         "RETURNING is not routed for DELETE ... USING — run the join" +
           " SELECT first, then the DELETE")
-      case deleteRe(table, where) =>
-        val victims =
-          spark.table(table).filter(wherePred(spark, Option(where)))
-        requireStable(victims, "DELETE")
-        val out = snap(victims)
-        runDelete(spark, table, Option(where))
-        out
-      case updateRe(table, blob) =>
-        require(splitUpdateFrom(blob).isEmpty,
-          "RETURNING is not routed for UPDATE ... FROM — run the join" +
-            " SELECT first, then the UPDATE")
-        val (sets, where) = splitOnWhere(blob)
+      case _: UpdateTable if join => throw new IllegalArgumentException(
+        "RETURNING is not routed for UPDATE ... FROM — run the join" +
+          " SELECT first, then the UPDATE")
+      case DeleteFromTable(t, cond) =>
+        val table = dmlRel(spark, t).name
+        returned("DELETE", spark.table(table).filter(wherePred(Some(cond))))(
+          runDelete(spark, table, Some(cond)))
+      case UpdateTable(t, as, cond) =>
+        val table = dmlRel(spark, t).name
+        val sets = setList(as)
         // the NEW values of exactly the matched rows: the same
         // assignment projection the update itself applies
-        val updated = Dml.applyAssignments(
-          spark.table(table).filter(wherePred(spark, where)), lit(true),
-          parseAssignments(spark, sets))
-        requireStable(updated, "UPDATE")
-        val out = snap(updated)
-        runUpdate(spark, table, sets, where)
-        out
+        returned("UPDATE", Dml.applyAssignments(
+          spark.table(table).filter(wherePred(cond)), lit(true), sets))(
+          runUpdate(spark, table, sets, cond))
+      case other => throw new IllegalArgumentException(
+        "RETURNING is routed for plain INSERT INTO / UPDATE / DELETE" +
+          s" statements — got: ${other.nodeName}")
+    }
+  }
+
+  /** RETURNING on an INSERT: the landed rows. */
+  private[engine] def runInsertReturning(
+      spark: SparkSession, stmt: String, retExprs: String): DataFrame = {
+    val cols = returningItems(spark, rewriteExpr(spark, retExprs))
+    stmt match {
       case ins if insertConflictSplit(ins).isDefined =>
         throw new IllegalArgumentException(
           "RETURNING is not routed for INSERT ... ON CONFLICT (the" +
@@ -782,7 +831,7 @@ private[engine] trait EngineDml {
         }
         val fullRows = paddedToTarget(spark, table, landed)
         fullRows.write.mode("append").insertInto(table)
-        fullRows.selectExpr(items: _*)
+        fullRows.select(cols: _*)
       case other => throw new IllegalArgumentException(
         "RETURNING is routed for plain INSERT INTO / UPDATE / DELETE" +
           s" statements — got: ${other.take(40)}")
@@ -827,58 +876,25 @@ private[engine] trait EngineDml {
         col(n).cast(targetField(n).dataType).as(n)).toSeq: _*)
   }
 
-  /** Parse a SET list into (column, expression) assignments — shared by
-    * the routed UPDATE and its RETURNING projection. */
-  private[engine] def parseAssignments(spark: SparkSession,
-      sets: String): Seq[(String, org.apache.spark.sql.Column)] = {
-    def expr(e: String) =
-      org.apache.spark.sql.functions.expr(rewriteExpr(spark, e))
-    // `SET (a, b) = (x, y)` — DuckDB/Postgres tuple assignment: zip the
-    // two lists pairwise (same one-projection semantics as the comma
-    // form). The names side is a plain identifier list; the values side
-    // splits at ITS top level.
-    val tupleRe = "(?s)^\\s*\\(([^()]*)\\)\\s*=\\s*\\((.*)\\)\\s*$".r
-    sets.trim match {
-      case tupleRe(names, values) =>
-        val ns = names.split(',').map(_.trim
-          .stripPrefix("`").stripSuffix("`")).toSeq
-        val vs = splitTopLevel(values, ',').map(_.trim)
-        require(ns.size == vs.size && ns.forall(_.nonEmpty),
-          s"tuple SET assigns ${ns.size} column(s) from ${vs.size}" +
-            " value(s) — the lists must pair up")
-        ns.zip(vs.map(expr))
-      case _ =>
-        splitTopLevel(sets, ',').map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"malformed SET assignment: $a")
-          (a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`"),
-            expr(a.substring(eq + 1).trim))
-        }
-    }
-  }
-
-  private[engine] def runDelete(
-      spark: SparkSession, table: String, where: Option[String]): DataFrame = {
+  private[engine] def runDelete(spark: SparkSession, table: String,
+      where: Option[Expression]): DataFrame = {
     // SQL DELETE removes rows where the predicate is TRUE; NULL keeps
-    val pred = wherePred(spark, where)
+    val pred = wherePred(where)
     withTablePath(spark, table)(path =>
       rewriteRouted(spark, path, where)(_.filter(!pred)))
   }
 
-  /** A routed WHERE (absent: every row) in the clause dialect
-    * (`rewriteExpr`), TRUE only where the predicate is TRUE: NULL reads
-    * as false. */
-  private def wherePred(spark: SparkSession,
-      where: Option[String]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    coalesce(expr(rewriteExpr(spark, where.getOrElse("TRUE"))), lit(false))
+  /** A parsed WHERE (absent: every row), TRUE only where the predicate
+    * is TRUE: NULL reads as false. */
+  private def wherePred(where: Option[Expression]): Column = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    coalesce(ParsedColumn(where.getOrElse(Literal.TrueLiteral)), lit(false))
   }
 
-  private[engine] def runUpdate(
-      spark: SparkSession, table: String, sets: String,
-      where: Option[String]): DataFrame = {
-    val assignments = parseAssignments(spark, sets)
-    val pred = wherePred(spark, where)
+  private[engine] def runUpdate(spark: SparkSession, table: String,
+      assignments: Seq[(String, Column)],
+      where: Option[Expression]): DataFrame = {
+    val pred = wherePred(where)
     // PRIMARY KEY enforcement: an UPDATE that assigns a key column can
     // mint a duplicate or a NULL key (DuckDB refuses both) — pre-check
     // the PROJECTED post-state, one bounded aggregate BEFORE the
@@ -898,7 +914,7 @@ private[engine] trait EngineDml {
   /** Execute a routed mutation with footer-stats pruning when the WHERE
     * yields a provable range, else as the full rewrite. */
   private[engine] def rewriteRouted(
-      spark: SparkSession, path: String, where: Option[String])(
+      spark: SparkSession, path: String, where: Option[Expression])(
       transform: DataFrame => DataFrame): Dml.Stats =
     where.flatMap(w => pruneRange(spark, path, w)) match {
       case Some((c, lo, hi)) =>
@@ -918,17 +934,9 @@ private[engine] trait EngineDml {
     * full rewrite, never wrong pruning. */
   private[engine] def pruneRange(
       spark: SparkSession, path: String,
-      where: String): Option[(String, Long, Long)] = {
+      where: Expression): Option[(String, Long, Long)] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
-    val parsed =
-      try spark.sessionState.sqlParser.parseExpression(
-        rewriteExpr(spark, where))
-      catch { case _: Exception => return None }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     // the layout's physical schema (footer read, no job) — the prune
     // column must be INT64-backed for Dml's statistics fold
     val schema = ParquetFooters.read(spark, Seq(path)).schema
@@ -999,40 +1007,27 @@ private[engine] trait EngineDml {
         (math.max(l0, lo.getOrElse(Long.MinValue)),
           math.min(h0, hi.getOrElse(Long.MaxValue)))
     }
-    conjuncts(parsed).foreach {
-      case GreaterThanOrEqual(a, l: Literal) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, Some(loosenLo(v, s)), None)
-      case GreaterThan(a, l: Literal) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, Some(loosenLo(incr(v), s)), None)
-      case LessThan(a, l: Literal) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, None, Some(loosenHi(v, s)))
-      case LessThanOrEqual(a, l: Literal) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, None, Some(loosenHi(incr(v), s)))
-      case EqualTo(a, l: Literal) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, Some(loosenLo(v, s)), Some(loosenHi(incr(v), s)))
+    def fold(e: Expression): Unit = e match {
+      case c: BinaryComparison if c.right.isInstanceOf[Literal] =>
+        for (f <- colOf(c.left);
+             (v, s) <- unit(c.right.asInstanceOf[Literal], f.dataType)) c match {
+          case _: GreaterThanOrEqual => narrow(f, Some(loosenLo(v, s)), None)
+          case _: GreaterThan => narrow(f, Some(loosenLo(incr(v), s)), None)
+          case _: LessThan => narrow(f, None, Some(loosenHi(v, s)))
+          case _: LessThanOrEqual => narrow(f, None, Some(loosenHi(incr(v), s)))
+          case _: EqualTo =>
+            narrow(f, Some(loosenLo(v, s)), Some(loosenHi(incr(v), s)))
+          case _ => () // <=> does not narrow
+        }
       // literal-first spellings mirror with flipped comparison
-      case GreaterThanOrEqual(l: Literal, a) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, None, Some(loosenHi(incr(v), s)))
-      case GreaterThan(l: Literal, a) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, None, Some(loosenHi(v, s)))
-      case LessThan(l: Literal, a) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, Some(loosenLo(incr(v), s)), None)
-      case LessThanOrEqual(l: Literal, a) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, Some(loosenLo(v, s)), None)
-      case EqualTo(l: Literal, a) =>
-        for (f <- colOf(a); (v, s) <- unit(l, f.dataType))
-          narrow(f, Some(loosenLo(v, s)), Some(loosenHi(incr(v), s)))
+      case GreaterThanOrEqual(l: Literal, a) => fold(LessThanOrEqual(a, l))
+      case GreaterThan(l: Literal, a) => fold(LessThan(a, l))
+      case LessThan(l: Literal, a) => fold(GreaterThan(a, l))
+      case LessThanOrEqual(l: Literal, a) => fold(GreaterThanOrEqual(a, l))
+      case EqualTo(l: Literal, a) => fold(EqualTo(a, l))
       case _ => () // unrecognized conjunct: doesn't narrow, stays sound
     }
+    conjuncts(where).foreach(fold)
     // prefer a two-sided range; else any one-sided bound still prunes
     val useful = bounds.filter { case (_, (lo, hi)) =>
       lo != Long.MinValue || hi != Long.MaxValue }
@@ -1058,12 +1053,11 @@ private[engine] trait EngineDml {
     * shapes it cannot mutate. */
   private[engine] def tablePath(spark: SparkSession, table: String): String = {
     val catalog = spark.sessionState.catalog
-    require(catalog.getTempView(table).isEmpty &&
-      catalog.getGlobalTempView(table).isEmpty,
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    require(!catalog.isTempView(ident),
       s"DML target '$table' is a view over registered files — only catalog" +
         " tables are mutable")
-    val meta = catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
+    val meta = catalog.getTableMetadata(ident)
     // the rewriter reads/writes parquet part files; a csv/json/orc table
     // (or a view) would silently no-op (no .parquet files to rewrite) —
     // refuse loudly
@@ -1125,24 +1119,20 @@ private[engine] trait EngineDml {
       bare.stripPrefix("`").stripSuffix("`").toLowerCase
   }
 
-  /** Resolve an INSERT target's written spelling to the identifier the
-    * catalog APIs expect: surrounding backquotes around a plain word
-    * drop (TableIdentifier would re-quote them into a ghost name), and
-    * a current-database qualifier drops (the DML paths are
-    * single-part). Spellings that genuinely need quoting pass through
-    * untouched. */
-  private[engine] def tableRef(spark: SparkSession, raw: String): String = {
-    val t = raw.trim
-    val unq =
-      if (t.startsWith("`") && t.endsWith("`") &&
-          t.substring(1, t.length - 1).matches("[A-Za-z_]\\w*"))
-        t.substring(1, t.length - 1)
-      else t
-    val i = unq.lastIndexOf('.')
-    if (i > 0 && unq.substring(0, i).equalsIgnoreCase(
-        spark.catalog.currentDatabase)) unq.substring(i + 1)
-    else unq
-  }
+  /** The name the catalog APIs resolve for a table's name parts: a
+    * current-database qualifier drops, and a part is quoted only when it
+    * must be (a quoted plain word reads bare). */
+  private def catalogName(spark: SparkSession, parts: Seq[String]): String =
+    QuotingUtils.quoteNameParts(parts match {
+      case Seq(db, t) if db.equalsIgnoreCase(spark.catalog.currentDatabase) =>
+        Seq(t)
+      case ps => ps
+    })
+
+  /** An INSERT target's written spelling as [[catalogName]]. */
+  private[engine] def tableRef(spark: SparkSession, raw: String): String =
+    catalogName(spark,
+      spark.sessionState.sqlParser.parseMultipartIdentifier(raw))
 
   /** The registered key of `table`, validated against its CURRENT
     * schema — a table re-created or renamed outside the routed paths
@@ -1196,7 +1186,7 @@ private[engine] trait EngineDml {
     * checked rows differ from the landed ones (each action re-plans,
     * so even current_timestamp moves between jobs); a stable source
     * skips the checkpoint job and its materialization. Same expression
-    * classes as RETURNING's requireStable — PLUS (r22, ADVICE r21) the
+    * classes as RETURNING's refusal (`unstableExprs`) — PLUS (r22, ADVICE r21) the
     * plan shapes that are Catalyst-deterministic yet ROW-SET-unstable
     * across evaluations: LIMIT/OFFSET/TABLESAMPLE without a total
     * order, dropDuplicates' arbitrary representative, window functions
@@ -1208,19 +1198,10 @@ private[engine] trait EngineDml {
     * by construction: pinning a stable source costs one small job;
     * skipping the pin on an unstable one corrupts the check. */
   private[engine] def stableSnapshot(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      CurrentDate, CurrentTimestamp, LocalTimestamp, Now}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
       AggregateExpression, AnyValue, Collect, First, Last, MaxMinBy, Mode}
     import org.apache.spark.sql.catalyst.plans.{logical => l}
     val plan = df.queryExecution.analyzed
-    val unstable = planExists(plan)(p =>
-      p.expressions.exists(e => e.exists {
-        case x if !x.deterministic => true
-        case _: CurrentTimestamp | _: CurrentDate | _: Now |
-            _: LocalTimestamp => true
-        case _ => false
-      }))
     val orderUnstable = planExists(plan) {
       case _: l.GlobalLimit | _: l.LocalLimit | _: l.Offset | _: l.Tail |
           _: l.Sample | _: l.Deduplicate | _: l.Window => true
@@ -1234,7 +1215,22 @@ private[engine] trait EngineDml {
       })
       case _ => false
     }
-    if (unstable || orderUnstable) df.localCheckpoint(true) else df
+    if (unstableExprs(df) || orderUnstable) df.localCheckpoint(true) else df
+  }
+
+  /** True when the plan, its subqueries included, evaluates a
+    * non-deterministic or current-time expression — each evaluation
+    * may yield other values. */
+  private def unstableExprs(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{
+      CurrentDate, CurrentTimestamp, LocalTimestamp, Now}
+    planExists(df.queryExecution.analyzed)(p =>
+      p.expressions.exists(e => e.exists {
+        case x if !x.deterministic => true
+        case _: CurrentTimestamp | _: CurrentDate | _: Now |
+            _: LocalTimestamp => true
+        case _ => false
+      }))
   }
 
   /** The footer-prunable layout of a PRIMARY KEY table: its data files

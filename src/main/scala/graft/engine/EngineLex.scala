@@ -213,8 +213,7 @@ private[engine] trait EngineLex {
   private[engine] def allTopLevelKeyword(s: String, kw: String): Seq[Int] =
     topLevelKeywords(s, Seq(kw), parenBoundary = true).toSeq
 
-  /** Split on a top-level keyword — the AND-splitter for MERGE ON
-    * conjunctions. A keyword has no whitespace inside, so two hits never
+  /** Split on a top-level keyword. A keyword has no whitespace inside, so two hits never
     * overlap. */
   private[engine] def splitOnKeyword(s: String, kw: String): Seq[String] = {
     val cuts = topLevelKeywords(s, Seq(kw), parenBoundary = false).toSeq

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
+import org.apache.spark.sql.catalyst.analysis.{
+  FunctionRegistry, UnresolvedExtractValue}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{
@@ -47,6 +48,14 @@ object DuckdbCompat {
     require(args.length == n,
       s"$name expects $n arguments, got ${args.length}")
     args
+  }
+
+  /** Spark's own builder of a regexp extraction, given group 0 when the
+    * call names no group, as in DuckDB. */
+  private def groupZero(name: String): Seq[Expression] => Expression = {
+    val builtin = FunctionRegistry.builtin
+      .lookupFunctionBuilder(FunctionIdentifier(name)).get
+    args => builtin(if (args.length == 2) args :+ Literal(0) else args)
   }
 
   /** Adapt a two-parameter HOF lambda's INDEX base: DuckDB's `(x, i)`
@@ -641,6 +650,10 @@ object DuckdbCompat {
       else ConcatWs(Literal("") +: args.map(a =>
         if (a.dataType.isInstanceOf[StringType]) a else Cast(a, StringType)))
     },
+    // two-argument regexp_extract(_all) reads group 0, the whole match,
+    // in DuckDB ('abc123' for ('abc123', '([a-z]+)([0-9]+)'), measured)
+    "regexp_extract" -> groupZero("regexp_extract"),
+    "regexp_extract_all" -> groupZero("regexp_extract_all"),
     // list_zip(l1, …, ln) — element-wise zip padded to the LONGEST list
     // with NULLs (measured), struct fields named list_1…list_n (DuckDB's
     // documented naming; the container's 1.0 oracle leaves them unnamed,

@@ -805,7 +805,7 @@ object TierCSql {
   // --- User-typed MERGE INTO through the engine's SQL route (r16) ---------
   //
   // The canonical upsert statement, typed as SQL and routed by
-  // `Engine.sql`'s MERGE pattern to the copy-on-write merge
+  // `Engine.runDml`'s parsed MERGE to the copy-on-write merge
   // (`Dml.mergeIntoAll`): matched keys take the source's columns via a
   // broadcast left join inside the file rewrite, fresh keys append as new
   // files, and the WHEN-NOT-MATCHED existence check reads only files
@@ -1282,9 +1282,9 @@ object TierCSql {
        |FROM graft_alt_t;""".stripMargin
 
   // RETURNING (round 18): DuckDB/Postgres's affected-rows clause on
-  // plain DML, routed by `Engine.runReturning` — DELETE returns the
-  // victims' OLD values, UPDATE the matched rows' NEW values, INSERT
-  // the landed rows, each snapshotted eagerly before the copy-on-write
+  // plain DML, routed by `Engine.runDml`/`runInsertReturning` — DELETE
+  // returns the victims' OLD values, UPDATE the matched rows' NEW values,
+  // INSERT the landed rows, each snapshotted before the copy-on-write
   // rewrite replaces the files. All three verbs run in one script; the
   // FINAL statement (a single-row DELETE ... RETURNING) is the hashed
   // comparison surface, so the cross-engine check certifies the routed

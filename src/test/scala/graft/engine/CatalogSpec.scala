@@ -291,7 +291,8 @@ class CatalogSpec extends AnyFunSuite {
     // the DML prune reads the layout's schema from the footers
     var range: Option[(String, Long, Long)] = None
     assert(graft.TestSpark.jobsFiredBy {
-      range = Engine.pruneRange(spark, tmp.toString, "id >= 2")
+      range = Engine.pruneRange(spark, tmp.toString,
+        spark.sessionState.sqlParser.parseExpression("id >= 2"))
     } == 0)
     assert(range.contains(("id", 2L, Long.MaxValue)))
   }

@@ -1289,6 +1289,30 @@ class EngineSpec extends AnyFunSuite {
       }
       assert(e2.getMessage.contains("equi-key") ||
         e2.getMessage.contains("same-named"), e2.getMessage)
+      // the other join-DML shapes keep their refusals
+      val src = s"${t}_src"
+      Engine.exec(spark, s"CREATE OR REPLACE TEMP VIEW $src AS" +
+        " SELECT id, id * 3 AS v FROM RANGE(3)")
+      def refusal(stmt: String): String =
+        intercept[IllegalArgumentException](Engine.sql(spark, stmt))
+          .getMessage
+      val merge = s"MERGE INTO $t USING $src ON $t.id = $src.id" +
+        " WHEN MATCHED THEN UPDATE SET"
+      val m1 = refusal(s"$merge v = $src.id WHEN NOT MATCHED THEN INSERT *")
+      assert(m1.contains("SET col = source.col of the same name"), m1)
+      val m2 = refusal(s"$merge v = $src.v" +
+        s" WHEN NOT MATCHED THEN INSERT (id) VALUES ($src.id)")
+      assert(m2.contains("must cover the full source row"), m2)
+      val m3 = refusal(s"UPDATE $t SET v = $src.v FROM $src")
+      assert(m3.contains("needs a WHERE joining target to source"), m3)
+      val m4 = refusal(s"UPDATE $t SET v = s.v FROM (SELECT * FROM $src) s" +
+        s" WHERE $t.id = s.id")
+      assert(m4.contains("needs a plain source relation"), m4)
+      // a non-equi DELETE … USING takes the anti-join rewrite: a target
+      // row goes when some source id (0, 1, 2) is greater than its own
+      Engine.sql(spark, s"DELETE FROM $t USING $src WHERE $t.id < $src.id")
+      assert(spark.table(t).collect().map(_.getLong(0)).sorted.toSeq ==
+        (2L to 9L))
     } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
   }
 

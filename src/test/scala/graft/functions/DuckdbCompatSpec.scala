@@ -689,4 +689,19 @@ class DuckdbCompatSpec extends AnyFunSuite {
       .toSeq == Seq[Byte](1, 2))
     assert(one("SELECT 'a' || NULL") == null)
   }
+
+  test("regexp_extract and regexp_extract_all read group 0 by default, as in DuckDB") {
+    // every expected value is DuckDB 1.0.0's
+    assert(one("SELECT regexp_extract('abc123', '([a-z]+)([0-9]+)')") ==
+      "abc123")
+    assert(one("SELECT regexp_extract('abc123', '[0-9]+')") == "123")
+    assert(one("SELECT regexp_extract('abc', '[0-9]+')") == "")
+    assert(one("SELECT regexp_extract_all('a1b22c333', '[0-9]+')") ==
+      Seq("1", "22", "333"))
+    // a group argument keeps Spark's reading, which DuckDB shares
+    assert(one("SELECT regexp_extract('abc123', '([a-z]+)([0-9]+)', 2)") ==
+      "123")
+    assert(one("SELECT regexp_extract_all('a1b22', '([a-z])([0-9]+)', 1)") ==
+      Seq("a", "b"))
+  }
 }

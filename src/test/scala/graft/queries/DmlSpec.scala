@@ -494,4 +494,30 @@ class DmlSpec extends AnyFunSuite {
         .toSeq == Seq((1, 2)))
     } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
   }
+
+  test("quoted and database-qualified DML targets route, PRIMARY KEY included") {
+    val t = s"dmlspec_quoted_p${ProcessHandle.current.pid}"
+    try {
+      Engine.runScript(spark,
+        s"""DROP TABLE IF EXISTS $t;
+           |CREATE TABLE $t (k BIGINT PRIMARY KEY, v BIGINT);
+           |INSERT INTO $t VALUES (1, 10), (2, 20), (3, 30), (4, 40), (5, 50);
+           |CREATE OR REPLACE TEMP VIEW ${t}_src AS
+           |  SELECT * FROM VALUES (4L, 44L), (9L, 90L) s(k, v)""".stripMargin)
+      Engine.sql(spark, s"DELETE FROM `$t` WHERE k = 1")
+      Engine.sql(spark, s"DELETE FROM default.$t WHERE k = 2")
+      Engine.sql(spark, s"UPDATE `$t` SET v = 0 WHERE k = 3")
+      // the quoted spelling meets the table's registered PRIMARY KEY
+      val e = intercept[IllegalArgumentException](
+        Engine.sql(spark, s"UPDATE `$t` SET k = 4 WHERE k = 5"))
+      assert(e.getMessage.contains("PRIMARY KEY"), e.getMessage)
+      Engine.sql(spark,
+        s"MERGE INTO default.$t USING ${t}_src ON $t.k = ${t}_src.k" +
+          s" WHEN MATCHED THEN UPDATE SET v = ${t}_src.v" +
+          " WHEN NOT MATCHED THEN INSERT *")
+      val rows = spark.table(t).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(rows == Seq((3L, 0L), (4L, 44L), (5L, 50L), (9L, 90L)))
+    } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+  }
 }
