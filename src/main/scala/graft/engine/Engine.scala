@@ -24,8 +24,13 @@ object Engine
     * Quoted path literals in FROM/JOIN position are rewritten to
     * registered views first (Catalog.rewritePathTables) so the
     * reference's `FROM 'file.csv'` dialect works for every supported
-    * format, not just parquet's native path syntax. */
-  def sql(spark: SparkSession, statement: String): DataFrame = {
+    * format, not just parquet's native path syntax. Runs under the
+    * local executor's task loader (`TaskLoader`), so a class a routed
+    * statement compiles on the driver is the one its tasks reuse. */
+  def sql(spark: SparkSession, statement: String): DataFrame =
+    TaskLoader.within(spark)(route(spark, statement))
+
+  private def route(spark: SparkSession, statement: String): DataFrame = {
     // DuckDB introspection one-liners a reference user types verbatim
     // (delegated surface, /root/reference/src/duckdb.ts:46-49): Spark has
     // no SUMMARIZE statement and spells DESCRIBE-a-query `DESCRIBE

@@ -99,7 +99,9 @@ object Export {
   /** Distributed parquet export (`COPY TO (FORMAT parquet)` analog) —
     * self-describing schema, the right interchange format at scale. */
   def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
+    TaskLoader.within(df.sparkSession) {
+      df.write.mode("overwrite").parquet(path)
+    }
 
   /** Distributed ORC export (beyond-reference: Spark-native columnar
     * alternative, readable back through `Catalog`'s `.orc` route). */

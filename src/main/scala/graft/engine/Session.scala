@@ -33,6 +33,20 @@ import org.apache.spark.sql.SparkSession
   *    239, one per distinct (classloader, source) key, since no entry is
   *    evicted below 1000. The 100-entry LRU is smaller than that working
   *    set and evicted a pipeline's classes between its rounds.
+  *  - One compile per class on local masters. The cache key's loader is
+  *    the calling thread's context loader: the driver's whole-stage
+  *    validation compile ran under the caller's loader and the first
+  *    task under the executor's, so each new source compiled twice (81
+  *    of 158 in a bulk perfbench run). `getOrCreate` reads the
+  *    executor's task loader once per context, with one one-task job
+  *    before any statement (`TaskLoader`), and the engine's entry points
+  *    (`Engine.sql`, `FirstPage`, `EachPartition`, `Export.writeParquet`,
+  *    `graft.Bench`) run under it, restoring the caller's loader after
+  *    (TaskLoaderSpec).
+  *  - `ParamLiterals`: int, long, double, date and timestamp literals of
+  *    filters and projections reach generated code as parameters, not
+  *    as source text, so a statement re-run with an edited literal
+  *    reuses its classes (ParamLiteralsSpec). Scans keep their literals.
   */
 object Session {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -41,8 +55,11 @@ object Session {
 
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder = {
     java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    SparkSession
-      .builder()
+    new SparkSession.Builder {
+      // a local context's task classloader is read as the context starts
+      override def getOrCreate(): SparkSession =
+        TaskLoader.capture(super.getOrCreate())
+    }
       .master(master)
       .appName("graft")
       // engine-level Catalyst rules (e.g. the NULLIF pushdown rewrite) ride
@@ -50,6 +67,10 @@ object Session {
       // the DuckDB function-name compatibility pack (string_split,
       // list_transform, epoch_us, strftime %-codes, …)
       .withExtensions(graft.plans.NullifPushdown.install)
+      // int/long/double/date/timestamp literals of filters and projections
+      // reach generated code as parameters, so an edited literal reuses
+      // its statement's classes
+      .withExtensions(graft.plans.ParamLiterals.install)
       .withExtensions(graft.functions.DuckdbCompat.install)
       // native vector folds (graft_dot / graft_l2_slice, r21) — consumed
       // by the LSH bucket and PQ distance expression strings

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.analysis.{
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{
-  ArrayType, BinaryType, BooleanType, DoubleType, IntegerType, LongType,
-  MapType, NullType, StringType, StructType}
+  ArrayType, BinaryType, BooleanType, DataType, DoubleType, IntegerType,
+  LongType, MapType, NullType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DuckDB function-name compatibility pack (round 16): the reference
@@ -92,6 +92,16 @@ object DuckdbCompat {
         case _ => f
       }
     case _ => f
+  }
+
+  /** `t` with every nested element, value and field nullable: the type a
+    * step may be cast to when its nullability is not known yet. */
+  private def anyNulls(t: DataType): DataType = t match {
+    case ArrayType(e, _) => ArrayType(anyNulls(e), containsNull = true)
+    case MapType(k, v, _) => MapType(anyNulls(k), anyNulls(v), true)
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = anyNulls(f.dataType), nullable = true)))
+    case other => other
   }
 
   /** Translate a DuckDB strftime %-format to a java.time pattern. */
@@ -457,6 +467,41 @@ object DuckdbCompat {
         case _ => false
       })
       if (isInterval) Add(args(0), args(1)) else DateAdd(args(0), args(1))
+    },
+    // list_reduce(l, (acc, x) -> …) — DuckDB folds from the FIRST
+    // element (measured with duckdb 1.0.0: [1,2,3] → 6, [5] → 5, a NULL
+    // list → NULL, [1, NULL, 3] → NULL through the lambda's own NULL
+    // rule, [] raises). Spark's aggregate() takes an explicit start, so
+    // the first element is the start and the rest fold; each step is cast
+    // to the element type, DuckDB's accumulator type. A list of untyped
+    // NULLs reduces to NULL. DuckDB's three-parameter (acc, x, i) form
+    // refuses.
+    "list_reduce" -> { args0 =>
+      val Seq(l, f) = arity("list_reduce", 2)(args0)
+      val (body, params, hidden) = f match {
+        case LambdaFunction(b, ps, h) if ps.size == 2 => (b, ps, h)
+        case _ => throw new IllegalArgumentException(
+          "list_reduce takes a two-parameter lambda (acc, x) -> …; the" +
+            " three-parameter (acc, x, i) form is not supported")
+      }
+      val list = l.dataType match {
+        case NullType => Cast(l, ArrayType(NullType))
+        case _: ArrayType => l
+        case other => throw new IllegalArgumentException(
+          s"list_reduce expects a list, got ${other.sql}")
+      }
+      val elem = list.dataType.asInstanceOf[ArrayType].elementType
+      val n = Size(list, legacySizeOfNull = false)
+      val emptyError = CreateMap(Seq(Literal("errorMessage"),
+        Literal("Cannot perform list_reduce on an empty input list")))
+      // the start raises on an empty list; a NULL list never reads it
+      val first = If(EqualTo(n, Literal(0)),
+        RaiseError(Literal("USER_RAISED_EXCEPTION"), emptyError, elem),
+        ElementAt(list, Literal(1)))
+      val step = if (elem == NullType) Literal(null) else Cast(body, anyNulls(elem))
+      val rest = Slice(list, Literal(2),
+        Greatest(Seq(Subtract(n, Literal(1)), Literal(0))))
+      new ArrayAggregate(rest, first, LambdaFunction(step, params, hidden))
     },
     // list_aggregate(l, 'name') — DuckDB's apply-an-aggregate-to-a-list
     // function. Literal names only (the expression is chosen at plan

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.SQLExecution
 
+import _root_.graft.engine.TaskLoader
+
 /** `f` of every partition of a result, from ONE `runJob` over the
   * statement's executed plan: each task decodes its rows with the
   * Dataset's own encoder and returns `f` of them, and the driver gets the
@@ -19,8 +21,10 @@ import org.apache.spark.sql.execution.SQLExecution
   *
   * Runs under `SQLExecution.withNewExecutionId` with the DataFrame's own
   * `QueryExecution`, so listeners and the SQL UI see one execution, with
-  * its SQL metrics. Lives in an `org.apache.spark.sql` subpackage for the
-  * `private[sql]` execution hooks, like `FirstPage`. */
+  * its SQL metrics, and under the local executor's task loader
+  * (`TaskLoader`), so the driver and the tasks compile each class once.
+  * Lives in an `org.apache.spark.sql` subpackage for the `private[sql]`
+  * execution hooks, like `FirstPage`. */
 object EachPartition {
 
   def apply[T: ClassTag](df: DataFrame, name: String)(
@@ -30,10 +34,12 @@ object EachPartition {
     val fromRow = ds.exprEnc
       .resolveAndBind(ds.logicalPlan.output, ds.sparkSession.sessionState.analyzer)
       .createDeserializer()
-    SQLExecution.withNewExecutionId(qe, Some(name)) {
-      qe.executedPlan.resetMetrics()
-      val rdd = qe.executedPlan.execute()
-      rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => f(it.map(fromRow)))
+    TaskLoader.within(ds.sparkSession) {
+      SQLExecution.withNewExecutionId(qe, Some(name)) {
+        qe.executedPlan.resetMetrics()
+        val rdd = qe.executedPlan.execute()
+        rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => f(it.map(fromRow)))
+      }
     }
   }
 }

@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveExecutionContext
 import org.apache.spark.util.collection.Utils
 
+import _root_.graft.engine.TaskLoader
+
 /** The first page of a result and its true row count from ONE execution
   * — what a display needs, without the second Catalyst run, codegen and
   * job set a `count()` next to a `limit(n).collect()` costs. Lives in an
@@ -38,7 +40,9 @@ import org.apache.spark.util.collection.Utils
   *
   * The execution runs under `SQLExecution.withNewExecutionId` with the
   * DataFrame's own `QueryExecution`, so `QueryExecutionListener`s and the
-  * SQL UI see one execution per page, as for a `collect()`. The plan they
+  * SQL UI see one execution per page, as for a `collect()`, and under the
+  * local executor's task loader (`TaskLoader`), so the driver and the
+  * tasks compile each class once. The plan they
   * are shown is that statement plan, though, not the `input` plan that
   * ran: when a projection or a sort was peeled off, the shown plan has no
   * SQL metrics and `Dataset.observe` metrics stay empty. */
@@ -55,29 +59,31 @@ object FirstPage {
     val fromRow = ds.exprEnc
       .resolveAndBind(ds.logicalPlan.output, ds.sparkSession.sessionState.analyzer)
       .createDeserializer()
-    SQLExecution.withNewExecutionId(qe, Some("tableToRows")) {
-      val (project, below) = qe.optimizedPlan match {
-        case Project(list, child) if list.forall(pure) => (Some(list), child)
-        case plan => (None, plan)
+    TaskLoader.within(ds.sparkSession) {
+      SQLExecution.withNewExecutionId(qe, Some("tableToRows")) {
+        val (project, below) = qe.optimizedPlan match {
+          case Project(list, child) if list.forall(pure) => (Some(list), child)
+          case plan => (None, plan)
+        }
+        // a zero-row page needs no sort (and takeOrdered would not count)
+        val (order, input) = below match {
+          case Sort(keys, true, child, _) if keys.forall(pure) && limit > 0 =>
+            (Some(keys), child)
+          case plan => (None, plan)
+        }
+        val read = AttributeSet(project.getOrElse(below.output)) ++
+          AttributeSet(order.getOrElse(Nil))
+        val cols = input.output.filter(read.contains)
+        val pruned = if (cols.size == input.output.size) input else Project(cols, input)
+        val (total, rows) = run(qe, pruned, order, limit)
+        val page = project.fold(rows) { list =>
+          val proj = new InterpretedProjection(
+            list.map(BindReferences.bindReference[Expression](_, cols)))
+          proj.initialize(0)
+          rows.map(proj)
+        }
+        (total, page.map(fromRow).toSeq)
       }
-      // a zero-row page needs no sort (and takeOrdered would not count)
-      val (order, input) = below match {
-        case Sort(keys, true, child, _) if keys.forall(pure) && limit > 0 =>
-          (Some(keys), child)
-        case plan => (None, plan)
-      }
-      val read = AttributeSet(project.getOrElse(below.output)) ++
-        AttributeSet(order.getOrElse(Nil))
-      val cols = input.output.filter(read.contains)
-      val pruned = if (cols.size == input.output.size) input else Project(cols, input)
-      val (total, rows) = run(qe, pruned, order, limit)
-      val page = project.fold(rows) { list =>
-        val proj = new InterpretedProjection(
-          list.map(BindReferences.bindReference[Expression](_, cols)))
-        proj.initialize(0)
-        rows.map(proj)
-      }
-      (total, page.map(fromRow).toSeq)
     }
   }
 

@@ -30,11 +30,17 @@ class CodegenCacheSpec extends AnyFunSuite {
   }
 
   /** A whole-stage-codegen aggregate over two partitions, so tasks run on
-    * the executor side as well as the driver's validation compile; `k`
-    * is inlined into the generated source, one class per value. */
-  private def tiny(s: SparkSession, k: Int): Unit =
-    s.range(0, 1000, 1, 2).selectExpr(s"id * 7919 + $k AS x")
+    * the executor side as well as the driver's validation compile. `k`
+    * picks the expression's shape, one class per shape: bit i of its low
+    * eight bits puts a `+` or a `-` before the i-th `id` term. A value
+    * cannot tell two classes apart, since `ParamLiterals` passes int and
+    * long literals to the generated code as parameters. */
+  private def tiny(s: SparkSession, k: Int): Unit = {
+    val x = (0 until 8).map(i => if ((k >> i & 1) == 1) " + id" else " - id")
+      .mkString("id * 7919", "", "")
+    s.range(0, 1000, 1, 2).selectExpr(s"$x AS x")
       .where("x % 13 = 5").groupBy().sum("x").collect()
+  }
 
   test("a fresh session compiles nothing an earlier session compiled") {
     val first = compiles(tiny(spark.newSession(), -1))

@@ -269,6 +269,34 @@ class DuckdbCompatSpec extends AnyFunSuite {
     assert(e.getMessage.contains("aggregate("))
   }
 
+  test("list_reduce folds from the first element, as DuckDB 1.0 does") {
+    // values measured with duckdb 1.0.0
+    assert(one("SELECT list_reduce(array(1, 2, 3), (x, y) -> x + y)") == 6)
+    assert(one("SELECT list_reduce(array(5), (x, y) -> x + y)") == 5)
+    assert(one("SELECT list_reduce(array(1, 2, 3), (x, y) -> x * 10 + y)") ==
+      123)
+    assert(one("SELECT list_reduce(CAST(NULL AS ARRAY<INT>), (x, y) -> x + y)")
+      == null)
+    assert(one("SELECT list_reduce(NULL, (x, y) -> x + y)") == null)
+    assert(one("SELECT list_reduce(array(NULL, NULL), (x, y) -> x + y)") ==
+      null)
+    assert(one("SELECT list_reduce(array(1, NULL, 3), (x, y) -> x + y)") ==
+      null)
+    assert(one("SELECT list_reduce(array('a', 'b'), (x, y) -> x || y)") ==
+      "ab")
+    // each step is cast to the element type: INT / INT is a DOUBLE here
+    assert(spark.sql("SELECT list_reduce(array(1, 2, 3), (x, y) -> x / y)")
+      .schema.head.dataType == org.apache.spark.sql.types.IntegerType)
+    val empty = intercept[Exception](spark.sql(
+      "SELECT list_reduce(CAST(array() AS ARRAY<INT>), (x, y) -> x + y)")
+      .collect())
+    assert(empty.getMessage.contains(
+      "Cannot perform list_reduce on an empty input list"))
+    val indexed = intercept[Exception](spark.sql(
+      "SELECT list_reduce(array(1, 2, 3), (x, y, i) -> x + y + i)").collect())
+    assert(indexed.getMessage.contains("(acc, x, i) form is not supported"))
+  }
+
   test("list_reverse/unique/has_any/has_all match DuckDB's NULL rules") {
     assert(one("SELECT list_reverse(array(1, NULL, 3))") ==
       Seq(3, null, 1))
