@@ -654,10 +654,13 @@ object Engine
   }
 
   /** A8: streaming query — per-partition iterator to the driver (the analog
-    * of `conn.send`'s record-batch stream). */
+    * of `conn.send`'s record-batch stream). The plan executes, and the
+    * driver compiles its classes, when `toLocalIterator` returns; that runs
+    * under the local task loader (`TaskLoader`), so the jobs the iterator
+    * starts later reuse those classes. */
   def stream(df: DataFrame): Iterator[Row] = {
     import scala.jdk.CollectionConverters._
-    df.toLocalIterator().asScala
+    TaskLoader.within(df.sparkSession)(df.toLocalIterator()).asScala
   }
 
   /** EXPLAIN surface (Tier C): the plan text a user would get from

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.graft.EachPartition
 
 /** CSV export — A15 (RFC-4180 escaper) and A16 (streaming export);
@@ -87,24 +87,25 @@ object Export {
     * which is not RFC-4180 (`"say \"hi\""` instead of `"say ""hi"""`) —
     * caught by the ExportSpec round-trip. */
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.option("header", "true").option("escape", "\"")
-      .mode("overwrite").csv(path)
+    write(df)(_.option("header", "true").option("escape", "\"").csv(path))
 
   /** Distributed NDJSON export (the `COPY TO (FORMAT json)` analog of the
     * delegated writer surface) — one JSON object per line, readable back by
     * `Catalog`'s `.ndjson` route. */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
+  def writeJson(df: DataFrame, path: String): Unit = write(df)(_.json(path))
 
   /** Distributed parquet export (`COPY TO (FORMAT parquet)` analog) —
     * self-describing schema, the right interchange format at scale. */
   def writeParquet(df: DataFrame, path: String): Unit =
-    TaskLoader.within(df.sparkSession) {
-      df.write.mode("overwrite").parquet(path)
-    }
+    write(df)(_.parquet(path))
 
   /** Distributed ORC export (beyond-reference: Spark-native columnar
     * alternative, readable back through `Catalog`'s `.orc` route). */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
+  def writeOrc(df: DataFrame, path: String): Unit = write(df)(_.orc(path))
+
+  /** Every distributed writer runs here: overwrite mode, under the local
+    * task loader (`TaskLoader`), so the driver and the tasks compile each
+    * class once. */
+  private def write(df: DataFrame)(format: DataFrameWriter[Row] => Unit): Unit =
+    TaskLoader.within(df.sparkSession)(format(df.write.mode("overwrite")))
 }

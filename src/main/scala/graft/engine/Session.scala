@@ -39,10 +39,13 @@ import org.apache.spark.sql.SparkSession
   *    task under the executor's, so each new source compiled twice (81
   *    of 158 in a bulk perfbench run). `getOrCreate` reads the
   *    executor's task loader once per context, with one one-task job
-  *    before any statement (`TaskLoader`), and the engine's entry points
-  *    (`Engine.sql`, `FirstPage`, `EachPartition`, `Export.writeParquet`,
-  *    `graft.Bench`) run under it, restoring the caller's loader after
-  *    (TaskLoaderSpec).
+  *    before any statement (`TaskLoader`), and every engine path that runs
+  *    a plan does so under it, restoring the caller's loader after:
+  *    `Engine.sql`, `Engine.stream`, the render path (`FirstPage`), the
+  *    CSV parts (`EachPartition`), every `Export.write*` and
+  *    `graft.Bench`'s action (TaskLoaderSpec, one case per path). An
+  *    action a caller runs on a DataFrame directly still compiles each
+  *    new class twice.
   *  - `ParamLiterals`: int, long, double, date and timestamp literals of
   *    filters and projections reach generated code as parameters, not
   *    as source text, so a statement re-run with an edited literal

@@ -19,7 +19,11 @@ import org.apache.spark.sql.SparkSession
   * The loader is read once per context, as the context starts
   * (`Session.builder`'s `getOrCreate`), by one one-task job; no statement
   * pays that job. A cluster master, whose executors live in other JVMs,
-  * captures nothing, and `within` runs its body unchanged. */
+  * captures nothing, and `within` runs its body unchanged.
+  *
+  * Spark offers no hook around every action of a session that sets no
+  * conf, so each engine path that runs a plan calls `within` itself (the
+  * list is in `Session`'s config notes; TaskLoaderSpec covers each). */
 object TaskLoader {
 
   @volatile private var captured: Option[(SparkContext, ClassLoader)] = None

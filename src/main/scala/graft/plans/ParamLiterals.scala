@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.{
   *
   * It equals, hashes and canonicalizes by value and type, like `Literal`,
   * so exchange and subquery reuse never merge two plans that differ in a
-  * value. It prints and renders as the literal it replaced. It is not
+  * value. A NaN double is never made one: `Literal` equals NaN to NaN, a
+  * case class's equality does not, and a plan must equal its own copy. It prints and renders as the literal it replaced. It is not
   * foldable: nothing evaluates it at planning time, and no parent's code
   * generation can inline it. */
 final case class ParamLiteral(value: Any, dataType: DataType)
@@ -74,9 +75,15 @@ object ParamLiterals extends Rule[SparkPlan] {
   private def param(e: Expression): Expression = e.transformUp {
     case op @ (_: BinaryComparison | _: BinaryArithmetic) if !op.foldable =>
       op.mapChildren {
-        case Literal(v, t) if v != null && paramTypes(t) => ParamLiteral(v, t)
+        case Literal(v, t) if v != null && paramTypes(t) && !isNaN(v) =>
+          ParamLiteral(v, t)
         case child => child
       }
+  }
+
+  private def isNaN(v: Any): Boolean = v match {
+    case d: Double => d.isNaN
+    case _ => false
   }
 
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {

@@ -3,6 +3,7 @@ package graft.engine
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 
 /** A first-time statement compiles each distinct generated source once,
   * on whichever engine path it runs: the driver's validation compile and
@@ -34,13 +35,20 @@ class TaskLoaderSpec extends AnyFunSuite {
   private lazy val ids =
     spark.range(0, 1000, 1, 2).createOrReplaceTempView("task_loader_ids")
 
+  private def writer(write: (DataFrame, String) => Unit): String => Unit = { stmt =>
+    val dir = java.nio.file.Files.createTempDirectory("task-loader")
+    write(Engine.sql(spark, stmt), dir.resolve("out").toString)
+  }
+
+  /** Every engine path that runs a statement's plan. */
   private val paths: Seq[(String, String => Unit)] = Seq(
     "Render.tableToRows" -> (stmt => Render.tableToRows(Engine.sql(spark, stmt))),
+    "Engine.stream" -> (stmt => Engine.stream(Engine.sql(spark, stmt)).foreach(_ => ())),
     "Export.toCsvParts" -> (stmt => Export.toCsvParts(Engine.sql(spark, stmt))),
-    "Export.writeParquet" -> { stmt =>
-      val dir = java.nio.file.Files.createTempDirectory("task-loader")
-      Export.writeParquet(Engine.sql(spark, stmt), dir.resolve("out").toString)
-    })
+    "Export.writeCsv" -> writer(Export.writeCsv),
+    "Export.writeJson" -> writer(Export.writeJson),
+    "Export.writeParquet" -> writer(Export.writeParquet),
+    "Export.writeOrc" -> writer(Export.writeOrc))
 
   paths.zipWithIndex.foreach { case ((name, run), n) =>
     test(s"$name compiles a first-time whole-stage filter once") {

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
 import org.apache.spark.sql.types.IntegerType
 
@@ -114,6 +115,20 @@ class ParamLiteralsSpec extends AnyFunSuite {
     assert(five.canonicalized == ParamLiteral(5, IntegerType).canonicalized)
     assert(five.canonicalized != ParamLiteral(6, IntegerType).canonicalized)
     assert(five.toString == "5" && five.sql == "5")
+  }
+
+  test("a NaN double stays a Literal, so a plan with one still equals its copy") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    view(s)
+    def plan = Engine.sql(s,
+      "SELECT i FROM pt WHERE d <> CAST('NaN' AS DOUBLE) AND i > 3").queryExecution.executedPlan
+    val kept = plan.collect { case f: FilterExec => f.condition }.flatMap(_.collect {
+      case Literal(v: Double, _) if v.isNaN => "literal"
+      case ParamLiteral(v: Double, _) if v.isNaN => "param"
+    })
+    assert(kept == Seq("literal"), plan.toString)
+    assert(plan.sameResult(plan), plan.toString)
   }
 
   test("x % 0 and x / 0 raise Spark's division-by-zero errors, in a projection and a filter") {
