@@ -50,12 +50,13 @@ object Bench {
 
     // Per-query warm-up at the smallest scale factor. It does not pre-pay
     // the timed run's codegen: over the full inventory this pass compiles
-    // about 1960 classes, twice the codegen cache `Session` sizes, so most
-    // queries' classes are evicted before their timed run, and the timed
-    // pass compiles about as many again (measured at sf0.1, local[4]:
-    // 1958 compiles warm, 1922 timed with probes and builds). The timed
-    // numbers therefore include most of each query's compile. Falls back
-    // to the bench dir if no sibling sf0.001 exists.
+    // about 1250 classes, more than the 1000 the codegen cache `Session`
+    // sizes holds, so most queries' classes are evicted before their
+    // timed run, and the timed pass compiles about as many again
+    // (measured at sf0.1, local[4]: 1250 compiles warm, 1198 timed with
+    // probes and builds). The timed numbers therefore include most of
+    // each query's compile. Falls back to the bench dir if no sibling
+    // sf0.001 exists.
     val warmDir = {
       val w = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
       if (new java.io.File(w).isDirectory) w else sfDir
